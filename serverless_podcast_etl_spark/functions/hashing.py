@@ -51,19 +51,9 @@ def portable_hash48(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
-def portable_hash32(col: Column) -> Column:
-    """32-bit reduction of portable_hash48 for overflow-safe arithmetic."""
-    return portable_hash48(col) % F.lit(U32)
-
-
 def minhash_value(x32: Column, a: int, b: int) -> Column:
     """One universal-hash application: (a*x + b) mod p."""
     return (x32 * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
-
-
-def portable_hash48_sql(expr: str) -> str:
-    """DuckDB SQL twin of ``portable_hash48``."""
-    return f"CAST(('0x' || substr(md5({expr}), 1, 12)) AS BIGINT)"
 
 
 def minhash_value_sql(x32_expr: str, a: int, b: int) -> str:

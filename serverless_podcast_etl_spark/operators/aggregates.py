@@ -114,9 +114,11 @@ def dedup_insert(
     keys: list[str],
 ) -> DataFrame:
     """INSERT IGNORE semantics: incoming rows whose key is absent from
-    ``existing`` — plus first-writer-wins dedup *within* the incoming
-    batch (MySQL applies the UNIQUE check row-by-row, so a second row
-    with the same key inside one batch is also ignored).
+    ``existing`` — plus dedup *within* the incoming batch, so one row
+    per key is appended (MySQL applies the UNIQUE check row-by-row and
+    ignores a second row with the same key).  Unlike MySQL's
+    first-writer-wins, WHICH of a key's in-batch duplicates survives is
+    unspecified: ``dropDuplicates`` keeps an arbitrary one.
 
     Returns the rows that would be appended; callers append them to the
     existing store, making every sink idempotent under re-delivery.

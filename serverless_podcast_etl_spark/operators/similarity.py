@@ -93,19 +93,6 @@ _INT_COSINE_SQL = (
 )
 
 
-def with_cosine(
-    df: DataFrame, a: str, b: str, out_col: str = "cosine", round_to: int | None = 4
-) -> DataFrame:
-    """Add cosine similarity between two array<double> columns."""
-    cos_sql = (
-        f"{_dot_sql(f'`{a}`', f'`{b}`')} / "
-        f"({_norm_sql(f'`{a}`')} * {_norm_sql(f'`{b}`')})"
-    )
-    if round_to is not None:
-        cos_sql = f"round({cos_sql}, {int(round_to)})"
-    return df.withColumn(out_col, F.expr(cos_sql))
-
-
 def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
 

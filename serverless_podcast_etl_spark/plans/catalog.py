@@ -2027,8 +2027,10 @@ def q62_ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = InheritableThread(target=_build_exact)
     t.start()
-    centroids = similarity.train_ivf_centroids(emb, n_clusters=16, seed=7)
-    t.join()
+    try:
+        centroids = similarity.train_ivf_centroids(emb, n_clusters=16, seed=7)
+    finally:
+        t.join()
     if "err" in exact_box:
         raise exact_box["err"]
     exact = exact_box["df"]

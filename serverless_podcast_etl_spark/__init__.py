@@ -10,13 +10,14 @@ plan; Python UDFs appear only where semantics genuinely require them
 Layout:
     session     — tuned SparkSession factory
     schemas     — warehouse dimension + staging StructTypes
-    sources     — table loaders / staging readers (parquet, json, binary)
+    sources     — table loaders, URL fetch seam, JDBC warehouse sink
     functions   — scalar function library (dates, text, hashing, stats)
     operators   — relational operators (joins, windows, aggregates,
-                  dedup, similarity, multimodal)
+                  dedup, similarity, retrieval, selection, multimodal)
     plans       — the analytics query catalog (driver contract)
     pipeline    — the podcast ETL pipeline stages (batch)
-    streaming   — event-driven orchestration (Structured Streaming)
+    streaming   — Structured Streaming tiers (stateful chunk barrier,
+                  windows, stream dedup, curation, near-dup admission)
 """
 
 __version__ = "0.1.0"

@@ -45,19 +45,9 @@ MINHASH_PARAMS: list[tuple[int, int]] = [
 ]
 
 
-def portable_hash48(col: Column) -> Column:
-    """48-bit integer from the first 12 hex chars of md5 — identical in
-    Spark (``conv``) and DuckDB (``('0x'||substr(md5(x),1,12))::BIGINT``)."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
-
-
-def minhash_value(x32: Column, a: int, b: int) -> Column:
-    """One universal-hash application: (a*x + b) mod p."""
-    return (x32 * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
-
-
 def minhash_value_sql(x32_expr: str, a: int, b: int) -> str:
-    """DuckDB SQL twin of ``minhash_value``."""
+    """One MinHash universal-hash application, ``(a*x + b) mod p``,
+    as DuckDB SQL."""
     return f"(({x32_expr}) * {a} + {b}) % {MERSENNE_P}"
 
 
@@ -93,17 +83,11 @@ def shingle_hash_array(tok_hashes: Column, n: int) -> Column:
     )
 
 
-def token_hashes(toks: Column) -> Column:
-    """array<long> of portable 32-bit token hashes."""
-    return F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 12), 16, 10).cast("long") % F.lit(U32)
-    )
-
-
 def token_hashes_spark_sql(toks_sql: str) -> str:
-    """Spark-SQL text of ``token_hashes`` over an array<string> SQL
+    """Spark-SQL text of the portable 32-bit token hashes
+    (``portable_hash48 % 2^32`` per token) over an array<string> SQL
     expression — ONE ``F.expr`` round-trip instead of the per-node
-    py4j construction (opt-r15; same expression bit-for-bit)."""
+    py4j construction (opt-r15)."""
     return (
         f"transform({toks_sql}, t -> "
         f"CAST(conv(substring(md5(t), 1, 12), 16, 10) AS BIGINT) % {U32})"
@@ -146,7 +130,8 @@ def shingle_hash_array_spark_sql(th_sql: str, n: int) -> str:
 
 
 def token_hashes_sql(toks_expr: str) -> str:
-    """DuckDB twin of ``token_hashes`` over a VARCHAR[] expression."""
+    """DuckDB twin of ``token_hashes_spark_sql`` over a VARCHAR[]
+    expression."""
     return (
         f"list_transform({toks_expr}, x -> "
         f"CAST(('0x' || substr(md5(x), 1, 12)) AS BIGINT) % {U32})"
@@ -162,17 +147,7 @@ def shingle_hash_sql(th: str, i: str, n: int) -> str:
     return acc
 
 
-def simhash_token_hash(col: Column) -> Column:
-    """32-bit integer token hash for SimHash (md5-prefix, portable).
-
-    Bit j is then plain integer arithmetic ``(h >> j) & 1`` in both
-    engines — one md5 + one conv per token, no per-bit string ops
-    (the per-bit substring/isin formulation codegens a much larger
-    expression tree: measured 2.4s vs 0.95s cold at sf0.1).
-    """
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 def simhash_token_hash_sql(expr: str) -> str:
-    """DuckDB SQL twin of ``simhash_token_hash``."""
+    """32-bit SimHash token hash (first 8 md5 hex digits) as DuckDB
+    SQL — the twin of ``simhash_token_hashes_spark_sql``."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT)"

@@ -86,11 +86,6 @@ def double_array(values) -> Column:
     return F.expr(double_array_sql(values))
 
 
-def double_matrix(rows) -> Column:
-    """``array<array<double>>`` literal column in one round-trip."""
-    return F.expr(double_matrix_sql(rows))
-
-
 def long_array(values) -> Column:
     """``array<bigint>`` literal column in one round-trip."""
     return F.expr(long_array_sql(values))

@@ -391,33 +391,6 @@ FROM cnt GROUP BY doc_id
 """
 
 
-def fingerprint_set(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 5,
-    keep_mod: int = 8,
-) -> DataFrame:
-    """Exploded MOD-SAMPLED fingerprint set: one row per (doc, kept
-    k-gram hash with hash ≡ 0 mod ``keep_mod``) — the joinable form of
-    ``rolling_fingerprints``'s signature.  In-row compute, rows
-    already distinct per doc.
-
-    0-mod-p sampling keeps ~1/keep_mod of the hashes but gives NO
-    deterministic span guarantee: a shared span with m k-grams is
-    missed with probability ≈ (1 − 1/keep_mod)^m (≈30% for m = 9 at
-    keep_mod = 8).  When a guarantee matters (decontamination gates),
-    use ``winnowed_fingerprint_set`` — true winnowing exists precisely
-    to add one.
-    """
-    from ..operators.dedup import _bound_token_hashes
-
-    bound = _bound_token_hashes(df, text_col, id_col)
-    grams = hashing.shingle_hash_array(F.col("_th"), k)
-    kept = F.array_distinct(F.filter(grams, lambda h: h % keep_mod == 0))
-    return bound.select(F.col(id_col), F.explode(kept).alias("fingerprint"))
-
-
 def winnowed_fingerprint_set(
     df: DataFrame,
     text_col: str,
@@ -473,9 +446,10 @@ def rolling_fingerprints(
     keep_mod: int = 8,
 ) -> DataFrame:
     """Document fingerprinting: hash every k-token shingle, keep the
-    0-mod-``keep_mod`` subset (mod-sampling — NOT winnowing: see
-    ``fingerprint_set`` for the probabilistic miss rate, and
-    ``winnowed_fingerprint_set`` for the guaranteed variant).
+    0-mod-``keep_mod`` subset (mod-sampling — NOT winnowing: a shared
+    span with m k-grams is missed with probability ≈
+    (1 − 1/keep_mod)^m; ``winnowed_fingerprint_set`` is the
+    guaranteed variant).
 
     The kept hash set is a compact, alignment-free signature for
     overlap detection.  Portable hash ⇒ oracle-checkable.

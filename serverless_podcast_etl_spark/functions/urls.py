@@ -43,21 +43,6 @@ def domain_histogram(
     )
 
 
-def filter_blocked_domains(
-    df: DataFrame, text_col: str, blocklist: list[str]
-) -> DataFrame:
-    """Documents containing NO URL from a blocklisted domain (the
-    applied gate).  One in-row expression — ``exists`` over the
-    extracted hosts — no join against the blocklist needed while it
-    fits in plan literals (thousands of entries); beyond that, switch
-    to a broadcast anti-join on the exploded domain."""
-    has_blocked = F.exists(
-        extracted_domains(F.col(text_col)),
-        lambda d: d.isin(*blocklist),
-    )
-    return df.filter(~has_blocked)
-
-
 # Tracking parameters stripped during canonicalization (the
 # RefinedWeb/CCNet-style URL-dedup first stage drops these before
 # comparing URLs — they vary per click, not per page).  (?i) because
@@ -215,7 +200,7 @@ def filter_blocked_domain_suffixes(
     real multi-million-entry lists work: Spark broadcasts it (or, past
     broadcast size, AQE falls back to a shuffle join on the exploded
     suffix — still an equi-join).  For a handful of literal domains,
-    ``filter_blocked_domains`` (in-plan ``isin``) is the cheaper form.
+    an in-plan ``isin`` over ``extracted_domains`` is the cheaper form.
     """
     suffixes = df.select(
         F.col(id_col),

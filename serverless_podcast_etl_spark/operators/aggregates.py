@@ -50,44 +50,6 @@ def ordered_concat(
     )
 
 
-def salted_ordered_concat(
-    df: DataFrame,
-    group_by: list[str],
-    order_col: str,
-    text_col: str,
-    sep: str = " ",
-    out_col: str = "concatenated",
-    range_size: int = 1000,
-) -> DataFrame:
-    """Skew-safe two-phase ``ordered_concat``.
-
-    ``collect_list`` has no map-side partial, so one giant group (an
-    episode with millions of chunks) funnels through a single reducer.
-    Phase 1 groups by (key, salt) where salt = order_col div
-    range_size — contiguous order ranges, so each bucket concatenates
-    an ordered slice; phase 2 concatenates the (few) bucket strings in
-    salt order.  Result is identical to ``ordered_concat``; the heavy
-    shuffle now spreads across |group|/range_size reducers per key.
-    """
-    salt = (F.col(order_col).cast("long") / F.lit(range_size)).cast("long")
-    phase1 = ordered_concat(
-        df.withColumn("_salt", salt),
-        group_by=[*group_by, "_salt"],
-        order_col=order_col,
-        text_col=text_col,
-        sep=sep,
-        out_col="_partial",
-    )
-    return ordered_concat(
-        phase1,
-        group_by=group_by,
-        order_col="_salt",
-        text_col="_partial",
-        sep=sep,
-        out_col=out_col,
-    )
-
-
 def completion_barrier(
     arrived: DataFrame,
     expected: DataFrame,

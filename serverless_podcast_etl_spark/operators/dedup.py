@@ -88,10 +88,6 @@ def exact_dedup_keep_first(
     )
 
 
-def _word_tokens(text_col: str):
-    return F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
-
-
 def shared_token_hash48(
     df: DataFrame, text_col: str, id_col: str, shingle_n: int | None = None
 ) -> DataFrame:
@@ -109,8 +105,9 @@ def shared_token_hash48(
     detector deriving its own view by cheap integer arithmetic
     (bit-identical to what it computed standalone; pinned by the
     shared-scan parity tests).  Pass the result as ``hashes48=`` to
-    ``minhash_lsh_pairs`` and ``simhash_neardup_pairs``; the frames
-    must share ``text_col``/``id_col`` semantics with this scan.
+    ``minhash_lsh_pairs`` and ``simhash_neardup_pairs`` together with
+    the same ``df``: the result records the frame it scanned, and a
+    consumer handed any other corpus raises ``ValueError``.
 
     ``shingle_n`` additionally folds and stores the word-``n``-gram
     shingle hashes in the SAME materialization (column
@@ -130,25 +127,43 @@ def shared_token_hash48(
         hashing.token_hashes48_spark_sql(word_tokens_spark_sql(text_col))
     )
     bound = _once(ensure_parallelism(df), id_col, h48, "_th48")
-    if shingle_n is None:
-        return bound.localCheckpoint(eager=True)
-    # bind the 32-bit view behind a second Generate (explode keeps the
-    # other columns) so the fold's slices read a bound array instead
-    # of re-evaluating the mod-transform per reference (fact 31)
-    b2 = bound.select(
-        F.col(id_col),
-        F.col("_th48"),
-        F.explode(
-            F.array(F.expr(f"transform(_th48, h -> h % {hashing.U32})"))
-        ).alias("_th"),
-    )
-    return b2.select(
-        F.col(id_col),
-        F.col("_th48"),
-        F.expr(
-            hashing.shingle_hash_array_spark_sql("_th", shingle_n)
-        ).alias(f"_h32s{shingle_n}"),
-    ).localCheckpoint(eager=True)
+    if shingle_n is not None:
+        # bind the 32-bit view behind a second Generate (explode keeps
+        # the other columns) so the fold's slices read a bound array
+        # instead of re-evaluating the mod-transform per reference
+        # (fact 31)
+        b2 = bound.select(
+            F.col(id_col),
+            F.col("_th48"),
+            F.explode(
+                F.array(F.expr(f"transform(_th48, h -> h % {hashing.U32})"))
+            ).alias("_th"),
+        )
+        bound = b2.select(
+            F.col(id_col),
+            F.col("_th48"),
+            F.expr(
+                hashing.shingle_hash_array_spark_sql("_th", shingle_n)
+            ).alias(f"_h32s{shingle_n}"),
+        )
+    out = bound.localCheckpoint(eager=True)
+    out._scanned_from = df
+    return out
+
+
+def _check_shared_scan(df: DataFrame, hashes48: DataFrame) -> None:
+    """Raise unless ``hashes48`` is a ``shared_token_hash48`` scan of
+    ``df`` (the same frame, or one with the same semantics).  The
+    consumers read their token hashes from ``hashes48`` alone, so a
+    mismatched corpus would otherwise yield pairs over the wrong
+    documents without any error.  ``sameSemantics`` compares plans on
+    the driver; it launches no Spark job."""
+    scanned = getattr(hashes48, "_scanned_from", None)
+    if scanned is None or not (scanned is df or df.sameSemantics(scanned)):
+        raise ValueError(
+            "hashes48 is not a shared_token_hash48 scan of df: pass the "
+            "frame the shared scan was built from"
+        )
 
 
 def _bound_token_hashes(
@@ -169,6 +184,7 @@ def _bound_token_hashes(
     from ..functions.text import word_tokens_spark_sql
 
     if hashes48 is not None:
+        _check_shared_scan(df, hashes48)
         return _once(
             hashes48,
             id_col,
@@ -264,8 +280,15 @@ def ngram_jaccard_pairs(
     ``hashes48`` (a ``shared_token_hash48`` frame) shares the
     tokenize→md5 scan with other detectors over the same corpus
     (bit-identical shingles — the capped similarity space is derived
-    downstream and unaffected).
+    downstream and unaffected); it requires ``materialize=True``, as
+    in ``minhash_lsh_pairs``.
     """
+    if hashes48 is not None and not materialize:
+        raise ValueError(
+            "ngram_jaccard_pairs: hashes48 requires materialize=True "
+            "(the shared scan is an eager checkpoint — a lazy "
+            "composition cannot consume it)"
+        )
     sh = shingles(df, text_col, id_col, n=n, hashes48=hashes48)
     if materialize:
         sh = sh.localCheckpoint(eager=True)
@@ -472,6 +495,7 @@ def _shingle_arrays(
     ``_h32s{n}`` column), the pre-folded shingle arrays are read
     straight from it — no second materialization pass at all."""
     if hashes48 is not None and f"_h32s{n}" in hashes48.columns:
+        _check_shared_scan(df, hashes48)
         # the shared checkpoint already stores this width's folds;
         # consumers project + filter it directly (it IS materialized)
         return hashes48.select(
@@ -520,8 +544,8 @@ def minhash_bands(
     """(id, band, bucket): the LSH band table — each document's
     signature split into ``bands`` concatenated-bucket keys.  This IS
     the persistent near-dup index of an incremental pipeline: written
-    once (bucketed on (band, bucket) via ``sources.bucketed``), every
-    future batch joins against it without re-signing the corpus."""
+    once (``bucketBy`` on (band, bucket)), every future batch joins
+    against it without re-signing the corpus."""
     sig = minhash_signatures(df, text_col, id_col, n=n, num_hashes=num_hashes)
     return _bands_from_signatures(sig, id_col, num_hashes, bands)
 
@@ -699,16 +723,16 @@ def incremental_neardup_admission(
 
     This is the production shape of near-dup dedup at 100 TB: the
     corpus side of the join is exactly ``minhash_bands`` — a
-    persistable index (write it bucketed on (band, bucket) via
-    ``sources.bucketed.write_bucketed`` and the per-batch candidate
-    join is shuffle-free on the corpus side) — so daily batches cost
-    O(batch signatures + candidates), never O(corpus²) or a corpus
-    re-sign.  Candidate verification re-derives shingles only through
-    equi-joins that touch matched documents.
+    persistable index (write it with ``bucketBy`` on (band, bucket)
+    and the per-batch candidate join is shuffle-free on the corpus
+    side) — so daily batches cost O(batch signatures + candidates),
+    never O(corpus²) or a corpus re-sign.  Candidate verification
+    re-derives shingles only through equi-joins that touch matched
+    documents.
 
     ``corpus_bands`` plugs that persisted index straight in: a
     DataFrame with columns (``id_col``, band, bucket) — e.g.
-    ``spark.table(...)`` over a ``write_bucketed`` table — used for
+    ``spark.table(...)`` over a bucketed table — used for
     the candidate join INSTEAD of re-signing ``corpus_df``.  The
     parameters (n, num_hashes, bands) must match those the index was
     built with; when the table is bucketed on (band, bucket) the
@@ -842,129 +866,6 @@ def incremental_neardup_admission(
             .alias("admitted"),
         )
     )
-
-
-#: Table property stamping a band index with the signature parameters
-#: it was built with — appends verify against it so an index never
-#: silently mixes incompatible signatures.
-_BAND_INDEX_PROP = "spe.minhash.params"
-
-
-def _band_index_params(n: int, num_hashes: int, bands: int) -> str:
-    return f"n={n},num_hashes={num_hashes},bands={bands}"
-
-
-def write_band_index(
-    df: DataFrame,
-    table: str,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    n_buckets: int = 32,
-) -> None:
-    """Create (overwrite) the persistent near-dup band index: sign
-    ``df`` once, write the (id, band, bucket) table bucketed + sorted
-    on (band, bucket), and stamp the signature parameters as a table
-    property.  The 100 TB corpus pays its sign + shuffle exactly here;
-    every later admission batch joins the bucketed scan shuffle-free
-    (``test_band_index_join_shuffles_batch_side_only``)."""
-    from ..sources.bucketed import write_bucketed
-
-    bands_df = minhash_bands(
-        df, text_col, id_col, n=n, num_hashes=num_hashes, bands=bands
-    )
-    write_bucketed(
-        bands_df, table, ["band", "bucket"], n_buckets=n_buckets,
-        sort_cols=["band", "bucket"],
-    )
-    df.sparkSession.sql(
-        f"ALTER TABLE {table} SET TBLPROPERTIES "
-        f"('{_BAND_INDEX_PROP}' = "
-        f"'{_band_index_params(n, num_hashes, bands)}')"
-    )
-
-
-def append_to_band_index(
-    admitted_df: DataFrame,
-    table: str,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    n_buckets: int = 32,
-) -> None:
-    """Index maintenance — the step after admission that keeps the
-    incremental pipeline incremental: sign ONLY the admitted batch and
-    append its band rows to the persisted index, so tomorrow's batch
-    sees today's documents without the corpus ever being re-signed or
-    rewritten.
-
-    The signature parameters are verified against the
-    ``spe.minhash.params`` property stamped at ``write_band_index``
-    time and the call raises before writing on any mismatch — an index
-    mixing signatures from different (n, num_hashes, bands) would
-    return silently wrong candidates forever after.  The bucketed
-    append itself is validated by Spark against the table's bucket
-    spec, so the post-append index keeps its shuffle-free join
-    property (pinned by ``test_band_index_append_roundtrip``)."""
-    spark = admitted_df.sparkSession
-    _verify_band_index_stamp(
-        spark, table, n, num_hashes, bands,
-        "append called with", "refusing to mix incompatible signatures",
-    )
-    from ..sources.bucketed import write_bucketed
-
-    bands_df = minhash_bands(
-        admitted_df, text_col, id_col, n=n, num_hashes=num_hashes,
-        bands=bands,
-    )
-    write_bucketed(
-        bands_df, table, ["band", "bucket"], n_buckets=n_buckets,
-        sort_cols=["band", "bucket"], mode="append",
-    )
-
-
-def load_band_index(
-    spark,
-    table: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-) -> DataFrame:
-    """Read-path counterpart of the append check: return
-    ``spark.table(table)`` after verifying the index's stamped
-    ``spe.minhash.params`` matches the caller's signature parameters —
-    the safe way to obtain the ``corpus_bands=`` argument for
-    ``incremental_neardup_admission`` / the streaming gate.  Raises
-    before any query runs on a mismatch; a raw ``spark.table`` call
-    skips the check and would consume an incompatible index
-    silently."""
-    _verify_band_index_stamp(
-        spark, table, n, num_hashes, bands,
-        "gate configured with", "refusing to consume an incompatible index",
-    )
-    return spark.table(table)
-
-
-def _verify_band_index_stamp(
-    spark, table: str, n: int, num_hashes: int, bands: int,
-    caller: str, refusal: str,
-) -> None:
-    props = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    }
-    expected = _band_index_params(n, num_hashes, bands)
-    stamped = props.get(_BAND_INDEX_PROP)
-    if stamped != expected:
-        raise ValueError(
-            f"band index {table} was built with "
-            f"{stamped or 'no stamped parameters'}; {caller} "
-            f"{expected} — {refusal}"
-        )
 
 
 def cross_corpus_overlap(
@@ -1422,6 +1323,7 @@ def simhash_fingerprints(
     ensemble caller pays the md5 pass once across detectors.
     """
     if hashes48 is not None:
+        _check_shared_scan(df, hashes48)
         hashed = _once(
             hashes48,
             id_col,
@@ -1916,114 +1818,6 @@ def pair_overlap_stats(
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 50,
-    out_id: str = "id",
-    out_comp: str = "component",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    an alternative backend to ``connected_components`` with the same
-    output contract.
-
-    Each round rewires edges toward per-neighborhood minima:
-    large-star points every neighbor LARGER than the center at the
-    neighborhood minimum; small-star does the same for the rest.  The
-    edge set converges to stars around component minima in O(log n)
-    rounds with per-round cost one groupBy + one join on the node key
-    — no global structures, the property that made it the canonical
-    web-scale CC.  Preferred over min-label propagation when the graph
-    has high-degree hubs: edges REWIRE onto minima instead of
-    repeatedly flowing labels through them.
-    """
-
-    def canon(e: DataFrame) -> DataFrame:
-        return (
-            e.filter(F.col("_u") != F.col("_v"))
-            .select(
-                F.least("_u", "_v").alias("_u"),
-                F.greatest("_u", "_v").alias("_v"),
-            )
-            .distinct()
-        )
-
-    def star_round(e: DataFrame, large: bool) -> DataFrame:
-        adj = e.union(e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
-        if large:
-            # large-star(u): every neighbor v > u links to
-            # m = min(Γ(u) ∪ {u})
-            m = adj.groupBy("_u").agg(
-                F.least(F.min("_v"), F.first("_u")).alias("_m")
-            )
-            emitted = (
-                adj.join(m, "_u")
-                .filter(F.col("_v") > F.col("_u"))
-                .select(F.col("_v").alias("_u"), F.col("_m").alias("_v"))
-            )
-        else:
-            # small-star(u): neighbors v < u AND u itself link to
-            # m = min(Γ<(u) ∪ {u}) — the min over SMALL neighbors only;
-            # edges to larger neighbors are processed at that endpoint
-            small = adj.filter(F.col("_v") < F.col("_u"))
-            m = small.groupBy("_u").agg(F.min("_v").alias("_m"))
-            emitted = (
-                small.join(m, "_u")
-                .select(F.col("_v").alias("_u"), F.col("_m").alias("_v"))
-                .union(m.select(F.col("_u"), F.col("_m").alias("_v")))
-            )
-        return canon(emitted)
-
-    ckpt = _resolve_checkpoint_dir(pairs, checkpoint_dir)
-    edges = _materialize(
-        canon(pairs.select(F.col(id_a).alias("_u"), F.col(id_b).alias("_v"))),
-        ckpt,
-    )
-    nodes = _materialize(
-        # from the RAW pairs, not the canon'd edges: canon drops
-        # self-loops, but a node appearing ONLY as (x, x) must still
-        # label itself (min-label backend contract; r4 parity fix)
-        pairs.select(F.col(id_a).alias("_id"))
-        .union(pairs.select(F.col(id_b).alias("_id")))
-        .distinct(),
-        ckpt,
-    )
-    converged = False
-    for _ in range(max_iter):
-        stepped = star_round(star_round(edges, large=True), large=False)
-        stepped = _materialize(stepped, ckpt)
-        changed = (
-            stepped.exceptAll(edges).count() + edges.exceptAll(stepped).count()
-        )
-        edges = stepped
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star: no convergence within {max_iter} "
-            f"rounds"
-        )
-    # converged edges are stars around component minima: label = min
-    # over the node's adjacency (the min itself labels as itself)
-    adj = edges.union(
-        edges.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
-    )
-    labels = adj.groupBy("_u").agg(
-        F.least(F.min("_v"), F.first("_u")).alias("_c")
-    )
-    return (
-        nodes.join(labels.withColumnRenamed("_u", "_id"), "_id", "left")
-        .select(
-            F.col("_id").alias(out_id),
-            F.coalesce(F.col("_c"), F.col("_id")).alias(out_comp),
-        )
-    )
-
-
 def cross_source_neardup_matrix(
     pairs: DataFrame,
     docs: DataFrame,
@@ -2150,8 +1944,8 @@ def snapshot_diff(
 
     Content identity is ``md5(text)`` computed in-row on each side;
     the only shuffle is the full outer equi-join on ``id_col`` —
-    write both snapshots bucketed on the id (``sources.bucketed``)
-    and the join is shuffle-free bucket-to-bucket.
+    write both snapshots with ``bucketBy`` on the id and the join is
+    shuffle-free bucket-to-bucket.
 
     Presence is tracked with explicit join-side markers, NOT digest
     nullity: ``md5(NULL)`` is NULL, so a digest-based test would call
@@ -2373,9 +2167,9 @@ def incremental_refresh(
     false CANDIDATES, never false matches — verification shingles are
     re-derived from the retained corpus, where such docs have no
     rows, so every stale candidate dies at the verify join.  Refresh
-    the index with ``append_to_band_index`` on the admission
-    survivors per the band-index lifecycle; staleness costs candidate
-    work, not correctness.
+    the index by appending the admission survivors' bands
+    (``minhash_bands``); staleness costs candidate work, not
+    correctness.
     """
     delta = snapshot_diff(old, new, id_col=id_col, text_col=text_col)
     ingest_ids = delta.filter(F.col("status") != "removed").select(

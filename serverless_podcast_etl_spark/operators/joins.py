@@ -7,16 +7,13 @@ Reference parity (SURVEY.md §2.3):
   J3 positional zip join        → ``zip_join``
     (reference: src/lambda_71.py:74-89 aligns sentences[i] with
      sentiment_output[i] by list index)
-  J4 offset interval as-of join → ``asof_join`` / ``range_join``
+  J4 offset interval as-of join → ``asof_join``
     (reference: src/lambda_72.py:66-118 two-pointer merge assigning
      entity char offsets to sentence spans)
 
 Scale notes: ``asof_join`` uses the union + last(ignore-nulls) window
 formulation — ONE shuffle on the key, no broadcast-nested-loop, no
 cross product; this is the formulation that survives 100 TB.
-``range_join`` is the literal inequality-join formulation kept for
-cross-checking; Spark executes it as BroadcastNestedLoopJoin unless the
-span side is small, so prefer ``asof_join`` at scale.
 """
 
 from __future__ import annotations
@@ -143,60 +140,3 @@ def asof_join(
         *[F.col(f"_asof_{c}").alias(c) for c in right_cols],
     )
     return out
-
-
-def range_join(
-    probe: DataFrame,
-    spans: DataFrame,
-    probe_point: str,
-    span_start: str,
-    span_end: str,
-    on: list[str] | None = None,
-    broadcast_spans: bool = True,
-) -> DataFrame:
-    """Interval containment join: span_start <= point < span_end.
-
-    Literal formulation of the reference's offset→sentence assignment
-    (src/lambda_72.py:92-105).  Kept for cross-checking ``asof_join``;
-    Spark plans pure inequality joins as nested-loop, so this is only
-    viable when ``spans`` is broadcastable — assert that intent with the
-    hint and prefer ``asof_join`` at scale.
-    """
-    rhs = F.broadcast(spans) if broadcast_spans else spans
-    cond = (probe[probe_point] >= spans[span_start]) & (probe[probe_point] < spans[span_end])
-    if on:
-        for k in on:
-            cond = cond & (probe[k] == spans[k])
-        return probe.alias("p").join(rhs.alias("s"), cond, "left").drop(*[spans[k] for k in on])
-    return probe.join(rhs, cond, "left")
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: spread a hot key across ``salt_buckets``
-    reducers by salting the skewed side and replicating the small side
-    once per salt value.
-
-    AQE's skew-join split handles sort-merge skew at runtime, but not
-    every shape (aggregation-followed joins, streaming, or when the
-    skewed side must stay hash-partitioned for a later stage) — this
-    is the explicit form.  The salt is a deterministic hash of the
-    whole row (xxhash64), so reruns produce identical partitioning;
-    identical duplicate rows share a bucket (acceptable: skew comes
-    from hot KEYS, not duplicated full rows).  Cost: |small| ×
-    salt_buckets replication — keep the replicated side genuinely
-    small (same contract as a broadcast).
-    """
-    salted = skewed.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(salt_buckets)).cast("int"),
-    )
-    replicated = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-    )
-    return salted.join(replicated, on=[on, "_salt"], how=how).drop("_salt")

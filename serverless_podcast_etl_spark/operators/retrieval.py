@@ -397,357 +397,3 @@ def bm25_probe_topk(
         n_docs=int(meta["n_docs"]), total_dl=int(meta["total_dl"]),
         k=k, k1=k1, b=b, idf=idf,
     )
-
-
-def mmr_rerank(
-    candidates: DataFrame,
-    k: int = 10,
-    lam: float = 0.5,
-    query_col: str = "query_id",
-    id_col: str = "neighbor_id",
-    rel_col: str = "score",
-    vec_col: str = "embedding",
-    max_candidates: int = 2048,
-) -> DataFrame:
-    """Greedy maximal-marginal-relevance diversification of a
-    retriever's per-query top-N: repeatedly select the candidate
-    maximizing
-
-        mmr(c) = lam·rel(c) − (1−lam)·max_{s ∈ selected} sim(c, s)
-
-    (first pick: the max term over the empty set is 0, so pure
-    relevance), emitting ``(query_col, id_col, mmr_score, rank)`` for
-    the first ``k`` picks.  The standard answer to "my top-k is ten
-    near-copies of the same document" — for training-data curation,
-    the per-query form of SemDeDup-style diversity.
-
-    EXACTNESS BY CONSTRUCTION (the fact-21 playbook, float edition):
-    candidate similarity is cosine over the int8-QUANTIZED vectors
-    (``similarity.quantize_embeddings_int8``'s certified formula), so
-    every dot/norm is an order-free integer sum; the remaining
-    arithmetic is single IEEE-754 operations on identical doubles —
-    ``dot/sqrt(na·nb)`` (products < 2^53, hence exact),
-    ``floor(cos·10⁴)/10⁴`` truncation (NOT round: floor is the same
-    single op everywhere, immune to the banker's-vs-half-up split),
-    then ``lam·rel − lam1·maxsim`` with ``lam``/``lam1`` passed as
-    the same double literals to any SQL twin.  A k-step CTE unroll
-    therefore hash-matches this kernel exactly (the q117 Lloyd-unroll
-    precedent); ties break to the lower candidate id.
-
-    Contract: ``rel_col`` must itself be cross-engine exact (a rounded
-    certified score — e.g. q22's 4-dp cosine — or a rank-derived
-    1/(60+rank)); candidates per query are a retriever's top-N,
-    capped at ``max_candidates`` (the kernel builds an n×n integer
-    Gram matrix per group — the cap refuses quadratic blowup the way
-    ``EXACT_NEARDUP_MAX_ROWS`` does).
-
-    Scale: one shuffle on ``query_col`` (the applyInPandas group
-    exchange); each group is top-N-bounded so per-group work is
-    O(N²·d) on an Arrow batch, independent of corpus size.  |Q| is
-    the load knob (NOTES fact 24).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from .similarity import quantize_embeddings_int8
-
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"mmr_rerank: lam must be in [0, 1], got {lam}")
-    lam_d, lam1_d = float(lam), 1.0 - float(lam)
-
-    q = quantize_embeddings_int8(
-        candidates, id_col, vec_col, scale_col="_mmr_scale", q_col="_mmr_q"
-    ).select(
-        F.col(query_col).alias("_qid"),
-        F.col(id_col).alias("_nid"),
-        F.col(rel_col).cast("double").alias("_rel"),
-        F.col("_mmr_q"),
-    )
-
-    out_schema = (
-        f"{query_col} {candidates.schema[query_col].dataType.simpleString()}, "
-        f"{id_col} {candidates.schema[id_col].dataType.simpleString()}, "
-        "mmr_score double, rank int"
-    )
-
-    def _greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n > max_candidates:
-            raise ValueError(
-                f"mmr_rerank: {n} candidates in one query group exceeds "
-                f"max_candidates={max_candidates} — pass a retriever top-N, "
-                "not a corpus"
-            )
-        pdf = pdf.sort_values("_nid", kind="mergesort").reset_index(drop=True)
-        if pdf["_mmr_q"].isna().any():
-            bad = pdf.loc[pdf["_mmr_q"].isna(), "_nid"].tolist()[:5]
-            raise ValueError(
-                f"mmr_rerank: NULL {vec_col!r} for candidate ids {bad} — "
-                "every candidate needs a vector (drop or impute upstream)"
-            )
-        codes = np.array(pdf["_mmr_q"].tolist(), dtype=np.int64)
-        gram = codes @ codes.T  # exact int64: |dot| <= 127^2 * dim
-        norms = np.diag(gram)
-        denom = np.sqrt((norms[:, None] * norms[None, :]).astype(np.float64))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(denom > 0, gram / denom, 0.0)
-        sim = np.floor(cos * 10000.0) / 10000.0
-        rel = pdf["_rel"].to_numpy(dtype=np.float64)
-        selected: list[int] = []
-        scores: list[float] = []
-        maxsim = None  # true max-sim to the selected set (may be < 0)
-        taken = np.zeros(n, dtype=bool)
-        for _ in range(min(k, n)):
-            if maxsim is None:
-                obj = lam_d * rel  # empty set: pure relevance
-            else:
-                obj = lam_d * rel - lam1_d * maxsim
-            obj = np.where(taken, -np.inf, obj)
-            pick = int(np.argmax(obj))  # ids ascending -> lowest id wins ties
-            selected.append(pick)
-            scores.append(float(obj[pick]))
-            taken[pick] = True
-            col = sim[:, pick]
-            maxsim = col.copy() if maxsim is None else np.maximum(maxsim, col)
-        return pd.DataFrame(
-            {
-                query_col: pdf["_qid"].iloc[selected].to_numpy(),
-                id_col: pdf["_nid"].iloc[selected].to_numpy(),
-                "mmr_score": np.array(scores, dtype=np.float64),
-                "rank": np.arange(1, len(selected) + 1, dtype=np.int32),
-            }
-        )
-
-    out = q.groupBy("_qid").applyInPandas(_greedy, schema=out_schema)
-    # final rounding OUTSIDE the kernel, via Spark's F.round — the
-    # rounding implementation already certified against DuckDB's
-    # (numpy's scale-rint-rescale is a THIRD rounding path, and
-    # lam=0.5 scores land on exact 5e-6 multiples constantly)
-    return out.withColumn("mmr_score", F.round("mmr_score", 6))
-
-
-def retrieval_agreement(
-    rankings: dict[str, DataFrame],
-    k: int,
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Pairwise agreement diagnostics between retrieval systems — the
-    eval panel a pipeline consults before swapping retrievers (the
-    q62 recall-panel role, but deterministic and hence
-    oracle-certifiable: every metric is integer-derived).  For each
-    query and each unordered system pair (names compared
-    lexicographically, ``system_a < system_b``):
-
-    * ``n_common`` — |top-k(A) ∩ top-k(B)|,
-    * ``overlap_at_k`` — n_common / k, rounded to 4,
-    * ``mean_rank_shift`` — avg |rank_A − rank_B| over the shared
-      ids, rounded to 4; NULL when the intersection is empty.
-
-    Inputs are ``(query_id, neighbor_id, <rank_col>)`` frames, the
-    shape every ``*_topk`` in this engine emits; rows with rank > k
-    are ignored, so passing a wider ranking is safe.  Every (query,
-    pair) row appears even at zero overlap — the scaffold is the
-    distinct query ids × the literal pair list (JVM-side literals,
-    NOTES fact 23).
-
-    Scale: inputs are top-k-bounded, so the join moves Σ|Q|·k rows;
-    the scaffold is |Q|·(#pairs).  |Q| is the load knob (fact 24).
-    The tagged union feeds THREE consumers (the scaffold and both
-    sides of the pair join), so it is materialized at the fork —
-    without the checkpoint every upstream retriever re-executes three
-    times (fact 18; measured as 3 copies of the dense arm's scorer in
-    the executed plan).  The union is Σ|Q|·k rows by contract, so the
-    materialization is trivially bounded.
-    """
-    if len(rankings) < 2:
-        raise ValueError("retrieval_agreement: need at least two systems")
-    names = sorted(rankings)
-    tagged = [
-        rankings[n]
-        .filter(F.col(rank_col) <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.lit(n).alias("_sys"),
-            F.col(rank_col).cast("long").alias("_r"),
-        )
-        for n in names
-    ]
-    u = reduce(lambda a, b: a.unionByName(b), tagged).localCheckpoint(
-        eager=True
-    )
-
-    pairs = [(a, b) for i, a in enumerate(names) for b in names[i + 1 :]]
-    pair_lits = F.array(
-        *[
-            F.struct(
-                F.lit(a).alias("system_a"), F.lit(b).alias("system_b")
-            )
-            for a, b in pairs
-        ]
-    )
-    scaffold = (
-        u.select("query_id")
-        .distinct()
-        .select("query_id", F.explode(pair_lits).alias("_p"))
-        .select("query_id", "_p.system_a", "_p.system_b")
-    )
-
-    a = u.select(
-        "query_id", "neighbor_id",
-        F.col("_sys").alias("system_a"), F.col("_r").alias("_ra"),
-    )
-    b = u.select(
-        "query_id", "neighbor_id",
-        F.col("_sys").alias("system_b"), F.col("_r").alias("_rb"),
-    )
-    common = (
-        a.join(b, ["query_id", "neighbor_id"])
-        .filter(F.col("system_a") < F.col("system_b"))
-        .groupBy("query_id", "system_a", "system_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.sum(F.abs(F.col("_ra") - F.col("_rb"))).alias("_shift"),
-        )
-    )
-    return (
-        scaffold.join(common, ["query_id", "system_a", "system_b"], "left")
-        .select(
-            "query_id",
-            "system_a",
-            "system_b",
-            F.coalesce(F.col("n_common"), F.lit(0)).alias("n_common"),
-            F.round(
-                F.coalesce(F.col("n_common"), F.lit(0)) / F.lit(float(k)), 4
-            ).alias("overlap_at_k"),
-            F.round(F.col("_shift") / F.col("n_common"), 4).alias(
-                "mean_rank_shift"
-            ),
-        )
-    )
-
-
-def bm25_prf_topk(
-    queries: DataFrame,
-    corpus: DataFrame | None,
-    query_id: str,
-    corpus_id: str | None = None,
-    text_col: str = "text",
-    k: int = 10,
-    fb_docs: int = 5,
-    fb_terms: int = 10,
-    alpha: float = 0.5,
-    k1: float = 1.2,
-    b: float = 0.75,
-    index: DataFrame | None = None,
-    meta: dict | None = None,
-) -> DataFrame:
-    """Two-pass BM25 with pseudo-relevance feedback (RM3-style query
-    expansion): retrieve ``fb_docs`` per query, mine the feedback
-    docs' strongest ``fb_terms`` terms, and rescore the corpus with
-    the expanded weighted query —
-
-        weight(t) = 1.0·[t ∈ original]  +  α·w(t)/w_max(q)
-
-    where ``w(t) = round(Σ_{d ∈ FB(q)} tf(d,t) · idf(t), 4)`` (the
-    rational idf — log-free, NOTES fact 12) and ``w_max`` is the
-    per-query max over all feedback terms.  Final score is the
-    weighted BM25 sum, rounded to 4, ranked (score DESC, id ASC).
-    The standard fix for vocabulary mismatch — a probe that says
-    "transformer" also pulls documents that say "attention".
-
-    CERTIFIABILITY: both ranking stages rank on ROUNDED scores with
-    id/term tiebreaks (the q120 convention), the expansion weights are
-    rounded before use, and w_max is an order-free max over rounded
-    values — so a DuckDB twin reproduces the whole two-pass pipeline
-    hash-exactly (the only cross-row float sums are the q01-class
-    scored aggregates, certified empirically).
-
-    Pass ``index``/``meta`` from ``load_bm25_index`` to probe a
-    PERSISTED index (the production path: the postings frame is read
-    once from parquet and reused by all three consumers); otherwise
-    the postings are built from ``corpus`` and materialized at the
-    fork (fact 18 — pass-1 scoring, term mining and pass-2 scoring
-    would each rebuild them).  Shares ``bm25_topk``'s shared-id-space
-    PRECONDITION and |Q|-scaling contract (fact 24).
-    """
-    if index is not None:
-        if meta is None:
-            raise ValueError("bm25_prf_topk: meta is required with index")
-        postings = index
-        n_docs, total_dl = int(meta["n_docs"]), int(meta["total_dl"])
-    else:
-        if corpus is None or corpus_id is None:
-            raise ValueError(
-                "bm25_prf_topk: pass corpus+corpus_id or index+meta"
-            )
-        stats = _corpus_stats(corpus, corpus_id, text_col)
-        n_docs, total_dl = stats["n_docs"], stats["total_dl"]
-        # three consumers on different keys below -> materialize the
-        # postings at the fork (facts 18/19)
-        postings = build_bm25_index(corpus, corpus_id, text_col)
-        postings = postings.localCheckpoint(eager=True)
-
-    fb = _score_postings(
-        postings, queries, query_id, text_col,
-        n_docs=n_docs, total_dl=total_dl,
-        k=fb_docs, k1=k1, b=b, idf="rational",
-    ).select("query_id", "neighbor_id")
-
-    idf_col = _idf(F.col("df"), n_docs, "rational")
-    mined = (
-        postings.join(F.broadcast(fb), "neighbor_id")
-        .groupBy("query_id", "term")
-        .agg(F.round(F.sum(F.col("tf") * idf_col), 4).alias("_w"))
-    )
-    w_max = Window.partitionBy("query_id")
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("_w"), F.asc("term")
-    )
-    fbw = (
-        mined.withColumn("_wmax", F.max("_w").over(w_max))
-        .withColumn("_rn", F.row_number().over(w_rank))
-        .filter(F.col("_rn") <= fb_terms)
-        .select(
-            "query_id",
-            "term",
-            F.round(
-                F.lit(float(alpha)) * F.col("_w") / F.col("_wmax"), 4
-            ).alias("_fbw"),
-        )
-    )
-    orig = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.explode(
-            F.array_distinct(word_tokens(F.col(text_col)))
-        ).alias("term"),
-        F.lit(1.0).alias("_ow"),
-    )
-    combined = orig.join(fbw, ["query_id", "term"], "full").select(
-        "query_id",
-        "term",
-        (
-            F.coalesce(F.col("_ow"), F.lit(0.0))
-            + F.coalesce(F.col("_fbw"), F.lit(0.0))
-        ).alias("_weight"),
-    )
-
-    avgdl = float(total_dl) / max(n_docs, 1)
-    norm = F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.lit(avgdl)
-    contrib = F.col("_weight") * _idf(F.col("df"), n_docs, "rational") * (
-        F.col("tf") * F.lit(k1 + 1.0)
-    ) / (F.col("tf") + F.lit(k1) * norm)
-    scored = (
-        postings.join(F.broadcast(combined), "term")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )

@@ -26,14 +26,6 @@ from ..functions import literals
 from .scale import ensure_parallelism
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
@@ -1624,14 +1616,13 @@ def trained_ivf_probe_topk(
 
 # -- trained-index lifecycle (r14): persist, verify, append, drift ------------
 #
-# The band-index family (dedup.write_band_index / append_to_band_index)
-# established the maintenance contract for persisted approximate
-# indexes: the parameters that make index rows comparable are STAMPED
-# at write time, and every later reader/appender verifies the stamp
-# before touching the table — an index silently mixing incompatible
-# rows returns wrong candidates forever.  The trained IVF's analogue
-# of the signature parameters is the CODEBOOK itself: rows assigned
-# under different codebooks must never share an index.  The stamp is a
+# The maintenance contract for a persisted approximate index: the
+# parameters that make its rows comparable are STAMPED at write time,
+# and every later reader/appender verifies the stamp before touching
+# the table — an index silently mixing incompatible rows returns wrong
+# candidates forever.  For the trained IVF that parameter is the
+# CODEBOOK itself: rows assigned under different codebooks must never
+# share an index.  The stamp is a
 # JSON sidecar under an underscore-prefixed subdirectory (parquet
 # readers skip `_`-prefixed paths, so the data scan never sees it),
 # holding the codebook, its md5 digest, the training parameters, and
@@ -1788,11 +1779,11 @@ def load_trained_ivf_index(
     path: str,
     codebook: list[list[int]] | None = None,
 ) -> tuple[DataFrame, list[list[int]]]:
-    """Read-path stamp check (the ``load_band_index`` convention):
-    return the index frame plus the STAMPED codebook after verifying
-    the caller's codebook (when given) digests to the stamp — raising
-    before any query runs on a mismatch, because probing a table with
-    the wrong codebook silently returns wrong neighbors.  Pass
+    """Read-path stamp check: return the index frame plus the STAMPED
+    codebook after verifying the caller's codebook (when given)
+    digests to the stamp — raising before any query runs on a
+    mismatch, because probing a table with the wrong codebook silently
+    returns wrong neighbors.  Pass
     ``codebook=None`` to adopt the stamped one (the common probe-side
     call: the sidecar is the source of truth)."""
     meta = _read_trained_ivf_meta(spark, path)
@@ -1816,8 +1807,7 @@ def append_to_trained_ivf_index(
 ) -> None:
     """Index maintenance — assign ONLY the new batch under the FROZEN
     stamped codebook and append its rows, so a growing corpus is
-    absorbed without re-training or rewriting the index (the
-    ``append_to_band_index`` contract, trained edition).  When the
+    absorbed without re-training or rewriting the index.  When the
     caller passes a codebook it is verified against the stamp and the
     call raises before writing on any mismatch; the assignment always
     uses the stamped codebook.  The baseline stats are NOT updated —

@@ -66,40 +66,6 @@ def rolling_mean(
     return df.withColumn(out_col, m_scaled.cast("double") / F.lit(float(scale)))
 
 
-def rolling_mean_pandas(
-    df: DataFrame,
-    value: str,
-    partition_by: list[str],
-    order_by: list[str],
-    window_rows: int = 50,
-    out_col: str = "rolling_mean",
-) -> DataFrame:
-    """W1 via grouped ``applyInPandas`` — literally the reference's
-    pandas ``rolling(window, min_periods=1).mean()`` (ec2_data/
-    app.py:302-305), run per group inside Arrow batches.
-
-    Exists alongside the JVM ``rolling_mean`` (which is the scale
-    path: whole-stage codegen, no Python); this form is the parity
-    proof that Spark reproduces the reference's own pandas semantics,
-    and the template for grouped-pandas logic Spark can't express.
-    Equality with the JVM form is asserted in tests.
-    """
-    import pandas as pd  # noqa: F401
-
-    out_fields = df.schema.fields
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields)
-    schema += f", `{out_col}` double"
-
-    def roll(pdf):
-        pdf = pdf.sort_values(order_by, kind="mergesort")
-        pdf[out_col] = (
-            pdf[value].rolling(window=window_rows, min_periods=1).mean()
-        )
-        return pdf
-
-    return df.groupBy(*partition_by).applyInPandas(roll, schema=schema)
-
-
 def top1_per_group(
     df: DataFrame,
     partition_by: list[str],

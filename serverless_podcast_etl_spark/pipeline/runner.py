@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.aggregates import ordered_concat
 from . import ingest, nlp, transcripts
 from .ml_udfs import entities_udf, sentiment_udf
 from .warehouse import Warehouse
@@ -78,21 +79,9 @@ def run_nlp(wh: Warehouse, transcript_df: DataFrame) -> dict[str, int]:
     )
 
     # entities over the '\n'-joined document (offsets per lambda_72)
-    doc_text = sentences.groupBy("episode_id").agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("sentence_index").alias("o"),
-                            F.col("sentence_text").alias("t"),
-                        )
-                    )
-                ),
-                lambda x: x["t"],
-            ),
-        ).alias("document")
+    doc_text = ordered_concat(
+        sentences, ["episode_id"], "sentence_index", "sentence_text",
+        sep="\n", out_col="document",
     )
     ents = doc_text.select(
         "episode_id", F.explode(entities_udf(F.col("document"))).alias("e")

@@ -58,8 +58,9 @@ def _sql_list(words: list[str]) -> str:
 
 def _toks_cte(table: str = "documents") -> str:
     """Whitespace-token list per doc — THE tokenization twin of
-    dedup._word_tokens; every oracle that tokenizes derives from this
-    one helper so the expressions cannot drift apart (r8 ADVICE)."""
+    ``functions.text.word_tokens``; every oracle that tokenizes derives
+    from this one helper so the expressions cannot drift apart (r8
+    ADVICE)."""
     return (
         "SELECT doc_id, list_filter(regexp_split_to_array(lower(text), "
         f"'\\s+'), x -> x <> '') AS t FROM {table}"

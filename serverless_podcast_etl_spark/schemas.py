@@ -100,12 +100,6 @@ NATURAL_KEYS: dict[str, list[str]] = {
 
 # --- staging shapes ---
 
-FEEDS = StructType(
-    [
-        StructField("podcast_name", StringType()),
-        StructField("rss_feed", StringType()),
-    ]
-)
 
 RSS_ENCLOSURE = StructType([StructField("url", StringType())])
 
@@ -136,38 +130,5 @@ TRANSCRIPT_CHUNK = StructType(
         StructField("episode_id", LongType()),
         StructField("chunk_num", IntegerType()),  # 1-based
         StructField("payload", StringType()),  # Transcribe JSON
-    ]
-)
-
-SENTIMENT_SCORE = StructType(
-    [
-        StructField("Negative", FloatType()),
-        StructField("Neutral", FloatType()),
-        StructField("Positive", FloatType()),
-        StructField("Mixed", FloatType()),
-    ]
-)
-
-SENTIMENT_LINE = StructType(
-    [
-        StructField("Sentiment", StringType()),
-        StructField("SentimentScore", SENTIMENT_SCORE),
-    ]
-)
-
-ENTITY_RECORD = StructType(
-    [
-        StructField("Text", StringType()),
-        StructField("Type", StringType()),
-        StructField("BeginOffset", LongType()),
-        StructField("EndOffset", LongType()),
-        StructField("Score", FloatType()),
-    ]
-)
-
-ENTITIES_DOC = StructType(
-    [
-        StructField("episode_id", LongType()),
-        StructField("Entities", ArrayType(ENTITY_RECORD)),
     ]
 )

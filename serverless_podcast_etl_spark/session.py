@@ -57,16 +57,3 @@ def get_spark(
     elif "SPARK_GRAFT_CPUS" in os.environ:
         builder = builder.master(f"local[{os.environ['SPARK_GRAFT_CPUS']}]")
     return builder.getOrCreate()
-
-
-def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine configs to an existing session.
-
-    The driver hands us its own SparkSession; these are the configs we
-    can still fix after the fact (all runtime-mutable).
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    return spark

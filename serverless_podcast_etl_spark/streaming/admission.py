@@ -12,9 +12,9 @@ index is a stream restart, which Structured Streaming makes cheap
 Built on ``foreachBatch`` rather than a stream-static join because
 admission needs a per-batch aggregation (match counts) and a verify
 join — batch semantics inside the micro-batch, the same pattern as
-the warehouse sink tier (orchestrate.py).  The inner operator is the
-SAME code the batch catalog certifies (q76): streaming-vs-batch
-parity is by construction and pinned by test.
+the warehouse sink tier (``Warehouse.insert_ignore``).  The inner
+operator is the SAME code the batch catalog certifies (q76):
+streaming-vs-batch parity is by construction and pinned by test.
 """
 
 from __future__ import annotations
@@ -45,14 +45,14 @@ def admission_batch_fn(
     ``n_matches``; rejected ones go to ``rejected_sink`` when given
     (audit trail), else are dropped.
 
-    ``corpus_bands`` is the production posture: pass
-    ``dedup.load_band_index(spark, table, ...)`` (which verifies the
-    index's stamped signature parameters against the gate's) and each
-    micro-batch's candidate join reads the persisted bucketed index
-    instead of re-signing ``corpus_df`` per batch (the parameters
-    must match those the index was built with — same contract as the
-    batch operator).  A separate batch job maintains the index via
-    ``append_to_band_index``; the stream itself never writes it."""
+    ``corpus_bands`` is the production posture: pass a persisted
+    ``dedup.minhash_bands`` table (``spark.table(...)`` over one written
+    with ``bucketBy`` on (band, bucket)) and each micro-batch's
+    candidate join reads it instead of re-signing ``corpus_df`` per
+    batch.  The index must be built with the gate's (n, num_hashes,
+    bands) — same contract as the batch operator.  A separate batch
+    job maintains the index by appending new documents' bands; the
+    stream itself never writes it."""
 
     def _process(batch_df: DataFrame, epoch: int) -> None:
         gate = incremental_neardup_admission(

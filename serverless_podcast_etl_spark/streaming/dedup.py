@@ -9,7 +9,7 @@ In Structured Streaming the same guarantee has two tiers:
   BOUNDED at any stream volume; a duplicate arriving after the delay
   would pass (the at-least-once window every real pipeline chooses).
 * the sink tier: ``foreachBatch`` + ``Warehouse.insert_ignore``
-  (orchestrate.py) catches anything that outlives the watermark —
+  catches anything that outlives the watermark —
   together they reproduce the reference's end-to-end exactly-once
   effect.
 """

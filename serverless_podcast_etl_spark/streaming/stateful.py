@@ -2,13 +2,12 @@
 
 The reference's reducer (src/lambda_5.py:62-68) re-fires on every chunk
 arrival and early-returns until all ``num_chunks`` chunks are present —
-a keyed completion barrier with no watermark and no timeout.
-``streaming/orchestrate.py`` mirrors that by re-scanning the staging
-dir each trigger; this module is the streaming-NATIVE formulation: the
-arrived chunks live in Spark's state store (checkpointed, survives
-restarts), so each trigger touches only the new files — at 100 TB the
-re-scan formulation is O(staged-so-far) per trigger while this one is
-O(new arrivals).
+a keyed completion barrier with no watermark and no timeout.  The
+batch form (``transcripts.reduce_transcripts``) re-scans every staged
+chunk; this module is the streaming-NATIVE formulation: the arrived
+chunks live in Spark's state store (checkpointed, survives restarts),
+so each trigger touches only the new files — at 100 TB a re-scan per
+trigger is O(staged-so-far) while this one is O(new arrivals).
 
 Semantics kept from the reference: no timeout (an episode with a lost
 chunk stalls forever — surfaced by monitoring, not silently dropped),

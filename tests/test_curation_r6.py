@@ -326,15 +326,14 @@ def test_snapshot_diff_bucketed_join_no_shuffle(spark, sf_dir):
     """With both snapshots bucketed on the id, the full-outer join is
     bucket-to-bucket: zero hashpartitioning exchanges in the plan."""
     from serverless_podcast_etl_spark.operators.dedup import snapshot_diff
-    from serverless_podcast_etl_spark.sources.bucketed import write_bucketed
     from serverless_podcast_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    write_bucketed(docs, "b_snap_old", ["doc_id"], n_buckets=8,
-                   sort_cols=["doc_id"])
-    write_bucketed(docs.withColumn("text", F.concat("text", F.lit("!"))),
-                   "b_snap_new", ["doc_id"], n_buckets=8,
-                   sort_cols=["doc_id"])
+    new = docs.withColumn("text", F.concat("text", F.lit("!")))
+    for snap, table in ((docs, "b_snap_old"), (new, "b_snap_new")):
+        snap.write.mode("overwrite").format("parquet").bucketBy(
+            8, "doc_id"
+        ).sortBy("doc_id").saveAsTable(table)
     try:
         diff = snapshot_diff(
             spark.table("b_snap_old"), spark.table("b_snap_new"),

@@ -51,16 +51,6 @@ def test_double_array_bit_identical_to_lit(spark):
     assert [_bits(x) for x in got["a"]] == [_bits(x) for x in got["b"]]
 
 
-def test_double_matrix_bit_identical_to_lit(spark):
-    rows = [TRICKY_DOUBLES[:4], TRICKY_DOUBLES[4:8], TRICKY_DOUBLES[8:12]]
-    got = spark.range(1).select(
-        literals.double_matrix(rows).alias("m")
-    ).first()["m"]
-    assert [[_bits(x) for x in r] for r in got] == [
-        [_bits(float(x)) for x in r] for r in rows
-    ]
-
-
 def test_long_array_and_matrix_exact(spark):
     got = spark.range(1).select(
         literals.long_array(TRICKY_LONGS).alias("a"),

@@ -202,6 +202,7 @@ def test_shared_token_hash_scan_parity(spark, sf_dir):
 def test_shared_scan_requires_materialize(spark, sf_dir):
     from serverless_podcast_etl_spark.operators.dedup import (
         minhash_lsh_pairs,
+        ngram_jaccard_pairs,
         shared_token_hash48,
     )
     from serverless_podcast_etl_spark.sources.tables import load_table
@@ -212,6 +213,45 @@ def test_shared_scan_requires_materialize(spark, sf_dir):
         minhash_lsh_pairs(
             docs, "text", "doc_id", materialize=False, hashes48=th48
         )
+    with pytest.raises(ValueError, match="materialize"):
+        ngram_jaccard_pairs(
+            docs, "text", "doc_id", materialize=False, hashes48=th48
+        )
+
+
+def test_shared_scan_rejects_another_corpus(spark, sf_dir):
+    """A consumer handed a shared scan of a DIFFERENT frame raises
+    instead of returning pairs over the scan's corpus; the same frame,
+    or a fresh load of the same table, is accepted."""
+    from pyspark.sql import functions as F
+
+    from serverless_podcast_etl_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+        shared_token_hash48,
+        shingles,
+        simhash_neardup_pairs,
+    )
+    from serverless_podcast_etl_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    th48 = shared_token_hash48(docs, "text", "doc_id", shingle_n=3)
+    subset = docs.filter(F.col("doc_id") % 2 == 0)
+    for detector in (
+        lambda d: minhash_lsh_pairs(d, "text", "doc_id", hashes48=th48),
+        lambda d: minhash_lsh_pairs(d, "text", "doc_id", n=2, hashes48=th48),
+        lambda d: ngram_jaccard_pairs(d, "text", "doc_id", hashes48=th48),
+        lambda d: simhash_neardup_pairs(d, "text", "doc_id", hashes48=th48),
+    ):
+        with pytest.raises(ValueError, match="shared_token_hash48 scan"):
+            detector(subset)
+    # a fresh load of the same table passes (a plan comparison, no job)
+    shingles(load_table(spark, sf_dir, "documents"), "text", "doc_id",
+             hashes48=th48)
+    # a frame derived from the scan no longer carries its provenance
+    with pytest.raises(ValueError, match="shared_token_hash48 scan"):
+        shingles(docs, "text", "doc_id",
+                 hashes48=th48.select("doc_id", "_th48"))
 
 
 def test_shared_scan_with_prefolded_shingles_parity(spark, sf_dir):

@@ -1,0 +1,135 @@
+"""Guard against package code that only its own tests reach.
+
+Pure AST, no Spark.  Every top-level definition (function, class or
+module-level name) in ``serverless_podcast_etl_spark/`` must be
+reachable from code outside ``tests/``.  The roots are ``examples/``,
+``tools/``, ``perfbench/``, ``bench.py``, ``__spark_entry__.py`` and
+the package's own module-level statements that define nothing; a
+reached definition makes every name its body uses reachable in turn.
+References match by name (``Name``, ``Attribute`` and imported
+names), so f-string expressions count and docstrings and comments do
+not.
+
+``KEEP`` lists the definitions that stay although only tests reach
+them, each with its reason.  Anything else this test reports does no
+work for the system: delete it together with its tests.
+"""
+
+import ast
+from collections import defaultdict
+from functools import lru_cache
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "serverless_podcast_etl_spark"
+ROOTS = ["examples", "tools", "perfbench", "bench.py", "__spark_entry__.py"]
+
+KEEP = {
+    # The reference system's own seams.
+    "fetch_rss_docs": "lambda_2's RSS feed fetch (SURVEY S5)",
+    "RSS_DOC": "the parsed-feed shape lambda_2 consumes (S5)",
+    "JdbcTableStore": "the MySQL warehouse sink (S6)",
+    "TRANSCRIPT_CHUNK": "the staged chunk record lambda_5 reduces",
+    "mark_materialized": "releases global_prefix_sum's lazy-mode cache",
+    # Reference implementations the live path is checked against.
+    "grouped_ewma": "pandas twin of ewma_partitioned",
+    "_assign_trained_cluster": "expression twin of _nearest_trained_int",
+    "_int_dist_to": "one-centroid form of the twin's distance fold",
+}
+
+
+def _py_files(path):
+    return [path] if path.is_file() else sorted(path.rglob("*.py"))
+
+
+def _without_docstring(body):
+    first = body[0] if body else None
+    if (isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant)
+            and isinstance(first.value.value, str)):
+        return body[1:]
+    return body
+
+
+def _names(nodes):
+    """Every name the nodes refer to: loads, attributes and imports."""
+    out = set()
+    for node in nodes:
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Name):
+                out.add(sub.id)
+            elif isinstance(sub, ast.Attribute):
+                out.add(sub.attr)
+            elif isinstance(sub, ast.alias):
+                out.add(sub.asname or sub.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _defined(stmt):
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    targets = stmt.targets if isinstance(stmt, ast.Assign) else (
+        [stmt.target] if isinstance(stmt, ast.AnnAssign) else [])
+    return [t.id for t in targets
+            if isinstance(t, ast.Name) and not t.id.startswith("__")]
+
+
+def _uses(stmt):
+    """Names a definition's own code uses; its docstring is no use."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return _names([*stmt.decorator_list, stmt.args, *filter(None, [
+            stmt.returns]), *_without_docstring(stmt.body)])
+    if isinstance(stmt, ast.ClassDef):
+        return _names([*stmt.decorator_list, *stmt.bases, *stmt.keywords,
+                       *_without_docstring(stmt.body)])
+    return _names([stmt])
+
+
+@lru_cache(maxsize=None)
+def package_graph():
+    """``(definitions, roots)``: definitions as ``(qualname, name,
+    uses)``; roots are the names used outside the package and by its
+    module-level statements that define nothing."""
+    defs, roots = [], set()
+    for entry in ROOTS:
+        for path in _py_files(ROOT / entry):
+            roots |= _names([ast.parse(path.read_text(), filename=str(path))])
+    for path in _py_files(PACKAGE):
+        module = ".".join(path.relative_to(ROOT).with_suffix("").parts)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for stmt in _without_docstring(tree.body):
+            names = _defined(stmt)
+            if not names:
+                roots |= _names([stmt])
+            for name in names:
+                defs.append((f"{module}.{name}", name, _uses(stmt)))
+    return defs, roots
+
+
+def unreached(keep=KEEP):
+    defs, roots = package_graph()
+    uses_of = defaultdict(set)
+    for _, name, uses in defs:
+        uses_of[name] |= uses
+    reached, todo = set(), [*roots, *keep]
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo.extend(uses_of[name])
+    return sorted(qual for qual, name, _ in defs if name not in reached)
+
+
+def test_every_package_definition_is_reached_outside_tests():
+    dead = unreached()
+    assert not dead, (
+        "reached only from tests/ (delete them with their tests, or add a "
+        "KEEP entry with its reason):\n  " + "\n  ".join(dead))
+
+
+def test_keep_entries_are_defined_and_needed():
+    defined = {name for _, name, _ in package_graph()[0]}
+    assert set(KEEP) <= defined, sorted(set(KEEP) - defined)
+    unneeded = [name for name in KEEP if not any(
+        qual.endswith("." + name)
+        for qual in unreached({k: v for k, v in KEEP.items() if k != name}))]
+    assert not unneeded, f"reached without KEEP, drop them: {unneeded}"

@@ -175,31 +175,6 @@ def test_parse_rss_xml_feeds_the_ingest_path(spark):
     assert eps["http://x/2.mp3"]["episode_release_date"] is None  # permissive F4
 
 
-def test_sentence_sinks_preserve_order(spark, tmp_path):
-    """S13/S14: per-episode text files keep line order; JSON records
-    carry the ordered sentence array."""
-    from serverless_podcast_etl_spark.sources.sinks import (
-        write_sentences_json,
-        write_sentences_text,
-    )
-
-    rows = [(1, i, f"s{i}") for i in range(5)] + [(2, i, f"t{i}") for i in range(3)]
-    df = spark.createDataFrame(
-        rows, "episode_id long, sentence_index int, sentence_text string"
-    )
-    tdir = str(tmp_path / "txt")
-    write_sentences_text(df, tdir)
-    got1 = spark.read.text(tdir + "/episode_id=1").collect()
-    assert [r["value"] for r in got1] == ["s0", "s1", "s2", "s3", "s4"]
-
-    jdir = str(tmp_path / "json")
-    write_sentences_json(df, jdir)
-    back = {
-        r["episode_id"]: r["sentences"] for r in spark.read.json(jdir).collect()
-    }
-    assert back == {1: ["s0", "s1", "s2", "s3", "s4"], 2: ["t0", "t1", "t2"]}
-
-
 def test_partitioned_fact_upsert_touches_one_partition(spark, tmp_path):
     """r4 fact-scale mode (VERDICT "what's missing" #1): with
     partition_by=["episode_id"], loading episode 2's update rewrites

@@ -110,73 +110,6 @@ def test_zip_join_partitioned_no_single_partition(spark, sf_dir):
     assert "hashpartitioning(grp" in plan
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
-    """Fact-to-fact join over tables bucketed on the key: the physical
-    plan must contain no hashpartitioning Exchange — the write-time
-    bucketing already co-located both sides."""
-    from serverless_podcast_etl_spark.sources.bucketed import (
-        bucketed_join,
-        write_bucketed,
-    )
-    from serverless_podcast_etl_spark.sources.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    ).withColumnRenamed("o_orderkey", "l_orderkey")
-    write_bucketed(li, "b_lineitem", ["l_orderkey"], n_buckets=8,
-                   sort_cols=["l_orderkey"])
-    write_bucketed(orders, "b_orders", ["l_orderkey"], n_buckets=8,
-                   sort_cols=["l_orderkey"])
-    # disable auto-broadcast so the join would otherwise shuffle
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "b_lineitem", "b_orders", ["l_orderkey"])
-        plan = physical_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "hashpartitioning" not in plan  # zero exchanges: co-located
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-
-
-def test_partitioned_write_enables_partition_pruning(spark, sf_dir, tmp_path):
-    """A scan over a hive-partitioned staging write must prune at the
-    directory level: the filter appears as a PartitionFilter (not a
-    data filter), and only the matching partition's files are read."""
-    import os
-
-    from serverless_podcast_etl_spark.sources.sinks import (
-        write_partitioned_parquet,
-    )
-    from serverless_podcast_etl_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    out = str(tmp_path / "events_by_type")
-    write_partitioned_parquet(ev, out, ["event_type"])
-    # one directory per type, bounded file count inside each
-    dirs = [d for d in os.listdir(out) if d.startswith("event_type=")]
-    assert len(dirs) >= 3
-    for d in dirs:
-        files = [
-            f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")
-        ]
-        assert len(files) == 1  # repartition bounded the file count
-
-    scan = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    plan = physical_plan(scan)
-    assert "PartitionFilters" in plan
-    assert "event_type" in plan.split("PartitionFilters", 1)[1][:200]
-    assert scan.count() > 0
-
-
 def test_q62_exact_baseline_materialized_once(spark, sf_dir):
     """The recall panel's exact scorer (the only expensive BNLJ) must
     be pinned behind an eager checkpoint: the panel plan then reads
@@ -203,17 +136,15 @@ def test_band_index_join_shuffles_batch_side_only(spark, sf_dir):
     100 TB corpus index is signed and shuffled once at write time,
     every future batch pays only its own side."""
     from serverless_podcast_etl_spark.operators.dedup import minhash_bands
-    from serverless_podcast_etl_spark.sources.bucketed import write_bucketed
     from serverless_podcast_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     corpus_bands = minhash_bands(
         docs.filter(F.col("doc_id") % 10 != 7), "text", "doc_id"
     )
-    write_bucketed(
-        corpus_bands, "b_band_index", ["band", "bucket"], n_buckets=8,
-        sort_cols=["band", "bucket"],
-    )
+    corpus_bands.write.mode("overwrite").format("parquet").bucketBy(
+        8, "band", "bucket"
+    ).sortBy("band", "bucket").saveAsTable("b_band_index")
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -247,16 +178,15 @@ def test_admission_against_bucketed_index_plan(spark, sf_dir):
         incremental_neardup_admission,
         minhash_bands,
     )
-    from serverless_podcast_etl_spark.sources.bucketed import write_bucketed
     from serverless_podcast_etl_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 10 == 7)
     corpus = docs.filter(F.col("doc_id") % 10 != 7)
-    write_bucketed(
-        minhash_bands(corpus, "text", "doc_id"),
-        "b_admission_index", ["band", "bucket"], n_buckets=8,
-        sort_cols=["band", "bucket"],
+    minhash_bands(corpus, "text", "doc_id").write.mode("overwrite").format(
+        "parquet"
+    ).bucketBy(8, "band", "bucket").sortBy("band", "bucket").saveAsTable(
+        "b_admission_index"
     )
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -292,75 +222,6 @@ def test_admission_against_bucketed_index_plan(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         spark.sql("DROP TABLE IF EXISTS b_admission_index")
-
-
-def test_band_index_append_roundtrip(spark, sf_dir):
-    """Index maintenance closes the incremental loop: admit batch1
-    against the persisted index, append batch1's band rows, and a
-    later batch2 of batch1 near-dups must be REJECTED via the
-    appended rows alone — with the post-append index still consumed
-    through its bucketed layout, and parameter-mismatched appends
-    refused before writing."""
-    import pytest
-
-    from serverless_podcast_etl_spark.operators.dedup import (
-        append_to_band_index,
-        incremental_neardup_admission,
-        write_band_index,
-    )
-    from serverless_podcast_etl_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") < 400)
-    batch1 = docs.filter(
-        (F.col("doc_id") >= 400) & (F.col("doc_id") < 450)
-    )
-    # batch2 = verbatim re-submissions of batch1 under fresh ids —
-    # near-dups only of batch1, never of the original corpus
-    batch2 = batch1.select(
-        (F.col("doc_id") + 10_000).alias("doc_id"), "text"
-    )
-    try:
-        write_band_index(
-            corpus, "b_maint_index", "text", "doc_id", n_buckets=8
-        )
-        gate1 = incremental_neardup_admission(
-            batch1, corpus, text_col="text", id_col="doc_id",
-            verify_threshold=0.3,
-            corpus_bands=spark.table("b_maint_index"),
-        )
-        admitted1 = batch1.join(
-            gate1.filter(F.col("admitted") == 1).select("doc_id"),
-            "doc_id", "left_semi",
-        )
-        n_admitted = admitted1.count()
-        assert n_admitted > 0
-        append_to_band_index(
-            admitted1, "b_maint_index", "text", "doc_id", n_buckets=8
-        )
-        # corpus for verification now includes batch1; index was NOT
-        # rebuilt — batch1's rows arrived via the append alone
-        gate2 = incremental_neardup_admission(
-            batch2, corpus.unionByName(batch1), text_col="text",
-            id_col="doc_id", verify_threshold=0.3,
-            corpus_bands=spark.table("b_maint_index"),
-        )
-        rejected = gate2.filter(F.col("admitted") == 0)
-        rejected_ids = {r["doc_id"] for r in rejected.collect()}
-        assert {
-            r["doc_id"] + 10_000 for r in admitted1.select("doc_id").collect()
-        } <= rejected_ids
-        # the appended index still reads through the bucketed scan
-        plan = physical_plan(gate2)
-        assert "SelectedBucketsCount" in plan, plan[:2000]
-        # parameter mismatch refuses before writing
-        with pytest.raises(ValueError, match="refusing to mix"):
-            append_to_band_index(
-                batch2, "b_maint_index", "text", "doc_id",
-                num_hashes=16, n_buckets=8,
-            )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_maint_index")
 
 
 def test_global_prefix_sum_has_no_single_partition_exchange(spark, sf_dir):

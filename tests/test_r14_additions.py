@@ -1,7 +1,6 @@
 """r14: trained-IVF index lifecycle — persist with a codebook-digest
 stamp, stamp-checked load/append, and the drift report that decides
-re-train vs re-assign (r13 VERDICT #5, the ``write_band_index`` /
-``append_to_band_index`` maintenance contract in trained form)."""
+re-train vs re-assign (r13 VERDICT #5)."""
 
 from __future__ import annotations
 

@@ -360,185 +360,3 @@ def test_bm25_index_refusals(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").text(f"{path}/{_BM25_META}")
     with pytest.raises(ValueError, match="tokeniz"):
         load_bm25_index(spark, path)
-
-
-# -- retrieval_agreement (r14 groundwork, catalog wiring r15) -----------------
-
-
-def _py_agreement(rankings, k):
-    names = sorted(rankings)
-    tops = {
-        n: {q: {i: r for i, r in lst.items() if r <= k}
-            for q, lst in rankings[n].items()}
-        for n in names
-    }
-    queries = sorted({q for n in names for q in tops[n] if tops[n][q]})
-    out = []
-    for q in queries:
-        for i, a in enumerate(names):
-            for b in names[i + 1:]:
-                ra, rb = tops[a].get(q, {}), tops[b].get(q, {})
-                shared = sorted(set(ra) & set(rb))
-                n_c = len(shared)
-                shift = (
-                    round(sum(abs(ra[x] - rb[x]) for x in shared) / n_c, 4)
-                    if n_c
-                    else None
-                )
-                out.append((q, a, b, n_c, round(n_c / k, 4), shift))
-    return out
-
-
-def test_agreement_directed(spark):
-    from serverless_podcast_etl_spark.operators.retrieval import (
-        retrieval_agreement,
-    )
-
-    mk = lambda rows: spark.createDataFrame(
-        rows, "query_id long, neighbor_id long, rank int"
-    )
-    res = retrieval_agreement(
-        {
-            "s1": mk([(0, 10, 1), (0, 11, 2), (0, 12, 3), (7, 1, 1)]),
-            "s2": mk([(0, 11, 1), (0, 10, 2), (0, 13, 3)]),
-            "s3": mk([(0, 99, 1)]),
-        },
-        k=3,
-    )
-    rows = {
-        (r["query_id"], r["system_a"], r["system_b"]): (
-            r["n_common"], r["overlap_at_k"], r["mean_rank_shift"]
-        )
-        for r in res.collect()
-    }
-    # s1 vs s2 on q0: {10, 11} shared, shifts |1-2| and |2-1| -> 1.0
-    assert rows[(0, "s1", "s2")] == (2, round(2 / 3, 4), 1.0)
-    # zero-overlap pairs still appear, with NULL shift
-    assert rows[(0, "s1", "s3")] == (0, 0.0, None)
-    assert rows[(0, "s2", "s3")] == (0, 0.0, None)
-    # q7 exists only in s1 -> all its pairs are zero-overlap rows
-    assert rows[(7, "s1", "s2")] == (0, 0.0, None)
-    assert len(rows) == 6
-
-    import pytest
-
-    with pytest.raises(ValueError, match="two systems"):
-        retrieval_agreement({"only": mk([(0, 1, 1)])}, k=3)
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.dictionaries(
-        st.sampled_from(["a", "b", "c"]),
-        st.dictionaries(
-            st.integers(min_value=0, max_value=2),
-            st.lists(
-                st.integers(min_value=0, max_value=12),
-                min_size=0, max_size=6, unique=True,
-            ),
-            min_size=1, max_size=3,
-        ),
-        min_size=2, max_size=3,
-    ),
-    st.integers(min_value=1, max_value=5),
-)
-def test_agreement_matches_python(spark, systems, k):
-    from serverless_podcast_etl_spark.operators.retrieval import (
-        retrieval_agreement,
-    )
-
-    rankings_py = {
-        n: {q: {nid: i + 1 for i, nid in enumerate(lst)}
-            for q, lst in qs.items()}
-        for n, qs in systems.items()
-    }
-    frames = {}
-    for n, qs in rankings_py.items():
-        rows = [(q, nid, r) for q, lst in qs.items() for nid, r in lst.items()]
-        frames[n] = spark.createDataFrame(
-            rows or [(None, None, None)],
-            "query_id long, neighbor_id long, rank int",
-        ).filter(F.col("query_id").isNotNull())
-    got = sorted(
-        (
-            r["query_id"], r["system_a"], r["system_b"],
-            r["n_common"], r["overlap_at_k"], r["mean_rank_shift"],
-        )
-        for r in retrieval_agreement(frames, k=k).collect()
-    )
-    want = sorted(_py_agreement(rankings_py, k))
-    # queries whose every system list is empty after the k-cut do not
-    # appear on either side by construction
-    assert got == want
-
-
-def test_agreement_duckdb_parity(spark):
-    """Sparse (q120) vs dense (q22) arms over the q121 corpus — the
-    oracle shape the r15 catalog entry will register."""
-    from serverless_podcast_etl_spark.functions import text as text_fns
-    from serverless_podcast_etl_spark.operators.retrieval import (
-        bm25_topk,
-        retrieval_agreement,
-    )
-    from serverless_podcast_etl_spark.operators.similarity import (
-        brute_force_topk,
-    )
-    from serverless_podcast_etl_spark.plans.catalog import _bm25_ctes, _t
-
-    from .oracle import compare
-
-    sf_dir = "/root/testdata/sf0.001"
-    k = 10
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id"), "embedding"
-    )
-    corpus = docs.join(emb, "doc_id").select("doc_id", "text", "embedding")
-    probes = corpus.filter(F.col("doc_id") < 3).select(
-        "doc_id",
-        F.array_join(
-            F.slice(text_fns.word_tokens(F.col("text")), 1, 8), " "
-        ).alias("text"),
-        "embedding",
-    )
-    sparse = bm25_topk(probes, corpus, "doc_id", "doc_id", k=k)
-    dense = brute_force_topk(probes, corpus, "doc_id", "doc_id", k=k)
-    res = retrieval_agreement({"sparse": sparse, "dense": dense}, k=k)
-
-    body = _bm25_ctes(source="corpus")
-    sql = f"""
-WITH corpus AS (
-  SELECT d.doc_id, d.text, CAST(e.embedding AS DOUBLE[]) AS emb
-  FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id),
-{body},
-sparse AS (
-  SELECT * FROM (SELECT query_id, neighbor_id, row_number() OVER (
-      PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
-    FROM scored) WHERE rank <= {k}),
-dsc AS (
-  SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
-         round(list_dot_product(q.emb, c.emb) /
-               (sqrt(list_dot_product(q.emb, q.emb)) *
-                sqrt(list_dot_product(c.emb, c.emb))), 4) AS cosine
-  FROM (SELECT * FROM corpus WHERE doc_id < 3) q, corpus c
-  WHERE q.doc_id <> c.doc_id),
-dense AS (
-  SELECT * FROM (SELECT query_id, neighbor_id, row_number() OVER (
-      PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-    FROM dsc) WHERE rank <= {k}),
-qs AS (SELECT DISTINCT query_id FROM
-       (SELECT query_id FROM sparse UNION ALL SELECT query_id FROM dense)),
-common AS (
-  SELECT s.query_id, CAST(count(*) AS BIGINT) AS n_common,
-         SUM(abs(s.rank - d.rank)) AS shift
-  FROM sparse s JOIN dense d USING (query_id, neighbor_id)
-  GROUP BY s.query_id)
-SELECT q.query_id, 'dense' AS system_a, 'sparse' AS system_b,
-       CAST(coalesce(n_common, 0) AS BIGINT) AS n_common,
-       round(coalesce(n_common, 0) / CAST({k} AS DOUBLE), 4)
-         AS overlap_at_k,
-       round(CAST(shift AS DOUBLE) / n_common, 4) AS mean_rank_shift
-FROM qs q LEFT JOIN common USING (query_id)
-"""
-    problems = compare(res, sql, sf_dir)
-    assert not problems, "; ".join(problems)

@@ -1,12 +1,12 @@
-"""Streaming orchestration: AvailableNow drain over a staging dir with
-barrier re-evaluation across triggers (SURVEY §2.9)."""
+"""Structured Streaming tier (SURVEY §2.9): AvailableNow drains over
+staging dirs — the stateful chunk barrier, event-time windows, stream
+dedup, the curation gate and near-dup admission — each pinned against
+its batch twin."""
 
 from __future__ import annotations
 
 import json
 import os
-
-from serverless_podcast_etl_spark.streaming.orchestrate import stream_chunk_payloads
 
 
 def _write_chunk(d: str, ep: int, num: int, text: str) -> None:
@@ -22,36 +22,12 @@ def _write_chunk(d: str, ep: int, num: int, text: str) -> None:
         f.write(json.dumps(rec))
 
 
-def test_streaming_barrier_across_triggers(spark, tmp_path):
-    chunks_dir = str(tmp_path / "chunks")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(chunks_dir)
-    expected = spark.createDataFrame([(1, 2)], "episode_id long, num_chunks int")
-
-    outputs: list[dict[int, str]] = []
-
-    def on_transcript(df):
-        outputs.append({r["episode_id"]: r["transcript"] for r in df.collect()})
-
-    # trigger 1: only chunk 1 staged → barrier holds
-    _write_chunk(chunks_dir, 1, 1, "hello")
-    stream_chunk_payloads(spark, None, chunks_dir, ckpt, expected, on_transcript)
-    assert outputs[-1] == {}
-
-    # trigger 2: chunk 2 arrives → barrier releases with BOTH chunks
-    # (re-evaluated over the full staging dir, not just the new file)
-    _write_chunk(chunks_dir, 1, 2, "world")
-    stream_chunk_payloads(spark, None, chunks_dir, ckpt, expected, on_transcript)
-    assert outputs[-1] == {1: "hello world"}
-
-
 def test_stateful_barrier_state_survives_restart(spark, tmp_path):
     """applyInPandasWithState barrier: chunk 1 in run 1, chunk 2 in
     run 2 (same checkpoint) — the episode completes in run 2 using
     state persisted by run 1, touching only the NEW file."""
     from pyspark.sql import functions as F
 
-    from serverless_podcast_etl_spark.streaming.orchestrate import staged_stream
     from serverless_podcast_etl_spark.streaming.stateful import (
         stateful_chunk_barrier,
     )
@@ -64,8 +40,11 @@ def test_stateful_barrier_state_survives_restart(spark, tmp_path):
     outputs: list[list] = []
 
     def run_once():
-        stream = staged_stream(
-            spark, chunks_dir, schema=schemas.TRANSCRIPT_CHUNK, path_glob="*.json"
+        stream = (
+            spark.readStream.format("json")
+            .schema(schemas.TRANSCRIPT_CHUNK)
+            .option("pathGlobFilter", "*.json")
+            .load(chunks_dir)
         )
         parsed = stream.select(
             "episode_id",
@@ -94,59 +73,6 @@ def test_stateful_barrier_state_survives_restart(spark, tmp_path):
     run_once()
     emitted = [r for batch in outputs for r in batch]
     assert [(r["episode_id"], r["transcript"]) for r in emitted] == [(1, "hello world")]
-
-
-def test_streaming_edge_chains_into_warehouse(spark, tmp_path):
-    """End-to-end §2.9 topology: chunk arrivals drain through the
-    reduce edge, completed transcripts tokenize and land in the
-    sentence dimension via INSERT IGNORE — and a replay of the same
-    staging dir appends nothing."""
-    from pyspark.sql import functions as F
-
-    from serverless_podcast_etl_spark import schemas
-    from serverless_podcast_etl_spark.functions.text import tokenize_sentences
-    from serverless_podcast_etl_spark.pipeline.warehouse import Warehouse
-    from serverless_podcast_etl_spark.streaming.orchestrate import (
-        stream_chunk_payloads,
-    )
-
-    chunks_dir = str(tmp_path / "chunks")
-    os.makedirs(chunks_dir)
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    expected = spark.createDataFrame([(7, 2)], "episode_id long, num_chunks int")
-
-    def on_transcript(transcripts):
-        sentences = tokenize_sentences(
-            transcripts, text_col="transcript", id_cols=["episode_id"]
-        )
-        rows = sentences.select(
-            (F.col("episode_id") * 1_000_000 + F.col("sentence_index")).alias(
-                "sentence_id"
-            ),
-            "sentence_text",
-            F.col("sentence_index").cast("int").alias("sentence_index"),
-            F.lit(None).cast("string").alias("overall_sentiment"),
-            F.lit(None).cast("float").alias("negative_score"),
-            F.lit(None).cast("float").alias("neutral_score"),
-            F.lit(None).cast("float").alias("positive_score"),
-            F.lit(None).cast("float").alias("mixed_score"),
-            "episode_id",
-        )
-        wh.insert_ignore("sentence_dimension", rows)
-
-    _write_chunk(chunks_dir, 7, 1, "First sentence. Second sentence.")
-    _write_chunk(chunks_dir, 7, 2, "Third one!")
-    stream_chunk_payloads(
-        spark, wh, chunks_dir, str(tmp_path / "c1"), expected, on_transcript
-    )
-    got = wh.read("sentence_dimension")
-    assert got.count() == 3
-
-    # replay the whole staging dir (fresh checkpoint = full redelivery)
-    stream_chunk_payloads(
-        spark, wh, chunks_dir, str(tmp_path / "c2"), expected, on_transcript
-    )
-    assert wh.read("sentence_dimension").count() == 3  # idempotent
 
 
 def test_windowed_event_counts_streaming_matches_batch(spark, tmp_path):
@@ -335,50 +261,6 @@ def test_curate_stream_gates_dedups_and_redacts(spark, tmp_path):
     assert sorted(map(content, batch)) == sorted(map(content, got))
 
 
-def test_pack_stream_carries_fill_across_batches(spark, tmp_path):
-    """The per-source token fill survives micro-batch boundaries: two
-    files delivered separately pack identically to batch packing over
-    the whole input (same doc order)."""
-    import os
-
-    from serverless_podcast_etl_spark.operators.packing import pack_sequences
-    from serverless_podcast_etl_spark.streaming.packing import pack_stream
-
-    schema = "doc_id long, source string, text string"
-    rows1 = [(1, "s", "w " * 100), (2, "s", "w " * 200), (5, "t", "w " * 10)]
-    rows2 = [(3, "s", "w " * 50), (4, "s", "w " * 30), (6, "t", "w " * 300)]
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    spark.createDataFrame(rows1, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    packed = pack_stream(stream, "text", budget=256)
-    assert packed.isStreaming
-    got: list = []
-
-    def run():
-        q = (
-            packed.writeStream.foreachBatch(
-                lambda df, _e: got.extend(df.collect())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run()  # batch 1
-    spark.createDataFrame(rows2, schema).coalesce(1).write.mode("append").parquet(src)
-    run()  # batch 2 resumes from checkpointed fill state
-
-    batch = pack_sequences(
-        spark.read.parquet(src), "text", "doc_id", "source", budget=256
-    )
-    expected = sorted(map(tuple, batch.collect()))
-    assert sorted(map(tuple, got)) == expected
-
-
 def test_streaming_admission_matches_batch_gate(spark, tmp_path):
     """The foreachBatch near-dup admission gate admits/rejects exactly
     what the batch q76 operator decides, across micro-batches, with
@@ -454,62 +336,6 @@ def test_streaming_admission_matches_batch_gate(spark, tmp_path):
         r["doc_id"] for r in batch if r["admitted"] == 1
     )
     assert batch_admitted == sorted(r["doc_id"] for r in admitted)
-
-
-def test_streaming_admission_against_persisted_index(spark, tmp_path):
-    """The production posture: the stream's gate reads a persisted
-    ``write_band_index`` table (corpus_bands=) instead of re-signing
-    the corpus each micro-batch, and decides identically."""
-    import os
-
-    from serverless_podcast_etl_spark.operators.dedup import (
-        load_band_index,
-        write_band_index,
-    )
-    from serverless_podcast_etl_spark.streaming.admission import (
-        admission_batch_fn,
-    )
-
-    base = " ".join(f"t{i}" for i in range(30))
-    corpus = spark.createDataFrame(
-        [(1, base), (2, " ".join(f"v{i}" for i in range(30)))],
-        "doc_id long, text string",
-    )
-    arrivals = [
-        (201, " ".join(f"w{i}" for i in range(30))),  # admitted
-        (202, base + " tail"),                        # rejected
-    ]
-    schema = "doc_id long, text string"
-    src = str(tmp_path / "arrivals2")
-    os.makedirs(src)
-    spark.createDataFrame(arrivals, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-
-    admitted: list = []
-    try:
-        write_band_index(
-            corpus, "b_stream_index", "text", "doc_id", n_buckets=4
-        )
-        fn = admission_batch_fn(
-            corpus,
-            text_col="text",
-            id_col="doc_id",
-            sink=lambda df, _e: admitted.extend(df.collect()),
-            verify_threshold=0.3,
-            corpus_bands=load_band_index(spark, "b_stream_index"),
-        )
-        q = (
-            spark.readStream.schema(schema).parquet(src)
-            .writeStream.foreachBatch(fn)
-            .option("checkpointLocation", str(tmp_path / "ckpt2"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert sorted(r["doc_id"] for r in admitted) == [201]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_stream_index")
 
 
 def test_streaming_admission_restart_processes_only_new_files(spark, tmp_path):

@@ -16,8 +16,8 @@ Layout:
                   dedup, similarity, retrieval, selection, multimodal)
     plans       — the analytics query catalog (driver contract)
     pipeline    — the podcast ETL pipeline stages (batch)
-    streaming   — Structured Streaming tiers (stateful chunk barrier,
-                  windows, stream dedup, curation, near-dup admission)
+    streaming   — Structured Streaming tiers (windows, stream dedup,
+                  curation, near-dup admission)
 """
 
 __version__ = "0.1.0"

@@ -1064,10 +1064,10 @@ def _materialize(df: DataFrame, resolved_dir: str | None) -> DataFrame:
 def _cc_min_label_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """One min-label-propagation + pointer-jump iteration, returned
     PRE-checkpoint: (_id, _comp, _new) where ``_new`` is the improved
-    label.  Factored out so ``tools/plan_audit.py`` can audit the real
-    per-iteration join plan — inside the loop the eager checkpoint
-    truncates the static plan to a bare RDD scan, which would hide
-    the iteration's exchanges from any post-hoc audit."""
+    label.  Factored out so the per-iteration join plan can be
+    inspected before the checkpoint truncates it: inside the loop the
+    eager checkpoint cuts the static plan to a bare RDD scan, which
+    hides the iteration's exchanges from ``explain()``."""
     nbr_min = (
         edges.join(
             labels.select(

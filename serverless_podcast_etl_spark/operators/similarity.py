@@ -1211,19 +1211,15 @@ def embedding_norm_outliers(
     )
 
 
-def _int_dist_to(vec: Column, centroid: list[int]) -> Column:
-    """Exact squared-L2 distance (BIGINT) between an int-code array
-    column and one literal centroid code array.  Integer arithmetic
-    end-to-end: the sequential fold is order-free, so the value is
-    bit-identical in Spark and the DuckDB oracle regardless of
-    evaluation order — the property that makes a TRAINED quantizer
-    oracle-exact where float k-means (q34's MLlib path) cannot be."""
-    return _int_sqdist(vec, literals.long_array(centroid))
-
-
 def _int_sqdist(vec: Column, centroid: Column) -> Column:
-    """The ``_int_dist_to`` fold with the centroid already a Column
-    (an ``array<bigint>`` literal or a ``transform`` lambda element)."""
+    """Exact squared-L2 distance (BIGINT) between an int-code array
+    column and a centroid code array given as a Column (an
+    ``array<bigint>`` literal or a ``transform`` lambda element).
+    Integer arithmetic end-to-end: the sequential fold is order-free,
+    so the value is bit-identical in Spark and the DuckDB oracle
+    regardless of evaluation order — the property that makes a TRAINED
+    quantizer oracle-exact where float k-means (q34's MLlib path)
+    cannot be."""
     return F.aggregate(
         F.zip_with(
             vec,

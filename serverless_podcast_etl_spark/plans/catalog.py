@@ -5354,8 +5354,8 @@ CATALOG: dict[str, QueryDef] = {
 #: The round-2 driver certified exactly the FIRST 50 entries of
 #: ``queries()`` (q01–q50 under any first-N rule — sorted or insertion
 #: order), leaving q51–q68 with no correctness row.  The catalog keeps
-#: every query under its canonical qNN name (bench, pytest, PLANS.md
-#: are unaffected); only the DRIVER-facing dicts below re-key the
+#: every query under its canonical qNN name (bench and pytest are
+#: unaffected); only the DRIVER-facing dicts below re-key the
 #: entries in this set with an ``x`` prefix ("x" sorts after "q") and
 #: append them last, so the driver's 50 slots land on one
 #: representative per operator FAMILY — 46 oracle-backed + 4

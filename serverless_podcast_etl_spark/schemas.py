@@ -123,12 +123,3 @@ RSS_CHANNEL = StructType(
 RSS_DOC = StructType(
     [StructField("rss", StructType([StructField("channel", RSS_CHANNEL)]))]
 )
-
-TRANSCRIPT_CHUNK = StructType(
-    [
-        StructField("podcast_name", StringType()),
-        StructField("episode_id", LongType()),
-        StructField("chunk_num", IntegerType()),  # 1-based
-        StructField("payload", StringType()),  # Transcribe JSON
-    ]
-)

@@ -13,9 +13,12 @@ not.
 ``KEEP`` lists the definitions that stay although only tests reach
 them, each with its reason.  Anything else this test reports does no
 work for the system: delete it together with its tests.
+
+The how-to docs (``DOCS``) may name only ``tools/`` scripts that exist.
 """
 
 import ast
+import re
 from collections import defaultdict
 from functools import lru_cache
 from pathlib import Path
@@ -23,18 +26,17 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "serverless_podcast_etl_spark"
 ROOTS = ["examples", "tools", "perfbench", "bench.py", "__spark_entry__.py"]
+DOCS = ["README.md", ".claude/skills/verify/SKILL.md"]
 
 KEEP = {
     # The reference system's own seams.
     "fetch_rss_docs": "lambda_2's RSS feed fetch (SURVEY S5)",
     "RSS_DOC": "the parsed-feed shape lambda_2 consumes (S5)",
     "JdbcTableStore": "the MySQL warehouse sink (S6)",
-    "TRANSCRIPT_CHUNK": "the staged chunk record lambda_5 reduces",
     "mark_materialized": "releases global_prefix_sum's lazy-mode cache",
     # Reference implementations the live path is checked against.
     "grouped_ewma": "pandas twin of ewma_partitioned",
     "_assign_trained_cluster": "expression twin of _nearest_trained_int",
-    "_int_dist_to": "one-centroid form of the twin's distance fold",
 }
 
 
@@ -133,3 +135,10 @@ def test_keep_entries_are_defined_and_needed():
         qual.endswith("." + name)
         for qual in unreached({k: v for k, v in KEEP.items() if k != name}))]
     assert not unneeded, f"reached without KEEP, drop them: {unneeded}"
+
+
+def test_docs_name_only_existing_tools():
+    named = {path for doc in DOCS for path in re.findall(
+        r"(?<![\w/])tools/\w+\.py", (ROOT / doc).read_text())}
+    missing = sorted(path for path in named if not (ROOT / path).is_file())
+    assert not missing, f"docs name deleted tools: {missing}"

@@ -1,78 +1,10 @@
 """Structured Streaming tier (SURVEY §2.9): AvailableNow drains over
-staging dirs — the stateful chunk barrier, event-time windows, stream
-dedup, the curation gate and near-dup admission — each pinned against
-its batch twin."""
+staging dirs — event-time windows, stream dedup, the curation gate and
+near-dup admission — each pinned against its batch twin."""
 
 from __future__ import annotations
 
-import json
 import os
-
-
-def _write_chunk(d: str, ep: int, num: int, text: str) -> None:
-    rec = {
-        "podcast_name": "p",
-        "episode_id": ep,
-        "chunk_num": num,
-        "payload": json.dumps(
-            {"results": {"transcripts": [{"transcript": text}]}}
-        ),
-    }
-    with open(os.path.join(d, f"ep{ep}_chunk{num}.json"), "w") as f:
-        f.write(json.dumps(rec))
-
-
-def test_stateful_barrier_state_survives_restart(spark, tmp_path):
-    """applyInPandasWithState barrier: chunk 1 in run 1, chunk 2 in
-    run 2 (same checkpoint) — the episode completes in run 2 using
-    state persisted by run 1, touching only the NEW file."""
-    from pyspark.sql import functions as F
-
-    from serverless_podcast_etl_spark.streaming.stateful import (
-        stateful_chunk_barrier,
-    )
-    from serverless_podcast_etl_spark import schemas
-
-    chunks_dir = str(tmp_path / "chunks")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(chunks_dir)
-    expected = spark.createDataFrame([(1, 2)], "episode_id long, num_chunks int")
-    outputs: list[list] = []
-
-    def run_once():
-        stream = (
-            spark.readStream.format("json")
-            .schema(schemas.TRANSCRIPT_CHUNK)
-            .option("pathGlobFilter", "*.json")
-            .load(chunks_dir)
-        )
-        parsed = stream.select(
-            "episode_id",
-            F.col("chunk_num").cast("int").alias("chunk_num"),
-            F.get_json_object(
-                "payload", "$.results.transcripts[0].transcript"
-            ).alias("transcript"),
-        ).join(F.broadcast(expected), "episode_id")
-        out = stateful_chunk_barrier(parsed)
-        q = (
-            out.writeStream.foreachBatch(
-                lambda df, epoch: outputs.append(df.collect())
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    _write_chunk(chunks_dir, 1, 1, "hello")
-    run_once()
-    assert all(len(batch) == 0 for batch in outputs)
-
-    _write_chunk(chunks_dir, 1, 2, "world")
-    run_once()
-    emitted = [r for batch in outputs for r in batch]
-    assert [(r["episode_id"], r["transcript"]) for r in emitted] == [(1, "hello world")]
 
 
 def test_windowed_event_counts_streaming_matches_batch(spark, tmp_path):

@@ -18,7 +18,7 @@ from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..functions import dates
 from ..operators.joins import dim_lookup_join
-from .warehouse import Warehouse, with_surrogate_key
+from .warehouse import Warehouse
 
 # XML-parse schema for raw RSS documents (S5; src/lambda_2.py:168-171
 # uses requests + xmltodict).  Spark's native from_xml maps XML
@@ -166,28 +166,18 @@ def ingest_metadata(wh: Warehouse, rss_docs: DataFrame) -> dict[str, int]:
     time_rows = dates.time_dimension(episodes, "episode_release_date")
     n_time = wh.insert_ignore("time_dimension", time_rows)
 
-    # podcast dim with deterministic surrogate keys (SURVEY §7.4.1)
-    base = wh.next_surrogate_base("podcast_dimension", "podcast_id")
-    existing_titles = wh.read("podcast_dimension").select("podcast_title")
-    new_podcasts = podcasts.join(existing_titles, "podcast_title", "left_anti")
-    n_podcast = wh.insert_ignore(
-        "podcast_dimension",
-        with_surrogate_key(new_podcasts, "podcast_id", ["podcast_title"], base),
-    )
+    # podcast dim: insert_ignore assigns podcast_id (AUTO_INCREMENT, SURVEY §7.4.1)
+    n_podcast = wh.insert_ignore("podcast_dimension", podcasts)
 
     # episode dim: resolve podcast FK by natural-key join against the
     # re-read dim (the reference's read-back of AUTO_INCREMENT ids,
     # src/lambda_2.py:222-230, as a broadcast join — J1)
     pod_dim = wh.read("podcast_dimension").select("podcast_title", "podcast_id")
     eps = dim_lookup_join(episodes, pod_dim, on="podcast_title").drop("podcast_title")
-    ebase = wh.next_surrogate_base("episode_dimension", "episode_id")
-    existing_links = wh.read("episode_dimension").select("link")
-    new_eps = eps.join(existing_links, "link", "left_anti")
-    new_eps = with_surrogate_key(new_eps, "episode_id", ["link"], ebase)
-    new_eps = new_eps.withColumn("downloaded", F.lit(False)).withColumn(
+    eps = eps.withColumn("downloaded", F.lit(False)).withColumn(
         "num_chunks", F.lit(0)
     )
-    n_episode = wh.insert_ignore("episode_dimension", new_eps)
+    n_episode = wh.insert_ignore("episode_dimension", eps)
 
     return {
         "time_dimension": n_time,

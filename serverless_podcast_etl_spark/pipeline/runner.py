@@ -18,10 +18,6 @@ from .ml_udfs import entities_udf, sentiment_udf
 from .warehouse import Warehouse
 
 
-def run_metadata(wh: Warehouse, rss_docs: DataFrame) -> dict[str, int]:
-    return ingest.ingest_metadata(wh, rss_docs)
-
-
 def run_transcription(
     wh: Warehouse,
     audio: DataFrame,
@@ -109,7 +105,7 @@ def run_full_pipeline(
     chunk_bytes: int = 10_000_000,
 ) -> dict[str, int]:
     """The whole reference topology in one batch pass."""
-    counts = dict(run_metadata(wh, rss_docs))
+    counts = ingest.ingest_metadata(wh, rss_docs)
     transcript_df = run_transcription(wh, audio, chunk_bytes=chunk_bytes)
     counts.update(run_nlp(wh, transcript_df))
     return counts

@@ -46,7 +46,8 @@ re-delivery appends its rows exactly once, but a plain-parquet reader
 does see them, as it sees the files of a removed version whose writer
 died before vacuuming.  A DataFrame opened on an older snapshot loses
 the files a later ``update_rows`` removed — there is no retention
-window.
+window, and none is planned: no caller keeps a DataFrame across a
+commit, and vacuum-on-commit is what keeps plain-parquet readers exact.
 
 Reads.  ``read`` finds the latest version with one ``listdir`` of
 ``_log`` and returns the DataFrame it already opened for that version.
@@ -66,14 +67,14 @@ rewrites one partition, not the table.  The reference's sentence/
 entity loads (src/lambda_71.py:103-121, src/lambda_2.py:205-238) are
 exactly this shape: every batch targets a single episode.
 
-Surrogate keys: ``AUTO_INCREMENT`` is emulated as the row's rank in
-natural-key order plus ``max(existing)`` — deterministic given the
-natural key (SURVEY §7.4.1).  The rank is taken in one partition: fine
-for dimension tables (podcasts, episodes — thousands of rows), NOT for
-fact-scale data; fact tables (sentence/entity) key on natural
-composite keys instead.  Two concurrent ``ingest_metadata`` calls can
-still hand out the same ids: each reads the same max before either
-commits, and the log only orders their commits.
+Surrogate keys: for the tables in ``schemas.SURROGATE_IDS``,
+``insert_ignore`` emulates ``AUTO_INCREMENT`` inside the commit: a new
+row's id is its rank in natural-key order plus the snapshot's max id
+(SURVEY §7.4.1), so a writer that loses the race re-ranks against the
+winner's snapshot and concurrent writers hand out distinct ids.  The
+rank is taken in one partition: fine for dimension tables (podcasts,
+episodes — thousands of rows), NOT for fact-scale data; fact tables
+(sentence/entity) key on natural composite keys instead.
 """
 
 from __future__ import annotations
@@ -349,6 +350,9 @@ class Warehouse:
         contract every stage of the reference relies on (FIFO dedup +
         INSERT IGNORE).
 
+        A ``schemas.SURROGATE_IDS`` column gets its ids here, from the
+        committed snapshot's max id; an id column on ``incoming`` is replaced.
+
         ``partition_by`` (fact-scale mode): keep the table
         hive-partitioned on those columns; the anti-join reads only
         the partitions the batch touches instead of the whole table.
@@ -357,6 +361,7 @@ class Warehouse:
         pruned anti-join equivalent to the full one.
         """
         keys = schemas.NATURAL_KEYS[table]
+        id_col = schemas.SURROGATE_IDS.get(table)
         if partition_by:
             missing = [c for c in partition_by if c not in keys]
             if missing:
@@ -372,6 +377,9 @@ class Warehouse:
             else:
                 existing = self._frame(table, snap)
             fresh = dedup_insert(existing, incoming, keys)
+            if id_col:
+                top = self._frame(table, snap).agg(F.max(id_col)).first()[0]
+                fresh = with_surrogate_key(fresh, id_col, keys, (top or 0) + 1)
             return fresh.select(*DIM_SCHEMAS[table].fieldNames()), [], None
 
         return self._write(table, partition_by, plan)[1]
@@ -434,22 +442,18 @@ class Warehouse:
 
         return self._write(table, partition_by, plan)[0]
 
-    def next_surrogate_base(self, table: str, id_col: str) -> int:
-        existing = self.read(table)
-        row = existing.agg(F.max(id_col).alias("m")).collect()[0]
-        return (row["m"] or 0) + 1
-
 
 def with_surrogate_key(
     df: DataFrame,
     id_col: str,
     natural_order: list[str],
-    base: int = 1,
+    base: int,
 ) -> DataFrame:
     """Deterministic AUTO_INCREMENT emulation (SURVEY §7.4.1).
 
-    The row's rank in natural-key order, offset by the current max —
-    reruns over the same input produce identical ids.  All rows are
+    The row's rank in natural-key order plus ``base``, which
+    ``Warehouse.insert_ignore`` sets to its snapshot's max id + 1 —
+    reruns against the same snapshot produce identical ids.  All rows are
     sorted in one explicit partition, where
     ``monotonically_increasing_id`` is the row's position: the same ids
     as ``row_number`` over a global window, without that window's

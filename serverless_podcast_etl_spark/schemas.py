@@ -98,6 +98,12 @@ NATURAL_KEYS: dict[str, list[str]] = {
     "entity_dimension": ["episode_id", "begin_offset", "entity_text", "entity_type"],
 }
 
+# AUTO_INCREMENT ids, numbered in NATURAL_KEYS order by Warehouse.insert_ignore.
+SURROGATE_IDS: dict[str, str] = {
+    "podcast_dimension": "podcast_id",
+    "episode_dimension": "episode_id",
+}
+
 # --- staging shapes ---
 
 

@@ -90,7 +90,9 @@ class JdbcTableStore:
         the stored natural keys, then a plain append of the survivors.
 
         Returns the number of rows appended — the same contract as
-        ``Warehouse.insert_ignore`` so pipelines swap stores freely.
+        ``Warehouse.insert_ignore`` so pipelines swap stores freely, except
+        that id columns are appended as given: the database's own
+        ``AUTO_INCREMENT`` stands in for ``schemas.SURROGATE_IDS``.
 
         The survivor set is eagerly materialized (``localCheckpoint``)
         before it is counted AND appended: lazily, each action would

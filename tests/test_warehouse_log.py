@@ -239,3 +239,64 @@ def test_update_rows_leaves_exactly_the_snapshot_on_disk(spark, tmp_path):
     kept = {p for p, f in before.items() if f["partition"] == {"episode_id": "1"}}
     assert kept < set(after) and not (set(before) - kept) & set(after)
     assert sum(f["rows"] for f in after.values()) == 2
+
+
+def test_concurrent_ingests_assign_unique_ids(spark, tmp_path):
+    """Two ``ingest_metadata`` calls on two ``Warehouse`` instances,
+    with A's podcast commit losing the race to B's whole ingest: A
+    re-ranks its new podcasts against B's snapshot, so every podcast
+    and episode gets its own id and every episode's ``podcast_id``
+    names the podcast of its feed."""
+    from pyspark.sql import functions as F
+
+    from serverless_podcast_etl_spark.pipeline.ingest import ingest_metadata
+
+    from .fixtures import make_rss_docs
+
+    docs = make_rss_docs(spark, n_podcasts=6)
+    title = F.col("rss.channel.title")
+    docs_a = docs.filter(title.isin([f"Podcast {p}" for p in range(4)]))
+    docs_b = docs.filter(title.isin([f"Podcast {p}" for p in range(3, 6)]))
+    feed_of = {
+        r["link"]: r["title"]
+        for r in docs.select(
+            title.alias("title"),
+            F.explode("rss.channel.item.enclosure.url").alias("link"),
+        ).collect()
+    }
+
+    root = str(tmp_path / "wh")
+    a, b = Warehouse(spark, root), Warehouse(spark, root)
+    commit = Warehouse._commit
+    raced = []
+
+    def racing_commit(table, version, layout, added, removed):
+        if table == "podcast_dimension" and not raced:
+            raced.append(ingest_metadata(b, docs_b))
+        commit(a, table, version, layout, added, removed)
+
+    a._commit = racing_commit
+    ingest_metadata(a, docs_a)
+    assert raced
+
+    pods = {
+        r["podcast_title"]: r["podcast_id"]
+        for r in a.read("podcast_dimension").collect()
+    }
+    assert sorted(pods.values()) == [1, 2, 3, 4, 5, 6]
+    assert sorted(pods[f"Podcast {p}"] for p in (3, 4, 5)) == [1, 2, 3]
+    assert sorted(pods[f"Podcast {p}"] for p in (0, 1, 2)) == [4, 5, 6]
+
+    eps = a.read("episode_dimension").collect()
+    assert len(eps) == 24
+    assert len({r["episode_id"] for r in eps}) == 24
+    resolved = [
+        (r["link"], r["podcast_title"])
+        for r in a.read("episode_dimension")
+        .join(a.read("podcast_dimension"), "podcast_id")
+        .collect()
+    ]
+    assert sorted(resolved) == sorted(feed_of.items())
+
+    for wh, feeds in ((a, docs_a), (b, docs_b)):
+        assert set(ingest_metadata(wh, feeds).values()) == {0}

@@ -8,10 +8,10 @@ The production shape behind catalog entries q120/q121/q122:
    (``write_bm25_index``): postings with document frequency embedded,
    range-partitioned and sorted on term, exact-integer corpus stats
    stamped in the sidecar.  Built once; probed by every query batch.
-2. SPARSE QUERY — load through the stamp/tokenizer check and probe
-   with ``prune=True``: the query vocabulary becomes a pushed
-   ``In(term, …)`` on the index scan (shown live from the executed
-   plan), so a probe reads posting lists off disk, not the corpus.
+2. SPARSE QUERY — load through the stamp/tokenizer check and probe:
+   the query vocabulary becomes a pushed ``In(term, …)`` on the
+   index scan (shown live from the executed plan), so a probe reads
+   posting lists off disk, not the corpus.
 3. DENSE QUERY — exact cosine top-k over the embedding column for the
    same probe documents (``similarity.brute_force_topk`` — swap in
    the trained-IVF probe of q118 when the corpus outgrows brute
@@ -82,9 +82,7 @@ def main() -> None:
 
     # 2. SPARSE — stamp-checked load, term-pruned probe
     index, stamped = retrieval.load_bm25_index(spark, path)
-    sparse = retrieval.bm25_probe_topk(
-        probes, index, stamped, "doc_id", k=20, prune=True
-    )
+    sparse = retrieval.bm25_probe_topk(probes, index, stamped, "doc_id", k=20)
     plan = sparse._jdf.queryExecution().executedPlan().toString()
     pruned = "In(term" in plan
     print(f"sparse probe: term-pruned index scan: {pruned}")

@@ -14,8 +14,8 @@ gate a training-data pipeline runs at the edge:
    trusted reference corpus — the q102 scoring as an ingest tier),
    PII redaction (streaming/curation.py);
 2. ``admission_batch_fn`` — per-micro-batch near-dup check against a
-   static corpus band index (streaming/admission.py, the operator
-   q76 certifies);
+   static corpus (streaming/admission.py, the operator q76
+   certifies);
 3. ``dedup_insert`` + parquet append — idempotent sink (the A7
    INSERT IGNORE contract).
 

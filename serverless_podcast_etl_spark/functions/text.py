@@ -69,7 +69,12 @@ def word_tokens_spark_sql(col_name: str) -> str:
     """Spark-SQL text of ``word_tokens`` over a column NAME — for
     composing one-call ``F.expr`` strings (opt-r15).  The '\\\\s+'
     spelling survives SQL string-literal unescaping as the regex
-    ``\\s+`` (verified against the Python form)."""
+    ``\\s+`` (verified against the Python form).
+
+    ``col_name`` is backtick-quoted as ONE identifier, so it must be a
+    top-level column name without backticks: a dotted struct path
+    (``meta.text``) resolves as a single literal name and fails.
+    Every caller passes such names."""
     return f"filter(split(lower(`{col_name}`), '\\\\s+'), t -> t != '')"
 
 

@@ -775,8 +775,6 @@ def source_quality_profile(
     source_col: str,
     metric: str = "stopword_ratio",
     k: float = 3.0,
-    exact: bool = True,
-    approx_accuracy: int = 10_000,
 ) -> DataFrame:
     """(source, n_docs, median_<metric>, mad_<metric>, n_outliers) per
     source — the per-domain quality-drift detector: a crawl source
@@ -797,31 +795,21 @@ def source_quality_profile(
     after is arithmetic over per-source tables (≤ #sources rows,
     broadcast into the doc-level joins).
 
-    ``exact=True`` (the certified oracle form) uses grouped
-    ``F.percentile``, which buffers EVERY group member in the
-    aggregation buffer — for a crawl source with billions of
-    documents that is an executor-memory cliff, not a slow plan (the
-    q92 ``quantile_bins`` hazard class).  ``exact=False`` switches
-    both grouped medians to ``percentile_approx`` (Greenwald–Khanna
-    sketch, memory bounded by ``approx_accuracy`` per group
-    regardless of group size); medians/MADs move within sketch error,
-    which the k·MAD outlier rule absorbs by design.  Ship
-    ``exact=False`` at scale.
+    Both grouped medians use the exact ``F.percentile`` (the certified
+    oracle form), which buffers EVERY group member in the aggregation
+    buffer — for a crawl source with billions of documents that is an
+    executor-memory cliff, not a slow plan (the q92 ``quantile_bins``
+    hazard class).
     """
     q = quality_columns(text_col)
     if metric not in q:
         raise ValueError(f"unknown quality metric {metric!r}")
 
-    def _median(col: Column) -> Column:
-        if exact:
-            return F.percentile(col, F.lit(0.5))
-        return F.percentile_approx(col, F.lit(0.5), F.lit(approx_accuracy))
-
     vals = df.select(
         F.col(source_col).alias("source"), q[metric].alias("_v")
     ).filter(F.col("_v").isNotNull()).localCheckpoint(eager=True)
     med = vals.groupBy("source").agg(
-        _median(F.col("_v")).alias("_med"),
+        F.percentile(F.col("_v"), F.lit(0.5)).alias("_med"),
         F.count(F.lit(1)).alias("n_docs"),
     )
     devs = vals.join(F.broadcast(med), "source").select(
@@ -831,7 +819,7 @@ def source_quality_profile(
         F.round(F.abs(F.col("_v") - F.col("_med")), 6).alias("_dev"),
     )
     mad = devs.groupBy("source").agg(
-        _median(F.col("_dev")).alias("_mad")
+        F.percentile(F.col("_dev"), F.lit(0.5)).alias("_mad")
     )
     return (
         devs.join(F.broadcast(mad), "source")

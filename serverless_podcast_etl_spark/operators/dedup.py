@@ -10,9 +10,8 @@ each scales as (corpus size × duplicate density), not corpus².
 Portable hashing (functions/hashing.py) keeps MinHash/SimHash
 signatures bit-identical between Spark and the DuckDB oracle.
 
-``materialize=True`` contract (every knob in this module, ADVICE
-r12): the default eagerly ``localCheckpoint``s the expensive hashing
-scan at its fan-out, which (a) runs a Spark job at
+The pair operators eagerly ``localCheckpoint`` the expensive hashing
+scan at its fan-out (ADVICE r12).  That (a) runs a Spark job at
 DataFrame-CONSTRUCTION time, (b) truncates lineage — localCheckpoint
 blocks live on executor local storage, NOT a reliable store, so on a
 cluster with executor loss/preemption the blocks are unrecoverable
@@ -24,10 +23,9 @@ irrelevant for these operators' own plans (every consumer below the
 fan-out reads ALL checkpointed columns, and the outputs are computed
 pair/score columns no source-level pushdown could reach), but a
 caller composing extra source-column predicates UNDER one of these
-operators should apply them to ``df`` first.  Pass
-``materialize=False`` for the lazy zero-side-effect composition
-(mandatory in streaming plans; parity-tested in
-tests/test_materialize_parity.py).
+operators should apply them to ``df`` first.  Streaming plans need
+the lazy zero-side-effect composition, which
+``incremental_neardup_admission(materialize=False)`` keeps.
 """
 
 from __future__ import annotations
@@ -43,17 +41,15 @@ def exact_dedup(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    normalize: bool = True,
 ) -> DataFrame:
     """Exact duplicate groups by content hash.
 
-    Returns one row per distinct content hash with the representative
-    (minimum) id and the duplicate count.  Hash-groupBy: map-side
-    partial aggregation, one shuffle on the 128-bit digest.
+    Returns one row per distinct content hash (over the trimmed,
+    lower-cased text) with the representative (minimum) id and the
+    duplicate count.  Hash-groupBy: map-side partial aggregation, one
+    shuffle on the 128-bit digest.
     """
-    content = F.col(text_col)
-    if normalize:
-        content = F.lower(F.trim(content))
+    content = F.lower(F.trim(F.col(text_col)))
     return (
         df.select(F.md5(content).alias("content_hash"), F.col(id_col))
         .groupBy("content_hash")
@@ -68,7 +64,6 @@ def exact_dedup_keep_first(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    normalize: bool = True,
 ) -> DataFrame:
     """The applied form of ``exact_dedup``: the corpus with exact
     duplicates removed, keeping the minimum-id representative of each
@@ -77,9 +72,7 @@ def exact_dedup_keep_first(
     """
     from pyspark.sql import Window
 
-    content = F.col(text_col)
-    if normalize:
-        content = F.lower(F.trim(content))
+    content = F.lower(F.trim(F.col(text_col)))
     w = Window.partitionBy(F.md5(content)).orderBy(F.col(id_col))
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -119,8 +112,8 @@ def shared_token_hash48(
     asking for a different shingle width falls back to folding from
     ``_th48`` rather than silently reading the wrong space.
 
-    The eager ``localCheckpoint`` makes this batch-only (the fact-18
-    materialize contract in this module's docstring applies)."""
+    The eager ``localCheckpoint`` makes this batch-only (the
+    checkpoint trade in this module's docstring applies)."""
     from ..functions.text import word_tokens_spark_sql
 
     h48 = F.expr(
@@ -251,7 +244,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.2,
     max_doc_freq: int | None = None,
-    materialize: bool = True,
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard similarity.
@@ -271,27 +263,19 @@ def ngram_jaccard_pairs(
     BOTH numerator and denominators (self-consistent and
     oracle-expressible).
 
-    ``materialize`` (default) ``localCheckpoint``s the shingle table
-    at its fan-out (NOTES fact 18 — the doc-freq cap, the size agg
-    and the self-join's exchange-shared side each re-ran the
-    tokenize→md5 scan): every consumer reads one executed scan.
-    Batch-only; pass ``False`` for lazy/streaming composition.
+    The shingle table is ``localCheckpoint``ed at its fan-out (NOTES
+    fact 18 — the doc-freq cap, the size agg and the self-join's
+    exchange-shared side each re-ran the tokenize→md5 scan): every
+    consumer reads one executed scan.  Batch-only.
 
     ``hashes48`` (a ``shared_token_hash48`` frame) shares the
     tokenize→md5 scan with other detectors over the same corpus
     (bit-identical shingles — the capped similarity space is derived
-    downstream and unaffected); it requires ``materialize=True``, as
-    in ``minhash_lsh_pairs``.
+    downstream and unaffected).
     """
-    if hashes48 is not None and not materialize:
-        raise ValueError(
-            "ngram_jaccard_pairs: hashes48 requires materialize=True "
-            "(the shared scan is an eager checkpoint — a lazy "
-            "composition cannot consume it)"
-        )
-    sh = shingles(df, text_col, id_col, n=n, hashes48=hashes48)
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = shingles(
+        df, text_col, id_col, n=n, hashes48=hashes48
+    ).localCheckpoint(eager=True)
     if max_doc_freq is not None:
         keep = (
             sh.groupBy("shingle")
@@ -335,7 +319,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """Asymmetric near-dup pairs by n-gram CONTAINMENT — the
     doc-inside-doc detector Jaccard structurally misses.
@@ -368,15 +351,12 @@ def containment_pairs(
     raising it past the cluster-size bound only buys boilerplate
     pairs.
 
-    ``materialize`` (default) ``localCheckpoint``s the shingle table
-    at its fan-out, exactly as in ``ngram_jaccard_pairs`` (measured
-    3.10 → 1.98 s on the q110 shape at sf0.1 together with the
-    ``shingles`` distinct-shuffle removal); ``False`` keeps the lazy
-    composition.
+    The shingle table is ``localCheckpoint``ed at its fan-out, exactly
+    as in ``ngram_jaccard_pairs`` (measured 3.10 → 1.98 s on the q110
+    shape at sf0.1 together with the ``shingles`` distinct-shuffle
+    removal).
     """
-    sh = shingles(df, text_col, id_col, n=n)
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    sh = shingles(df, text_col, id_col, n=n).localCheckpoint(eager=True)
     if max_doc_freq is not None:
         keep = (
             sh.groupBy("shingle")
@@ -542,10 +522,7 @@ def minhash_bands(
     bands: int = 4,
 ) -> DataFrame:
     """(id, band, bucket): the LSH band table — each document's
-    signature split into ``bands`` concatenated-bucket keys.  This IS
-    the persistent near-dup index of an incremental pipeline: written
-    once (``bucketBy`` on (band, bucket)), every future batch joins
-    against it without re-signing the corpus."""
+    signature split into ``bands`` concatenated-bucket keys."""
     sig = minhash_signatures(df, text_col, id_col, n=n, num_hashes=num_hashes)
     return _bands_from_signatures(sig, id_col, num_hashes, bands)
 
@@ -583,8 +560,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 8,
     bands: int = 4,
     verify_threshold: float = 0.2,
-    prune_verify: bool = False,
-    materialize: bool = True,
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact Jaccard verification.
@@ -596,66 +571,36 @@ def minhash_lsh_pairs(
     candidate pairs (the whole point of LSH: verification cost scales
     with candidates, never with all n² pairs).
 
-    ``materialize`` (default) ``localCheckpoint``s the per-doc
-    shingle-hash ARRAY frame once at its fan-out (NOTES fact 18): the
-    banding side and BOTH verify shingle sides read the materialized
-    arrays, the per-doc shingle-set sizes become an in-row
-    ``size(array_distinct(...))`` (no groupBy shuffle at all), and
-    the tokenize→md5 scan runs exactly once — where the lazy plan
-    re-ran it per differently-keyed consumer (the band self-join's
-    two sides dedupe via ReusedExchange, but the verify sides shuffle
-    on different keys and cannot).  Measured 1.92 → 1.00 s at sf0.1,
-    parity exact.  The checkpoint makes the call batch-only;
-    ``materialize=False`` keeps the original pure-lazy composition
-    (streaming-safe, e.g. under ``transformWithState``-free
-    foreachBatch callers that re-plan per micro-batch).
-
-    ``prune_verify`` broadcast-semi-joins the shingle tables down to
-    candidate doc ids before the (id, shingle) verify shuffle.  Default
-    OFF from a measured A/B at sf0.1 (parity exact; baseline
-    1.6-2.3 s vs pruned 2.4-2.7 s — two extra broadcast joins cost
-    more than the full shingle shuffle saves when the corpus is
-    small).  The regime flips when candidates ≪ corpus — at fact
-    scale the un-pruned verify shuffles EVERY document's shingles
-    while candidates touch a sliver, so a cluster deployment should
-    enable it (or Spark's runtime Bloom-filter join injection, the
-    engine-native form of the same idea).
+    The per-doc shingle-hash ARRAY frame is ``localCheckpoint``ed once
+    at its fan-out (NOTES fact 18): the banding side and BOTH verify
+    shingle sides read the materialized arrays, the per-doc
+    shingle-set sizes become an in-row ``size(array_distinct(...))``
+    (no groupBy shuffle at all), and the tokenize→md5 scan runs
+    exactly once — where a lazy plan re-runs it per differently-keyed
+    consumer (the band self-join's two sides dedupe via
+    ReusedExchange, but the verify sides shuffle on different keys
+    and cannot).  Measured 1.92 → 1.00 s at sf0.1.  The checkpoint
+    makes the call batch-only.
 
     ``hashes48`` (a ``shared_token_hash48`` frame over the same
     corpus/text/id) lets an ENSEMBLE caller share the tokenize→md5
     scan with other detectors — the shingle fold then derives from
     the shared materialization instead of re-hashing (bit-identical
-    output; requires ``materialize=True``, since the shared frame is
-    itself an eager checkpoint).
+    output).
     """
-    if hashes48 is not None and not materialize:
-        raise ValueError(
-            "minhash_lsh_pairs: hashes48 requires materialize=True "
-            "(the shared scan is an eager checkpoint — a lazy "
-            "composition cannot consume it)"
-        )
-    if materialize:
-        harr = _shingle_arrays(df, text_col, id_col, n, hashes48=hashes48)
-        banded = _bands_from_signatures(
-            _signatures_from_arrays(harr, id_col, num_hashes),
-            id_col, num_hashes, bands,
-        )
-        sh = harr.select(
-            F.col(id_col),
-            F.explode(F.array_distinct("_h32s")).alias("shingle"),
-        )
-        sizes = harr.select(
-            F.col(id_col),
-            F.size(F.array_distinct("_h32s")).alias("n_shingles"),
-        )
-    else:
-        banded = minhash_bands(
-            df, text_col, id_col, n=n, num_hashes=num_hashes, bands=bands
-        )
-        sh = shingles(df, text_col, id_col, n=n)
-        sizes = sh.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_shingles")
-        )
+    harr = _shingle_arrays(df, text_col, id_col, n, hashes48=hashes48)
+    banded = _bands_from_signatures(
+        _signatures_from_arrays(harr, id_col, num_hashes),
+        id_col, num_hashes, bands,
+    )
+    sh = harr.select(
+        F.col(id_col),
+        F.explode(F.array_distinct("_h32s")).alias("shingle"),
+    )
+    sizes = harr.select(
+        F.col(id_col),
+        F.size(F.array_distinct("_h32s")).alias("n_shingles"),
+    )
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
     candidates = (
@@ -670,15 +615,6 @@ def minhash_lsh_pairs(
     # then |A∩B| / (|A|+|B|−|A∩B|).
     sh_a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     sh_b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    if prune_verify:
-        sh_a = sh_a.join(
-            F.broadcast(candidates.select("id_a").distinct()), "id_a",
-            "left_semi",
-        )
-        sh_b = sh_b.join(
-            F.broadcast(candidates.select("id_b").distinct()), "id_b",
-            "left_semi",
-        )
     shared = (
         candidates.join(sh_a, "id_a")
         .join(sh_b, ["id_b", "shingle"])
@@ -712,8 +648,6 @@ def incremental_neardup_admission(
     num_hashes: int = 8,
     bands: int = 4,
     verify_threshold: float = 0.2,
-    prune_verify: bool = False,
-    corpus_bands: DataFrame | None = None,
     materialize: bool = True,
 ) -> DataFrame:
     """Admission gate for incremental ingestion: for each NEW document,
@@ -721,122 +655,62 @@ def incremental_neardup_admission(
     admit (``n_matches = 0``) or reject without ever comparing new
     docs to each other or re-pairing the corpus against itself.
 
-    This is the production shape of near-dup dedup at 100 TB: the
-    corpus side of the join is exactly ``minhash_bands`` — a
-    persistable index (write it with ``bucketBy`` on (band, bucket)
-    and the per-batch candidate join is shuffle-free on the corpus
-    side) — so daily batches cost O(batch signatures + candidates),
-    never O(corpus²) or a corpus re-sign.  Candidate verification
-    re-derives shingles only through equi-joins that touch matched
-    documents.
-
-    ``corpus_bands`` plugs that persisted index straight in: a
-    DataFrame with columns (``id_col``, band, bucket) — e.g.
-    ``spark.table(...)`` over a bucketed table — used for
-    the candidate join INSTEAD of re-signing ``corpus_df``.  The
-    parameters (n, num_hashes, bands) must match those the index was
-    built with; when the table is bucketed on (band, bucket) the
-    candidate join reads it with zero Exchange above the scan
-    (pinned by ``test_admission_against_bucketed_index_plan``).
-    ``corpus_df`` is still consulted for verification shingles —
-    combine with ``prune_verify`` so only candidate-matched corpus
-    docs are shuffled for the verify step.
+    Batches cost O(batch signatures + corpus signatures + candidates),
+    never O(corpus²): candidate verification re-derives shingles only
+    through equi-joins that touch matched documents.
 
     Semantics are exactly ``minhash_lsh_pairs`` over the union,
     restricted to (new × corpus) pairs — pinned by the catalog oracle
     (q76), which computes full-corpus pairs and filters to the split.
 
-    ``prune_verify`` (default off — see the measured A/B on
-    ``minhash_lsh_pairs``) semi-joins the CORPUS shingle table down to
-    candidate doc ids before the verify shuffle; here the asymmetry is
-    extreme (corpus ≫ batch ≫ candidates), so cluster deployments of
-    the incremental gate should enable it even though local bench
-    scale measures it as overhead.
-
     ``materialize`` (default) ``localCheckpoint``s each side's
     shingle-hash arrays at their fan-out (banding + verify shingles +
-    sizes — NOTES fact 18), so the batch is hashed once, and the
-    corpus once instead of up to three times WHEN it is being signed
-    here anyway (``corpus_bands is None``); with a plugged index the
-    corpus side stays lazy — the production shape hashes only what
-    the verify joins touch, and a full-corpus checkpoint would defeat
-    exactly that.  Pass ``False`` for per-micro-batch callers (the
-    streaming admission gate re-plans every batch; re-checkpointing
-    the corpus per batch costs more than the repeated scans).
+    sizes — NOTES fact 18), so the batch and the corpus are each
+    hashed once instead of up to three times.  Pass ``False`` for
+    per-micro-batch callers (the streaming admission gate re-plans
+    every batch; re-checkpointing the corpus per batch costs more
+    than the repeated scans).
     """
-    if materialize:
-        harr_new = _shingle_arrays(new_df, text_col, id_col, n)
-        nb = _bands_from_signatures(
-            _signatures_from_arrays(harr_new, id_col, num_hashes),
-            id_col, num_hashes, bands,
-        ).select(F.col(id_col).alias("_id_new"), "band", "bucket")
-        sh_new = harr_new.select(
-            F.col(id_col).alias("_id_new"),
-            F.explode(F.array_distinct("_h32s")).alias("shingle"),
-        )
-        sz_new = harr_new.select(
-            F.col(id_col).alias("_id_new"),
-            F.size(F.array_distinct("_h32s")).alias("sz_n"),
-        )
-    else:
-        nb = minhash_bands(
-            new_df, text_col, id_col, n=n, num_hashes=num_hashes,
-            bands=bands,
-        ).select(F.col(id_col).alias("_id_new"), "band", "bucket")
-        sh_new = shingles(new_df, text_col, id_col, n=n).select(
-            F.col(id_col).alias("_id_new"), "shingle"
-        )
-        sz_new = sh_new.groupBy("_id_new").agg(
-            F.count(F.lit(1)).alias("sz_n")
-        )
-    harr_old = None
-    if corpus_bands is None:
+
+    def side(frame, key, size_col):
+        """(bands, shingles, sizes) of one side, keyed on ``key``."""
         if materialize:
-            harr_old = _shingle_arrays(corpus_df, text_col, id_col, n)
-            corpus_bands = _bands_from_signatures(
-                _signatures_from_arrays(harr_old, id_col, num_hashes),
+            harr = _shingle_arrays(frame, text_col, id_col, n)
+            banded = _bands_from_signatures(
+                _signatures_from_arrays(harr, id_col, num_hashes),
                 id_col, num_hashes, bands,
             )
+            sh = harr.select(
+                F.col(id_col).alias(key),
+                F.explode(F.array_distinct("_h32s")).alias("shingle"),
+            )
+            sz = harr.select(
+                F.col(id_col).alias(key),
+                F.size(F.array_distinct("_h32s")).alias(size_col),
+            )
         else:
-            corpus_bands = minhash_bands(
-                corpus_df, text_col, id_col, n=n, num_hashes=num_hashes,
+            banded = minhash_bands(
+                frame, text_col, id_col, n=n, num_hashes=num_hashes,
                 bands=bands,
             )
-    cb = corpus_bands.select(
-        F.col(id_col).alias("_id_old"), "band", "bucket"
-    )
+            sh = shingles(frame, text_col, id_col, n=n).select(
+                F.col(id_col).alias(key), "shingle"
+            )
+            sz = sh.groupBy(key).agg(F.count(F.lit(1)).alias(size_col))
+        keyed = banded.select(F.col(id_col).alias(key), "band", "bucket")
+        return keyed, sh, sz
+
+    nb, sh_new, sz_new = side(new_df, "_id_new", "sz_n")
+    cb, sh_old, sz_old = side(corpus_df, "_id_old", "sz_o")
     candidates = (
         nb.join(cb, ["band", "bucket"]).select("_id_new", "_id_old").distinct()
     )
-    if harr_old is not None:
-        sh_old = harr_old.select(
-            F.col(id_col).alias("_id_old"),
-            F.explode(F.array_distinct("_h32s")).alias("shingle"),
-        )
-        sz_old = harr_old.select(
-            F.col(id_col).alias("_id_old"),
-            F.size(F.array_distinct("_h32s")).alias("sz_o"),
-        )
-    else:
-        sh_old = shingles(corpus_df, text_col, id_col, n=n).select(
-            F.col(id_col).alias("_id_old"), "shingle"
-        )
-        sz_old = None
-    if prune_verify:
-        sh_old = sh_old.join(
-            F.broadcast(candidates.select("_id_old").distinct()), "_id_old",
-            "left_semi",
-        )
     shared = (
         candidates.join(sh_new, "_id_new")
         .join(sh_old, ["_id_old", "shingle"])
         .groupBy("_id_new", "_id_old")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    if sz_old is None:
-        sz_old = sh_old.groupBy("_id_old").agg(
-            F.count(F.lit(1)).alias("sz_o")
-        )
     verified = (
         shared.join(sz_new, "_id_new")
         .join(sz_old, "_id_old")
@@ -2133,9 +2007,6 @@ def incremental_refresh(
     num_hashes: int = 8,
     bands: int = 4,
     verify_threshold: float = 0.3,
-    prune_verify: bool = False,
-    corpus_bands: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Continuous-crawl corpus refresh — ``snapshot_diff`` composed
     with ``incremental_neardup_admission``, the end-to-end shape of a
@@ -2154,22 +2025,9 @@ def incremental_refresh(
     settled corpus, q76's batch semantics).
 
     Scale: the diff is one id-keyed full-outer join over in-row
-    digests (churn-bounded output); admission is batch-vs-index
-    (``corpus_bands`` plugs a persisted band index of the retained
-    corpus straight in, and ``prune_verify`` bounds the verify
-    shuffle to candidates — see ``incremental_neardup_admission``).
-    The corpus is never self-paired and never re-signed when an
-    index is supplied.
-
-    Stale-index safety: an index built BEFORE this snapshot may still
-    carry band signatures of now-changed/removed docs (including a
-    changed doc's own old signature).  Those entries can only create
-    false CANDIDATES, never false matches — verification shingles are
-    re-derived from the retained corpus, where such docs have no
-    rows, so every stale candidate dies at the verify join.  Refresh
-    the index by appending the admission survivors' bands
-    (``minhash_bands``); staleness costs candidate work, not
-    correctness.
+    digests (churn-bounded output); admission is batch-vs-corpus
+    (see ``incremental_neardup_admission``), and the corpus is never
+    self-paired.
     """
     delta = snapshot_diff(old, new, id_col=id_col, text_col=text_col)
     ingest_ids = delta.filter(F.col("status") != "removed").select(
@@ -2186,9 +2044,6 @@ def incremental_refresh(
         num_hashes=num_hashes,
         bands=bands,
         verify_threshold=verify_threshold,
-        prune_verify=prune_verify,
-        corpus_bands=corpus_bands,
-        materialize=materialize,
     )
     return adm.join(ingest_ids, id_col).select(
         id_col, "status", "n_matches", "admitted"

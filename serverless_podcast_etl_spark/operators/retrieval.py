@@ -356,7 +356,6 @@ def bm25_probe_topk(
     k1: float = 1.2,
     b: float = 0.75,
     idf: str = "rational",
-    prune: bool = True,
 ) -> DataFrame:
     """BM25 top-k against a persisted ``write_bm25_index`` table — the
     production form: no corpus pass at probe time; the scoring plan is
@@ -364,7 +363,7 @@ def bm25_probe_topk(
     round-trip through parquet changes nothing the result hash can see
     (the q118 story, sparse edition).
 
-    ``prune=True`` collects the distinct query terms — bounded by
+    The distinct query terms — bounded by
     |Q| × query length, the same queries-≪-corpus contract the
     broadcast join already assumes — into a literal ``isin`` filter,
     which reaches the parquet scan as a pushed ``In(term, …)``: with
@@ -374,24 +373,21 @@ def bm25_probe_topk(
     high-cardinality key).  Shares ``bm25_topk``'s id-space
     PRECONDITION.
     """
-    if prune:
-        # the queries frame feeds BOTH the vocabulary collect and the
-        # scoring join below — pin it at the fork (fact 18, the
-        # trained_ivf_probe_topk convention; bounded by contract)
-        queries = queries.localCheckpoint(eager=True)
-        terms = [
-            r["t"]
-            for r in queries.select(
-                F.explode(
-                    F.array_distinct(word_tokens(F.col(text_col)))
-                ).alias("t")
-            )
-            .distinct()
-            .collect()  # bounded: query vocabulary
-        ]
-        index = index.filter(
-            F.col("term").isin(terms) if terms else F.lit(False)
+    # the queries frame feeds BOTH the vocabulary collect and the
+    # scoring join below — pin it at the fork (fact 18, the
+    # trained_ivf_probe_topk convention; bounded by contract)
+    queries = queries.localCheckpoint(eager=True)
+    terms = [
+        r["t"]
+        for r in queries.select(
+            F.explode(
+                F.array_distinct(word_tokens(F.col(text_col)))
+            ).alias("t")
         )
+        .distinct()
+        .collect()  # bounded: query vocabulary
+    ]
+    index = index.filter(F.col("term").isin(terms) if terms else F.lit(False))
     return _score_postings(
         index, queries, query_id, text_col,
         n_docs=int(meta["n_docs"]), total_dl=int(meta["total_dl"]),

@@ -33,11 +33,11 @@ the split count now mirrors Spark's own openCostInBytes BIN-PACKING
 per file, the ``len(files) >= target`` early-out is gone (many small
 files can pack into few tasks — the packed estimate decides, with an
 accumulate-until-proven early exit bounding the stat cost on huge
-inputs), and files the driver cannot ``os.stat`` (remote
-filesystems) are statted through the JVM Hadoop FileSystem; a file
-whose size cannot be determined AT ALL counts as
-``maxPartitionBytes``-sized, so an unknown-size input passes through
-rather than paying a speculative full shuffle.
+inputs), and a file the driver cannot ``os.stat`` (remote
+filesystems) counts as ``maxPartitionBytes``-sized, so an
+unknown-size input passes through rather than paying a speculative
+full shuffle — and the early exit stops after at most ``target``
+such files.
 """
 
 from __future__ import annotations
@@ -64,32 +64,18 @@ def _parse_bytes(s: str) -> int:
     return int(float(num) * _SIZE_SUFFIX.get(suffix, 1))
 
 
-def _file_size(spark, path_str: str) -> int | None:
-    """Size of one input file, or None when it cannot be determined.
-
-    ``os.stat`` covers local paths (the common case in this sandbox);
-    when it fails — remote filesystems like s3/hdfs/abfs — the JVM
-    Hadoop FileSystem is asked instead (one py4j call per file, and
-    the caller's early-exit bounds how many files are ever statted).
-    ``None`` means even the Hadoop stat failed; the caller treats such
-    files as ``maxPartitionBytes``-sized, which errs toward PASSING
-    THROUGH — never toward shuffling an input of unknown (possibly
-    huge) size (opt-r14 VERDICT finding #1: the old probe counted
-    unstat-able files as empty and could trigger a gratuitous full
-    shuffle of a mid-size remote table)."""
-    p = urlparse(path_str).path or path_str
+def _file_size(path_str: str) -> int | None:
+    """Size of one input file by ``os.stat``, or None when it cannot be
+    determined (remote filesystems like s3/hdfs/abfs).  The caller
+    treats such files as ``maxPartitionBytes``-sized, which errs
+    toward PASSING THROUGH — never toward shuffling an input of
+    unknown (possibly huge) size (opt-r14 VERDICT finding #1: the old
+    probe counted unstat-able files as empty and could trigger a
+    gratuitous full shuffle of a mid-size remote table)."""
     try:
-        return os.stat(p).st_size
+        return os.stat(urlparse(path_str).path or path_str).st_size
     except OSError:
-        pass
-    if spark is not None:
-        try:
-            jpath = spark._jvm.org.apache.hadoop.fs.Path(path_str)
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            return int(fs.getFileStatus(jpath).getLen())
-        except Exception:
-            pass
-    return None
+        return None
 
 
 def _estimated_scan_splits(
@@ -98,7 +84,7 @@ def _estimated_scan_splits(
     open_cost: int,
     min_partition_num: int,
     at_least: int | None = None,
-    size_of=None,
+    size_of=_file_size,
 ) -> int:
     """Estimate of the scan's task count, mirroring Spark's own
     file-packing arithmetic (``FilePartition.maxSplitBytes``): every
@@ -122,7 +108,6 @@ def _estimated_scan_splits(
     at_least ⇒ splits ≥ at_least, since the split budget never
     exceeds maxPartitionBytes), the loop returns without statting the
     rest — a 100 TB input is decided after a handful of stats."""
-    size_of = size_of or (lambda f: _file_size(None, f))
     total = 0
     for f in files:
         size = size_of(f)
@@ -244,12 +229,7 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
     if not min_pn:
         min_pn = spark.sparkContext.defaultParallelism
     est = _estimated_scan_splits(
-        files,
-        max_pb,
-        open_cost,
-        min_pn,
-        at_least=target,
-        size_of=lambda f: _file_size(spark, f),
+        files, max_pb, open_cost, min_pn, at_least=target
     )
     if est >= target:
         return df

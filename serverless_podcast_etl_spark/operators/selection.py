@@ -14,36 +14,12 @@ from one bounded (rows = #partitions) driver-side pass.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions import hashing, literals
 from ..functions.text import word_tokens
 from .scale import ensure_parallelism, local_frame
-
-# One-slot tracker for global_prefix_sum(materialize=False)'s persisted
-# sort: the frame must outlive the call (the returned plan reads it),
-# so each call evicts its predecessor instead (bounded cache footprint
-# for per-epoch callers; see the docstring's cache-lifecycle note).
-_LAST_PERSISTED: list[DataFrame] = []
-
-
-def mark_materialized() -> None:
-    """Caller acknowledgment that every result of the previous
-    ``global_prefix_sum(materialize=False)`` call has been fully
-    materialized (collected / checkpointed / written to a sink):
-    release the tracked persisted sort WITHOUT the eviction
-    ``RuntimeWarning``.  The warning exists because recomputing an
-    evicted un-materialized result silently misaligns its offsets
-    (see ``global_prefix_sum``); once the caller has materialized,
-    that hazard is gone and the warning would be a false alarm on
-    every subsequent call (r8 ADVICE).  No-op when nothing is
-    tracked."""
-    while _LAST_PERSISTED:
-        _LAST_PERSISTED.pop().unpersist()
 
 
 def _global_prefix_sum_with_total(
@@ -51,7 +27,6 @@ def _global_prefix_sum_with_total(
     cost_col: str,
     order_cols: list[Column],
     out_col: str = "cum_cost",
-    materialize: bool = True,
     num_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Implementation of ``global_prefix_sum`` (public wrapper below,
@@ -83,14 +58,10 @@ def _global_prefix_sum_with_total(
 
     The realized partitioning MUST be stable between the totals pass
     and the final join, or offsets could describe different partition
-    boundaries than the local cumsums — so the sorted frame is always
-    pinned: ``materialize`` (default) eagerly localCheckpoints it (the
-    range shuffle + sort run once, both passes read materialized
-    partitions); ``materialize=False`` falls back to
-    ``persist(MEMORY_AND_DISK)``, which still fixes the realized
-    partition ids after the first action — there is no unpinned mode,
-    because re-sampled range boundaries on a re-execution are a
-    correctness hazard, not just a double-execution cost.
+    boundaries than the local cumsums — so the sorted frame is pinned
+    by an eager ``localCheckpoint`` (the range shuffle + sort run once,
+    both passes read materialized partitions, and lineage truncation
+    makes re-sampled range boundaries on a re-execution impossible).
 
     ``num_partitions`` overrides the range-partition count (default:
     ``spark.sql.shuffle.partitions``, which AQE may coalesce at small
@@ -102,33 +73,6 @@ def _global_prefix_sum_with_total(
     relation broadcast per call (same order as the union-find node
     bound in ``operators/dedup.py``); size ``num_partitions`` to the
     data, not the cluster, if that ever matters.
-
-    Cache lifecycle: ``materialize=False``'s persisted frame must
-    outlive this call (the returned plan still reads it), so it cannot
-    be unpersisted here.  Each call therefore evicts the PREVIOUS
-    call's persisted frame (module-level one-slot tracking) — a
-    long-lived session running per-epoch ``deterministic_shuffle``
-    reshards holds at most one stale cached sort, not one per epoch.
-    Callers needing tighter control should ``unpersist()`` the
-    returned frame's ancestry themselves after materializing output.
-
-    .. warning:: Eviction is a CORRECTNESS boundary, not just a cache
-       footprint one: a ``materialize=False`` result whose persisted
-       sort has been evicted is unsafe to execute — recomputation
-       re-runs ``repartitionByRange`` with freshly SAMPLED range
-       boundaries, which can assign rows to different partition ids
-       than the ones the already-collected ``_pid`` offsets describe,
-       yielding silently wrong prefix sums (no error).  Materialize
-       (collect/checkpoint/sink) every ``materialize=False`` result
-       BEFORE the next ``global_prefix_sum`` call on the same
-       session; each eviction emits a ``RuntimeWarning`` naming this
-       hazard.  After materializing, call ``mark_materialized()`` to
-       release the tracked sort and acknowledge safety — routine
-       sequential use then never sees the (otherwise false-alarm)
-       warning.  ``materialize=True`` (the default, and the only mode
-       production call sites use) is immune — ``localCheckpoint``
-       stores the realized partitions and truncates lineage, so
-       re-sampling is impossible.
     """
     range_keys = (
         [num_partitions, *order_cols] if num_partitions else order_cols
@@ -136,28 +80,11 @@ def _global_prefix_sum_with_total(
     ranged = df.repartitionByRange(*range_keys).sortWithinPartitions(
         *order_cols
     )
-    part = ranged.withColumn("_pid", F.spark_partition_id()).withColumn(
-        "_cost_l", F.col(cost_col).cast("long")
+    part = (
+        ranged.withColumn("_pid", F.spark_partition_id())
+        .withColumn("_cost_l", F.col(cost_col).cast("long"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        part = part.localCheckpoint(eager=True)
-    else:
-        while _LAST_PERSISTED:
-            # unsafe-to-reuse, not merely slow: see the docstring's
-            # eviction warning (recompute re-samples range boundaries
-            # out from under the collected _pid offsets)
-            warnings.warn(
-                "global_prefix_sum(materialize=False): evicting the "
-                "previous call's persisted sort — any result of that "
-                "call not yet materialized must not be executed now "
-                "(recomputation would re-sample range boundaries and "
-                "silently misalign its prefix-sum offsets)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            _LAST_PERSISTED.pop().unpersist()
-        part = part.persist(StorageLevel.MEMORY_AND_DISK)
-        _LAST_PERSISTED.append(part)
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     local = part.withColumn("_local_cum", F.sum("_cost_l").over(w))
     # bounded driver pass: one row per partition
@@ -187,16 +114,15 @@ def global_prefix_sum(
     cost_col: str,
     order_cols: list[Column],
     out_col: str = "cum_cost",
-    materialize: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Inclusive distributed running sum — the public form.  Full
-    contract, scale shape, and the materialize/eviction warning: see
-    ``_global_prefix_sum_with_total`` directly above (this wrapper
-    only drops the grand-total by-product from the return)."""
+    contract and scale shape: see ``_global_prefix_sum_with_total``
+    directly above (this wrapper only drops the grand-total by-product
+    from the return)."""
     df2, _total = _global_prefix_sum_with_total(
         df, cost_col, order_cols, out_col=out_col,
-        materialize=materialize, num_partitions=num_partitions,
+        num_partitions=num_partitions,
     )
     return df2
 
@@ -583,8 +509,6 @@ def quantile_bins(
     score_col: str,
     probs: tuple[float, ...] = (0.25, 0.5, 0.75),
     out_col: str = "bucket",
-    exact: bool = True,
-    approx_accuracy: int = 10000,
 ) -> DataFrame:
     """Bin rows by score quantiles: bucket 0 holds scores at or
     below the ``probs[0]`` quantile, the last bucket everything above
@@ -602,32 +526,19 @@ def quantile_bins(
     the q92 oracle), so the bins are engine-portable.  Null scores
     get a null bucket.
 
-    SCALE FENCE (``exact``): Spark's exact ``percentile`` buffers a
-    per-partition map of DISTINCT values — on a continuous double
-    score over a 100 TB corpus that map is ~one entry per row, an
-    executor-memory cliff (the same hazard class the
-    ``embedding_neardup_pairs`` ``exact_max_rows`` guard fences).
-    ``exact=False`` switches the boundary pass to
-    ``percentile_approx`` (Greenwald–Khanna sketch, memory bounded by
-    ``approx_accuracy`` regardless of cardinality, the q41
-    primitive); bucket ASSIGNMENT is unchanged, only the boundary
-    estimate moves within sketch error.  Keep ``exact=True`` (the
-    certified q92 oracle form) when the score has bounded distinct
-    cardinality (grades, integer scores, rounded ratios) or the
-    corpus is sample-scale.
+    Scale limit: Spark's exact ``percentile`` buffers a per-partition
+    map of DISTINCT values — on a continuous double score over a
+    100 TB corpus that map is ~one entry per row, an executor-memory
+    cliff (the same hazard class the ``embedding_neardup_pairs``
+    ``exact_max_rows`` guard fences).  The score should have bounded
+    distinct cardinality (grades, integer scores, rounded ratios) or
+    the corpus be sample-scale.
     """
     # one literal round-trip for the whole probability list (the
     # F.array(*[F.lit...]) form is a per-element py4j storm — NOTES
     # fact 26; same doubles bit-for-bit)
     probs_arr = literals.double_array(sorted(float(p) for p in probs))
-    boundary_agg = (
-        F.percentile(F.col(score_col), probs_arr)
-        if exact
-        else F.percentile_approx(
-            F.col(score_col), probs_arr, F.lit(approx_accuracy)
-        )
-    )
-    bounds = df.agg(boundary_agg).first()[0]
+    bounds = df.agg(F.percentile(F.col(score_col), probs_arr)).first()[0]
     if bounds is None:
         # empty input or all-null scores: no boundaries exist — every
         # row (necessarily null-scored) gets a null bucket
@@ -699,9 +610,7 @@ def _materialize_grams(
     both the explode consumers and the gram-ORDERED log-ratio fold can
     read it.  The checkpoint makes the caller batch-only and trades a
     corpus-linear intermediate (id + int array, typically smaller than
-    the text it replaces) for the repeated scans — callers that would
-    rather re-scan pass ``materialize=False`` and keep the pure
-    two-scan streaming shape.
+    the text it replaces) for the repeated scans.
 
     Fault-tolerance/pushdown contract as dedup.py's module note
     (ADVICE r12): the eager checkpoint runs a job at construction
@@ -740,7 +649,7 @@ def _bucket_weights(
     scan with a read of the already-materialized buckets.  The
     no-grams path fans a split-starved input out before paying the
     tokenize→md5→fold scan (opt-r15, the r14 floor applied to the
-    separate-target/non-materialized fits — guide §2.5; per-bucket
+    separate-target fit — guide §2.5; per-bucket
     counts are order-free integer aggregations, so the round-robin
     cannot move a bit)."""
     if grams is not None:
@@ -763,34 +672,16 @@ def _bucket_weights(
 
 
 def _bucket_weights_joint(
-    raw: DataFrame | None,
-    target_predicate: Column | None,
-    text_col: str,
-    num_buckets: int,
-    max_n: int,
-    grams: DataFrame | None = None,
+    grams: DataFrame, num_buckets: int
 ) -> tuple[list[int], int, list[int], int]:
     """Both corpora's smoothed feature counts from ONE pass, for the
     common case where the target is a predicate-defined SUBSET of the
-    raw corpus (curated language/domain/quality slice): one hashing
-    scan (or one read of the materialized ``grams`` frame, which must
-    carry the ``_t`` flag), one ≤num_buckets-row shuffle, one bounded
-    collect — a raw ``count(*)`` plus a conditional target count per
-    bucket — instead of hashing the corpus twice for two fits."""
-    if grams is not None:
-        src = grams.select("_t", F.explode("_b").alias("_b"))
-    else:
-        # the same opt-r15 fan-out floor + bound token hashes as
-        # _bucket_weights' no-grams path (the materialize=False joint
-        # fit still hashes the corpus here)
-        src = _token_hash_frame(
-            raw, text_col, target_predicate=target_predicate
-        ).select(
-            "_t",
-            F.explode(
-                _gram_buckets_from_th(num_buckets, max_n)
-            ).alias("_b"),
-        )
+    raw corpus (curated language/domain/quality slice): one read of
+    the materialized ``grams`` frame (which must carry the ``_t``
+    flag), one ≤num_buckets-row shuffle, one bounded collect — a raw
+    ``count(*)`` plus a conditional target count per bucket — instead
+    of hashing the corpus twice for two fits."""
+    src = grams.select("_t", F.explode("_b").alias("_b"))
     counts = (
         src.groupBy("_b")
         .agg(
@@ -895,7 +786,6 @@ def target_affinity_scores(
     max_n: int = 2,
     target_predicate: Column | None = None,
     weight_form: str = "difference",
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-document target-distribution affinity over hashed n-gram
     features — the data-selection step of a pretraining pipeline
@@ -940,22 +830,21 @@ def target_affinity_scores(
       fit pass per corpus.
 
     Either way each fit is a ≤``num_buckets``-row shuffle + one
-    bounded collect.  ``materialize`` (default) runs raw's hashing
-    scan ONCE, ``localCheckpoint``ed at its fan-out (NOTES fact 18 —
-    the tokenize→md5 scan measured ~4× everything downstream of it,
-    and fit + score both consume it), so the whole operator hashes
-    the corpus exactly once at the cost of a corpus-linear
+    bounded collect.  Raw's hashing scan runs ONCE,
+    ``localCheckpoint``ed at its fan-out (NOTES fact 18 — the
+    tokenize→md5 scan measured ~4× everything downstream of it, and
+    fit + score both consume it), so the whole operator hashes the
+    corpus exactly once at the cost of a corpus-linear
     ``(id, int-array)`` intermediate — typically SMALLER than the
     text it stands in for, and the checkpoint makes the call
-    batch-only.  ``materialize=False`` keeps the pure streaming
-    shape: zero intermediates, two hashing scans (fit + score).
+    batch-only.
 
     The difference-form score pass is whole-stage-codegen relational
     ops (``_score_difference``): each doc's grams broadcast-join the
     ≤num_buckets-row weight relation and fold to one row per doc via
     exact integer sums — order-free, so hash-agg reordering cannot
-    move a bit.  Scoring 100 TB is therefore one scan (or one read
-    of the materialized grams) + a doc-count-bounded exchange; the
+    move a bit.  Scoring 100 TB is therefore one read of the
+    materialized grams + a doc-count-bounded exchange; the
     log-ratio form keeps the gram-ordered in-row fold instead, since
     its float accumulation is order-sensitive.  Token-less documents
     emit no row (no evidence — same domain contract as
@@ -974,12 +863,8 @@ def target_affinity_scores(
         )
     if target is None and target_predicate is None:
         raise ValueError("pass a target frame or a target_predicate")
-    grams = (
-        _materialize_grams(
-            raw, text_col, id_col, num_buckets, max_n, target_predicate
-        )
-        if materialize
-        else None
+    grams = _materialize_grams(
+        raw, text_col, id_col, num_buckets, max_n, target_predicate
     )
     return _affinity_scores_impl(
         raw, target, text_col, id_col, num_buckets, max_n,
@@ -996,33 +881,20 @@ def _affinity_scores_impl(
     max_n: int,
     target_predicate: Column | None,
     weight_form: str,
-    grams: DataFrame | None,
+    grams: DataFrame,
 ) -> DataFrame:
-    """``target_affinity_scores`` body with the (optionally
-    materialized) gram frame passed in, so ``target_coverage_audit``
-    can share ONE checkpointed hashing scan across the fit, the score
-    pass, and its own bucket-coverage passes."""
+    """``target_affinity_scores`` body with the materialized gram frame
+    passed in, so ``target_coverage_audit`` can share ONE checkpointed
+    hashing scan across the fit, the score pass, and its own
+    bucket-coverage passes."""
     if target_predicate is not None:
-        wt, tt, wr, tr = _bucket_weights_joint(
-            raw, target_predicate, text_col, num_buckets, max_n,
-            grams=grams,
-        )
+        wt, tt, wr, tr = _bucket_weights_joint(grams, num_buckets)
     else:
         wt, tt = _bucket_weights(target, text_col, num_buckets, max_n)
         wr, tr = _bucket_weights(
             raw, text_col, num_buckets, max_n, grams=grams
         )
-    if grams is not None:
-        arrays = grams.select(id_col, "_b")
-    else:
-        # materialize=False score pass: the second hashing scan gets
-        # the same fan-out floor + bound token hashes (opt-r15; the
-        # per-doc score is in-row / order-free-summed,
-        # partition-count-invariant)
-        arrays = _token_hash_frame(raw, text_col, id_col).select(
-            id_col,
-            _gram_buckets_from_th(num_buckets, max_n).alias("_b"),
-        )
+    arrays = grams.select(id_col, "_b")
     if weight_form == "log_ratio":
         # DSIR's exact per-feature weight, precomputed driver-side:
         # w[b] = log p_t(b) − log p_r(b) with the same add-1
@@ -1081,7 +953,6 @@ def target_coverage_audit(
     target_predicate: Column | None = None,
     seed: str = "seed0",
     selection_ids: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Selection-quality audit for ``select_by_target_affinity``: of
     the TARGET distribution's distinct hashed n-gram feature buckets,
@@ -1112,14 +983,12 @@ def target_coverage_audit(
     hashing scan (``_materialize_grams``, NOTES fact 18) feeds
     EVERYTHING — the affinity fit, the score pass, the target bucket
     set, and both coverage passes — so the corpus is tokenized and
-    md5-hashed exactly once (``materialize=False`` restores the
-    zero-intermediate shape: one hashing scan per pass).  The target's
-    bucket set is ≤``num_buckets`` rows after one distinct
-    (materialized once — both methods read it); each selection is k
-    rows; each coverage pass broadcasts the k selected ids into a
-    semi-join (the corpus is never shuffled) folding into a
-    ≤``num_buckets``-row distinct.  With ``selection_ids`` the full
-    corpus is NOT materialized regardless of ``materialize`` — only
+    md5-hashed exactly once.  The target's bucket set is
+    ≤``num_buckets`` rows after one distinct (materialized once —
+    both methods read it); each selection is k rows; each coverage
+    pass broadcasts the k selected ids into a semi-join (the corpus
+    is never shuffled) folding into a ≤``num_buckets``-row distinct.
+    With ``selection_ids`` the full corpus is NOT materialized — only
     the target and the k selected docs are hashed at all, which is
     strictly cheaper.  Driver memory is O(k + num_buckets); nothing
     here is quadratic.
@@ -1130,7 +999,7 @@ def target_coverage_audit(
         _materialize_grams(
             raw, text_col, id_col, num_buckets, max_n, target_predicate
         )
-        if materialize and selection_ids is None
+        if selection_ids is None
         else None
     )
 
@@ -1220,7 +1089,6 @@ def select_by_target_affinity(
     max_n: int = 2,
     target_predicate: Column | None = None,
     weight_form: str = "difference",
-    materialize: bool = True,
 ) -> DataFrame:
     """Top-``k`` raw documents by target affinity (score DESC, then
     ``id_col`` ASC — the rounded score makes the order, and therefore
@@ -1232,7 +1100,6 @@ def select_by_target_affinity(
         num_buckets=num_buckets, max_n=max_n,
         target_predicate=target_predicate,
         weight_form=weight_form,
-        materialize=materialize,
     )
     return scores.orderBy(
         F.col("score").desc(), F.col(id_col)

@@ -51,6 +51,12 @@ def _norm(a: Column) -> Column:
 
 
 def _dot_sql(a: str, b: str) -> str:
+    """SQL text of the dot product of two array expressions.  Call
+    sites pass column names backtick-quoted as ONE identifier
+    (``f"`{vec_col}`"``), so a column must be a top-level name without
+    backticks — a dotted struct path (``meta.vec``) resolves as a
+    single literal name and fails.  Every caller passes such names;
+    the same holds for ``_norm_sql`` and ``_int_dot_sql``."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
         "(acc, v) -> acc + v)"
@@ -58,6 +64,8 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _norm_sql(a: str) -> str:
+    """SQL text of the L2 norm of an array expression (column names as
+    in ``_dot_sql``: top-level, backtick-quoted, no backticks)."""
     return (
         f"sqrt(aggregate(transform({a}, x -> x * x), 0.0D, "
         "(acc, v) -> acc + v))"
@@ -658,7 +666,6 @@ def embedding_neardup_pairs(
     planes: list[list[float]] | None = None,
     threshold: float = 0.95,
     exact_max_rows: int = EXACT_NEARDUP_MAX_ROWS,
-    broadcast_candidates: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs above a threshold.
 
@@ -680,8 +687,7 @@ def embedding_neardup_pairs(
     single bit-signature, not multi-table bands), so a pair can only
     appear once.
 
-    With ``broadcast_candidates=True`` (default) the bucket self-join
-    BROADCASTS its build side: ``bucket`` has at most
+    The bucket self-join BROADCASTS its build side: ``bucket`` has at most
     ``2^len(planes)`` distinct values, so a shuffle join would land
     every candidate pair on ≤ that many reduce tasks no matter the
     cluster (measured: the sf1 rehearsal corpus ran its 12M
@@ -694,12 +700,8 @@ def embedding_neardup_pairs(
     and a hinted build side over Spark's 8 GB broadcast cap (or over
     driver/executor memory) THROWS rather than falling back to a
     shuffle — raising ``len(planes)`` does not shrink the broadcast,
-    which is the whole table.  For an embedding corpus too large to
-    broadcast, pass ``broadcast_candidates=False`` to restore the
-    shuffle bucket-join (pair-identical output; parallelism then
-    capped at the bucket count — the cluster-scale trade the caller
-    makes explicitly).  ``ensure_parallelism`` fans the probe side
-    out of single-row-group inputs first either way.
+    which is the whole table.  ``ensure_parallelism`` fans the probe
+    side out of single-row-group inputs first.
     """
     d = _as_double(
         ensure_parallelism(df), vec_col
@@ -718,8 +720,7 @@ def embedding_neardup_pairs(
             F.col("_nv").alias("_nb"),
             "bucket",
         )
-        build = F.broadcast(b) if broadcast_candidates else b
-        cand = a.join(build, "bucket").filter(
+        cand = a.join(F.broadcast(b), "bucket").filter(
             F.col("id_a") < F.col("id_b")
         )
     else:
@@ -967,7 +968,6 @@ def build_ivf_index(
     id_col: str,
     centroids: list[list[float]],
     vec_col: str = "embedding",
-    spherical: bool = True,
 ) -> DataFrame:
     """The persistable inverted-file ANN index: one row per corpus
     vector with its quantizer cell, double-cast vector, and hoisted
@@ -975,29 +975,17 @@ def build_ivf_index(
     query batch forever after (the q76-admission production shape,
     applied to the similarity family).
 
-    ``spherical=True`` assigns by max dot product against literal
-    centroids (``spherical_assign`` — JVM expression, oracle-exact);
-    ``False`` uses the trained-k-means BLAS path
-    (``assign_ivf_cluster``).  Either way the expensive part — one
-    assignment pass over the full corpus — happens here, never at
-    query time: a daily query batch against 100 TB re-reads only the
-    probed partitions of this index and re-assigns nothing.
-
-    Both paths emit 1-BASED cluster ids — ``probe_cells``' convention
-    (``F.lit(i + 1)`` / ``array_position``).  ``assign_ivf_cluster``'s
-    raw numpy argsort is 0-based, so the BLAS path is offset here;
-    without the offset a probe of cell i would silently join centroid
-    i+1's corpus rows (and the top cell would match nothing).
+    Assignment is by max dot product against literal centroids
+    (``spherical_assign`` — JVM expression, oracle-exact), with
+    1-BASED cluster ids — ``probe_cells``' convention.  The expensive
+    part — one assignment pass over the full corpus — happens here,
+    never at query time: a daily query batch against 100 TB re-reads
+    only the probed partitions of this index and re-assigns nothing.
     """
-    if spherical:
-        assigned = spherical_assign(corpus, centroids, vec_col=vec_col)
-        cluster = F.col("cluster")
-    else:
-        assigned = assign_ivf_cluster(corpus, centroids, vec_col=vec_col)
-        cluster = F.col("cluster") + F.lit(1)
+    assigned = spherical_assign(corpus, centroids, vec_col=vec_col)
     return assigned.select(
         F.col(id_col).alias("neighbor_id"),
-        cluster.cast("int").alias("cluster"),
+        F.col("cluster").cast("int").alias("cluster"),
         F.col(vec_col).alias("_cv"),
         F.expr(_norm_sql(f"`{vec_col}`")).alias("_cn"),
     )
@@ -1048,27 +1036,24 @@ def ivf_probe_topk(
     k: int = 10,
     nprobe: int = 2,
     vec_col: str = "embedding",
-    prune: bool = True,
 ) -> DataFrame:
     """ANN top-k against a PREBUILT ``build_ivf_index`` table — the
     incremental/production form of ``ivf_topk``: the corpus is never
     re-assigned, and with a ``partitionBy("cluster")`` index layout
     the scan reads ONLY probed partitions.
 
-    ``prune=True`` collects the distinct probed cell ids — bounded by
-    ``len(centroids)``, NOT by data volume (same bounded-collect
-    contract as the prefix-sum offsets) — into a literal ``isin`` so
-    static partition pruning applies to the index scan
-    (``PartitionFilters`` in the plan; pinned by
-    ``test_ivf_index_partition_pruning``).  The equi-join on
-    ``cluster`` already restricts semantics; pruning only restricts
-    IO.  Query side is broadcast: queries ≪ corpus, the index is
-    never shuffled.
+    The distinct probed cell ids — bounded by ``len(centroids)``, NOT
+    by data volume (same bounded-collect contract as the prefix-sum
+    offsets) — are collected into a literal ``isin`` so static
+    partition pruning applies to the index scan (``PartitionFilters``
+    in the plan; pinned by ``test_ivf_index_partition_pruning``).
+    The equi-join on ``cluster`` already restricts semantics; pruning
+    only restricts IO.  Query side is broadcast: queries ≪ corpus,
+    the index is never shuffled.
     """
     q = probe_cells(queries, centroids, query_id, vec_col, nprobe)
-    if prune:
-        cells = [r["cluster"] for r in q.select("cluster").distinct().collect()]
-        index = index.filter(F.col("cluster").isin(cells))
+    cells = [r["cluster"] for r in q.select("cluster").distinct().collect()]
+    index = index.filter(F.col("cluster").isin(cells))
     scored = (
         index.join(F.broadcast(q), "cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -1149,8 +1134,6 @@ def embedding_norm_outliers(
     id_col: str,
     vec_col: str = "embedding",
     k: float = 3.0,
-    exact: bool = True,
-    approx_accuracy: int = 10_000,
 ) -> DataFrame:
     """(id, norm, deviation, is_outlier) per vector — the
     corrupt-embedding detector run before any ANN/dedup stage
@@ -1171,34 +1154,27 @@ def embedding_norm_outliers(
     as plan literals.  Nothing but the norms table is ever shuffled,
     and only into two single-value aggregations.
 
-    ``exact=True`` (the certified oracle form) uses ``F.percentile``,
-    which buffers EVERY norm in the aggregation buffer — an
+    Both medians use the exact ``F.percentile`` (the certified oracle
+    form), which buffers EVERY norm in the aggregation buffer — an
     executor-memory cliff on a billion-vector corpus (the q92
-    ``quantile_bins`` hazard class).  ``exact=False`` switches both
-    medians to ``percentile_approx`` (Greenwald–Khanna sketch, memory
-    bounded by ``approx_accuracy`` regardless of cardinality); the
-    flag threshold moves within sketch error of the median/MAD, which
-    a k·MAD outlier rule absorbs by design.  Ship ``exact=False`` at
-    scale.
+    ``quantile_bins`` hazard class).
     """
-
-    def _median(col: Column) -> Column:
-        if exact:
-            return F.percentile(col, F.lit(0.5))
-        return F.percentile_approx(col, F.lit(0.5), F.lit(approx_accuracy))
-
     norms = _as_double(df, vec_col).select(
         F.col(id_col),
         F.expr(f"round({_norm_sql(f'`{vec_col}`')}, 6)").alias("norm"),
     ).localCheckpoint(eager=True)
-    med = norms.agg(_median(F.col("norm")).alias("m")).collect()[0]["m"]
+    med = norms.agg(
+        F.percentile(F.col("norm"), F.lit(0.5)).alias("m")
+    ).collect()[0]["m"]
     med = float(med) if med is not None else 0.0
     devs = norms.select(
         F.col(id_col),
         "norm",
         F.round(F.abs(F.col("norm") - F.lit(med)), 6).alias("deviation"),
     )
-    mad = devs.agg(_median(F.col("deviation")).alias("m")).collect()[0]["m"]
+    mad = devs.agg(
+        F.percentile(F.col("deviation"), F.lit(0.5)).alias("m")
+    ).collect()[0]["m"]
     mad = float(mad) if mad is not None else 0.0
     return devs.select(
         F.col(id_col),

@@ -4770,7 +4770,7 @@ def q122_bm25_indexed_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-partitioned and sorted on term, exact-integer corpus stats
     stamped in the sidecar (retrieval.write_bm25_index) — load it back
     through the stamp/tokenizer check, and probe the ON-DISK table
-    with ``bm25_probe_topk(prune=True)``: the query vocabulary becomes
+    with ``bm25_probe_topk``: the query vocabulary becomes
     a pushed ``In(term, …)`` on the index scan, so a probe reads the
     query terms' posting lists off disk, not the corpus.  The probe's
     scoring tail is literally ``bm25_topk``'s (shared
@@ -4808,7 +4808,7 @@ def q122_bm25_indexed_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     return retrieval.bm25_probe_topk(
-        probes, index, meta, query_id="doc_id", k=8, prune=True
+        probes, index, meta, query_id="doc_id", k=8
     )
 
 

@@ -1,13 +1,11 @@
 """Streaming near-dup admission — the q76 gate at ingest time.
 
-Each micro-batch of arriving documents is checked against the STATIC
-corpus near-dup index (``operators.dedup.minhash_bands`` semantics)
-and only admitted documents reach the sink.  The corpus side is fixed
-for the stream's lifetime — exactly the production posture, where the
-index is a persisted (bucketed) table refreshed by a separate batch
-job, not by the stream itself; re-pointing the gate at a refreshed
-index is a stream restart, which Structured Streaming makes cheap
-(checkpointed source offsets).
+Each micro-batch of arriving documents is checked against a STATIC
+corpus (``operators.dedup.minhash_bands`` semantics) and only
+admitted documents reach the sink.  The corpus side is fixed for the
+stream's lifetime; re-pointing the gate at a refreshed corpus is a
+stream restart, which Structured Streaming makes cheap (checkpointed
+source offsets).
 
 Built on ``foreachBatch`` rather than a stream-static join because
 admission needs a per-batch aggregation (match counts) and a verify
@@ -37,22 +35,12 @@ def admission_batch_fn(
     num_hashes: int = 8,
     bands: int = 4,
     verify_threshold: float = 0.2,
-    corpus_bands: DataFrame | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """A ``foreachBatch`` function gating each micro-batch against the
-    corpus index: admitted documents (no verified near-dup in the
-    corpus) flow to ``sink`` with their original columns plus
-    ``n_matches``; rejected ones go to ``rejected_sink`` when given
-    (audit trail), else are dropped.
-
-    ``corpus_bands`` is the production posture: pass a persisted
-    ``dedup.minhash_bands`` table (``spark.table(...)`` over one written
-    with ``bucketBy`` on (band, bucket)) and each micro-batch's
-    candidate join reads it instead of re-signing ``corpus_df`` per
-    batch.  The index must be built with the gate's (n, num_hashes,
-    bands) — same contract as the batch operator.  A separate batch
-    job maintains the index by appending new documents' bands; the
-    stream itself never writes it."""
+    corpus: admitted documents (no verified near-dup in the corpus)
+    flow to ``sink`` with their original columns plus ``n_matches``;
+    rejected ones go to ``rejected_sink`` when given (audit trail),
+    else are dropped."""
 
     def _process(batch_df: DataFrame, epoch: int) -> None:
         gate = incremental_neardup_admission(
@@ -64,7 +52,6 @@ def admission_batch_fn(
             num_hashes=num_hashes,
             bands=bands,
             verify_threshold=verify_threshold,
-            corpus_bands=corpus_bands,
             # per-micro-batch re-planning: an eager corpus checkpoint
             # every batch would cost more than the lazy repeated scans
             materialize=False,

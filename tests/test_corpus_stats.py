@@ -671,78 +671,3 @@ def test_source_profile_matches_python(spark, rows):
         ).collect()
     }
     assert got == _py_profile(rows)
-
-
-# -- q111/q114 approx lever (r12: the scale-safe percentile path) -------------
-
-
-def test_norm_outliers_approx_agrees_with_exact_odd_count(spark):
-    from serverless_podcast_etl_spark.operators.similarity import (
-        embedding_norm_outliers,
-    )
-
-    # 21 rows (odd): the exact median IS an order statistic, and the
-    # GK sketch is exact below its accuracy bound — the two paths must
-    # be row-identical, not just within a band.
-    rows = [(i, [1.0 + i / 50.0, 0.0]) for i in range(1, 20)]
-    rows += [(100, [30.0, 0.0]), (101, [0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    exact = {
-        r["vec_id"]: tuple(r)
-        for r in embedding_norm_outliers(df, "vec_id", exact=True).collect()
-    }
-    approx = {
-        r["vec_id"]: tuple(r)
-        for r in embedding_norm_outliers(df, "vec_id", exact=False).collect()
-    }
-    assert exact == approx
-
-
-def test_norm_outliers_approx_band_even_count(spark):
-    from serverless_podcast_etl_spark.operators.similarity import (
-        embedding_norm_outliers,
-    )
-
-    # 20 rows (even): exact percentile interpolates the two middle
-    # order statistics while percentile_approx returns a data value —
-    # the median may differ by at most the adjacent-norm gap, and the
-    # k·MAD outlier DECISIONS must still agree.
-    rows = [(i, [1.0 + i / 10.0, 0.0]) for i in range(1, 19)]
-    rows += [(100, [40.0, 0.0]), (101, [0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    exact = embedding_norm_outliers(df, "vec_id", exact=True).collect()
-    approx = embedding_norm_outliers(df, "vec_id", exact=False).collect()
-    gap = 0.1  # adjacent normal-row norm spacing
-    med_e = {r["vec_id"]: r["norm"] - r["deviation"] for r in exact}
-    med_a = {r["vec_id"]: r["norm"] - r["deviation"] for r in approx}
-    # same flag set either way
-    assert {r["vec_id"] for r in exact if r["is_outlier"]} == {
-        r["vec_id"] for r in approx if r["is_outlier"]
-    } == {100, 101}
-    # medians agree within one adjacent gap (sketch error band)
-    for vid in med_e:
-        if vid < 100:  # norm > med rows: norm - dev recovers the median
-            assert abs(med_e[vid] - med_a[vid]) <= gap + 1e-6
-
-
-def test_source_profile_approx_agrees_with_exact_odd_groups(spark):
-    from serverless_podcast_etl_spark.functions.textstats import (
-        source_quality_profile,
-    )
-
-    normal = "the cat sat on the mat and the dog ran to the hill"
-    spam = "buy buy buy buy buy buy buy buy buy buy buy buy"
-    rows = [(i, normal + f" w{i}", "s1") for i in range(1, 9)]  # 8 normal
-    rows += [(99, spam, "s1")]                                  # 9 total: odd
-    rows += [(200 + i, normal + f" v{i}", "s2") for i in range(3)]  # odd
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    exact = {
-        r["source"]: tuple(r)
-        for r in source_quality_profile(df, "text", "source", exact=True).collect()
-    }
-    approx = {
-        r["source"]: tuple(r)
-        for r in source_quality_profile(df, "text", "source", exact=False).collect()
-    }
-    assert exact == approx
-    assert exact["s1"][-1] == 1  # the spam doc still flags on both paths

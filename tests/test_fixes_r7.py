@@ -1,94 +1,13 @@
-"""Round-7 advisor fixes, pinned: IVF index cluster-id base parity
-(spherical=False BLAS path vs probe_cells' 1-based convention),
-snapshot_diff NULL-text presence semantics, case-insensitive
-tracking-param stripping, the quantile_bins approx scale fence, and
-global_prefix_sum's one-slot persist eviction."""
+"""Round-7 advisor fixes, pinned: snapshot_diff NULL-text presence
+semantics and case-insensitive tracking-param stripping."""
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from serverless_podcast_etl_spark.functions.urls import canonical_url
 from serverless_podcast_etl_spark.operators.dedup import snapshot_diff
-from serverless_podcast_etl_spark.operators.selection import (
-    global_prefix_sum,
-    quantile_bins,
-)
-from serverless_podcast_etl_spark.operators.similarity import (
-    build_ivf_index,
-    ivf_probe_topk,
-)
-
-# Unit-norm 2-D centroids: max-dot (spherical) and min-L2 (BLAS)
-# assignment agree exactly, so the two build paths must produce the
-# SAME probe results — which only holds if they share a cluster-id
-# base.  Before the r7 fix the BLAS path was 0-based and probe cell i
-# silently matched centroid i+1's rows.
-_UNIT_CENTROIDS = [
-    [1.0, 0.0],
-    [0.0, 1.0],
-    [-1.0, 0.0],
-    [0.0, -1.0],
-]
-
-
-def _planted_vectors(spark):
-    rows = []
-    vid = 0
-    for cx, cy in _UNIT_CENTROIDS:
-        for jitter in (-0.05, 0.0, 0.05, 0.1):
-            rows.append(
-                Row(
-                    vec_id=vid,
-                    embedding=[cx + jitter * cy * 0 + jitter * 0.3,
-                               cy + jitter * 0.2],
-                )
-            )
-            vid += 1
-    return spark.createDataFrame(rows)
-
-
-def test_ivf_index_blas_path_matches_spherical(spark):
-    """build_ivf_index(spherical=False) + ivf_probe_topk returns the
-    same neighbors as the spherical=True index (unit-norm centroids
-    make the two assignment rules equivalent)."""
-    emb = _planted_vectors(spark)
-    queries = emb.filter(F.col("vec_id") % 4 == 0)
-
-    idx_sph = build_ivf_index(
-        emb, id_col="vec_id", centroids=_UNIT_CENTROIDS, spherical=True
-    )
-    idx_blas = build_ivf_index(
-        emb, id_col="vec_id", centroids=_UNIT_CENTROIDS, spherical=False
-    )
-    # both paths emit probe_cells' 1-based cell ids
-    for idx in (idx_sph, idx_blas):
-        cells = sorted(
-            r["cluster"] for r in idx.select("cluster").distinct().collect()
-        )
-        assert cells == [1, 2, 3, 4]
-
-    def _probe(index):
-        return sorted(
-            map(
-                tuple,
-                ivf_probe_topk(
-                    queries,
-                    index,
-                    _UNIT_CENTROIDS,
-                    query_id="vec_id",
-                    k=5,
-                    nprobe=1,
-                ).collect(),
-            )
-        )
-
-    got_sph, got_blas = _probe(idx_sph), _probe(idx_blas)
-    assert got_sph == got_blas
-    assert len(got_blas) > 0  # non-vacuous: the probe found neighbors
 
 
 def test_snapshot_diff_null_text_presence(spark):
@@ -146,67 +65,3 @@ def test_canonical_url_uppercase_tracking_params(spark):
         "https://ex.com/p",
         "https://ex.com/p?Refresh=1",
     ]
-
-
-def test_quantile_bins_approx_fence(spark):
-    """exact=False swaps the boundary pass to percentile_approx (the
-    bounded-memory sketch) — on data whose quantiles are clean the
-    bucket layout matches the exact form."""
-    df = spark.createDataFrame(
-        [(i, float(i % 100)) for i in range(2000)], "id long, score double"
-    )
-    exact = quantile_bins(df, "score", probs=(0.25, 0.5, 0.75))
-    approx = quantile_bins(
-        df, "score", probs=(0.25, 0.5, 0.75), exact=False
-    )
-    exact_counts = {
-        r["bucket"]: r["n"]
-        for r in exact.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-    }
-    approx_counts = {
-        r["bucket"]: r["n"]
-        for r in approx.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-    }
-    assert set(exact_counts) == set(approx_counts) == {0, 1, 2, 3}
-    # sketch boundaries land on data values; with 20 rows per distinct
-    # value the per-bucket drift is bounded by one value's worth
-    for b in exact_counts:
-        assert abs(exact_counts[b] - approx_counts[b]) <= 20, (
-            b, exact_counts, approx_counts,
-        )
-
-
-def test_global_prefix_sum_evicts_previous_persist(spark):
-    """materialize=False persists the ranged sort; a second call must
-    unpersist the first call's frame (one-slot tracking) so per-epoch
-    reshard loops hold at most one stale cache."""
-    from serverless_podcast_etl_spark.operators import selection as sel
-
-    df = spark.createDataFrame(
-        [(i, 10) for i in range(100)], "id long, cost long"
-    )
-    out1 = global_prefix_sum(
-        df, "cost", [F.col("id")], materialize=False
-    )
-    assert out1.count() == 100
-    assert len(sel._LAST_PERSISTED) == 1
-    first = sel._LAST_PERSISTED[0]
-    assert first.storageLevel.useMemory or first.storageLevel.useDisk
-
-    # a DIFFERENT input: Spark's cache manager is logical-plan-keyed,
-    # so a second call on the same frame would re-cache the same plan
-    # and mask the eviction in storageLevel
-    df2 = spark.createDataFrame(
-        [(i, 5) for i in range(50)], "id long, cost long"
-    )
-    out2 = global_prefix_sum(
-        df2, "cost", [F.col("id")], materialize=False
-    )
-    assert out2.count() == 50
-    assert len(sel._LAST_PERSISTED) == 1
-    assert sel._LAST_PERSISTED[0] is not first
-    lvl = first.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)  # evicted
-    # cleanup: leave no cached frames behind for other tests
-    while sel._LAST_PERSISTED:
-        sel._LAST_PERSISTED.pop().unpersist()

@@ -1,23 +1,16 @@
 """Round-8 advisor fixes, pinned: the tracking-param pattern is now
 valid Python-`re` syntax (flag at pattern start) with unchanged
-Java/RE2 semantics, and global_prefix_sum(materialize=False) warns at
-eviction time that the previous call's un-materialized result is
-unsafe to reuse (recompute would re-sample range boundaries out from
-under its collected _pid offsets)."""
+Java/RE2 semantics."""
 
 from __future__ import annotations
 
 import re
-import warnings
 
 from pyspark.sql import functions as F
 
 from serverless_podcast_etl_spark.functions.urls import (
     TRACKING_PARAM_PATTERN,
     canonical_url,
-)
-from serverless_podcast_etl_spark.operators.selection import (
-    global_prefix_sum,
 )
 
 
@@ -56,75 +49,3 @@ def test_canonical_url_unchanged_by_flag_move(spark):
         "http://example.com/path",
         None,
     ]
-
-
-def test_global_prefix_sum_eviction_warns(spark):
-    """Evicting the previous materialize=False frame is a correctness
-    boundary (recompute re-samples range boundaries) — the second call
-    must emit a RuntimeWarning saying so; the first call must not."""
-    from serverless_podcast_etl_spark.operators import selection as sel
-
-    df1 = spark.createDataFrame(
-        [(i, 1) for i in range(20)], "id long, cost long"
-    )
-    df2 = spark.createDataFrame(
-        [(i, 2) for i in range(10)], "id long, cost long"
-    )
-    try:
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")  # first call: nothing to evict
-            out1 = global_prefix_sum(
-                df1, "cost", [F.col("id")], materialize=False
-            )
-        assert out1.count() == 20
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            out2 = global_prefix_sum(
-                df2, "cost", [F.col("id")], materialize=False
-            )
-        evict = [
-            w
-            for w in caught
-            if issubclass(w.category, RuntimeWarning)
-            and "re-sample range boundaries" in str(w.message)
-        ]
-        assert len(evict) == 1
-        assert out2.count() == 10
-    finally:
-        while sel._LAST_PERSISTED:
-            sel._LAST_PERSISTED.pop().unpersist()
-
-
-def test_global_prefix_sum_mark_materialized_silences_eviction(spark):
-    """mark_materialized() (r9, r8 ADVICE): after the caller
-    materializes a materialize=False result, acknowledging it releases
-    the tracked sort so the NEXT call warns nothing — routine
-    sequential use stays warning-free."""
-    from serverless_podcast_etl_spark.operators import selection as sel
-
-    df1 = spark.createDataFrame(
-        [(i, 1) for i in range(20)], "id long, cost long"
-    )
-    df2 = spark.createDataFrame(
-        [(i, 2) for i in range(10)], "id long, cost long"
-    )
-    try:
-        out1 = global_prefix_sum(
-            df1, "cost", [F.col("id")], materialize=False
-        )
-        assert out1.count() == 20  # materialized by the caller
-        sel.mark_materialized()
-        assert not sel._LAST_PERSISTED
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")  # would raise on any warning
-            out2 = global_prefix_sum(
-                df2, "cost", [F.col("id")], materialize=False
-            )
-        assert out2.count() == 10
-        # idempotent no-op when nothing is tracked
-        sel.mark_materialized()
-        sel.mark_materialized()
-        assert not sel._LAST_PERSISTED
-    finally:
-        while sel._LAST_PERSISTED:
-            sel._LAST_PERSISTED.pop().unpersist()

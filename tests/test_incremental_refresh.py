@@ -82,42 +82,3 @@ def test_pure_removal_yields_empty(spark):
     old = [(1, _A), (2, _B)]
     new = [(1, _A)]
     assert _refresh(spark, old, new) == {}
-
-
-def test_stale_band_index_is_candidate_noise_not_matches(spark):
-    """A persisted index built BEFORE the snapshot still carries the
-    changed/removed docs' old signatures — including a changed doc's
-    own.  Those stale entries may only create false CANDIDATES: the
-    verify join re-derives shingles from the retained corpus, where
-    those docs have no rows, so results must equal the index-free
-    run (the docstring's stale-index safety contract)."""
-    from serverless_podcast_etl_spark.operators.dedup import (
-        minhash_bands,
-    )
-
-    old_rows = [(1, _A), (2, _B), (3, _C), (4, _D)]
-    new_rows = [
-        (1, _A),
-        (2, _B + " tweaked"),   # changed; old signature stays in index
-        (4, _D),
-        (5, _A + " extra"),     # added near-dup of retained 1
-        # doc 3 removed; its signature stays in the stale index
-    ]
-    stale_index = minhash_bands(
-        _snap(spark, old_rows), text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4,
-    )
-    fresh = _refresh(spark, old_rows, new_rows)
-    with_stale = incremental_refresh(
-        _snap(spark, old_rows),
-        _snap(spark, new_rows),
-        text_col="text",
-        id_col="doc_id",
-        verify_threshold=0.3,
-        corpus_bands=stale_index,
-    ).collect()
-    got = {
-        r["doc_id"]: (r["status"], r["n_matches"], r["admitted"])
-        for r in with_stale
-    }
-    assert got == fresh

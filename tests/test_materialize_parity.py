@@ -1,19 +1,21 @@
-"""The r12 session-2 ``materialize`` knobs must be PURE plan-shape
-switches: ``materialize=True`` (localCheckpoint the expensive hashing
-scan at its fan-out, NOTES facts 18/19) and ``materialize=False``
-(the lazy zero-intermediate composition, streaming-safe) must return
-row-identical results for every operator that grew the knob —
-minhash_lsh_pairs, ngram_jaccard_pairs, containment_pairs,
-incremental_neardup_admission/incremental_refresh, and the affinity
-family (target_affinity_scores / target_coverage_audit).
+"""Directed checks of the materialized curation operators —
+minhash_lsh_pairs, ngram_jaccard_pairs, containment_pairs, the
+affinity family (target_affinity_scores / target_coverage_audit) and
+embedding_neardup_pairs' broadcast bucket join — on a corpus built to
+exercise every branch: near-dup pairs above and below the verify
+threshold, stop-shingles above the df cap, an asymmetric containment
+pair, a shingle-less doc and a predicate-defined target slice.
 
-A hypothesis corpus would duplicate tests/test_property_r8.py's
-differential coverage; these are directed parity checks on a corpus
-built to exercise every branch (near-dup pairs above and below the
-verify threshold, stop-shingles above the df cap, an asymmetric
-containment pair, a predicate-defined target slice)."""
+Each operator once also had a lazy (or shuffle-join) mode, and the
+two modes were checked row-identical here.  The expected rows below
+are the ones both modes returned, written as literals, so the one
+remaining plan is held to the same answer.  ``incremental_neardup_
+admission`` keeps both modes (the streaming gate runs the lazy one),
+so its parity check stays a parity check."""
 
 from __future__ import annotations
+
+from itertools import combinations
 
 import pytest
 
@@ -43,28 +45,48 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+# every pair of the eight boilerplate docs 100..107 scores the same
+def _boilerplate_pairs(n_shared, score):
+    return [(a, b, n_shared, score)
+            for a, b in combinations(range(100, 108), 2)]
+
+
 def test_minhash_lsh_pairs_parity(corpus):
     kw = dict(text_col="text", id_col="doc_id", n=3, num_hashes=8,
               bands=4, verify_threshold=0.2)
-    assert _rows(dedup.minhash_lsh_pairs(corpus, materialize=True, **kw)) == \
-        _rows(dedup.minhash_lsh_pairs(corpus, materialize=False, **kw))
+    assert _rows(dedup.minhash_lsh_pairs(corpus, **kw)) == [
+        (1, 2, 10, 0.8333), (1, 5, 7, 0.5385), (2, 5, 7, 0.4667),
+    ] + _boilerplate_pairs(3, 0.6)
 
 
 def test_ngram_jaccard_pairs_parity(corpus):
-    for cap in (None, 3):
+    expected = {
+        None: [
+            (1, 2, 11, 0.8462), (1, 4, 3, 0.2727), (1, 5, 9, 0.6923),
+            (2, 4, 3, 0.2308), (2, 5, 9, 0.6), (4, 5, 3, 0.2727),
+        ] + _boilerplate_pairs(4, 0.6667),
+        # the cap drops the boilerplate stop-shingles and doc 4's
+        # bigrams, which four docs share
+        3: [(1, 2, 8, 0.8), (1, 5, 6, 0.6), (2, 5, 6, 0.5)],
+    }
+    for cap, want in expected.items():
         kw = dict(text_col="text", id_col="doc_id", n=2, threshold=0.1,
                   max_doc_freq=cap)
-        a = _rows(dedup.ngram_jaccard_pairs(corpus, materialize=True, **kw))
-        b = _rows(dedup.ngram_jaccard_pairs(corpus, materialize=False, **kw))
-        assert a == b and (cap is not None or a)
+        assert _rows(dedup.ngram_jaccard_pairs(corpus, **kw)) == want
 
 
 def test_containment_pairs_parity(corpus):
     kw = dict(text_col="text", id_col="doc_id", n=2, threshold=0.4,
               max_doc_freq=5)
-    a = _rows(dedup.containment_pairs(corpus, materialize=True, **kw))
-    b = _rows(dedup.containment_pairs(corpus, materialize=False, **kw))
-    assert a == b
+    # doc 4 sits inside docs 1 and 2: containment 1.0, Jaccard ~0.25
+    assert _rows(dedup.containment_pairs(corpus, **kw)) == [
+        (1, 2, 11, 1.0, 0.8462, 1.0),
+        (1, 4, 3, 0.2727, 1.0, 1.0),
+        (1, 5, 9, 0.8182, 0.8182, 0.8182),
+        (2, 4, 3, 0.2308, 1.0, 1.0),
+        (2, 5, 9, 0.6923, 0.8182, 0.8182),
+        (4, 5, 3, 1.0, 0.2727, 1.0),
+    ]
 
 
 def test_admission_parity(corpus):
@@ -82,64 +104,57 @@ def test_admission_parity(corpus):
     assert len(rejected) >= 1
 
 
-def test_admission_parity_with_plugged_index(corpus):
-    """corpus_bands path: the corpus side must stay LAZY under
-    materialize=True (no full-corpus checkpoint) yet agree with the
-    self-signing form."""
-    new = corpus.filter("doc_id in (2, 5)")
-    old = corpus.filter("doc_id not in (2, 5)")
-    kw = dict(text_col="text", id_col="doc_id", n=2, num_hashes=8,
-              bands=4, verify_threshold=0.2)
-    idx = dedup.minhash_bands(old, "text", "doc_id", n=2, num_hashes=8,
-                              bands=4)
-    a = _rows(dedup.incremental_neardup_admission(
-        new, old, materialize=True, corpus_bands=idx, **kw))
-    b = _rows(dedup.incremental_neardup_admission(
-        new, old, materialize=True, **kw))
-    assert a == b
+_DIFFERENCE_SCORES = [
+    (1, 23, -3245.481506), (2, 27, -2538.914576), (3, 13, 2184.877185),
+    (4, 7, -5536.148393), (5, 23, -4115.917159), (6, 1, 2305.877306),
+    (7, 13, -10583.385583), (100, 11, 6137.631138),
+    (101, 11, 5578.630579), (102, 11, 5578.630579),
+    (103, 11, 5438.880439), (104, 11, 4876.629877),
+    (105, 11, 4525.629526), (106, 11, 5508.755509),
+    (107, 11, 5578.630579),
+]
 
 
 def test_affinity_scores_parity(corpus):
+    expected = {
+        "difference": _DIFFERENCE_SCORES,
+        "log_ratio": [
+            (1, 23, -0.125796), (2, 27, -0.092058), (3, 13, 0.169692),
+            (4, 7, -0.22815), (5, 23, -0.195772), (6, 1, 0.18155),
+            (7, 13, -1.019878), (100, 11, 0.125563),
+            (101, 11, 0.125563), (102, 11, 0.125563),
+            (103, 11, 0.125563), (104, 11, 0.088702),
+            (105, 11, 0.051842), (106, 11, 0.125563),
+            (107, 11, 0.125563),
+        ],
+    }
     # predicate form, both weight forms
-    for form in ("difference", "log_ratio"):
-        a = _rows(selection.target_affinity_scores(
+    for form, want in expected.items():
+        assert _rows(selection.target_affinity_scores(
             corpus, None, "text", "doc_id", num_buckets=64, max_n=2,
             target_predicate=corpus.lang == "en", weight_form=form,
-            materialize=True))
-        b = _rows(selection.target_affinity_scores(
-            corpus, None, "text", "doc_id", num_buckets=64, max_n=2,
-            target_predicate=corpus.lang == "en", weight_form=form,
-            materialize=False))
-        assert a == b and a
-    # separate-target-frame form
+        )) == want
+    # separate-target-frame form: the same slice, the same scores
     tgt = corpus.filter("lang = 'en'")
-    a = _rows(selection.target_affinity_scores(
+    assert _rows(selection.target_affinity_scores(
         corpus, tgt, "text", "doc_id", num_buckets=64, max_n=2,
-        materialize=True))
-    b = _rows(selection.target_affinity_scores(
-        corpus, tgt, "text", "doc_id", num_buckets=64, max_n=2,
-        materialize=False))
-    assert a == b
+    )) == _DIFFERENCE_SCORES
 
 
 def test_coverage_audit_parity(corpus):
     kw = dict(text_col="text", id_col="doc_id", k=3, num_buckets=64,
               max_n=2)
-    a = _rows(selection.target_coverage_audit(
-        corpus, target_predicate=corpus.lang == "en",
-        materialize=True, **kw))
-    b = _rows(selection.target_coverage_audit(
-        corpus, target_predicate=corpus.lang == "en",
-        materialize=False, **kw))
-    assert a == b and len(a) == 2
+    assert _rows(selection.target_coverage_audit(
+        corpus, target_predicate=corpus.lang == "en", **kw
+    )) == [("affinity", 13, 41, 0.317073), ("digest", 14, 41, 0.341463)]
 
 
 def test_embedding_neardup_broadcast_vs_shuffle_parity(spark):
-    """ADVICE r12: the LSH bucket self-join's broadcast hint gained an
-    opt-out (``broadcast_candidates=False`` restores the shuffle
-    bucket-join for corpora too large to broadcast).  Both plan shapes
-    must emit the identical pair set — same dual the materialize knobs
-    keep."""
+    """ADVICE r12: the LSH bucket self-join broadcasts its build side
+    (a shuffle join lands every candidate pair on at most
+    2^len(planes) tasks).  Every planted near-dup partner pair is
+    found except (80, 81), whose jitter splits it across a hyperplane;
+    the rows are the ones the shuffle bucket-join also returned."""
     import random
 
     from serverless_podcast_etl_spark.operators import similarity
@@ -153,10 +168,13 @@ def test_embedding_neardup_broadcast_vs_shuffle_parity(spark):
         rows.append((2 * i + 1, [x + rng.uniform(-0.01, 0.01) for x in base]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     planes = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(4)]
-    kw = dict(id_col="vec_id", vec_col="embedding", planes=planes,
-              threshold=0.98)
-    bcast = _rows(similarity.embedding_neardup_pairs(
-        df, broadcast_candidates=True, **kw))
-    shuf = _rows(similarity.embedding_neardup_pairs(
-        df, broadcast_candidates=False, **kw))
-    assert bcast == shuf and bcast
+    got = _rows(similarity.embedding_neardup_pairs(
+        df, id_col="vec_id", vec_col="embedding", planes=planes,
+        threshold=0.98,
+    ))
+    below_one = {0, 8, 18, 20, 26, 34, 40, 42, 46, 54, 74, 92, 94, 100,
+                 104, 106, 112, 116}
+    assert got == [
+        (a, a + 1, 0.9999 if a in below_one else 1.0)
+        for a in range(0, 120, 2) if a != 80
+    ]

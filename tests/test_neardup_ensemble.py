@@ -199,26 +199,6 @@ def test_shared_token_hash_scan_parity(spark, sf_dir):
     assert base_fp == shared_fp and base_fp
 
 
-def test_shared_scan_requires_materialize(spark, sf_dir):
-    from serverless_podcast_etl_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-        shared_token_hash48,
-    )
-    from serverless_podcast_etl_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    th48 = shared_token_hash48(docs, "text", "doc_id")
-    with pytest.raises(ValueError, match="materialize"):
-        minhash_lsh_pairs(
-            docs, "text", "doc_id", materialize=False, hashes48=th48
-        )
-    with pytest.raises(ValueError, match="materialize"):
-        ngram_jaccard_pairs(
-            docs, "text", "doc_id", materialize=False, hashes48=th48
-        )
-
-
 def test_shared_scan_rejects_another_corpus(spark, sf_dir):
     """A consumer handed a shared scan of a DIFFERENT frame raises
     instead of returning pairs over the scan's corpus; the same frame,

@@ -14,6 +14,13 @@ not.
 them, each with its reason.  Anything else this test reports does no
 work for the system: delete it together with its tests.
 
+The same holds for switches: every package parameter with a ``bool``
+default must get the other value, by keyword or by position, from
+some call outside ``tests/``, or its second branch runs only under
+test.  A bare name bound to the calling function's own switch passes
+that switch through: it counts only if that switch is flipped.
+``KEEP_SWITCHES`` lists the exceptions, each with its reason.
+
 The how-to docs (``DOCS``) may name only ``tools/`` scripts that exist.
 """
 
@@ -33,10 +40,17 @@ KEEP = {
     "fetch_rss_docs": "lambda_2's RSS feed fetch (SURVEY S5)",
     "RSS_DOC": "the parsed-feed shape lambda_2 consumes (S5)",
     "JdbcTableStore": "the MySQL warehouse sink (S6)",
-    "mark_materialized": "releases global_prefix_sum's lazy-mode cache",
     # Reference implementations the live path is checked against.
     "grouped_ewma": "pandas twin of ewma_partitioned",
     "_assign_trained_cluster": "expression twin of _nearest_trained_int",
+}
+
+KEEP_SWITCHES = {
+    # The reference's own bug, replayed so parity audits can show it.
+    "sentiment_distribution.bug_compatible":
+        "replays the reference's sentence_index-only join (J2)",
+    "entity_sentiment_proportions.bug_compatible":
+        "replays the reference's sentence_index-only join (J2)",
 }
 
 
@@ -142,3 +156,105 @@ def test_docs_name_only_existing_tools():
         r"(?<![\w/])tools/\w+\.py", (ROOT / doc).read_text())}
     missing = sorted(path for path in named if not (ROOT / path).is_file())
     assert not missing, f"docs name deleted tools: {missing}"
+
+
+def _switches(func):
+    """``{param: default}`` for a function's ``bool``-default params,
+    and its positional parameter names (``self``/``cls`` dropped)."""
+    args = func.args
+    positional = [a.arg for a in [*args.posonlyargs, *args.args]]
+    pairs = [*zip(positional[len(positional) - len(args.defaults):],
+                  args.defaults),
+             *((a.arg, d) for a, d in zip(args.kwonlyargs, args.kw_defaults))]
+    switches = {name: d.value for name, d in pairs
+                if isinstance(d, ast.Constant) and isinstance(d.value, bool)}
+    if positional[:1] in (["self"], ["cls"]):
+        positional = positional[1:]
+    return switches, positional
+
+
+def _params(func):
+    args = func.args
+    return {a.arg for a in [*args.posonlyargs, *args.args, *args.kwonlyargs]}
+
+
+@lru_cache(maxsize=None)
+def switch_graph():
+    """``(switches, flipped, through)``.  ``switches`` maps
+    ``"function.param"`` to its default; ``flipped`` holds the switches
+    some call outside ``tests/`` passes another value; ``through`` maps
+    an enclosing function's switch to the switches its calls pass it
+    to unchanged."""
+    switches, positional = {}, defaultdict(list)
+    for path in _py_files(PACKAGE):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                found, names = _switches(node)
+                positional[node.name].append(names)
+                switches.update({f"{node.name}.{k}": v
+                                 for k, v in found.items()})
+    flipped, through = set(), defaultdict(set)
+
+    def passed(call, enclosing):
+        func = call.func
+        callee = getattr(func, "id", None) or getattr(func, "attr", None)
+        args = [*((p, a) for names in positional.get(callee, ())
+                  for p, a in zip(names, call.args)),
+                *((kw.arg, kw.value) for kw in call.keywords if kw.arg)]
+        for param, value in args:
+            key = f"{callee}.{param}"
+            if key not in switches:
+                continue
+            outer = next((f for f in reversed(enclosing)
+                          if isinstance(value, ast.Name)
+                          and value.id in _params(f)), None)
+            if outer is not None:
+                source = f"{outer.name}.{value.id}"
+                if source in switches:
+                    through[source].add(key)
+                    continue
+            if not (isinstance(value, ast.Constant)
+                    and value.value == switches[key]):
+                flipped.add(key)
+
+    def visit(node, enclosing):
+        if isinstance(node, ast.Call):
+            passed(node, enclosing)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            enclosing = [*enclosing, node]
+        for child in ast.iter_child_nodes(node):
+            visit(child, enclosing)
+
+    for entry in [*ROOTS, PACKAGE.name]:
+        for path in _py_files(ROOT / entry):
+            visit(ast.parse(path.read_text(), filename=str(path)), [])
+    return switches, flipped, through
+
+
+def unflipped(keep=KEEP_SWITCHES):
+    switches, flipped, through = switch_graph()
+    reached, todo = set(), [*flipped, *keep]
+    while todo:
+        key = todo.pop()
+        if key not in reached:
+            reached.add(key)
+            todo.extend(through[key])
+    return sorted(set(switches) - reached)
+
+
+def test_every_switch_is_flipped_outside_tests():
+    dead = unflipped()
+    assert not dead, (
+        "only tests/ pass these switches their other value (keep the "
+        "branch the system runs and delete the parameter, or add a "
+        "KEEP_SWITCHES entry with its reason):\n  " + "\n  ".join(dead))
+
+
+def test_keep_switches_are_defined_and_needed():
+    switches = switch_graph()[0]
+    assert set(KEEP_SWITCHES) <= set(switches), sorted(
+        set(KEEP_SWITCHES) - set(switches))
+    unneeded = [key for key in KEEP_SWITCHES if key not in unflipped(
+        {k: v for k, v in KEEP_SWITCHES.items() if k != key})]
+    assert not unneeded, (
+        f"flipped without KEEP_SWITCHES, drop them: {unneeded}")

@@ -1831,39 +1831,6 @@ def test_incremental_admission_ignores_intra_batch_dups(spark):
     }
     assert out[101] == (0, 1) and out[102] == (0, 1), out
     assert out[103][0] >= 1 and out[103][1] == 0, out
-    pruned = {
-        r["doc_id"]: (r["n_matches"], r["admitted"])
-        for r in incremental_neardup_admission(
-            batch, corpus, text_col="text", id_col="doc_id",
-            n=3, num_hashes=8, bands=4, verify_threshold=0.3,
-            prune_verify=True,
-        ).collect()
-    }
-    assert pruned == out  # the scale lever is output-identical
-
-
-def test_minhash_lsh_pairs_prune_verify_parity(spark):
-    """The prune_verify scale lever (broadcast-semi-join the shingle
-    tables to candidate ids before the verify shuffle) must be
-    output-identical to the default path."""
-    from serverless_podcast_etl_spark.operators.dedup import minhash_lsh_pairs
-
-    base = [f"w{i}" for i in range(40)]
-    rows = []
-    for d in range(20):
-        words = list(base)
-        words[d % 40] = f"x{d}"          # near-dups of one another
-        rows.append((d, " ".join(words)))
-    rows += [(100 + d, " ".join(f"z{d}_{i}" for i in range(30)))
-             for d in range(5)]          # unrelated singletons
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(text_col="text", id_col="doc_id", n=3, num_hashes=8,
-              bands=4, verify_threshold=0.3)
-    a = sorted(map(tuple, minhash_lsh_pairs(df, **kw).collect()))
-    b = sorted(
-        map(tuple, minhash_lsh_pairs(df, prune_verify=True, **kw).collect())
-    )
-    assert a == b and len(a) > 0
 
 
 def test_digest_sample_exact_n_deterministic_and_seeded(spark):

@@ -166,64 +166,6 @@ def test_band_index_join_shuffles_batch_side_only(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS b_band_index")
 
 
-def test_admission_against_bucketed_index_plan(spark, sf_dir):
-    """End-to-end q76 against the PERSISTED index (r5 VERDICT #7): the
-    full admission operator fed ``corpus_bands=spark.table(...)`` over
-    a (band, bucket)-bucketed table must (a) read the index through
-    the bucketed scan with NO Exchange above it — exactly one
-    hashpartitioning on the band keys appears in the whole plan, the
-    batch side — and (b) return bit-identical results to the
-    re-signing form."""
-    from serverless_podcast_etl_spark.operators.dedup import (
-        incremental_neardup_admission,
-        minhash_bands,
-    )
-    from serverless_podcast_etl_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    batch = docs.filter(F.col("doc_id") % 10 == 7)
-    corpus = docs.filter(F.col("doc_id") % 10 != 7)
-    minhash_bands(corpus, "text", "doc_id").write.mode("overwrite").format(
-        "parquet"
-    ).bucketBy(8, "band", "bucket").sortBy("band", "bucket").saveAsTable(
-        "b_admission_index"
-    )
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        gated = incremental_neardup_admission(
-            batch, corpus, text_col="text", id_col="doc_id",
-            verify_threshold=0.3,
-            corpus_bands=spark.table("b_admission_index"),
-        )
-        plan = physical_plan(gated)
-        # the index is consumed through its bucketed layout
-        assert "SelectedBucketsCount" in plan, plan
-        # the only (band, bucket) hash exchange is the incoming batch
-        # (partitioned to the index's 8 buckets); verify-stage
-        # exchanges key on ids/shingles, never the bands
-        import re
-
-        band_exchanges = [
-            m.group(1)
-            for m in re.finditer(r"hashpartitioning\(([^)]*)\)", plan)
-            if "band#" in m.group(1)
-        ]
-        assert len(band_exchanges) == 1, (band_exchanges, plan[:3000])
-        assert band_exchanges[0].rstrip().endswith(", 8"), band_exchanges
-        # parity with the re-signing form
-        resigned = incremental_neardup_admission(
-            batch, corpus, text_col="text", id_col="doc_id",
-            verify_threshold=0.3,
-        )
-        assert sorted(map(tuple, gated.collect())) == sorted(
-            map(tuple, resigned.collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS b_admission_index")
-
-
 def test_global_prefix_sum_has_no_single_partition_exchange(spark, sf_dir):
     """The q74 scale contract: the global running sum must come from
     the two-pass range-partition pattern, never a plan that funnels

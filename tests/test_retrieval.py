@@ -289,10 +289,9 @@ def _bm25_index(spark, tmp_path, docs):
 
 
 def test_bm25_index_roundtrip_and_prune_parity(spark, tmp_path):
-    """probe(write→load) == direct bm25_topk, exactly; prune=True ==
-    prune=False; and the pruned scan carries a pushed In(term) — the
-    read-side contract the range-partitioned sorted write exists
-    for."""
+    """probe(write→load) == direct bm25_topk, exactly; and the probe's
+    scan carries a pushed In(term) — the read-side contract the
+    range-partitioned sorted write exists for."""
     from serverless_podcast_etl_spark.operators.retrieval import (
         bm25_probe_topk,
         bm25_topk,
@@ -307,15 +306,9 @@ def test_bm25_index_roundtrip_and_prune_parity(spark, tmp_path):
     _, index, meta = _bm25_index(spark, tmp_path, docs)
 
     direct = bm25_topk(probes, docs, "doc_id", "doc_id", k=6)
-    probed = bm25_probe_topk(
-        probes, index, meta, "doc_id", k=6, prune=True
-    )
-    unpruned = bm25_probe_topk(
-        probes, index, meta, "doc_id", k=6, prune=False
-    )
+    probed = bm25_probe_topk(probes, index, meta, "doc_id", k=6)
     want = sorted(map(tuple, direct.collect()))
     assert sorted(map(tuple, probed.collect())) == want
-    assert sorted(map(tuple, unpruned.collect())) == want
     assert len(want) > 0
 
     plan = probed._jdf.queryExecution().executedPlan().toString()

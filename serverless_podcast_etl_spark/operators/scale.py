@@ -38,12 +38,32 @@ filesystems) counts as ``maxPartitionBytes``-sized, so an
 unknown-size input passes through rather than paying a speculative
 full shuffle — and the early exit stops after at most ``target``
 such files.
+
+The split estimate replays Spark's greedy packing piece by piece
+(``FilePartition.getFilePartitions``) and so equals the scan's task
+count: one small file is one split, at any target.
+
+The mirror image, ``single_partition``: an input whose files (those
+under the caller's pinned partition values, e.g. ``episode_id=7``)
+pack into one split is read by one scan task anyway.  Marking it as
+one partition (``coalesce(1)``) costs no parallelism, and its
+``SinglePartition`` output satisfies every distribution an aggregate,
+window, global sort or join requires, so the planner places no
+exchange above the scan: no hash-aggregate shuffle and no
+range-partition sampling job for ``orderBy``.  ``one_split`` is the
+decision alone, for a join that must hold on both sides.  Both are
+decided on the driver (file list and sizes, no Spark job, no physical
+planning).  Inputs of two or more splits keep the planner's plan
+unchanged — among them a partition or a small table that has
+collected several trickle commits: under the default 4 MB openCost
+two small files are two splits.
 """
 
 from __future__ import annotations
 
 import os
-from urllib.parse import urlparse
+import weakref
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
@@ -86,37 +106,60 @@ def _estimated_scan_splits(
     at_least: int | None = None,
     size_of=_file_size,
 ) -> int:
-    """Estimate of the scan's task count, mirroring Spark's own
-    file-packing arithmetic (``FilePartition.maxSplitBytes``): every
-    file is charged ``size + openCostInBytes``; the per-split budget
-    is ``min(maxPartitionBytes, max(openCost, totalBytes /
-    minPartitionNum))``; the split count is the packed total over that
-    budget.  Modelling the openCost BIN-PACKING (opt-r14 ADVICE #1)
-    matters in both directions: many SMALL files pack into shared
-    FilePartitions (the old one-split-per-file floor OVER-estimated
-    and skipped the repartition exactly on the CPU-bound paths the
-    floor exists for), while the ``bytesPerCore`` term spreads any
-    non-trivial total over ``minPartitionNum`` tasks (so a many-file
-    input is not UNDER-estimated either).
+    """Estimate of the scan's task count, mirroring Spark's own file
+    packing (``FilePartition``):
+
+    * the split budget is ``maxSplitBytes = min(maxPartitionBytes,
+      max(openCost, totalBytes / minPartitionNum))``, where every file
+      counts ``size + openCostInBytes`` toward the total;
+    * each file (parquet is splittable) is cut into pieces of at most
+      that budget;
+    * the pieces, largest first, are packed greedily: a split closes
+      when the next piece would overflow the budget, and each piece
+      added charges ``length + openCostInBytes``.
+
+    So one small file is one split, while two files are two whenever
+    the budget is the openCost floor (the first file's charge alone
+    fills it).  Many small files pack into shared splits, and the
+    ``bytesPerCore`` term spreads a large total over
+    ``minPartitionNum`` tasks.
 
     Files whose size cannot be determined (``size_of`` → None) count
     as ``maxPartitionBytes``-sized — the do-no-harm direction: an
     unknown-size input is never repartitioned on a guess.
 
-    ``at_least`` short-circuits the stat loop: once the accumulated
-    charged bytes prove the estimate reaches it (charged/maxPB ≥
-    at_least ⇒ splits ≥ at_least, since the split budget never
-    exceeds maxPartitionBytes), the loop returns without statting the
-    rest — a 100 TB input is decided after a handful of stats."""
+    ``at_least`` short-circuits the stat loop.  A split holds at most
+    ``maxSplitBytes + openCost`` charged bytes, so once the charged
+    total reaches ``at_least * (maxPartitionBytes + openCost)`` the
+    estimate is proven to reach ``at_least`` and the loop returns
+    without statting the rest — a 100 TB input is decided after a
+    handful of stats."""
+    sizes = []
     total = 0
     for f in files:
         size = size_of(f)
-        total += (max_partition_bytes if size is None else size) + open_cost
-        if at_least is not None and total >= at_least * max_partition_bytes:
+        sizes.append(max_partition_bytes if size is None else size)
+        total += sizes[-1] + open_cost
+        if at_least is not None and total >= at_least * (
+            max_partition_bytes + open_cost
+        ):
             return at_least
     bytes_per_core = total // max(1, min_partition_num)
     max_split = max(1, min(max_partition_bytes, max(open_cost, bytes_per_core)))
-    return -(-total // max_split)
+    pieces = sorted(
+        (
+            min(max_split, size - off)
+            for size in sizes
+            for off in range(0, size, max_split)
+        ),
+        reverse=True,
+    )
+    splits, current = 0, max_split
+    for piece in pieces:
+        if current + piece > max_split:
+            splits, current = splits + 1, 0
+        current += piece + open_cost
+    return splits
 
 
 def local_frame(spark, rows, schema) -> DataFrame:
@@ -180,30 +223,9 @@ def keyed_parallelism(df: DataFrame, key_cols: list[str]) -> DataFrame:
     return df.repartition(n, *key_cols)
 
 
-def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
-    """Repartition ``df`` up to ``defaultParallelism * min_factor``
-    when its input cannot fan the scan out that wide; pass through
-    (zero cost) otherwise.  Streaming frames pass through untouched —
-    micro-batch partitioning belongs to the source.
-
-    The returned repartition is an explicit numbered one
-    (REPARTITION_BY_NUM), deliberately: AQE's byte-based partition
-    coalescing must not undo the fan-out — the operators calling this
-    are CPU-bound per ROW, and their small shuffled byte size says
-    nothing about the md5/tokenize work downstream.
-    """
-    if df.isStreaming:
-        return df
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism * min_factor
-    files = df.inputFiles()
-    if not files:
-        # no file source (in-memory fixtures, checkpoint scans): fall
-        # back to the exact physical probe — rare, and such frames
-        # already carry an executed partitioning
-        if df.rdd.getNumPartitions() < target:
-            return df.repartition(target)
-        return df
+def _scan_splits(spark, files: list[str], at_least: int) -> int:
+    """``_estimated_scan_splits`` under the session's file-packing
+    configuration."""
     try:
         max_pb = _parse_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes")
@@ -228,9 +250,86 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
             continue
     if not min_pn:
         min_pn = spark.sparkContext.defaultParallelism
-    est = _estimated_scan_splits(
-        files, max_pb, open_cost, min_pn, at_least=target
+    return _estimated_scan_splits(
+        files, max_pb, open_cost, min_pn, at_least=at_least
     )
-    if est >= target:
+
+
+def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
+    """Repartition ``df`` up to ``defaultParallelism * min_factor``
+    when its input cannot fan the scan out that wide; pass through
+    (zero cost) otherwise.  Streaming frames pass through untouched —
+    micro-batch partitioning belongs to the source.
+
+    The returned repartition is an explicit numbered one
+    (REPARTITION_BY_NUM), deliberately: AQE's byte-based partition
+    coalescing must not undo the fan-out — the operators calling this
+    are CPU-bound per ROW, and their small shuffled byte size says
+    nothing about the md5/tokenize work downstream.
+    """
+    if df.isStreaming:
+        return df
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism * min_factor
+    files = df.inputFiles()
+    if not files:
+        # no file source (in-memory fixtures, checkpoint scans): fall
+        # back to the exact physical probe — rare, and such frames
+        # already carry an executed partitioning
+        if df.rdd.getNumPartitions() < target:
+            return df.repartition(target)
+        return df
+    if _scan_splits(spark, files, at_least=target) >= target:
         return df
     return df.repartition(target)
+
+
+def _under(path: str, pinned: dict) -> bool:
+    """Whether a file's hive directories (``col=value``) agree with
+    every pinned value.  A pinned column with no directory in the path
+    is not a partition column of that table and prunes nothing."""
+    for part in urlparse(path).path.split("/")[:-1]:
+        name, eq, value = part.partition("=")
+        name = unquote(name)
+        if eq and name in pinned and unquote(value) != str(pinned[name]):
+            return False
+    return True
+
+
+_INPUT_FILES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _input_files(df: DataFrame) -> list[str]:
+    """``df.inputFiles()``, fetched once per DataFrame object.  py4j
+    hands the list over one path per round trip (about 0.1 ms each on
+    a 4-core VM, ~20 ms for a 192-file table), while a reader such as
+    the dashboard asks about the same table frame on every click.
+    Spark lists a frame's files once and nothing in this package
+    refreshes them, so the memo cannot go stale; an entry dies with
+    its frame."""
+    files = _INPUT_FILES.get(df)
+    if files is None:
+        files = _INPUT_FILES[df] = df.inputFiles()
+    return files
+
+
+def one_split(df: DataFrame, **pinned) -> bool:
+    """Whether Spark reads the files of ``df`` that lie under the
+    ``pinned`` partition values (``episode_id=7``) as at most one
+    split, i.e. one scan task.  Decided on the driver from the file
+    list and sizes: no Spark job, no physical planning.  A frame with
+    no input files (an in-memory frame) is never one split: its
+    partitioning is not known without planning it."""
+    files = _input_files(df)
+    if not files:
+        return False
+    mine = [f for f in files if _under(f, pinned)]
+    return _scan_splits(df.sparkSession, mine, at_least=2) <= 1
+
+
+def single_partition(df: DataFrame, **pinned) -> DataFrame:
+    """``df.coalesce(1)`` when ``one_split(df, **pinned)``, else ``df``
+    as it is (why, in the module docstring).  The caller still applies
+    the pinned equalities as filters; here they only pick the files
+    the decision counts."""
+    return df.coalesce(1) if one_split(df, **pinned) else df

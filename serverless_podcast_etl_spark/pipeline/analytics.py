@@ -9,6 +9,21 @@ reference's own usage, correct with many episodes loaded.  For strict
 parity audits the J2 queries also take ``bug_compatible=True``, which
 reproduces the reference's index-only join verbatim (mirrors J4's two
 boundary modes).
+
+Read path.  A dashboard click reads one episode's partition of
+``entity_dimension``/``sentence_dimension`` or a whole
+``podcast_dimension``/``episode_dimension``; in a bulk-loaded
+warehouse each of these is one file of a few KB.  Spark's file
+packing reads such an input as one task, so each function marks it as one
+partition (``operators.scale.single_partition``, given the
+``episode_id`` it filters on): every aggregate, window and sort then
+runs in that task with no exchange, and a join of two one-split inputs
+runs there too as a shuffled hash join instead of a broadcast job.
+A query becomes one Spark job.  No parallelism is lost — the scan was
+one task already.  An input that packs into two or more splits (an
+episode partition or dimension table that has collected several
+commits) keeps the planner's plan: exchanges, and the broadcast
+title→id lookup of ``next_undownloaded_episode``.
 """
 
 from __future__ import annotations
@@ -17,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import ratio_of_avgs, word_frequencies
+from ..operators.scale import one_split, single_partition
 from ..operators.windows import rolling_mean
 
 # English stopword list for the wordcloud query (the reference
@@ -27,15 +43,38 @@ WORDCLOUD_STOPWORDS = [
 ]
 
 
+def _join(
+    left: DataFrame,
+    right: DataFrame,
+    on,
+    how: str,
+    one_task: bool,
+    hint: str | None = None,
+) -> DataFrame:
+    """``left`` ⋈ ``right``.  When both inputs are one split
+    (``one_task``), both sides become one partition and the join runs
+    inside that task as a shuffled hash join with no exchange: no
+    broadcast job, no shuffle.  Otherwise the planner's join, with
+    ``right`` hinted ``hint``."""
+    if one_task:
+        left, right, hint = left.coalesce(1), right.coalesce(1), "shuffle_hash"
+    return left.join(right.hint(hint) if hint else right, on, how)
+
+
 def distinct_podcasts(podcast_dim: DataFrame) -> DataFrame:
     """Dropdown: all podcasts (app.py:39)."""
-    return podcast_dim.select("podcast_title", "podcast_id").distinct()
+    return (
+        single_partition(podcast_dim)
+        .select("podcast_title", "podcast_id")
+        .distinct()
+    )
 
 
 def episodes_newest_first(episode_dim: DataFrame, podcast_id: int) -> DataFrame:
     """Dropdown: a podcast's episodes, newest first (app.py:97-102)."""
     return (
-        episode_dim.filter(F.col("podcast_id") == podcast_id)
+        single_partition(episode_dim)
+        .filter(F.col("podcast_id") == podcast_id)
         .select("episode_title", "episode_id", "episode_release_date")
         .orderBy(F.desc("episode_release_date"), "episode_id")
     )
@@ -44,14 +83,22 @@ def episodes_newest_first(episode_dim: DataFrame, podcast_id: int) -> DataFrame:
 def next_undownloaded_episode(
     episode_dim: DataFrame, podcast_dim: DataFrame, podcast_title: str
 ) -> DataFrame:
-    """The download selector (src/lambda_3.py:40-68): broadcast
-    title→id lookup (J1), then the newest not-yet-downloaded episode
-    of that podcast (W2/O2) — 0 or 1 rows."""
+    """The download selector (src/lambda_3.py:40-68): title→id lookup
+    (J1, broadcast unless both tables are one split), then the newest
+    not-yet-downloaded episode of that podcast (W2/O2) — 0 or 1
+    rows."""
     pod = podcast_dim.filter(F.col("podcast_title") == podcast_title).select(
         "podcast_id"
     )
     return (
-        episode_dim.join(F.broadcast(pod), "podcast_id")
+        _join(
+            episode_dim,
+            pod,
+            "podcast_id",
+            "inner",
+            one_split(episode_dim) and one_split(podcast_dim),
+            hint="broadcast",
+        )
         .filter(~F.col("downloaded"))
         .orderBy(F.desc("episode_release_date"), F.desc("episode_id"))
         .limit(1)
@@ -68,7 +115,8 @@ def next_undownloaded_episode(
 def distinct_entity_types(entity_dim: DataFrame, episode_id: int) -> DataFrame:
     """Dropdown: entity types present in an episode (app.py:132-136)."""
     return (
-        entity_dim.filter(F.col("episode_id") == episode_id)
+        single_partition(entity_dim, episode_id=episode_id)
+        .filter(F.col("episode_id") == episode_id)
         .select("entity_type")
         .distinct()
     )
@@ -80,7 +128,8 @@ def entity_mention_counts(
     """Bar plot: mention counts for a type in an episode, descending
     (app.py:180-187)."""
     return (
-        entity_dim.filter(
+        single_partition(entity_dim, episode_id=episode_id)
+        .filter(
             (F.col("entity_type") == entity_type)
             & (F.col("episode_id") == episode_id)
         )
@@ -91,30 +140,39 @@ def entity_mention_counts(
 
 
 def _entity_sentence_join(
-    ents: DataFrame,
+    entity_dim: DataFrame,
     sentence_dim: DataFrame,
+    episode_id: int,
+    entity_type: str,
     sentence_cols: list[str],
     bug_compatible: bool,
 ) -> DataFrame:
-    """J2: entity ⟕ sentence.
+    """J2: an episode's entities of one type ⟕ sentence.
 
-    Default = corrected composite key ``(sentence_index, episode_id)``.
+    Default = corrected composite key ``(sentence_index, episode_id)``,
+    so only the episode's own sentences can match.
     ``bug_compatible=True`` joins on ``sentence_index`` ONLY, exactly as
     the reference SQL does (``ON s.sentence_index = e.sentence_index``,
     app.py:234, 289, 341): with >1 episode in the warehouse each entity
     fans out to every episode's sentence at that index.  The two modes
     coincide under the reference's own single-episode filters.
     """
+    ents = entity_dim.filter(
+        (F.col("entity_type") == entity_type) & (F.col("episode_id") == episode_id)
+    )
     if bug_compatible:
-        return ents.join(
-            sentence_dim.select("sentence_index", *sentence_cols),
-            on=["sentence_index"],
-            how="left",
-        )
-    return ents.join(
-        sentence_dim.select("sentence_index", "episode_id", *sentence_cols),
-        on=["sentence_index", "episode_id"],
-        how="left",
+        on, sents, pinned = ["sentence_index"], sentence_dim, {}
+    else:
+        on = ["sentence_index", "episode_id"]
+        sents = sentence_dim.filter(F.col("episode_id") == episode_id)
+        pinned = {"episode_id": episode_id}
+    return _join(
+        ents,
+        sents.select(*on, *sentence_cols),
+        on,
+        "left",
+        one_split(entity_dim, episode_id=episode_id)
+        and one_split(sentence_dim, **pinned),
     )
 
 
@@ -129,11 +187,13 @@ def sentiment_distribution(
     sentences (app.py:230-238) — corrected composite-key join by
     default; ``bug_compatible=True`` replays the reference's
     index-only join (see ``_entity_sentence_join``)."""
-    ents = entity_dim.filter(
-        (F.col("entity_type") == entity_type) & (F.col("episode_id") == episode_id)
-    )
     joined = _entity_sentence_join(
-        ents, sentence_dim, ["overall_sentiment"], bug_compatible
+        entity_dim,
+        sentence_dim,
+        episode_id,
+        entity_type,
+        ["overall_sentiment"],
+        bug_compatible,
     )
     return joined.groupBy("overall_sentiment").agg(
         F.count(F.lit(1)).alias("num_sentences")
@@ -143,8 +203,10 @@ def sentiment_distribution(
 def sentiment_timeseries(sentence_dim: DataFrame, episode_id: int) -> DataFrame:
     """Line chart: 50-row rolling mean of (positive - negative) over
     sentence order (app.py:270,282-305)."""
-    scored = sentence_dim.filter(F.col("episode_id") == episode_id).withColumn(
-        "score", F.col("positive_score") - F.col("negative_score")
+    scored = (
+        single_partition(sentence_dim, episode_id=episode_id)
+        .filter(F.col("episode_id") == episode_id)
+        .withColumn("score", F.col("positive_score") - F.col("negative_score"))
     )
     return rolling_mean(
         scored,
@@ -166,12 +228,11 @@ def entity_sentiment_proportions(
     """Stacked bars: per-entity sentiment share (ratio of AVGs,
     app.py:333-346), descending by positive share.
     ``bug_compatible=True`` replays the reference's index-only join."""
-    ents = entity_dim.filter(
-        (F.col("entity_type") == entity_type) & (F.col("episode_id") == episode_id)
-    )
     joined = _entity_sentence_join(
-        ents,
+        entity_dim,
         sentence_dim,
+        episode_id,
+        entity_type,
         ["positive_score", "neutral_score", "negative_score"],
         bug_compatible,
     )
@@ -186,7 +247,9 @@ def entity_sentiment_proportions(
 def episode_word_frequencies(sentence_dim: DataFrame, episode_id: int) -> DataFrame:
     """Wordcloud input: word counts over an episode's sentences with
     stopwords removed (app.py:365-367,385-406)."""
-    sents = sentence_dim.filter(F.col("episode_id") == episode_id)
+    sents = single_partition(sentence_dim, episode_id=episode_id).filter(
+        F.col("episode_id") == episode_id
+    )
     return word_frequencies(
         sents, text_col="sentence_text", stopwords=WORDCLOUD_STOPWORDS
     ).orderBy(F.desc("num_occurences"), "word")

@@ -3,10 +3,13 @@ warehouse — entry point 3 of the reference (SURVEY §3)."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from pyspark.sql import functions as F
 
+from serverless_podcast_etl_spark.operators.scale import one_split
 from serverless_podcast_etl_spark.pipeline import analytics
 from serverless_podcast_etl_spark.pipeline.runner import run_full_pipeline
 from serverless_podcast_etl_spark.pipeline.warehouse import Warehouse
@@ -131,6 +134,103 @@ def test_word_frequencies_no_stopwords(wh):
     out = analytics.episode_word_frequencies(wh.read("sentence_dimension"), ep)
     words = {r["word"] for r in out.collect()}
     assert words and not (words & set(analytics.WORDCLOUD_STOPWORDS))
+
+
+# click order: (name, tables read, call(frames, episode_id, entity_type,
+# podcast row))
+QUERIES = [
+    ("distinct_podcasts", ["podcast_dimension"],
+     lambda t, ep, et, pod: analytics.distinct_podcasts(*t)),
+    ("episodes_newest_first", ["episode_dimension"],
+     lambda t, ep, et, pod: analytics.episodes_newest_first(*t, pod["podcast_id"])),
+    ("next_undownloaded_episode", ["episode_dimension", "podcast_dimension"],
+     lambda t, ep, et, pod: analytics.next_undownloaded_episode(*t, pod["podcast_title"])),
+    ("distinct_entity_types", ["entity_dimension"],
+     lambda t, ep, et, pod: analytics.distinct_entity_types(*t, ep)),
+    ("entity_mention_counts", ["entity_dimension"],
+     lambda t, ep, et, pod: analytics.entity_mention_counts(*t, ep, et)),
+    ("sentiment_distribution", ["entity_dimension", "sentence_dimension"],
+     lambda t, ep, et, pod: analytics.sentiment_distribution(*t, ep, et)),
+    ("sentiment_timeseries", ["sentence_dimension"],
+     lambda t, ep, et, pod: analytics.sentiment_timeseries(*t, ep)),
+    ("entity_sentiment_proportions", ["entity_dimension", "sentence_dimension"],
+     lambda t, ep, et, pod: analytics.entity_sentiment_proportions(*t, ep, et)),
+    ("episode_word_frequencies", ["sentence_dimension"],
+     lambda t, ep, et, pod: analytics.episode_word_frequencies(*t, ep)),
+]
+# the queries over one episode, and whether each result is ordered
+EPISODE_QUERIES = {
+    "distinct_entity_types": False,
+    "entity_mention_counts": True,
+    "sentiment_distribution": False,
+    "sentiment_timeseries": True,
+    "entity_sentiment_proportions": True,
+    "episode_word_frequencies": True,
+}
+
+
+def _run(spark, wh, query, ep, et, group):
+    """Build ``query`` over ``wh`` and collect it under job group
+    ``group``; returns its rows, its executed plan and the number of
+    Spark jobs it launched."""
+    name, tables, call = query
+    pod = wh.read("podcast_dimension").orderBy("podcast_id").first()
+    frames = [wh.read(t) for t in tables]
+    sc = spark.sparkContext
+    sc.setJobGroup(group, name)
+    try:
+        df = call(frames, ep, et, pod)
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return rows, plan, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_each_query_over_one_split_inputs_is_one_spark_job(spark, wh):
+    """Every input of the fixture's queries is one file, so each query
+    is one task: one Spark job, no exchange (no shuffle, no
+    sort-sampling job, no broadcast job)."""
+    ep, et = _an_episode_with_entities(wh)
+    for t in ("podcast_dimension", "episode_dimension"):
+        assert one_split(wh.read(t))
+    for t in ("entity_dimension", "sentence_dimension"):
+        assert one_split(wh.read(t), episode_id=ep)
+    for q in QUERIES:
+        _, plan, jobs = _run(spark, wh, q, ep, et, f"one-split-{q[0]}")
+        assert jobs == 1 and "Exchange" not in plan, (q[0], jobs, plan)
+
+
+def test_two_files_in_a_partition_keep_the_exchange(spark, wh, tmp_path):
+    """A second commit into the same ``episode_id`` partition leaves two
+    files: the queries over that episode keep their exchanges, and
+    return the same rows as over that partition stored as one file
+    (the fixture's)."""
+    ep, et = _an_episode_with_entities(wh)
+    multi = Warehouse(spark, str(tmp_path / "multi"))
+    for t in ("entity_dimension", "sentence_dimension"):
+        rows = wh.read(t)
+        half = rows.filter(
+            (F.col("episode_id") != ep) | (F.col("sentence_index") % 2 == 0)
+        )
+        for batch in (half, rows):
+            multi.insert_ignore(t, batch.coalesce(1), partition_by=["episode_id"])
+        assert multi.read(t).count() == rows.count()
+        assert not one_split(multi.read(t), episode_id=ep)
+    for t in ("podcast_dimension", "episode_dimension"):
+        shutil.copytree(wh.path(t), multi.path(t))
+    for q in QUERIES:
+        if q[0] not in EPISODE_QUERIES:
+            continue
+        want, _, _ = _run(spark, wh, q, ep, et, f"one-file-{q[0]}")
+        got, plan, jobs = _run(spark, multi, q, ep, et, f"two-files-{q[0]}")
+        assert jobs > 1 and "Exchange" in plan, (q[0], jobs, plan)
+        if not EPISODE_QUERIES[q[0]]:
+            got, want = sorted(got), sorted(want)
+        # float sums may add up in another order under the other plan
+        assert [tuple(r) for r in got] == [
+            pytest.approx(tuple(r)) for r in want
+        ], q[0]
 
 
 def test_sql_over_registered_views_matches_dataframe(spark, sf_dir):

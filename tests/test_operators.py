@@ -385,19 +385,29 @@ def test_estimated_scan_splits_bin_packing_and_unknown_sizes():
     )
     assert 100 <= est <= 101
 
-    # many tiny files: the bytesPerCore term spreads them over
-    # minPartitionNum — the scan is NOT judged split-starved
+    # many tiny files pack into shared splits: the budget is
+    # 100 * (1 KB + 4 MB) / 32 ≈ 12.5 MB, and after four files'
+    # charges (4 MB + 1 KB each) the fifth overflows it — 25 tasks,
+    # as Spark's own scan counts them
     est = _estimated_scan_splits(
         [f"f{i}" for i in range(100)], max_pb, open_cost, 32,
         size_of=lambda f: 1024,
     )
-    assert est >= 32
+    assert est == 25
 
-    # ONE tiny file is split-starved regardless of packing
-    est = _estimated_scan_splits(
-        ["f0"], max_pb, open_cost, 32, size_of=lambda f: 1024
-    )
-    assert est < 32
+    # ONE tiny file is one split, at any target — including 2, where
+    # a file's size + openCost over the openCost budget used to read
+    # as 2 and leave a one-file corpus on one task
+    for target in (2, 32):
+        est = _estimated_scan_splits(
+            ["f0"], max_pb, open_cost, target, size_of=lambda f: 1024
+        )
+        assert est == 1
+        est = _estimated_scan_splits(
+            ["f0"], max_pb, open_cost, target, at_least=target,
+            size_of=lambda f: 2048,
+        )
+        assert est == 1
 
     # stat failure everywhere (remote filesystem): each file counts as
     # maxPartitionBytes-sized — 24 unstat-able files on a 32-way
@@ -424,6 +434,42 @@ def test_estimated_scan_splits_bin_packing_and_unknown_sizes():
     )
     assert est >= 32
     assert len(calls) < 100
+
+
+def test_estimated_scan_splits_match_spark_scan_tasks(spark, tmp_path):
+    """The estimate is Spark's own scan task count, file sets of one
+    to many small files and one large file, across minPartitionNum."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from serverless_podcast_etl_spark.operators.scale import (
+        _estimated_scan_splits,
+    )
+
+    mb = 1 << 20
+    cases = {"one": (1, 10), "two": (2, 10), "three": (3, 10),
+             "many": (40, 10), "large": (1, 600_000)}
+    prev = spark.conf.get("spark.sql.files.minPartitionNum", None)
+    try:
+        for name, (n_files, rows) in cases.items():
+            d = tmp_path / name
+            d.mkdir()
+            for i in range(n_files):
+                pq.write_table(
+                    pa.table({"x": np.arange(rows) + i}), d / f"f{i}.parquet"
+                )
+            files = [str(f) for f in sorted(d.iterdir())]
+            for min_pn in (1, 2, 4, 32):
+                spark.conf.set("spark.sql.files.minPartitionNum", str(min_pn))
+                tasks = spark.read.parquet(str(d)).rdd.getNumPartitions()
+                est = _estimated_scan_splits(files, 128 * mb, 4 * mb, min_pn)
+                assert est == tasks, (name, min_pn, est, tasks)
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.files.minPartitionNum")
+        else:
+            spark.conf.set("spark.sql.files.minPartitionNum", prev)
 
 
 def test_local_frame_none_rows_fall_back_to_plain_path(spark):

@@ -128,44 +128,6 @@ def test_q62_exact_baseline_materialized_once(spark, sf_dir):
     assert "ExistingRDD" in plan
 
 
-def test_band_index_join_shuffles_batch_side_only(spark, sf_dir):
-    """The incremental-admission candidate join against a PERSISTED
-    minhash band index (bucketed on the join key) must not shuffle the
-    corpus side: exactly one hashpartitioning Exchange — the incoming
-    batch — appears in the plan.  This is the q76 scale contract: the
-    100 TB corpus index is signed and shuffled once at write time,
-    every future batch pays only its own side."""
-    from serverless_podcast_etl_spark.operators.dedup import minhash_bands
-    from serverless_podcast_etl_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus_bands = minhash_bands(
-        docs.filter(F.col("doc_id") % 10 != 7), "text", "doc_id"
-    )
-    corpus_bands.write.mode("overwrite").format("parquet").bucketBy(
-        8, "band", "bucket"
-    ).sortBy("band", "bucket").saveAsTable("b_band_index")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        batch_bands = minhash_bands(
-            docs.filter(F.col("doc_id") % 10 == 7), "text", "doc_id"
-        ).select(F.col("doc_id").alias("id_new"), "band", "bucket")
-        cand = batch_bands.join(
-            spark.table("b_band_index"), ["band", "bucket"]
-        )
-        plan = physical_plan(cand)
-        assert "SortMergeJoin" in plan
-        # formatted mode lists each Exchange's partitioning in its
-        # detail block; exactly one hash exchange (the batch side —
-        # the other Exchange is ensure_parallelism's round-robin)
-        assert plan.count("hashpartitioning(") == 1, plan
-        assert cand.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS b_band_index")
-
-
 def test_global_prefix_sum_has_no_single_partition_exchange(spark, sf_dir):
     """The q74 scale contract: the global running sum must come from
     the two-pass range-partition pattern, never a plan that funnels

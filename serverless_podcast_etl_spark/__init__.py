@@ -10,14 +10,13 @@ plan; Python UDFs appear only where semantics genuinely require them
 Layout:
     session     — tuned SparkSession factory
     schemas     — warehouse dimension + staging StructTypes
-    sources     — table loaders, URL fetch seam, JDBC warehouse sink
+    sources     — table loaders, URL fetch seam
     functions   — scalar function library (dates, text, hashing, stats)
     operators   — relational operators (joins, windows, aggregates,
                   dedup, similarity, retrieval, selection, multimodal)
     plans       — the analytics query catalog (driver contract)
     pipeline    — the podcast ETL pipeline stages (batch)
-    streaming   — Structured Streaming tiers (windows, stream dedup,
-                  curation, near-dup admission)
+    streaming   — Structured Streaming event-time and session windows
 """
 
 __version__ = "0.1.0"

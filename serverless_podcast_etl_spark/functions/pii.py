@@ -32,8 +32,8 @@ REDACTIONS: list[tuple[str, str]] = [
 
 
 def pii_columns(text_col: str):
-    """The PII count/redact expressions keyed by output name — shared
-    by the batch ``scrub`` frame and the streaming curation gate."""
+    """The PII count/redact expressions keyed by output name, for
+    ``scrub``."""
     text = F.col(text_col)
     redacted = text
     for pattern, token in REDACTIONS:

@@ -31,8 +31,8 @@ LANG_MARKERS: dict[str, list[str]] = {
 
 def quality_columns(text_col: str) -> dict[str, Column]:
     """The quality-metric expressions keyed by output name — shared by
-    the batch stats frame and the streaming curation gate (stateless,
-    so they apply to micro-batches unchanged)."""
+    ``quality_stats``, ``source_quality_profile`` and catalog q86's
+    stopword ratio (stateless in-row expressions)."""
     toks = word_tokens(F.col(text_col))
     n_tokens = F.size(toks)
     stop_hits = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
@@ -705,8 +705,7 @@ MOJIBAKE_PATTERN = r"[\xC2\xC3][\x80-\xBF]"
 
 def encoding_anomaly_columns(text: Column) -> dict[str, Column]:
     """The in-row encoding-anomaly count expressions keyed by output
-    name — shared by ``encoding_anomaly_scores`` and any streaming
-    admission gate (stateless, micro-batch safe)."""
+    name, for ``encoding_anomaly_scores``."""
     return {
         "n_chars": F.length(text).cast("long"),
         "replacement_chars": F.regexp_count(
@@ -841,14 +840,12 @@ def oov_columns(
     tokens: Column, vocabulary: list[str]
 ) -> dict[str, Column]:
     """The in-row OOV expressions keyed by output name, over an
-    already-tokenized array column — shared by ``vocab_oov_scores``'
-    plan-literal path and the streaming curation gate (stateless, so
-    they apply to micro-batches unchanged; the vocabulary ships as an
-    InSet inside the plan).  Empty token arrays yield NULL
-    ``oov_rate`` (``try_divide`` — no ANSI DIVIDE_BY_ZERO even under
-    ``curate_stream(min_tokens=0)``), which any ``<=`` threshold
-    filter drops: a token-less document carries no vocabulary
-    evidence, matching the batch scorer's ``size > 0`` domain."""
+    already-tokenized array column — ``vocab_oov_scores``' plan-literal
+    path (the vocabulary ships as an InSet inside the plan).  Empty
+    token arrays yield NULL ``oov_rate`` (``try_divide`` — no ANSI
+    DIVIDE_BY_ZERO), which any ``<=`` threshold filter drops: a
+    token-less document carries no vocabulary evidence, matching the
+    scorer's ``size > 0`` domain."""
     oov = F.size(F.filter(tokens, lambda t: ~t.isin(*vocabulary)))
     return {
         "oov_tokens": oov.cast("long"),

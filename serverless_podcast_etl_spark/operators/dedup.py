@@ -23,9 +23,7 @@ irrelevant for these operators' own plans (every consumer below the
 fan-out reads ALL checkpointed columns, and the outputs are computed
 pair/score columns no source-level pushdown could reach), but a
 caller composing extra source-column predicates UNDER one of these
-operators should apply them to ``df`` first.  Streaming plans need
-the lazy zero-side-effect composition, which
-``incremental_neardup_admission(materialize=False)`` keeps.
+operators should apply them to ``df`` first.
 """
 
 from __future__ import annotations
@@ -648,7 +646,6 @@ def incremental_neardup_admission(
     num_hashes: int = 8,
     bands: int = 4,
     verify_threshold: float = 0.2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Admission gate for incremental ingestion: for each NEW document,
     the count of verified near-duplicates already in the corpus —
@@ -663,40 +660,27 @@ def incremental_neardup_admission(
     restricted to (new × corpus) pairs — pinned by the catalog oracle
     (q76), which computes full-corpus pairs and filters to the split.
 
-    ``materialize`` (default) ``localCheckpoint``s each side's
-    shingle-hash arrays at their fan-out (banding + verify shingles +
-    sizes — NOTES fact 18), so the batch and the corpus are each
-    hashed once instead of up to three times.  Pass ``False`` for
-    per-micro-batch callers (the streaming admission gate re-plans
-    every batch; re-checkpointing the corpus per batch costs more
-    than the repeated scans).
+    Each side's shingle-hash arrays are ``localCheckpoint``ed at their
+    fan-out (banding + verify shingles + sizes — NOTES fact 18), so
+    the batch and the corpus are each hashed once instead of up to
+    three times.
     """
 
     def side(frame, key, size_col):
         """(bands, shingles, sizes) of one side, keyed on ``key``."""
-        if materialize:
-            harr = _shingle_arrays(frame, text_col, id_col, n)
-            banded = _bands_from_signatures(
-                _signatures_from_arrays(harr, id_col, num_hashes),
-                id_col, num_hashes, bands,
-            )
-            sh = harr.select(
-                F.col(id_col).alias(key),
-                F.explode(F.array_distinct("_h32s")).alias("shingle"),
-            )
-            sz = harr.select(
-                F.col(id_col).alias(key),
-                F.size(F.array_distinct("_h32s")).alias(size_col),
-            )
-        else:
-            banded = minhash_bands(
-                frame, text_col, id_col, n=n, num_hashes=num_hashes,
-                bands=bands,
-            )
-            sh = shingles(frame, text_col, id_col, n=n).select(
-                F.col(id_col).alias(key), "shingle"
-            )
-            sz = sh.groupBy(key).agg(F.count(F.lit(1)).alias(size_col))
+        harr = _shingle_arrays(frame, text_col, id_col, n)
+        banded = _bands_from_signatures(
+            _signatures_from_arrays(harr, id_col, num_hashes),
+            id_col, num_hashes, bands,
+        )
+        sh = harr.select(
+            F.col(id_col).alias(key),
+            F.explode(F.array_distinct("_h32s")).alias("shingle"),
+        )
+        sz = harr.select(
+            F.col(id_col).alias(key),
+            F.size(F.array_distinct("_h32s")).alias(size_col),
+        )
         keyed = banded.select(F.col(id_col).alias(key), "band", "bucket")
         return keyed, sh, sz
 

@@ -246,10 +246,7 @@ def suppress_repeated_events(
     kept.
 
     Scale: one shuffle on the key, ``lag`` windows parallel across
-    keys — the same shape as the rolling mean (q07).  The streaming
-    counterpart with watermarked state is
-    ``streaming.dedup.streaming_dedup`` (value-keyed); this is the
-    batch, gap-bounded form.
+    keys — the same shape as the rolling mean (q07).
     """
     w = Window.partitionBy(*key_cols).orderBy(*order_cols)
     # first-in-key detection that survives null payload/ts values:

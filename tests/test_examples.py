@@ -37,17 +37,6 @@ def test_curation_demo_runs_end_to_end():
     assert "final training set under" in stdout, stdout
 
 
-def test_streaming_ingest_demo_runs_end_to_end(tmp_path):
-    stdout = _run("streaming_ingest_demo.py", str(tmp_path / "work"))
-    assert "warehouse rows: 1" in stdout, stdout
-    # the garbled doc 105 is dropped by the vocabulary-OOV tier —
-    # never reaching the admission gate's admitted/rejected sinks
-    assert "OOV-gated before admission: [105]" in stdout, stdout
-    # the U+FFFD doc 106 is dropped by the r12 encoding tier even
-    # though it passes quality AND OOV (in-domain text)
-    assert "encoding-gated before admission: [106]" in stdout, stdout
-
-
 def test_podcast_pipeline_demo_runs(tmp_path):
     stdout = _run("podcast_pipeline_demo.py", str(tmp_path / "wh"))
     assert stdout.strip(), "demo produced no output"

@@ -21,7 +21,8 @@ test.  A bare name bound to the calling function's own switch passes
 that switch through: it counts only if that switch is flipped.
 ``KEEP_SWITCHES`` lists the exceptions, each with its reason.
 
-The how-to docs (``DOCS``) may name only ``tools/`` scripts that exist.
+The how-to docs (``DOCS``) may name only ``tools/`` and ``examples/``
+scripts and package modules that exist.
 """
 
 import ast
@@ -34,12 +35,17 @@ ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "serverless_podcast_etl_spark"
 ROOTS = ["examples", "tools", "perfbench", "bench.py", "__spark_entry__.py"]
 DOCS = ["README.md", ".claude/skills/verify/SKILL.md"]
+# (path pattern, directory the named path is relative to)
+DOC_PATHS = [
+    (r"(?<![\w/])(?:tools|examples)/\w+\.py", ROOT),
+    (r"(?<![\w/])(?:sources|pipeline|operators|functions|streaming|plans)"
+     r"/\w+\.py", PACKAGE),
+]
 
 KEEP = {
     # The reference system's own seams.
     "fetch_rss_docs": "lambda_2's RSS feed fetch (SURVEY S5)",
     "RSS_DOC": "the parsed-feed shape lambda_2 consumes (S5)",
-    "JdbcTableStore": "the MySQL warehouse sink (S6)",
     # Reference implementations the live path is checked against.
     "grouped_ewma": "pandas twin of ewma_partitioned",
     "_assign_trained_cluster": "expression twin of _nearest_trained_int",
@@ -152,10 +158,10 @@ def test_keep_entries_are_defined_and_needed():
 
 
 def test_docs_name_only_existing_tools():
-    named = {path for doc in DOCS for path in re.findall(
-        r"(?<![\w/])tools/\w+\.py", (ROOT / doc).read_text())}
-    missing = sorted(path for path in named if not (ROOT / path).is_file())
-    assert not missing, f"docs name deleted tools: {missing}"
+    missing = sorted({path for doc in DOCS for pattern, base in DOC_PATHS
+                      for path in re.findall(pattern, (ROOT / doc).read_text())
+                      if not (base / path).is_file()})
+    assert not missing, f"docs name deleted files: {missing}"
 
 
 def _switches(func):

@@ -117,7 +117,7 @@ def main() -> None:
     #     gate should be a no-op here (asserted below)
     enc_ok = (
         textstats.encoding_anomaly_scores(
-            docs, text_col="text", id_col="doc_id", threshold=0.001
+            docs, text_col="text", id_col="doc_id"
         )
         .filter(
             (F.col("replacement_chars") == 0)
@@ -171,7 +171,7 @@ def main() -> None:
     #    min-id representative survives (q49)
     pairs = dedup.minhash_lsh_pairs(
         docs, text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+        verify_threshold=0.3,
     )
     docs = dedup.neardup_dedup_keep_first(docs, pairs, id_col="doc_id")
     print(f"after near-dup dedup: {docs.count()}")
@@ -378,11 +378,11 @@ def main() -> None:
         {
             "minhash": dedup.minhash_lsh_pairs(
                 docs, text_col="text", id_col="doc_id",
-                n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+                verify_threshold=0.3,
             ),
             "simhash": dedup.simhash_neardup_pairs(
                 docs, text_col="text", id_col="doc_id",
-                bits=32, band_bits=8, max_hamming=3,
+                max_hamming=3,
             ),
         }
     )
@@ -404,7 +404,7 @@ def main() -> None:
     ).filter(F.col("doc_id") % 17 != 0)
     refreshed = dedup.incremental_refresh(
         docs.select("doc_id", "text"), new_snap,
-        text_col="text", id_col="doc_id", verify_threshold=0.3,
+        text_col="text", id_col="doc_id",
     )
     # one aggregate, one execution (fact 18: two separate counts
     # would re-run the whole admission pipeline per action)

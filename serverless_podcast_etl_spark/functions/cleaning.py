@@ -47,12 +47,11 @@ def clean_lines(
     banned_substrings: tuple[str, ...] = (),
     line_sep: str = "\n",
     min_lines_kept: int = 1,
-    out_col: str = "text_clean",
 ) -> DataFrame:
     """Keep each document's surviving lines (in original order) and
     the documents that retain at least ``min_lines_kept`` of them.
 
-    Adds ``out_col`` (survivors re-joined with ``line_sep``),
+    Adds ``text_clean`` (survivors re-joined with ``line_sep``),
     ``n_lines_kept`` and ``n_lines_dropped``; all other columns pass
     through.  ``line_sep`` is a LITERAL separator (it is regex-escaped
     before the split), so callers can split on multi-char separators
@@ -66,7 +65,7 @@ def clean_lines(
     out = (
         df.withColumn("_lines", lines)
         .withColumn("_kept", kept)
-        .withColumn(out_col, F.array_join(F.col("_kept"), line_sep))
+        .withColumn("text_clean", F.array_join(F.col("_kept"), line_sep))
         .withColumn("n_lines_kept", F.size(F.col("_kept")))
         .withColumn(
             "n_lines_dropped",

@@ -17,6 +17,13 @@ from .text import bpe_ish_tokens, word_tokens
 # Small fixed stopword list shared verbatim with the SQL oracle.
 STOPWORDS = ["the", "a", "an", "of", "and", "to", "in", "is", "it", "for"]
 
+# Fixed shapes shared by the Spark operators below, their DuckDB twins
+# and the catalog oracles
+TFIDF_TOP_K = 5
+REPETITION_N = 2
+FINGERPRINT_K = 5
+FINGERPRINT_MOD = 8
+
 # Marker words per language for the n-gram/stopword language heuristic.
 # Deterministic and oracle-expressible; a real system would use a
 # trained model (fastText) — this is the heuristic tier.
@@ -231,10 +238,9 @@ def tfidf_top_terms(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    k: int = 5,
     stopwords: list[str] | None = None,
 ) -> DataFrame:
-    """Top-k characteristic terms per document by TF-IDF.
+    """Top-``TFIDF_TOP_K`` characteristic terms per document by TF-IDF.
 
     idf is the LOG-FREE rational form ``(N + 1) / (df + 1)`` — same
     ranking monotonicity in 1/df, but built only from IEEE add/div/mul,
@@ -275,12 +281,12 @@ def tfidf_top_terms(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_TOP_K)
         .select(id_col, "term", "tf", "df", "tfidf", "rank")
     )
 
 
-def tfidf_top_terms_sql(k: int = 5, stopwords: list[str] | None = None) -> str:
+def tfidf_top_terms_sql(stopwords: list[str] | None = None) -> str:
     """DuckDB twin of ``tfidf_top_terms`` (same tokenization, same
     rational idf, same tie-break)."""
     sw = stopwords if stopwords is not None else STOPWORDS
@@ -303,12 +309,12 @@ scored AS (
 SELECT doc_id, term, tf, df, tfidf, CAST(rank AS INT) AS rank
 FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
         ORDER BY tfidf DESC, term) AS rank FROM scored)
-WHERE rank <= {k}
+WHERE rank <= {TFIDF_TOP_K}
 """
 
 
 def repetition_stats(
-    df: DataFrame, text_col: str, id_col: str, n: int = 2
+    df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
     """Repetition-based quality metrics: fraction of word n-grams that
     are the single most frequent one (``top_gram_frac``) and fraction
@@ -320,7 +326,7 @@ def repetition_stats(
     in-row (``transform`` over shifted ``slice``), then exactly one
     corpus shuffle on ``(doc, gram)`` and a map-side-combinable second
     aggregate on ``doc``.  Fractions are long/long IEEE divisions —
-    bit-identical to the SQL oracle.  Documents with fewer than ``n``
+    bit-identical to the SQL oracle.  Documents with fewer than ``REPETITION_N``
     tokens yield no n-grams and are absent (parity with the oracle).
     """
     from ..operators.scale import ensure_parallelism
@@ -333,10 +339,10 @@ def repetition_stats(
     )
     size = F.size("_t")
     grams = F.when(
-        size >= n,
+        size >= REPETITION_N,
         F.transform(
-            F.sequence(F.lit(1), size - n + 1),
-            lambda i: F.concat_ws(" ", F.slice(F.col("_t"), i, n)),
+            F.sequence(F.lit(1), size - REPETITION_N + 1),
+            lambda i: F.concat_ws(" ", F.slice(F.col("_t"), i, REPETITION_N)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     per_gram = (
@@ -364,7 +370,7 @@ def repetition_stats(
     )
 
 
-def repetition_stats_sql(n: int = 2) -> str:
+def repetition_stats_sql() -> str:
     """DuckDB twin of ``repetition_stats`` (same tokenization, same
     n-gram construction, sums cast back to BIGINT before the IEEE
     division — DuckDB ``sum(BIGINT)`` is HUGEINT)."""
@@ -375,8 +381,8 @@ WITH toks AS (
   FROM documents
 ),
 grams AS (
-  SELECT doc_id, unnest(list_transform(range(1, len(t) - {n} + 2),
-         i -> array_to_string(list_slice(t, i, i + {n} - 1), ' '))) AS g
+  SELECT doc_id, unnest(list_transform(range(1, len(t) - {REPETITION_N} + 2),
+         i -> array_to_string(list_slice(t, i, i + {REPETITION_N} - 1), ' '))) AS g
   FROM toks
 ),
 cnt AS (SELECT doc_id, g, count(*) AS c FROM grams GROUP BY 1, 2)
@@ -442,13 +448,11 @@ def rolling_fingerprints(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    k: int = 5,
-    keep_mod: int = 8,
 ) -> DataFrame:
-    """Document fingerprinting: hash every k-token shingle, keep the
-    0-mod-``keep_mod`` subset (mod-sampling — NOT winnowing: a shared
-    span with m k-grams is missed with probability ≈
-    (1 − 1/keep_mod)^m; ``winnowed_fingerprint_set`` is the
+    """Document fingerprinting: hash every ``FINGERPRINT_K``-token
+    shingle, keep the 0-mod-``FINGERPRINT_MOD`` subset (mod-sampling —
+    NOT winnowing: a shared span with m k-grams is missed with
+    probability ≈ (1 − 1/FINGERPRINT_MOD)^m; ``winnowed_fingerprint_set`` is the
     guaranteed variant).
 
     The kept hash set is a compact, alignment-free signature for
@@ -460,8 +464,8 @@ def rolling_fingerprints(
     from ..operators.dedup import _bound_token_hashes
 
     bound = _bound_token_hashes(df, text_col, id_col)
-    grams = hashing.shingle_hash_array(F.col("_th"), k)
-    kept = F.array_distinct(F.filter(grams, lambda h: h % keep_mod == 0))
+    grams = hashing.shingle_hash_array(F.col("_th"), FINGERPRINT_K)
+    kept = F.array_distinct(F.filter(grams, lambda h: h % FINGERPRINT_MOD == 0))
     # Generate barrier: compute the hash/filter/distinct chain once per
     # row (explode of a 1-element array), not once per consumer.
     materialized = bound.select(F.col(id_col), F.explode(F.array(kept)).alias("_kept"))
@@ -724,7 +728,6 @@ def encoding_anomaly_scores(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    threshold: float = 0.001,
 ) -> DataFrame:
     """(id, n_chars, replacement_chars, control_chars, mojibake_pairs,
     anomaly_rate, is_suspect) per document — the crawl-hygiene gate
@@ -738,8 +741,7 @@ def encoding_anomaly_scores(
     ``anomaly_rate`` = (replacement + control + mojibake) / chars,
     NULL for empty text (``try_divide`` — no evidence);
     ``is_suspect`` flags ANY replacement char (unconditional: U+FFFD
-    is never legitimate content) or a rounded rate above
-    ``threshold``.  Counts are exact integers from three
+    is never legitimate content) or a rounded rate above 0.001.  Counts are exact integers from three
     ``regexp_count`` scans; the rate is the single IEEE division,
     rounded before the threshold compare so the oracle decides
     identically.  Everything is in-row — no shuffle, no state,
@@ -762,7 +764,7 @@ def encoding_anomaly_scores(
         "is_suspect",
         (
             (F.col("replacement_chars") > 0)
-            | (F.col("anomaly_rate") > F.lit(threshold))
+            | (F.col("anomaly_rate") > F.lit(0.001))
         )
         .cast("long"),
     )
@@ -772,11 +774,9 @@ def source_quality_profile(
     df: DataFrame,
     text_col: str,
     source_col: str,
-    metric: str = "stopword_ratio",
-    k: float = 3.0,
 ) -> DataFrame:
-    """(source, n_docs, median_<metric>, mad_<metric>, n_outliers) per
-    source — the per-domain quality-drift detector: a crawl source
+    """(source, n_docs, median_stopword_ratio, mad_stopword_ratio,
+    n_outliers) per source — the per-domain quality-drift detector: a crawl source
     whose quality distribution shifts (template change, parser
     breakage, spam influx) moves its median or grows its outlier count
     long before corpus-wide aggregates notice.
@@ -785,10 +785,12 @@ def source_quality_profile(
     ``embedding_norm_outliers``: grouped median and MAD are
     order-independent (exact sorted-rank interpolation in both
     engines), so the DuckDB twin hashes exactly, and they tolerate the
-    outliers being counted.  Documents whose metric is NULL (token-less
-    under ``try_divide``) carry no evidence and are excluded.
+    outliers being counted; an outlier deviates from its source median
+    by more than 3 MADs.  Documents whose stopword ratio is NULL
+    (token-less under ``try_divide``) carry no evidence and are
+    excluded.
 
-    Shape: ONE corpus scan computes (source, metric) in-row and is
+    Shape: ONE corpus scan computes (source, ratio) in-row and is
     localCheckpoint'ed at its fan-out (three consumers: per-source
     median, deviation join, per-source MAD — ADVICE 18); everything
     after is arithmetic over per-source tables (≤ #sources rows,
@@ -800,12 +802,9 @@ def source_quality_profile(
     executor-memory cliff, not a slow plan (the q92 ``quantile_bins``
     hazard class).
     """
-    q = quality_columns(text_col)
-    if metric not in q:
-        raise ValueError(f"unknown quality metric {metric!r}")
-
     vals = df.select(
-        F.col(source_col).alias("source"), q[metric].alias("_v")
+        F.col(source_col).alias("source"),
+        quality_columns(text_col)["stopword_ratio"].alias("_v"),
     ).filter(F.col("_v").isNotNull()).localCheckpoint(eager=True)
     med = vals.groupBy("source").agg(
         F.percentile(F.col("_v"), F.lit(0.5)).alias("_med"),
@@ -825,10 +824,10 @@ def source_quality_profile(
         .groupBy("source")
         .agg(
             F.first("n_docs").cast("long").alias("n_docs"),
-            F.round(F.first("_med"), 6).alias(f"median_{metric}"),
-            F.round(F.first("_mad"), 6).alias(f"mad_{metric}"),
+            F.round(F.first("_med"), 6).alias("median_stopword_ratio"),
+            F.round(F.first("_mad"), 6).alias("mad_stopword_ratio"),
             F.sum(
-                F.when(F.col("_dev") > F.lit(k) * F.col("_mad"), 1).otherwise(0)
+                F.when(F.col("_dev") > F.lit(3.0) * F.col("_mad"), 1).otherwise(0)
             )
             .cast("long")
             .alias("n_outliers"),

@@ -181,7 +181,6 @@ def filter_blocked_domain_suffixes(
     text_col: str,
     id_col: str,
     blocklist: DataFrame,
-    blocklist_col: str = "domain",
 ) -> DataFrame:
     """Documents whose extracted URLs match NO blocklist entry under
     SUFFIX semantics: an entry ``example.org`` blocks ``example.org``
@@ -196,7 +195,7 @@ def filter_blocked_domain_suffixes(
     crawl), with AQE converting it to broadcast at runtime whenever
     the violator set turns out small.
 
-    ``blocklist`` is a DataFrame (``blocklist_col`` = bare domain) so
+    ``blocklist`` is a DataFrame (``domain`` = bare domain) so
     real multi-million-entry lists work: Spark broadcasts it (or, past
     broadcast size, AQE falls back to a shuffle join on the exploded
     suffix — still an equi-join).  For a handful of literal domains,
@@ -218,7 +217,7 @@ def filter_blocked_domain_suffixes(
     blocked_ids = (
         suffixes.join(
             F.broadcast(
-                blocklist.select(F.col(blocklist_col).alias("_suffix"))
+                blocklist.select(F.col("domain").alias("_suffix"))
             ),
             "_suffix",
             "inner",

@@ -94,8 +94,6 @@ def word_frequencies(
     text_col: str,
     stopwords: list[str] | None = None,
     group_by: list[str] | None = None,
-    word_col: str = "word",
-    count_col: str = "num_occurences",
 ) -> DataFrame:
     """Whitespace-tokenized word counts with stopword removal.
 
@@ -106,18 +104,19 @@ def word_frequencies(
     keys = group_by or []
     words = df.select(
         *keys,
-        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias(word_col),
-    ).filter(F.col(word_col) != "")
+        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word"),
+    ).filter(F.col("word") != "")
     if stopwords:
-        words = words.filter(~F.col(word_col).isin(stopwords))
-    return words.groupBy(*keys, word_col).agg(F.count(F.lit(1)).alias(count_col))
+        words = words.filter(~F.col("word").isin(stopwords))
+    return words.groupBy(*keys, "word").agg(
+        F.count(F.lit(1)).alias("num_occurences")
+    )
 
 
 def ratio_of_avgs(
     df: DataFrame,
     group_by: list[str],
     cols: list[str],
-    round_to: int = 4,
 ) -> DataFrame:
     """Per-group AVG of each column, normalized to proportions that sum
     to 1 across ``cols`` (the dashboard's sentiment-proportion query,
@@ -130,34 +129,30 @@ def ratio_of_avgs(
     out = avgs.select(
         *group_by,
         *[
-            F.round(F.col(f"_avg_{c}") / total, round_to).alias(f"{c}_share")
+            F.round(F.col(f"_avg_{c}") / total, 4).alias(f"{c}_share")
             for c in cols
         ],
     )
     return out
 
 
-def mixture_weights(df: DataFrame, group_col: str, alpha: float = 0.5) -> DataFrame:
+def mixture_weights(df: DataFrame, group_col: str) -> DataFrame:
     """Temperature-scaled mixture weights per corpus source (the
     pretraining data-mixing step: upsample rare domains, damp dominant
-    ones).  ``share = n_s / N`` and ``weight = share ** alpha``.
+    ones).  ``share = n_s / N`` and ``weight = share ** 0.5``.
 
     One corpus-sized hash aggregate (map-side combinable count); the
     unpartitioned window runs over the AGGREGATED frame, whose
     cardinality is the number of distinct sources — small by
-    definition, never corpus-sized.  The default ``alpha = 0.5`` uses
-    ``sqrt`` (correctly-rounded IEEE, bit-identical across runtimes —
-    ``pow`` is not), keeping the oracle hash-exact; other alphas take
-    the ``pow`` path and are for rows-only use.
+    definition, never corpus-sized.  The weight is ``sqrt``
+    (correctly-rounded IEEE, bit-identical across runtimes — ``pow``
+    is not), keeping the oracle hash-exact.
     """
     from pyspark.sql import Window
 
     counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("n_docs"))
     total = F.sum("n_docs").over(Window.partitionBy())
     share = (F.col("n_docs") / total).alias("share")
-    weight = (
-        F.sqrt(F.col("share")) if alpha == 0.5 else F.pow(F.col("share"), alpha)
-    )
     return counts.select(group_col, "n_docs", share).withColumn(
-        "weight", weight
+        "weight", F.sqrt(F.col("share"))
     )

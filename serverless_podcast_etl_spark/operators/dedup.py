@@ -34,6 +34,15 @@ from pyspark.sql import functions as F
 from ..functions import hashing
 from .scale import ensure_parallelism
 
+# MinHash-LSH shape: word 3-gram shingles, 8 hash functions, 4 bands of
+# 2 rows.  The catalog's DuckDB twins read the same names.
+MINHASH_N = 3
+MINHASH_NUM_HASHES = 8
+MINHASH_BANDS = 4
+SIMHASH_BITS = 32
+# decontamination n-gram width (cross_corpus_overlap and its Bloom form)
+OVERLAP_N = 8
+
 
 def exact_dedup(
     df: DataFrame,
@@ -197,7 +206,6 @@ def shingles(
     text_col: str,
     id_col: str,
     n: int = 3,
-    shingle_col: str = "shingle",
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct word n-gram shingle HASHES per document (array<long>
@@ -231,7 +239,7 @@ def shingles(
     grams = F.expr(hashing.shingle_hash_array_spark_sql("_th", n))
     return hashed.select(
         F.col(id_col),
-        F.explode(F.array_distinct(grams)).alias(shingle_col),
+        F.explode(F.array_distinct(grams)).alias("shingle"),
     )
 
 
@@ -422,10 +430,9 @@ def minhash_signatures(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
 ) -> DataFrame:
-    """MinHash signature per document: num_hashes columns ``mh_i``.
+    """MinHash signature per document: ``MINHASH_NUM_HASHES`` columns
+    ``mh_i`` over word ``MINHASH_N``-gram shingles.
 
     Each hash i is min over shingles of (a_i·h32(shingle)+b_i) mod p
     with the portable md5-derived base hash — bit-identical to the SQL
@@ -436,7 +443,7 @@ def minhash_signatures(
     once per shingle via the ``_once`` barrier; the per-function mins
     are cheap arithmetic re-scans of that array.
 
-    Documents with fewer than ``n`` tokens have NO shingles and emit
+    Documents with fewer than ``MINHASH_N`` tokens have NO shingles and emit
     NO row — they are outside shingle-dedup's domain (use
     ``exact_dedup`` for empty/near-empty docs).  Before the r8 fix
     (found by the signature-portability fuzz test) they emitted
@@ -446,9 +453,9 @@ def minhash_signatures(
     candidate bucket of every short doc in the corpus.
     """
     return _signatures_from_arrays(
-        _shingle_arrays(df, text_col, id_col, n, materialize=False),
+        _shingle_arrays(df, text_col, id_col, MINHASH_N, materialize=False),
         id_col,
-        num_hashes,
+        MINHASH_NUM_HASHES,
     )
 
 
@@ -515,13 +522,17 @@ def minhash_bands(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
+    n: int = MINHASH_N,
+    num_hashes: int = MINHASH_NUM_HASHES,
+    bands: int = MINHASH_BANDS,
 ) -> DataFrame:
     """(id, band, bucket): the LSH band table — each document's
     signature split into ``bands`` concatenated-bucket keys."""
-    sig = minhash_signatures(df, text_col, id_col, n=n, num_hashes=num_hashes)
+    sig = _signatures_from_arrays(
+        _shingle_arrays(df, text_col, id_col, n, materialize=False),
+        id_col,
+        num_hashes,
+    )
     return _bands_from_signatures(sig, id_col, num_hashes, bands)
 
 
@@ -554,9 +565,9 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
+    n: int = MINHASH_N,
+    num_hashes: int = MINHASH_NUM_HASHES,
+    bands: int = MINHASH_BANDS,
     verify_threshold: float = 0.2,
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
@@ -642,9 +653,7 @@ def incremental_neardup_admission(
     corpus_df: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
+    n: int = MINHASH_N,
     verify_threshold: float = 0.2,
 ) -> DataFrame:
     """Admission gate for incremental ingestion: for each NEW document,
@@ -670,8 +679,8 @@ def incremental_neardup_admission(
         """(bands, shingles, sizes) of one side, keyed on ``key``."""
         harr = _shingle_arrays(frame, text_col, id_col, n)
         banded = _bands_from_signatures(
-            _signatures_from_arrays(harr, id_col, num_hashes),
-            id_col, num_hashes, bands,
+            _signatures_from_arrays(harr, id_col, MINHASH_NUM_HASHES),
+            id_col, MINHASH_NUM_HASHES, MINHASH_BANDS,
         )
         sh = harr.select(
             F.col(id_col).alias(key),
@@ -731,10 +740,9 @@ def cross_corpus_overlap(
     benchmark: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 8,
 ) -> DataFrame:
     """Decontamination report: corpus documents sharing at least one
-    word n-gram with a benchmark/eval set (train-test leakage check —
+    word ``OVERLAP_N``-gram with a benchmark/eval set (train-test leakage check —
     the gate every pretraining pipeline runs before shipping a corpus).
 
     Returns (id, n_shared_grams, n_eval_docs) for CONTAMINATED corpus
@@ -744,8 +752,8 @@ def cross_corpus_overlap(
     data volume, and shingle strings never materialize (hash-folded,
     functions/hashing.py).
     """
-    c_sh = shingles(corpus, text_col, id_col, n=n)
-    b_sh = shingles(benchmark, text_col, id_col, n=n).select(
+    c_sh = shingles(corpus, text_col, id_col, n=OVERLAP_N)
+    b_sh = shingles(benchmark, text_col, id_col, n=OVERLAP_N).select(
         F.col(id_col).alias("_eval_id"), "shingle"
     )
     return (
@@ -804,9 +812,7 @@ def bloom_cross_corpus_overlap(
     benchmark: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 8,
     bits_per_key: int = 16,
-    seed: int = 7,
 ) -> DataFrame:
     """``cross_corpus_overlap`` for eval sets TOO LARGE to broadcast
     as a join hash table — same output contract, exact results.
@@ -826,8 +832,8 @@ def bloom_cross_corpus_overlap(
     """
     import numpy as np
 
-    c_sh = shingles(corpus, text_col, id_col, n=n)
-    b_sh = shingles(benchmark, text_col, id_col, n=n).select(
+    c_sh = shingles(corpus, text_col, id_col, n=OVERLAP_N)
+    b_sh = shingles(benchmark, text_col, id_col, n=OVERLAP_N).select(
         F.col(id_col).alias("_eval_id"), "shingle"
     )
     uniq = (
@@ -837,7 +843,7 @@ def bloom_cross_corpus_overlap(
         .to_numpy(dtype=np.int64)
         .view(np.uint64)
     )
-    words, shift, consts = _build_bloom(uniq, bits_per_key, seed)
+    words, shift, consts = _build_bloom(uniq, bits_per_key, seed=7)
     bc = corpus.sparkSession.sparkContext.broadcast((words, shift, consts))
 
     @F.pandas_udf("boolean")
@@ -1014,11 +1020,7 @@ def _cc_driver_union_find(
 
 def connected_components(
     pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     max_iter: int = 50,
-    out_id: str = "id",
-    out_comp: str = "component",
     checkpoint_dir: str | None = None,
     small_graph_max: int = 500_000,
 ) -> DataFrame:
@@ -1072,7 +1074,7 @@ def connected_components(
     # MinHash-LSH candidate generation) — both the small-graph fast
     # path (count + collect) and the iterative loop read these rows
     sym = _materialize(
-        pairs.select(F.col(id_a).alias("_a"), F.col(id_b).alias("_b")), ckpt
+        pairs.select(F.col("id_a").alias("_a"), F.col("id_b").alias("_b")), ckpt
     )
     # One contract for both backends (r4 ADVICE): a null id is
     # malformed input — the equi-joins of the distributed loop would
@@ -1092,13 +1094,13 @@ def connected_components(
     if stats["_nulls"]:
         raise ValueError(
             f"connected_components: {stats['_nulls']} null id(s) in the "
-            f"pair list ({id_a}/{id_b}) — a null edge endpoint cannot "
+            f"pair list (id_a/id_b) — a null edge endpoint cannot "
             f"be labeled; filter or fix upstream candidate generation"
         )
     # pair bound ⇒ node bound: nodes ≤ 2×pairs, so 500k pairs caps the
     # union-find parent map at ≤1M entries (tens of MB driver-side)
     if small_graph_max and stats["_n"] <= small_graph_max:
-        return _cc_driver_union_find(sym, "_a", "_b", out_id, out_comp)
+        return _cc_driver_union_find(sym, "_a", "_b", "id", "component")
     edges = _materialize(
         sym.union(sym.select(F.col("_b").alias("_a"), F.col("_a").alias("_b")))
         .distinct(),
@@ -1129,7 +1131,7 @@ def connected_components(
             f"~log2(longest chain) rounds)"
         )
     return labels.select(
-        F.col("_id").alias(out_id), F.col("_comp").alias(out_comp)
+        F.col("_id").alias("id"), F.col("_comp").alias("component")
     )
 
 
@@ -1137,15 +1139,13 @@ def neardup_dedup_keep_first(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """Cluster-aware near-dup removal: resolve ``pairs`` into connected
     components and keep only each component's minimum-id representative
     (docs in no pair survive untouched).  One anti-join against the
     (tiny) non-representative set — the corpus itself is scanned once.
     """
-    comp = connected_components(pairs, id_a=id_a, id_b=id_b)
+    comp = connected_components(pairs)
     non_reps = comp.filter(F.col("component") != F.col("id")).select(
         F.col("id").alias(id_col)
     )
@@ -1156,7 +1156,6 @@ def simhash_fingerprints(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    bits: int = 32,
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
     """32-bit SimHash per document from whitespace tokens.
@@ -1164,7 +1163,7 @@ def simhash_fingerprints(
     Bit j of the fingerprint = sign of Σ_tokens (±1 by token-hash bit j)
     — tokens vote per bit position, near-identical documents land at
     small Hamming distance.  Computed inside the row: one md5+conv per
-    token (materialized once via the ``_once`` barrier), then ``bits``
+    token (materialized once via the ``_once`` barrier), then 32
     integer bit-test counts over the long array — ZERO shuffles at any
     corpus size, and no per-bit string ops in the codegen'd tree.
 
@@ -1214,7 +1213,7 @@ def simhash_fingerprints(
 
     terms = " + ".join(
         f"(CASE WHEN {vote_sql(j)} > 0 THEN {2 ** j} ELSE 0 END)"
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     )
     fingerprint_sql = f"CAST(0 + {terms} AS BIGINT)"
     return hashed.select(
@@ -1293,8 +1292,6 @@ def simhash_neardup_pairs(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    bits: int = 32,
-    band_bits: int = 8,
     max_hamming: int = 3,
     hashes48: DataFrame | None = None,
 ) -> DataFrame:
@@ -1303,14 +1300,14 @@ def simhash_neardup_pairs(
     contract).  ``hashes48`` shares the tokenize→md5 scan with other
     detectors (see ``shared_token_hash48``)."""
     fp = simhash_fingerprints(
-        df, text_col, id_col, bits=bits, hashes48=hashes48
+        df, text_col, id_col, hashes48=hashes48
     )
     return hamming_banded_pairs(
         fp,
         id_col,
         "simhash",
-        bits=bits,
-        band_bits=band_bits,
+        bits=SIMHASH_BITS,
+        band_bits=8,
         max_hamming=max_hamming,
     )
 
@@ -1628,8 +1625,6 @@ def strip_contamination(
 def pair_overlap_stats(
     approx_pairs: DataFrame,
     exact_pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """Pair-level recall/precision of an approximate near-dup method
     against an exact ground-truth pair set — the go/no-go gate for
@@ -1646,8 +1641,8 @@ def pair_overlap_stats(
     def norm(df: DataFrame, flag: str) -> DataFrame:
         return (
             df.select(
-                F.least(F.col(id_a), F.col(id_b)).alias("_lo"),
-                F.greatest(F.col(id_a), F.col(id_b)).alias("_hi"),
+                F.least(F.col("id_a"), F.col("id_b")).alias("_lo"),
+                F.greatest(F.col("id_a"), F.col("id_b")).alias("_hi"),
             )
             .distinct()
             .withColumn(flag, F.lit(1))
@@ -1681,9 +1676,6 @@ def cross_source_neardup_matrix(
     docs: DataFrame,
     id_col: str,
     source_col: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    score_col: str | None = "jaccard",
 ) -> DataFrame:
     """Cross-source duplication matrix: for a verified near-dup pair
     list (e.g. ``minhash_lsh_pairs``), count pairs per unordered
@@ -1692,9 +1684,9 @@ def cross_source_neardup_matrix(
     overlap/leakage between crawls.
 
     Output: one row per unordered ``(source_a, source_b)`` with
-    ``source_a <= source_b``, the pair count, and (when ``score_col``
-    is set) the maximum verified similarity — max, not mean, because
-    it is order-independent and exact under value-hash comparison.
+    ``source_a <= source_b``, the pair count, and the maximum verified
+    ``jaccard`` — max, not mean, because it is order-independent and
+    exact under value-hash comparison.
 
     Scale shape: the pair list is orders of magnitude smaller than
     the corpus (LSH-bounded), so it is BROADCAST into the corpus'
@@ -1706,7 +1698,7 @@ def cross_source_neardup_matrix(
     )
     annotated = (
         srcs.join(
-            F.broadcast(pairs), srcs["_cid"] == pairs[id_a], "inner"
+            F.broadcast(pairs), srcs["_cid"] == pairs["id_a"], "inner"
         )
         .drop("_cid")
         .withColumnRenamed("_csrc", "_src_a")
@@ -1714,23 +1706,23 @@ def cross_source_neardup_matrix(
     annotated = (
         srcs.join(
             F.broadcast(annotated),
-            srcs["_cid"] == annotated[id_b],
+            srcs["_cid"] == annotated["id_b"],
             "inner",
         )
         .drop("_cid")
         .withColumnRenamed("_csrc", "_src_b")
     )
-    aggs = [F.count(F.lit(1)).alias("n_pairs")]
-    if score_col is not None:
-        aggs.append(F.max(score_col).alias("max_" + score_col))
     return (
         annotated.select(
             F.least("_src_a", "_src_b").alias("source_a"),
             F.greatest("_src_a", "_src_b").alias("source_b"),
-            *([score_col] if score_col is not None else []),
+            "jaccard",
         )
         .groupBy("source_a", "source_b")
-        .agg(*aggs)
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.max("jaccard").alias("max_jaccard"),
+        )
     )
 
 
@@ -1790,7 +1782,6 @@ def snapshot_diff(
     new: DataFrame,
     id_col: str,
     text_col: str,
-    digest_col: str = "digest",
 ) -> DataFrame:
     """Incremental-crawl delta between two corpus snapshots: per
     document id, ``added`` (id only in new), ``removed`` (only in
@@ -1835,15 +1826,13 @@ def snapshot_diff(
         .select(
             id_col,
             "status",
-            F.col("_d_new").alias(digest_col),
+            F.col("_d_new").alias("digest"),
         )
     )
 
 
 def neardup_ensemble(
     pair_sources: dict[str, DataFrame],
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     **cc_kwargs,
 ) -> DataFrame:
     """One adjudicated near-dup decision from MANY candidate methods —
@@ -1893,8 +1882,8 @@ def neardup_ensemble(
             )
     tagged = []
     for method, pairs in sorted(pair_sources.items()):
-        lo, hi = F.least(F.col(id_a), F.col(id_b)), F.greatest(
-            F.col(id_a), F.col(id_b)
+        lo, hi = F.least(F.col("id_a"), F.col("id_b")), F.greatest(
+            F.col("id_a"), F.col("id_b")
         )
         tagged.append(
             pairs.select(
@@ -1928,8 +1917,6 @@ def ensemble_dedup_keep_first(
     df: DataFrame,
     pair_sources: dict[str, DataFrame],
     id_col: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
 ) -> DataFrame:
     """The APPLIED form of ``neardup_ensemble``: remove from ``df``
     every document that is a non-representative member of an ensemble
@@ -1959,8 +1946,8 @@ def ensemble_dedup_keep_first(
         )
     frames = [
         p.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("id_a"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("id_b"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("id_a"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("id_b"),
         )
         for p in pair_sources.values()
     ]
@@ -1987,10 +1974,6 @@ def incremental_refresh(
     new: DataFrame,
     text_col: str,
     id_col: str,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    verify_threshold: float = 0.3,
 ) -> DataFrame:
     """Continuous-crawl corpus refresh — ``snapshot_diff`` composed
     with ``incremental_neardup_admission``, the end-to-end shape of a
@@ -2024,10 +2007,7 @@ def incremental_refresh(
         retained,
         text_col=text_col,
         id_col=id_col,
-        n=n,
-        num_hashes=num_hashes,
-        bands=bands,
-        verify_threshold=verify_threshold,
+        verify_threshold=0.3,
     )
     return adm.join(ingest_ids, id_col).select(
         id_col, "status", "n_matches", "admitted"

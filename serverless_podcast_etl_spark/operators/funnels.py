@@ -199,23 +199,22 @@ def retention_cohorts(
     events: DataFrame,
     user_col: str,
     ts_col: str,
-    epoch: str = "2024-01-01",
 ) -> DataFrame:
     """Weekly retention matrix: users bucket into the week (since
-    ``epoch``) of their FIRST event — the cohort — and each row counts
+    2024-01-01) of their FIRST event — the cohort — and each row counts
     how many of them were active ``week_offset`` weeks later.
     ``week_offset = 0`` is the cohort's own size; dashboards plot each
     cohort's row as its survival curve.
 
-    Week indexes are ``floor(datediff(day) / 7)`` against the fixed
-    ``epoch`` — pure integer day arithmetic, bit-identical across
+    Week indexes are ``floor(datediff(day) / 7)`` against that fixed
+    epoch — pure integer day arithmetic, bit-identical across
     engines, immune to locale week-start and ISO-week edge cases.
 
     Scale: first-event aggregate (one shuffle on the user), broadcast-
     friendly join back, then a count-distinct per (cohort, offset) —
     cardinality bounded by users, output by weeks².
     """
-    ep = F.lit(epoch).cast("date")
+    ep = F.lit("2024-01-01").cast("date")
 
     def week_idx(c: Column) -> Column:
         return F.floor(F.datediff(c.cast("date"), ep) / 7).cast("int")

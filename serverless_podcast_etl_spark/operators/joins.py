@@ -26,7 +26,6 @@ def dim_lookup_join(
     fact: DataFrame,
     dim: DataFrame,
     on: str | list[str],
-    how: str = "inner",
 ) -> DataFrame:
     """Broadcast hash join of a fact table against a small dimension.
 
@@ -35,7 +34,7 @@ def dim_lookup_join(
     equivalent is an explicit broadcast hint so the join never shuffles
     the fact side.
     """
-    return fact.join(F.broadcast(dim), on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how="inner")
 
 
 def zip_join(
@@ -44,7 +43,6 @@ def zip_join(
     left_order: list[str],
     right_order: list[str],
     partition_by: list[str] | None = None,
-    pos_col: str = "pos",
 ) -> DataFrame:
     """Positional (zip) join: row i of left ↔ row i of right.
 
@@ -61,11 +59,11 @@ def zip_join(
 
     def with_pos(df: DataFrame, order: list[str]) -> DataFrame:
         w = Window.partitionBy(*pkeys).orderBy(*order) if pkeys else Window.orderBy(*order)
-        return df.withColumn(pos_col, F.row_number().over(w) - F.lit(1))
+        return df.withColumn("pos", F.row_number().over(w) - F.lit(1))
 
     lhs = with_pos(left, left_order)
     rhs = with_pos(right, right_order)
-    return lhs.join(rhs, on=pkeys + [pos_col], how="inner")
+    return lhs.join(rhs, on=pkeys + ["pos"], how="inner")
 
 
 def asof_join(

@@ -38,8 +38,6 @@ def chunk_binary(
     df: DataFrame,
     binary_col: str,
     chunk_bytes: int = 10_000_000,
-    chunk_col: str = "chunk",
-    num_col: str = "chunk_num",
 ) -> DataFrame:
     """Split a binary column into fixed-size chunks, one row per chunk.
 
@@ -60,9 +58,9 @@ def chunk_binary(
         ),
     ).otherwise(F.array().cast("array<binary>"))
     exploded = df.select(
-        "*", F.posexplode(pieces).alias("_pos", chunk_col)
+        "*", F.posexplode(pieces).alias("_pos", "chunk")
     )
-    return exploded.withColumn(num_col, F.col("_pos") + 1).drop("_pos", binary_col)
+    return exploded.withColumn("chunk_num", F.col("_pos") + 1).drop("_pos", binary_col)
 
 
 # ---------------------------------------------------------------------------
@@ -302,8 +300,6 @@ def image_neardup_pairs(
     df: DataFrame,
     id_col: str,
     binary_col: str,
-    band_bits: int = 16,
-    max_hamming: int = 3,
     grid: Callable[[bytes], list[list[int]]] | None = None,
 ) -> DataFrame:
     """Near-duplicate image pairs: dHash fingerprints + Hamming-banded
@@ -322,6 +318,6 @@ def image_neardup_pairs(
         "asset_id",
         "dhash",
         bits=64,
-        band_bits=band_bits,
-        max_hamming=max_hamming,
+        band_bits=16,
+        max_hamming=3,
     )

@@ -55,10 +55,10 @@ def pack_sequences(
     )
 
 
-def pack_sequences_sql(budget: int = 256) -> str:
+def pack_sequences_sql() -> str:
     """DuckDB twin of ``pack_sequences`` over the documents table
     (same tokenization, same integer DIV/% arithmetic)."""
-    return f"""
+    return """
 WITH t AS (
   SELECT doc_id, source,
          CAST(len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
@@ -72,7 +72,7 @@ c AS (
 )
 SELECT doc_id, source, n_tokens,
        CAST(cum - n_tokens AS BIGINT) AS start_token,
-       CAST((cum - n_tokens) // {budget} AS BIGINT) AS seq_id,
-       CAST((cum - n_tokens) % {budget} AS BIGINT) AS seq_offset
+       CAST((cum - n_tokens) // 256 AS BIGINT) AS seq_id,
+       CAST((cum - n_tokens) % 256 AS BIGINT) AS seq_offset
 FROM c
 """

@@ -39,6 +39,10 @@ from pyspark.sql import functions as F
 from ..functions.text import word_tokens
 from .scale import ensure_parallelism
 
+# Okapi BM25 term-saturation and length-normalization defaults
+BM25_K1 = 1.2
+BM25_B = 0.75
+
 
 def _idf(df_col: Column, n_docs: int, form: str) -> Column:
     """Per-term inverse document frequency.
@@ -71,10 +75,9 @@ def bm25_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    text_col: str = "text",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
     idf: str = "rational",
 ) -> DataFrame:
     """Top-``k`` corpus documents per query by BM25 over whitespace
@@ -104,10 +107,10 @@ def bm25_topk(
     contributes ≈ idf_min per doc but costs a full posting-list scan,
     exactly as in any inverted index.
     """
-    postings = build_bm25_index(corpus, corpus_id, text_col)
-    stats = _corpus_stats(corpus, corpus_id, text_col)
+    postings = build_bm25_index(corpus, corpus_id)
+    stats = _corpus_stats(corpus, corpus_id, "text")
     return _score_postings(
-        postings, queries, query_id, text_col,
+        postings, queries, query_id, "text",
         n_docs=stats["n_docs"], total_dl=stats["total_dl"],
         k=k, k1=k1, b=b, idf=idf,
     )
@@ -131,7 +134,7 @@ def _corpus_stats(
 
 
 def build_bm25_index(
-    corpus: DataFrame, corpus_id: str, text_col: str = "text"
+    corpus: DataFrame, corpus_id: str
 ) -> DataFrame:
     """The BM25 postings frame ``(neighbor_id, dl, term, tf, df)`` —
     document frequency joined onto the postings at build time (the
@@ -140,7 +143,7 @@ def build_bm25_index(
     time: probe = scan + query join + score."""
     toks = ensure_parallelism(corpus).select(
         F.col(corpus_id).alias("neighbor_id"),
-        word_tokens(F.col(text_col)).alias("_toks"),
+        word_tokens(F.col("text")).alias("_toks"),
     )
     postings = (
         toks.select(
@@ -203,7 +206,6 @@ def rrf_fuse(
     rankings: Sequence[DataFrame],
     k: int = 10,
     k_rrf: int = 60,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Reciprocal-rank fusion of N ranked lists — the standard way to
     combine a sparse (BM25) and a dense (embedding) retriever without
@@ -212,7 +214,7 @@ def rrf_fuse(
         rrf(q, d) = Σ_i 1 / (k_rrf + rank_i(q, d))
 
     with a document absent from system i contributing 0 for that term.
-    Each input must carry ``(query_id, neighbor_id, <rank_col>)`` with
+    Each input must carry ``(query_id, neighbor_id, rank)`` with
     ranks unique per (query, id) — the shape ``bm25_topk`` /
     ``similarity.brute_force_topk`` emit.  Returns
     ``(query_id, neighbor_id, rrf_score, rank)`` with the usual
@@ -238,7 +240,7 @@ def rrf_fuse(
             "query_id",
             "neighbor_id",
             F.lit(i).alias("_sys"),
-            F.col(rank_col).alias("_r"),
+            F.col("rank").alias("_r"),
         )
         for i, r in enumerate(rankings)
     ]
@@ -274,7 +276,6 @@ def write_bm25_index(
     corpus: DataFrame,
     path: str,
     corpus_id: str,
-    text_col: str = "text",
 ) -> dict:
     """Persist the BM25 inverted index — the sparse analog of
     ``similarity.write_trained_ivf_index``'s build-once/probe-forever
@@ -297,8 +298,8 @@ def write_bm25_index(
     """
     import json
 
-    stats = _corpus_stats(corpus, corpus_id, text_col)
-    index = build_bm25_index(corpus, corpus_id, text_col)
+    stats = _corpus_stats(corpus, corpus_id, "text")
+    index = build_bm25_index(corpus, corpus_id)
     (
         index.repartitionByRange(F.col("term"))
         .sortWithinPartitions("term")
@@ -351,17 +352,14 @@ def bm25_probe_topk(
     index: DataFrame,
     meta: dict,
     query_id: str,
-    text_col: str = "text",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    idf: str = "rational",
 ) -> DataFrame:
     """BM25 top-k against a persisted ``write_bm25_index`` table — the
     production form: no corpus pass at probe time; the scoring plan is
     literally ``bm25_topk``'s shared tail (``_score_postings``), so a
     round-trip through parquet changes nothing the result hash can see
-    (the q118 story, sparse edition).
+    (the q118 story, sparse edition).  Scores use the rational idf at
+    ``BM25_K1``/``BM25_B`` over the queries' ``text`` column.
 
     The distinct query terms — bounded by
     |Q| × query length, the same queries-≪-corpus contract the
@@ -381,7 +379,7 @@ def bm25_probe_topk(
         r["t"]
         for r in queries.select(
             F.explode(
-                F.array_distinct(word_tokens(F.col(text_col)))
+                F.array_distinct(word_tokens(F.col("text")))
             ).alias("t")
         )
         .distinct()
@@ -389,7 +387,7 @@ def bm25_probe_topk(
     ]
     index = index.filter(F.col("term").isin(terms) if terms else F.lit(False))
     return _score_postings(
-        index, queries, query_id, text_col,
+        index, queries, query_id, "text",
         n_docs=int(meta["n_docs"]), total_dl=int(meta["total_dl"]),
-        k=k, k1=k1, b=b, idf=idf,
+        k=k, k1=BM25_K1, b=BM25_B, idf="rational",
     )

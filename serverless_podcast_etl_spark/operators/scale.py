@@ -255,8 +255,8 @@ def _scan_splits(spark, files: list[str], at_least: int) -> int:
     )
 
 
-def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
-    """Repartition ``df`` up to ``defaultParallelism * min_factor``
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` up to ``defaultParallelism`` partitions
     when its input cannot fan the scan out that wide; pass through
     (zero cost) otherwise.  Streaming frames pass through untouched —
     micro-batch partitioning belongs to the source.
@@ -270,7 +270,7 @@ def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
     if df.isStreaming:
         return df
     spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism * min_factor
+    target = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
     if not files:
         # no file source (in-memory fixtures, checkpoint scans): fall

@@ -21,6 +21,9 @@ from ..functions import hashing, literals
 from ..functions.text import word_tokens
 from .scale import ensure_parallelism, local_frame
 
+# target-affinity features: hashed word 1- and 2-grams
+TARGET_MAX_N = 2
+
 
 def _global_prefix_sum_with_total(
     df: DataFrame,
@@ -154,7 +157,6 @@ def digest_sample(
     id_col: str,
     n: int,
     seed: str = "seed0",
-    key_col: str = "sample_key",
 ) -> DataFrame:
     """Deterministic exact-N sample: rank rows by ``md5(seed || ':' ||
     id)`` and keep the first ``n`` — the digest-over-RNG counterpart of
@@ -175,8 +177,8 @@ def digest_sample(
         )
     )
     return (
-        df.withColumn(key_col, key)
-        .orderBy(key_col)
+        df.withColumn("sample_key", key)
+        .orderBy("sample_key")
         .limit(n)
     )
 
@@ -351,9 +353,6 @@ def deterministic_shuffle(
     id_col: str,
     seed: str = "seed0",
     n_shards: int = 8,
-    out_order: str = "global_idx",
-    out_shard: str = "shard",
-    out_pos: str = "pos_in_shard",
 ) -> DataFrame:
     """Deterministic global training order + shard assignment: every
     row gets a 1-based ``global_idx`` in the total order of
@@ -385,13 +384,13 @@ def deterministic_shuffle(
         keyed,
         cost_col="_one",
         order_cols=[F.col("_sk").asc(), F.col(id_col).asc()],
-        out_col=out_order,
+        out_col="global_idx",
     )
     return ordered.select(
         F.col(id_col),
-        F.col(out_order).cast("long").alias(out_order),
-        ((F.col(out_order) - 1) % n_shards).cast("int").alias(out_shard),
-        ((F.col(out_order) - 1) / n_shards).cast("long").alias(out_pos),
+        F.col("global_idx").cast("long").alias("global_idx"),
+        ((F.col("global_idx") - 1) % n_shards).cast("int").alias("shard"),
+        ((F.col("global_idx") - 1) / n_shards).cast("long").alias("pos_in_shard"),
     )
 
 
@@ -401,7 +400,6 @@ def materialize_mixture(
     id_col: str,
     factors: dict[str, float],
     seed: str = "seed0",
-    copy_col: str = "copy_idx",
 ) -> DataFrame:
     """Materialize a source-weighted mixture: emit each document
     ``factor`` times, where ``factors`` maps a source to its sampling
@@ -461,7 +459,7 @@ def materialize_mixture(
     )
     return with_n.select(
         "*",
-        F.explode(F.sequence(F.lit(1), F.col("_n_copies"))).alias(copy_col),
+        F.explode(F.sequence(F.lit(1), F.col("_n_copies"))).alias("copy_idx"),
     ).drop("_n_copies")
 
 
@@ -508,7 +506,6 @@ def quantile_bins(
     df: DataFrame,
     score_col: str,
     probs: tuple[float, ...] = (0.25, 0.5, 0.75),
-    out_col: str = "bucket",
 ) -> DataFrame:
     """Bin rows by score quantiles: bucket 0 holds scores at or
     below the ``probs[0]`` quantile, the last bucket everything above
@@ -542,12 +539,12 @@ def quantile_bins(
     if bounds is None:
         # empty input or all-null scores: no boundaries exist — every
         # row (necessarily null-scored) gets a null bucket
-        return df.withColumn(out_col, F.lit(None).cast("int"))
+        return df.withColumn("bucket", F.lit(None).cast("int"))
     case = F.when(F.col(score_col).isNull(), F.lit(None))
     for i, b in enumerate(bounds):
         case = case.when(F.col(score_col) <= F.lit(b), F.lit(i))
     case = case.otherwise(F.lit(len(bounds)))
-    return df.withColumn(out_col, case.cast("int"))
+    return df.withColumn("bucket", case.cast("int"))
 
 
 def _token_hash_frame(
@@ -783,7 +780,6 @@ def target_affinity_scores(
     text_col: str,
     id_col: str,
     num_buckets: int = 1024,
-    max_n: int = 2,
     target_predicate: Column | None = None,
     weight_form: str = "difference",
 ) -> DataFrame:
@@ -864,10 +860,10 @@ def target_affinity_scores(
     if target is None and target_predicate is None:
         raise ValueError("pass a target frame or a target_predicate")
     grams = _materialize_grams(
-        raw, text_col, id_col, num_buckets, max_n, target_predicate
+        raw, text_col, id_col, num_buckets, TARGET_MAX_N, target_predicate
     )
     return _affinity_scores_impl(
-        raw, target, text_col, id_col, num_buckets, max_n,
+        raw, target, text_col, id_col, num_buckets, TARGET_MAX_N,
         target_predicate, weight_form, grams,
     )
 
@@ -948,10 +944,8 @@ def target_coverage_audit(
     id_col: str,
     k: int,
     num_buckets: int = 1024,
-    max_n: int = 2,
     target: DataFrame | None = None,
     target_predicate: Column | None = None,
-    seed: str = "seed0",
     selection_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Selection-quality audit for ``select_by_target_affinity``: of
@@ -997,7 +991,7 @@ def target_coverage_audit(
         raise ValueError("pass a target frame or a target_predicate")
     grams = (
         _materialize_grams(
-            raw, text_col, id_col, num_buckets, max_n, target_predicate
+            raw, text_col, id_col, num_buckets, TARGET_MAX_N, target_predicate
         )
         if selection_ids is None
         else None
@@ -1017,7 +1011,7 @@ def target_coverage_audit(
         )
         tb_src = _token_hash_frame(tgt, text_col).select(
             F.explode(
-                _gram_buckets_from_th(num_buckets, max_n)
+                _gram_buckets_from_th(num_buckets, TARGET_MAX_N)
             ).alias("b")
         )
     tb = tb_src.distinct().localCheckpoint(eager=True)
@@ -1027,16 +1021,14 @@ def target_coverage_audit(
     else:
         sel_aff = (
             _affinity_scores_impl(
-                raw, target, text_col, id_col, num_buckets, max_n,
+                raw, target, text_col, id_col, num_buckets, TARGET_MAX_N,
                 target_predicate, "difference", grams,
             )
             .orderBy(F.col("score").desc(), F.col(id_col))
             .limit(k)
             .select(id_col)
         )
-    sel_dig = digest_sample(
-        raw.select(id_col), id_col, n=k, seed=seed
-    ).select(id_col)
+    sel_dig = digest_sample(raw.select(id_col), id_col, n=k).select(id_col)
 
     def _coverage_row(sel: DataFrame, method: str) -> DataFrame:
         if grams is not None:
@@ -1048,7 +1040,7 @@ def target_coverage_audit(
                 raw.join(F.broadcast(sel), id_col, "left_semi"), text_col
             ).select(
                 F.explode(
-                    _gram_buckets_from_th(num_buckets, max_n)
+                    _gram_buckets_from_th(num_buckets, TARGET_MAX_N)
                 ).alias("b")
             )
         covered = cov_src.distinct().withColumn("_hit", F.lit(1))
@@ -1085,10 +1077,7 @@ def select_by_target_affinity(
     text_col: str,
     id_col: str,
     k: int,
-    num_buckets: int = 1024,
-    max_n: int = 2,
     target_predicate: Column | None = None,
-    weight_form: str = "difference",
 ) -> DataFrame:
     """Top-``k`` raw documents by target affinity (score DESC, then
     ``id_col`` ASC — the rounded score makes the order, and therefore
@@ -1096,10 +1085,7 @@ def select_by_target_affinity(
     compiles to TakeOrdered: per-partition top-k then a k-row merge,
     never a global sort materialization."""
     scores = target_affinity_scores(
-        raw, target, text_col, id_col,
-        num_buckets=num_buckets, max_n=max_n,
-        target_predicate=target_predicate,
-        weight_form=weight_form,
+        raw, target, text_col, id_col, target_predicate=target_predicate
     )
     return scores.orderBy(
         F.col("score").desc(), F.col(id_col)

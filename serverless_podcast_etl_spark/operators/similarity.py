@@ -25,6 +25,12 @@ from pyspark.sql import functions as F
 from ..functions import literals
 from .scale import ensure_parallelism
 
+# ANN shape shared by the IVF and int8 scorers (and the catalog's
+# DuckDB twins): top-10 neighbours, 2 probed cells, k-means seed 7
+TOP_K = 10
+NPROBE = 2
+KMEANS_SEED = 7
+
 
 def _norm(a: Column) -> Column:
     return F.sqrt(
@@ -102,7 +108,6 @@ def brute_force_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the (small) query set against the
@@ -115,15 +120,15 @@ def brute_force_topk(
     """
     # norms hoisted below the pairing join (NOTES fact 16): computed
     # once per row, carried as data — the per-pair HOF is one dot
-    q = _as_double(queries, vec_col).select(
+    q = _as_double(queries, "embedding").select(
         F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.expr(_norm_sql(f"`{vec_col}`")).alias("_qn"),
+        F.col("embedding").alias("_qv"),
+        F.expr(_norm_sql("`embedding`")).alias("_qn"),
     )
-    c = _as_double(corpus, vec_col).select(
+    c = _as_double(corpus, "embedding").select(
         F.col(corpus_id).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.expr(_norm_sql(f"`{vec_col}`")).alias("_cn"),
+        F.col("embedding").alias("_cv"),
+        F.expr(_norm_sql("`embedding`")).alias("_cn"),
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -145,7 +150,6 @@ def brute_force_topk_np(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact cosine top-k via an Arrow-batched numpy kernel — the
@@ -162,8 +166,8 @@ def brute_force_topk_np(
     import numpy as np
     import pandas as pd
 
-    q_rows = _as_double(queries, vec_col).select(
-        F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")
+    q_rows = _as_double(queries, "embedding").select(
+        F.col(query_id).alias("qid"), F.col("embedding").alias("qv")
     ).collect()
     q_ids = np.array([r["qid"] for r in q_rows])
     q_mat = np.array([r["qv"] for r in q_rows])  # (nq, dim)
@@ -196,8 +200,8 @@ def brute_force_topk_np(
                 )
             yield pd.concat(out, ignore_index=True)
 
-    c = _as_double(corpus, vec_col).select(
-        F.col(corpus_id).alias("_cid"), F.col(vec_col).alias("_cv")
+    c = _as_double(corpus, "embedding").select(
+        F.col(corpus_id).alias("_cid"), F.col("embedding").alias("_cv")
     )
     partial = c.mapInPandas(
         score, "query_id long, neighbor_id long, cosine double"
@@ -214,7 +218,6 @@ def hyperplane_bucket(
     df: DataFrame,
     vec_col: str,
     planes: list[list[float]],
-    out_col: str = "bucket",
 ) -> DataFrame:
     """Random-hyperplane LSH bucket id: bit i = sign(v · plane_i).
 
@@ -233,7 +236,7 @@ def hyperplane_bucket(
         for i, plane in enumerate(planes)
     )
     bucket_sql = f"CAST(0 + {terms} AS INT)" if terms else "CAST(0 AS INT)"
-    return df.withColumn(out_col, F.expr(bucket_sql))
+    return df.withColumn("bucket", F.expr(bucket_sql))
 
 
 def _bucket_keys(
@@ -299,7 +302,6 @@ def lsh_topk(
     query_id: str,
     corpus_id: str,
     planes: list[list[float]] | None = None,
-    vec_col: str = "embedding",
     k: int = 10,
     probe_hamming: int = 1,
     plane_tables: list[list[list[float]]] | None = None,
@@ -338,28 +340,28 @@ def lsh_topk(
     # norms hoisted BEFORE the probe explode (NOTES fact 16): one
     # norm per vector, not per (vector, table, query)
     q = _bucket_keys(
-        _as_double(queries, vec_col).withColumn(
-            "_qn", F.expr(_norm_sql(f"`{vec_col}`"))
+        _as_double(queries, "embedding").withColumn(
+            "_qn", F.expr(_norm_sql("`embedding`"))
         ),
-        vec_col,
+        "embedding",
         tables,
         probe_hamming,
     ).select(
         F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
+        F.col("embedding").alias("_qv"),
         "_qn",
         F.explode("_probes").alias("_tb"),
     )
     c = _bucket_keys(
-        _as_double(corpus, vec_col).withColumn(
-            "_cn", F.expr(_norm_sql(f"`{vec_col}`"))
+        _as_double(corpus, "embedding").withColumn(
+            "_cn", F.expr(_norm_sql("`embedding`"))
         ),
-        vec_col,
+        "embedding",
         tables,
         probe_hamming=0,
     ).select(
         F.col(corpus_id).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
+        F.col("embedding").alias("_cv"),
         "_cn",
         # one row per (vector, table): the OR-construction's storage
         # cost lives here, b rows per corpus vector
@@ -382,15 +384,12 @@ def lsh_topk(
 
 def train_ivf_centroids(
     corpus: DataFrame,
-    vec_col: str = "embedding",
     n_clusters: int = 16,
-    seed: int = 7,
     sample_fraction: float | None = None,
-    max_iter: int = 5,
 ) -> list[list[float]]:
     """Coarse quantizer for IVF: k-means over (a sample of) the corpus.
 
-    ``max_iter`` defaults to 5: measured on the synthetic corpora,
+    Five Lloyd rounds: measured on the synthetic corpora,
     downstream recall@10 is IDENTICAL at 3, 5, and 10 Lloyd rounds
     (the coarse quantizer only has to partition space consistently,
     not converge tightly), and training cost is pure per-iteration
@@ -404,17 +403,17 @@ def train_ivf_centroids(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    d = _as_double(corpus, vec_col)
+    d = _as_double(corpus, "embedding")
     if sample_fraction is not None:
-        d = d.sample(fraction=sample_fraction, seed=seed)
-    train = d.select(array_to_vector(F.col(vec_col)).alias("features"))
+        d = d.sample(fraction=sample_fraction, seed=KMEANS_SEED)
+    train = d.select(array_to_vector(F.col("embedding")).alias("features"))
     # Lloyd iterations re-reference the training frame once per round:
     # persist it for the duration of the fit so the source is scanned
-    # once, not max_iter times (at 100 TB with sample_fraction this is
+    # once, not once per round (at 100 TB with sample_fraction this is
     # the difference between one sampled scan and ten full ones).
     train.persist()
     try:
-        model = KMeans(k=n_clusters, seed=seed, maxIter=max_iter).fit(train)
+        model = KMeans(k=n_clusters, seed=KMEANS_SEED, maxIter=5).fit(train)
     finally:
         train.unpersist()
     return [[float(x) for x in c] for c in model.clusterCenters()]
@@ -464,14 +463,12 @@ def _nearest_centroids(
 def assign_ivf_cluster(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "cluster",
 ) -> DataFrame:
     """Nearest-centroid id per row (vectorized argmin — one BLAS
     matmul per Arrow batch, see ``_nearest_centroids``)."""
-    d = _as_double(df, vec_col)
-    return _nearest_centroids(d, centroids, vec_col, 1, "_nc").select(
-        "*", F.element_at("_nc", 1).alias(out_col)
+    d = _as_double(df, "embedding")
+    return _nearest_centroids(d, centroids, "embedding", 1, "_nc").select(
+        "*", F.element_at("_nc", 1).alias("cluster")
     ).drop("_nc")
 
 
@@ -481,37 +478,31 @@ def ivf_topk(
     query_id: str,
     corpus_id: str,
     centroids: list[list[float]] | None = None,
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_clusters: int = 16,
-    nprobe: int = 2,
-    seed: int = 7,
 ) -> DataFrame:
     """IVF approximate top-k: corpus is inverted-listed by nearest
-    centroid; each query probes its ``nprobe`` nearest cells and scores
+    centroid; each query probes its ``NPROBE`` nearest cells and scores
     only those candidates (equi-join on the cluster id).
 
     The scale path when hyperplane LSH recall is too bucket-sensitive:
-    candidate count ≈ |corpus|·nprobe/n_clusters per query, tunable at
-    runtime without re-hashing.  Recall < 1 by construction.
+    candidate count ≈ |corpus|·NPROBE/16 per query.  Recall < 1 by construction.
     """
     if centroids is None:
         centroids = train_ivf_centroids(
-            corpus, vec_col, n_clusters=n_clusters, seed=seed
+            corpus, n_clusters=16
         )
     # norms hoisted below the probe join (NOTES fact 16): once per
-    # row, before the query side fans out to nprobe rows
-    c = assign_ivf_cluster(corpus, centroids, vec_col).select(
+    # row, before the query side fans out to NPROBE rows
+    c = assign_ivf_cluster(corpus, centroids).select(
         F.col(corpus_id).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.expr(_norm_sql(f"`{vec_col}`")).alias("_cn"),
+        F.col("embedding").alias("_cv"),
+        F.expr(_norm_sql("`embedding`")).alias("_cn"),
         "cluster",
     )
-    qd = _as_double(queries, vec_col)
-    q = _nearest_centroids(qd, centroids, vec_col, nprobe, "_probe").select(
+    qd = _as_double(queries, "embedding")
+    q = _nearest_centroids(qd, centroids, "embedding", NPROBE, "_probe").select(
         F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.expr(_norm_sql(f"`{vec_col}`")).alias("_qn"),
+        F.col("embedding").alias("_qv"),
+        F.expr(_norm_sql("`embedding`")).alias("_qn"),
         F.explode("_probe").alias("cluster"),
     )
     scored = (
@@ -524,7 +515,7 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -532,9 +523,6 @@ def ivf_topk(
 def quantize_embeddings_int8(
     df: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
-    scale_col: str = "scale",
-    q_col: str = "q",
 ) -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = max|x|/127,
     code_i = round(x_i/scale) ∈ [−127, 127].
@@ -547,33 +535,31 @@ def quantize_embeddings_int8(
     all-zero codes (guarded — ANSI would otherwise throw casting the
     NaN from 0/0).
     """
-    d = _as_double(df, vec_col)
+    d = _as_double(df, "embedding")
     # one F.expr round-trip per derived column (opt-r15): identical
     # expressions to the Python-built forms they replace (same
     # 127.0D double, round(x, 0), int casts, CASE arms)
     d = d.withColumn(
-        scale_col,
-        F.expr(f"array_max(transform(`{vec_col}`, x -> abs(x))) / 127.0D"),
+        "scale",
+        F.expr("array_max(transform(`embedding`, x -> abs(x))) / 127.0D"),
     )
     codes = F.expr(
-        f"CASE WHEN `{scale_col}` > 0 THEN transform(`{vec_col}`, "
-        f"x -> CAST(round(x / `{scale_col}`) AS INT)) "
-        f"ELSE transform(`{vec_col}`, x -> 0) END"
+        "CASE WHEN `scale` > 0 THEN transform(`embedding`, "
+        "x -> CAST(round(x / `scale`) AS INT)) "
+        "ELSE transform(`embedding`, x -> 0) END"
     )
-    return d.withColumn(q_col, codes)
+    return d.withColumn("q", codes)
 
 
 def quantization_report(
     df: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Scalar-only quantization audit per vector: (id, scale, sum_q,
     max_abs_err) — the reconstruction-error report a pipeline checks
     before switching retrieval to the int8 tier.  Scalar outputs keep
     it oracle-hashable (array cells are not)."""
-    qd = quantize_embeddings_int8(df, id_col, vec_col)
+    qd = quantize_embeddings_int8(df, id_col)
     # Compute the error in its OWN projection: putting
     # ``round(scale) AS scale`` earlier in the same select list would
     # make Spark's lateral-column-alias resolution bind the ``scale``
@@ -585,18 +571,18 @@ def quantization_report(
         F.array_max(
             F.zip_with(
                 F.col("q"),
-                F.col(vec_col),
+                F.col("embedding"),
                 lambda a, b: F.abs(a * F.col("scale") - b),
             )
         ),
     )
     return with_err.select(
         F.col(id_col),
-        F.round(F.col("scale"), round_to).alias("scale"),
+        F.round(F.col("scale"), 6).alias("scale"),
         F.aggregate(
             F.col("q"), F.lit(0).cast("long"), lambda acc, x: acc + x
         ).alias("sum_q"),
-        F.round(F.col("_max_err"), round_to).alias("max_abs_err"),
+        F.round(F.col("_max_err"), 6).alias("max_abs_err"),
     )
 
 
@@ -605,8 +591,6 @@ def quantized_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    vec_col: str = "embedding",
-    k: int = 10,
 ) -> DataFrame:
     """Cosine top-k over int8 CODES — retrieval on the quantized
     storage tier (quantize_embeddings_int8).
@@ -630,7 +614,7 @@ def quantized_topk(
     """
 
     def codes_with_norm(df: DataFrame, id_col: str, out_id: str, qn: str, qc: str):
-        qd = quantize_embeddings_int8(df, id_col, vec_col)
+        qd = quantize_embeddings_int8(df, id_col)
         return qd.select(
             F.col(id_col).alias(out_id),
             F.col("q").alias(qc),
@@ -649,7 +633,7 @@ def quantized_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -662,7 +646,6 @@ EXACT_NEARDUP_MAX_ROWS = 100_000
 def embedding_neardup_pairs(
     df: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
     planes: list[list[float]] | None = None,
     threshold: float = 0.95,
     exact_max_rows: int = EXACT_NEARDUP_MAX_ROWS,
@@ -704,19 +687,19 @@ def embedding_neardup_pairs(
     side out of single-row-group inputs first.
     """
     d = _as_double(
-        ensure_parallelism(df), vec_col
-    ).withColumn("_nv", F.expr(_norm_sql(f"`{vec_col}`")))
+        ensure_parallelism(df), "embedding"
+    ).withColumn("_nv", F.expr(_norm_sql("`embedding`")))
     if planes is not None:
-        banded = hyperplane_bucket(d, vec_col, planes)
+        banded = hyperplane_bucket(d, "embedding", planes)
         a = banded.select(
             F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("_va"),
+            F.col("embedding").alias("_va"),
             F.col("_nv").alias("_na"),
             "bucket",
         )
         b = banded.select(
             F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("_vb"),
+            F.col("embedding").alias("_vb"),
             F.col("_nv").alias("_nb"),
             "bucket",
         )
@@ -733,12 +716,12 @@ def embedding_neardup_pairs(
             )
         a = d.select(
             F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("_va"),
+            F.col("embedding").alias("_va"),
             F.col("_nv").alias("_na"),
         )
         b = d.select(
             F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("_vb"),
+            F.col("embedding").alias("_vb"),
             F.col("_nv").alias("_nb"),
         )
         cand = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
@@ -755,7 +738,6 @@ def embedding_neardup_pairs(
 def spherical_assign(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
     out_col: str = "cluster",
 ) -> DataFrame:
     """Fixed-quantizer cell assignment by MAXIMUM DOT PRODUCT against
@@ -768,7 +750,7 @@ def spherical_assign(
     one oracle).  Unit-norm centroids make max-dot equivalent to
     nearest-cosine (spherical k-means assignment).
     """
-    d = _as_double(df, vec_col)
+    d = _as_double(df, "embedding")
     # the whole assignment enters as ONE F.expr (opt-r15; the r14 form
     # already used a one-call centroid literal but still built the
     # transform/argmax tree one py4j trip per node): transform applies
@@ -777,7 +759,7 @@ def spherical_assign(
     # produced
     dots_sql = (
         f"transform({literals.double_matrix_sql(centroids)}, "
-        f"c -> {_dot_sql(f'`{vec_col}`', 'c')})"
+        f"c -> {_dot_sql('`embedding`', 'c')})"
     )
     return d.withColumn(
         out_col, F.expr(f"array_position({dots_sql}, array_max({dots_sql}))")
@@ -787,9 +769,6 @@ def spherical_assign(
 def resolve_n_clusters(
     df: DataFrame,
     n_clusters: int | str,
-    rows_per_cluster: int = 64,
-    min_k: int = 4,
-    max_k: int = 65536,
 ) -> int:
     """Resolve the SemDeDup cluster-count lever: an int passes
     through; ``"auto"`` scales k with the corpus — ⌈n / 64⌉ clamped to
@@ -806,17 +785,15 @@ def resolve_n_clusters(
     if n_clusters != "auto":
         return int(n_clusters)
     n = df.count()
-    return max(min_k, min(max_k, -(-n // rows_per_cluster)))
+    return max(4, min(65536, -(-n // 64)))
 
 
 def semantic_neardup_pairs(
     df: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
     n_clusters: int | str = "auto",
     threshold: float = 0.95,
-    seed: int = 7,
     spherical_expr: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic near-dup pairs (Abbas et al. 2023,
@@ -851,13 +828,12 @@ def semantic_neardup_pairs(
         raise ValueError("spherical_expr requires explicit centroids")
     if centroids is None:
         centroids = train_ivf_centroids(
-            df, vec_col,
-            n_clusters=resolve_n_clusters(df, n_clusters), seed=seed,
+            df, n_clusters=resolve_n_clusters(df, n_clusters),
         )
     assigned = (
-        spherical_assign(df, centroids, vec_col)
+        spherical_assign(df, centroids)
         if spherical_expr
-        else assign_ivf_cluster(df, centroids, vec_col)
+        else assign_ivf_cluster(df, centroids)
     )
     # materialize the assignment ONCE: the self-join references it on
     # both sides, and without the eager checkpoint each side re-runs
@@ -870,17 +846,17 @@ def semantic_neardup_pairs(
     # it per PAIR — hoisting the two norms cuts the per-pair work to
     # the dot product alone (same doubles: sqrt once vs inline)
     assigned = assigned.withColumn(
-        "_nrm", F.expr(_norm_sql(f"`{vec_col}`"))
+        "_nrm", F.expr(_norm_sql("`embedding`"))
     ).localCheckpoint(eager=True)
     a = assigned.select(
         F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
+        F.col("embedding").alias("_va"),
         F.col("_nrm").alias("_na"),
         "cluster",
     )
     b = assigned.select(
         F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
+        F.col("embedding").alias("_vb"),
         F.col("_nrm").alias("_nb"),
         "cluster",
     )
@@ -899,11 +875,9 @@ def semantic_neardup_pairs(
 def semantic_dedup(
     df: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
     n_clusters: int | str = "auto",
     threshold: float = 0.95,
-    seed: int = 7,
     spherical_expr: bool = False,
 ) -> DataFrame:
     """Apply SemDeDup: resolve ``semantic_neardup_pairs`` into
@@ -917,11 +891,9 @@ def semantic_dedup(
     pairs = semantic_neardup_pairs(
         df,
         id_col,
-        vec_col,
         centroids=centroids,
         n_clusters=n_clusters,
         threshold=threshold,
-        seed=seed,
         spherical_expr=spherical_expr,
     )
     return neardup_dedup_keep_first(df, pairs, id_col)
@@ -930,8 +902,6 @@ def semantic_dedup(
 def recall_at_k(
     approx: DataFrame,
     exact: DataFrame,
-    query_col: str = "query_id",
-    neighbor_col: str = "neighbor_id",
 ) -> DataFrame:
     """Per-query recall of an approximate top-k against the exact
     top-k — the measure-don't-guess gate every ANN variant (LSH, IVF,
@@ -945,16 +915,16 @@ def recall_at_k(
     makes the duplicate reference ~free, so no checkpoint is taken and
     the operator stays usable on any DataFrame.
     """
-    e = exact.select(query_col, neighbor_col)
-    a = approx.select(query_col, neighbor_col)
-    k_per_query = e.groupBy(query_col).agg(F.count(F.lit(1)).alias("k"))
+    e = exact.select("query_id", "neighbor_id")
+    a = approx.select("query_id", "neighbor_id")
+    k_per_query = e.groupBy("query_id").agg(F.count(F.lit(1)).alias("k"))
     hits = (
-        a.join(e, [query_col, neighbor_col], "inner")
-        .groupBy(query_col)
+        a.join(e, ["query_id", "neighbor_id"], "inner")
+        .groupBy("query_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
-    return k_per_query.join(hits, query_col, "left").select(
-        query_col,
+    return k_per_query.join(hits, "query_id", "left").select(
+        "query_id",
         F.coalesce(F.col("n_hits"), F.lit(0).cast("long")).alias("n_hits"),
         "k",
         F.try_divide(
@@ -967,7 +937,6 @@ def build_ivf_index(
     corpus: DataFrame,
     id_col: str,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The persistable inverted-file ANN index: one row per corpus
     vector with its quantizer cell, double-cast vector, and hoisted
@@ -982,12 +951,12 @@ def build_ivf_index(
     never at query time: a daily query batch against 100 TB re-reads
     only the probed partitions of this index and re-assigns nothing.
     """
-    assigned = spherical_assign(corpus, centroids, vec_col=vec_col)
+    assigned = spherical_assign(corpus, centroids)
     return assigned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col("cluster").cast("int").alias("cluster"),
-        F.col(vec_col).alias("_cv"),
-        F.expr(_norm_sql(f"`{vec_col}`")).alias("_cn"),
+        F.col("embedding").alias("_cv"),
+        F.expr(_norm_sql("`embedding`")).alias("_cn"),
     )
 
 
@@ -995,10 +964,8 @@ def probe_cells(
     queries: DataFrame,
     centroids: list[list[float]],
     query_id: str,
-    vec_col: str = "embedding",
-    nprobe: int = 2,
 ) -> DataFrame:
-    """Per query: its ``nprobe`` best quantizer cells by descending
+    """Per query: its ``NPROBE`` best quantizer cells by descending
     dot product (ties toward the lower cell id — deterministic).
 
     Pure in-row expressions: the dot-product array over literal
@@ -1007,23 +974,23 @@ def probe_cells(
     with ``row_number``.  Output: (query_id, _qv, _qn, cluster), one
     row per probed cell.
     """
-    d = _as_double(queries, vec_col)
+    d = _as_double(queries, "embedding")
     # the whole probe list enters as ONE F.expr (opt-r15): identical
     # (negdot double, cell int) structs in identical order to the
     # per-node form it replaces
     dots_sql = (
         f"transform({literals.double_matrix_sql(centroids)}, "
-        f"(c, i) -> struct(-({_dot_sql(f'`{vec_col}`', 'c')}) AS negdot, "
+        f"(c, i) -> struct(-({_dot_sql('`embedding`', 'c')}) AS negdot, "
         "CAST(i + 1 AS INT) AS cell))"
     )
     probes_sql = (
-        f"transform(slice(array_sort({dots_sql}), 1, {int(nprobe)}), "
+        f"transform(slice(array_sort({dots_sql}), 1, {NPROBE}), "
         "s -> s.cell)"
     )
     return d.select(
         F.col(query_id).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.expr(_norm_sql(f"`{vec_col}`")).alias("_qn"),
+        F.col("embedding").alias("_qv"),
+        F.expr(_norm_sql("`embedding`")).alias("_qn"),
         F.explode(F.expr(probes_sql)).alias("cluster"),
     )
 
@@ -1033,9 +1000,6 @@ def ivf_probe_topk(
     index: DataFrame,
     centroids: list[list[float]],
     query_id: str,
-    k: int = 10,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k against a PREBUILT ``build_ivf_index`` table — the
     incremental/production form of ``ivf_topk``: the corpus is never
@@ -1051,7 +1015,7 @@ def ivf_probe_topk(
     only restricts IO.  Query side is broadcast: queries ≪ corpus,
     the index is never shuffled.
     """
-    q = probe_cells(queries, centroids, query_id, vec_col, nprobe)
+    q = probe_cells(queries, centroids, query_id)
     cells = [r["cluster"] for r in q.select("cluster").distinct().collect()]
     index = index.filter(F.col("cluster").isin(cells))
     scored = (
@@ -1066,7 +1030,7 @@ def ivf_probe_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
@@ -1076,7 +1040,6 @@ def cluster_balanced_sample(
     id_col: str,
     n_per_cell: int,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
     seed: str = "seed0",
 ) -> DataFrame:
     """Diversity-preserving selection over an embedding corpus: assign
@@ -1112,7 +1075,7 @@ def cluster_balanced_sample(
             "utf-8",
         )
     )
-    assigned = spherical_assign(df, centroids, vec_col, out_col="_cell")
+    assigned = spherical_assign(df, centroids, out_col="_cell")
     return (
         cap_per_group(
             assigned.withColumn("_k", key),
@@ -1132,15 +1095,13 @@ def cluster_balanced_sample(
 def embedding_norm_outliers(
     df: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
-    k: float = 3.0,
 ) -> DataFrame:
     """(id, norm, deviation, is_outlier) per vector — the
     corrupt-embedding detector run before any ANN/dedup stage
     consumes a vector column (truncated writes, zeroed rows and
     wrong-scale batches all land far from the corpus norm).
 
-    Robust statistics on purpose: flag = |norm − median| > k·MAD.
+    Robust statistics on purpose: flag = |norm − median| > 3·MAD.
     Median and MAD are ORDER-INDEPENDENT (exact sorted-rank
     interpolation in both engines), where a mean/std would sum
     doubles in engine-dependent order and break the oracle hash —
@@ -1159,9 +1120,9 @@ def embedding_norm_outliers(
     executor-memory cliff on a billion-vector corpus (the q92
     ``quantile_bins`` hazard class).
     """
-    norms = _as_double(df, vec_col).select(
+    norms = _as_double(df, "embedding").select(
         F.col(id_col),
-        F.expr(f"round({_norm_sql(f'`{vec_col}`')}, 6)").alias("norm"),
+        F.expr(f"round({_norm_sql('`embedding`')}, 6)").alias("norm"),
     ).localCheckpoint(eager=True)
     med = norms.agg(
         F.percentile(F.col("norm"), F.lit(0.5)).alias("m")
@@ -1180,7 +1141,7 @@ def embedding_norm_outliers(
         F.col(id_col),
         "norm",
         "deviation",
-        F.when(F.col("deviation") > F.lit(k * mad), F.lit(1))
+        F.when(F.col("deviation") > F.lit(3.0 * mad), F.lit(1))
         .otherwise(F.lit(0))
         .cast("long")
         .alias("is_outlier"),
@@ -1281,7 +1242,6 @@ def _nearest_trained_int(
 def train_kmeans_int8(
     df: DataFrame | None,
     id_col: str,
-    vec_col: str = "embedding",
     n_clusters: int = 8,
     n_iter: int = 2,
     seed: str = "km0",
@@ -1333,7 +1293,7 @@ def train_kmeans_int8(
         if df is None:
             raise ValueError("train_kmeans_int8: pass df or codes")
         codes = (
-            quantize_embeddings_int8(ensure_parallelism(df), id_col, vec_col)
+            quantize_embeddings_int8(ensure_parallelism(df), id_col)
             .select(F.col(id_col), F.col("q"))
             .localCheckpoint(eager=True)
         )
@@ -1387,7 +1347,6 @@ def trained_ivf_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    vec_col: str = "embedding",
     k: int = 10,
     n_clusters: int = 8,
     n_iter: int = 2,
@@ -1429,7 +1388,6 @@ def trained_ivf_topk(
     index, cents = build_trained_ivf_index(
         corpus,
         corpus_id,
-        vec_col=vec_col,
         n_clusters=n_clusters,
         n_iter=n_iter,
         seed=seed,
@@ -1439,16 +1397,16 @@ def trained_ivf_topk(
     # nothing — that path is for the persisted-index form
     return trained_ivf_probe_topk(
         queries, index, cents, query_id,
-        vec_col=vec_col, k=k, nprobe=nprobe, prune=False,
+        k=k, nprobe=nprobe, prune=False,
     )
 
 
-def _int_norm(code_col: str = "q") -> Column:
+def _int_norm() -> Column:
     """sqrt of the exact int64 self-dot of a code array — identical
     in both engines (same long sum, same IEEE sqrt).  One F.expr
     round-trip (opt-r15), same expression as the Python-built fold."""
     return F.expr(
-        f"sqrt(CAST(aggregate(transform(`{code_col}`, "
+        "sqrt(CAST(aggregate(transform(`q`, "
         "x -> CAST(x * x AS BIGINT)), CAST(0 AS BIGINT), "
         "(acc, v) -> acc + v) AS DOUBLE))"
     )
@@ -1457,7 +1415,6 @@ def _int_norm(code_col: str = "q") -> Column:
 def build_trained_ivf_index(
     corpus: DataFrame,
     id_col: str,
-    vec_col: str = "embedding",
     n_clusters: int = 8,
     n_iter: int = 2,
     seed: str = "km0",
@@ -1478,14 +1435,13 @@ def build_trained_ivf_index(
     they still participated in training via the codes frame.
     """
     qc = quantize_embeddings_int8(
-        ensure_parallelism(corpus), id_col, vec_col
+        ensure_parallelism(corpus), id_col
     ).select(
         F.col(id_col).alias("neighbor_id"), F.col("q")
     ).localCheckpoint(eager=True)
     cents = train_kmeans_int8(
         None,
         id_col,
-        vec_col,
         n_clusters=n_clusters,
         n_iter=n_iter,
         seed=seed,
@@ -1499,7 +1455,7 @@ def build_trained_ivf_index(
     index = _nearest_trained_int(qc, cents, "q", 1, "_nc").select(
         "neighbor_id",
         F.col("q").alias("_cq"),
-        _int_norm("q").alias("_cn"),
+        _int_norm().alias("_cn"),
         F.element_at("_nc", 1).alias("cluster"),
     ).filter(F.col("_cn") > 0)
     return index, cents
@@ -1510,7 +1466,6 @@ def trained_ivf_probe_topk(
     index: DataFrame,
     codebook: list[list[int]],
     query_id: str,
-    vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
     prune: bool = True,
@@ -1541,7 +1496,7 @@ def trained_ivf_probe_topk(
     """
     q = (
         _nearest_trained_int(
-            quantize_embeddings_int8(queries, query_id, vec_col),
+            quantize_embeddings_int8(queries, query_id),
             codebook,
             "q",
             nprobe,
@@ -1550,7 +1505,7 @@ def trained_ivf_probe_topk(
         .select(
             F.col(query_id).alias("query_id"),
             F.col("q").alias("_qq"),
-            _int_norm("q").alias("_qn"),
+            _int_norm().alias("_qn"),
             F.col("_p"),
         )
         .filter(F.col("_qn") > 0)
@@ -1662,7 +1617,6 @@ def write_trained_ivf_index(
     corpus: DataFrame,
     path: str,
     id_col: str,
-    vec_col: str = "embedding",
     n_clusters: int = 8,
     n_iter: int = 2,
     seed: str = "km0",
@@ -1684,7 +1638,6 @@ def write_trained_ivf_index(
     index, cents = build_trained_ivf_index(
         corpus,
         id_col,
-        vec_col=vec_col,
         n_clusters=n_clusters,
         n_iter=n_iter,
         seed=seed,
@@ -1773,7 +1726,6 @@ def append_to_trained_ivf_index(
     batch: DataFrame,
     path: str,
     id_col: str,
-    vec_col: str = "embedding",
     codebook: list[list[int]] | None = None,
     meta: dict | None = None,
 ) -> None:
@@ -1809,14 +1761,14 @@ def append_to_trained_ivf_index(
         )
     cents = meta["codebook"]
     qc = quantize_embeddings_int8(
-        ensure_parallelism(batch), id_col, vec_col
+        ensure_parallelism(batch), id_col
     ).select(F.col(id_col).alias("neighbor_id"), F.col("q"))
     rows = (
         _nearest_trained_int(qc, cents, "q", 1, "_nc")
         .select(
             "neighbor_id",
             F.col("q").alias("_cq"),
-            _int_norm("q").alias("_cn"),
+            _int_norm().alias("_cn"),
             F.element_at("_nc", 1).alias("cluster"),
         )
         .filter(F.col("_cn") > 0)

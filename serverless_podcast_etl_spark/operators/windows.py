@@ -28,13 +28,13 @@ def rolling_mean(
     value: Column | str,
     partition_by: list[str],
     order_by: list[str],
-    window_rows: int = 50,
     out_col: str = "rolling_mean",
     exact_round_to: int | None = None,
 ) -> DataFrame:
     """Trailing row-frame rolling mean with min_periods=1 semantics.
 
-    Frame = (window_rows-1 preceding .. current row); Spark averages
+    Frame = (49 preceding .. current row), the reference's 50-row W1
+    window; Spark averages
     whatever rows exist at the head of the partition, exactly matching
     pandas ``rolling(window, min_periods=1).mean()``.
 
@@ -49,7 +49,7 @@ def rolling_mean(
     w = (
         Window.partitionBy(*partition_by)
         .orderBy(*order_by)
-        .rowsBetween(-(window_rows - 1), Window.currentRow)
+        .rowsBetween(-49, Window.currentRow)
     )
     if exact_round_to is None:
         return df.withColumn(out_col, F.avg(val).over(w))
@@ -90,25 +90,23 @@ def prefix_sum_spans(
     length_col: str,
     partition_by: list[str],
     order_by: list[str],
-    sep_len: int = 1,
-    start_col: str = "start_offset",
-    end_col: str = "end_offset",
 ) -> DataFrame:
     """Cumulative character spans: each row's [start, end) offset range.
 
-    start = sum(length + sep_len) over all preceding rows; end = start +
-    length + sep_len.  ``sep_len=1`` models the reference's trailing
-    '\\n' appended to every sentence (src/lambda_72.py:60,69).
+    start = sum(length + 1) over all preceding rows; end = start +
+    length + 1, written to ``start_offset``/``end_offset``.  The 1
+    models the reference's trailing '\\n' appended to every sentence
+    (src/lambda_72.py:60,69).
     """
     w = (
         Window.partitionBy(*partition_by)
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    piece = F.col(length_col) + F.lit(sep_len)
+    piece = F.col(length_col) + F.lit(1)
     return df.withColumn(
-        start_col, F.coalesce(F.sum(piece).over(w), F.lit(0)).cast("long")
-    ).withColumn(end_col, (F.col(start_col) + piece).cast("long"))
+        "start_offset", F.coalesce(F.sum(piece).over(w), F.lit(0)).cast("long")
+    ).withColumn("end_offset", (F.col("start_offset") + piece).cast("long"))
 
 
 def grouped_ewma(
@@ -117,7 +115,6 @@ def grouped_ewma(
     partition_by: list[str],
     order_by: list[str],
     alpha: float = 0.3,
-    out_col: str = "ewma",
 ) -> DataFrame:
     """Exponentially weighted moving average per group — the grouped
     ``applyInPandas`` surface (§2.10) for genuinely RECURSIVE state
@@ -136,11 +133,11 @@ def grouped_ewma(
     out_fields = df.schema.fields
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in out_fields
-    ) + f", {out_col} double"
+    ) + ", ewma double"
 
     def ewma(pdf):
         pdf = pdf.sort_values(order_by, kind="mergesort")
-        pdf[out_col] = (
+        pdf["ewma"] = (
             pdf[value].ewm(alpha=alpha, adjust=False).mean()
         )
         return pdf
@@ -153,10 +150,8 @@ def ewma_partitioned(
     value: str,
     key_cols: list[str],
     order_by: list[str],
-    alpha: float = 0.3,
-    out_col: str = "ewma",
 ) -> DataFrame:
-    """Scale form of ``grouped_ewma``: identical results, one Arrow
+    """Scale form of ``grouped_ewma`` at alpha 0.3: identical results, one Arrow
     stream per PARTITION instead of one pandas frame per GROUP.
 
     ``groupBy().applyInPandas`` pays per-group Python/Arrow overhead —
@@ -174,14 +169,14 @@ def ewma_partitioned(
 
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} double"
+    ) + ", ewma double"
     n_keys = len(key_cols)
 
     def run(batches):
         state: dict[tuple, float] = {}
         for pdf in batches:
             if pdf.empty:
-                yield pdf.assign(**{out_col: pd.Series(dtype="float64")})
+                yield pdf.assign(ewma=pd.Series(dtype="float64"))
                 continue
             out_vals = []
             # contiguous runs of the (sorted) key within this batch
@@ -193,17 +188,17 @@ def ewma_partitioned(
                 x = chunk[value].astype("float64")
                 prev = state.get(k)
                 if prev is None:
-                    ew = x.ewm(alpha=alpha, adjust=False).mean()
+                    ew = x.ewm(alpha=0.3, adjust=False).mean()
                 else:
                     seeded = pd.concat(
                         [pd.Series([prev], dtype="float64"), x],
                         ignore_index=True,
                     )
-                    ew = seeded.ewm(alpha=alpha, adjust=False).mean().iloc[1:]
+                    ew = seeded.ewm(alpha=0.3, adjust=False).mean().iloc[1:]
                     ew.index = x.index
                 state[k] = float(ew.iloc[-1])
                 out_vals.append(ew)
-            pdf = pdf.assign(**{out_col: pd.concat(out_vals)})
+            pdf = pdf.assign(ewma=pd.concat(out_vals))
             yield pdf
 
     # explicit-count keyed repartition: AQE's byte-based coalescing

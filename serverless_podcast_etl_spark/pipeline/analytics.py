@@ -213,7 +213,6 @@ def sentiment_timeseries(sentence_dim: DataFrame, episode_id: int) -> DataFrame:
         value="score",
         partition_by=["episode_id"],
         order_by=["sentence_index"],
-        window_rows=50,
         out_col="rolling_sentiment",
     ).select("episode_id", "sentence_index", "score", "rolling_sentiment")
 

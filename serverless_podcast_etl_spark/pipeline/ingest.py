@@ -57,13 +57,13 @@ RSS_XML_SCHEMA = StructType(
 )
 
 
-def parse_rss_xml(df: DataFrame, xml_col: str = "xml") -> DataFrame:
+def parse_rss_xml(df: DataFrame) -> DataFrame:
     """Raw RSS XML strings → RSS_DOC-shaped structs (S5), fully
     JVM-side via ``from_xml`` — no xmltodict, no Python in the loop.
     Malformed documents parse to null structs (PERMISSIVE mode), the
     same swallow-don't-crash posture as F4 date parsing.
     """
-    p = F.from_xml(F.col(xml_col), RSS_XML_SCHEMA)
+    p = F.from_xml(F.col("xml"), RSS_XML_SCHEMA)
     chan = p["channel"]
     rebuilt = F.struct(
         F.struct(
@@ -89,7 +89,6 @@ def parse_rss_xml(df: DataFrame, xml_col: str = "xml") -> DataFrame:
 
 def fetch_rss_docs(
     feeds: DataFrame,
-    url_col: str = "feed",
     transport=None,
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -107,10 +106,10 @@ def fetch_rss_docs(
     from ..sources.fetch import fetch_urls
 
     fetched = fetch_urls(
-        feeds, url_col, transport=transport, num_partitions=num_partitions
+        feeds, "feed", transport=transport, num_partitions=num_partitions
     )
     return parse_rss_xml(
-        fetched.withColumn("xml", F.col("body").cast("string")), "xml"
+        fetched.withColumn("xml", F.col("body").cast("string"))
     )
 
 

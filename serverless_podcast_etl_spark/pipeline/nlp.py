@@ -72,7 +72,6 @@ def sentence_spans(sentences: DataFrame) -> DataFrame:
         length_col="_len",
         partition_by=["episode_id"],
         order_by=["sentence_index"],
-        sep_len=1,
     ).select("episode_id", "sentence_index", "start_offset", "end_offset")
 
 

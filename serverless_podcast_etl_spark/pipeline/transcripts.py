@@ -27,14 +27,13 @@ from ..operators.multimodal import chunk_binary
 
 def chunk_audio(
     audio: DataFrame,
-    content_col: str = "content",
     chunk_bytes: int = 10_000_000,
 ) -> DataFrame:
     """Split audio payloads into fixed-size chunks (S9;
     src/lambda_3.py:93-114).  Adds 1-based chunk_num and per-episode
     num_chunks — the count the reducer's barrier later checks
     (src/lambda_3.py:127-133)."""
-    chunked = chunk_binary(audio, content_col, chunk_bytes=chunk_bytes)
+    chunked = chunk_binary(audio, "content", chunk_bytes=chunk_bytes)
     counts = chunked.groupBy("episode_id").agg(
         F.max("chunk_num").alias("num_chunks")
     )
@@ -55,6 +54,16 @@ def transcribe_chunks(chunks: DataFrame, transcribe: Column | None = None) -> Da
     return chunks.withColumn("payload", transcribe).drop("chunk")
 
 
+def _arrived(chunk_payloads: DataFrame) -> DataFrame:
+    """One payload per (episode_id, chunk_num), the set both views of
+    the barrier count.  The reference keys every chunk by its number
+    (``<podcast>/<episode>/chunk_N``, S9; src/lambda_3.py:91-114, read
+    back as chunk_1..chunk_N by src/lambda_5.py:72-74), so a redelivered
+    chunk replaces its first copy; counting both copies would hold the
+    episode back forever."""
+    return chunk_payloads.dropDuplicates(["episode_id", "chunk_num"])
+
+
 def reduce_transcripts(
     chunk_payloads: DataFrame,
     expected: DataFrame,
@@ -67,10 +76,11 @@ def reduce_transcripts(
     ``incomplete_episodes``.  Transcript text is extracted from the
     Transcribe payload JSON path (F10; src/lambda_5.py:79).
     """
+    arrived = _arrived(chunk_payloads)
     complete = completion_barrier(
-        chunk_payloads, expected, key=["episode_id"], expected_count_col="num_chunks"
+        arrived, expected, key=["episode_id"], expected_count_col="num_chunks"
     )
-    ready = chunk_payloads.join(complete.select("episode_id"), "episode_id")
+    ready = arrived.join(complete.select("episode_id"), "episode_id")
     texts = ready.withColumn(
         "chunk_text",
         F.get_json_object(F.col("payload"), "$.results.transcripts[0].transcript"),
@@ -86,16 +96,16 @@ def reduce_transcripts(
 
 
 def incomplete_episodes(chunk_payloads: DataFrame, expected: DataFrame) -> DataFrame:
-    """Monitoring view of the barrier: episodes still waiting, with
-    arrived vs expected counts (SURVEY §7.4.5 — stalls are exposed,
-    never timed out)."""
-    counts = chunk_payloads.groupBy("episode_id").agg(
+    """Monitoring view of the barrier: exactly the episodes
+    ``reduce_transcripts`` holds back, with arrived vs expected counts
+    (SURVEY §7.4.5 — stalls are exposed, never timed out)."""
+    counts = _arrived(chunk_payloads).groupBy("episode_id").agg(
         F.count(F.lit(1)).alias("arrived_chunks")
     )
     joined = expected.join(counts, "episode_id", "left").na.fill(
         {"arrived_chunks": 0}
     )
-    return joined.filter(F.col("arrived_chunks") < F.col("num_chunks"))
+    return joined.filter(F.col("arrived_chunks") != F.col("num_chunks"))
 
 
 def transcript_sentences(transcripts: DataFrame) -> DataFrame:

@@ -240,7 +240,6 @@ def q07_rolling_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         value="value",
         partition_by=["user_id"],
         order_by=["ts", "event_id"],
-        window_rows=50,
         exact_round_to=4,
     )
     return out.select("user_id", "event_id", "rolling_mean")
@@ -290,7 +289,6 @@ def q09_cumulative_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         length_col="n_chars",
         partition_by=["source"],
         order_by=["doc_id"],
-        sep_len=1,
     )
     return out.select("doc_id", "source", "n_chars", "start_offset", "end_offset")
 
@@ -557,17 +555,17 @@ def q20_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable md5-derived hash family — bit-identical to the oracle."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.minhash_signatures(
-        docs, text_col="text", id_col="doc_id", n=3, num_hashes=8
+        docs, text_col="text", id_col="doc_id"
     )
 
 
-def _minhash_sql(n: int = 3, num_hashes: int = 8) -> str:
+def _minhash_sql() -> str:
     mins = ", ".join(
         f"min({hashing.minhash_value_sql('shingle', a, b)}) AS mh_{i}"
-        for i, (a, b) in enumerate(hashing.MINHASH_PARAMS[:num_hashes])
+        for i, (a, b) in enumerate(hashing.MINHASH_PARAMS[:dedup.MINHASH_NUM_HASHES])
     )
     return f"""
-WITH sh AS ({_shingle_cte(n)})
+WITH sh AS ({_shingle_cte(dedup.MINHASH_N)})
 SELECT doc_id, {mins} FROM sh GROUP BY doc_id
 """
 
@@ -578,12 +576,12 @@ def q21_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_fingerprints(docs, text_col="text", id_col="doc_id")
 
 
-def _simhash_sql(bits: int = 32) -> str:
+def _simhash_sql() -> str:
     votes = ", ".join(
         f"sum(CASE WHEN (th >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v_{j}"
-        for j in range(bits)
+        for j in range(dedup.SIMHASH_BITS)
     )
-    fp = " + ".join(f"(CASE WHEN v_{j} > 0 THEN {2**j} ELSE 0 END)" for j in range(bits))
+    fp = " + ".join(f"(CASE WHEN v_{j} > 0 THEN {2**j} ELSE 0 END)" for j in range(dedup.SIMHASH_BITS))
     return f"""
 WITH tk AS (SELECT doc_id, unnest(list_filter(
         regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')) AS tok
@@ -671,15 +669,15 @@ def q24_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     q65's winnowed_fingerprint_set)."""
     docs = _t(spark, sf_dir, "documents")
     return textstats.rolling_fingerprints(
-        docs, text_col="text", id_col="doc_id", k=5, keep_mod=8
+        docs, text_col="text", id_col="doc_id"
     )
 
 
-def _fingerprint_sql(k: int = 5, keep_mod: int = 8) -> str:
+def _fingerprint_sql() -> str:
     return f"""
-WITH sh AS ({_shingle_cte(k)}),
+WITH sh AS ({_shingle_cte(textstats.FINGERPRINT_K)}),
 kept AS (SELECT DISTINCT doc_id, shingle AS gram_hash FROM sh
-         WHERE shingle % {keep_mod} = 0)
+         WHERE shingle % {textstats.FINGERPRINT_MOD} = 0)
 SELECT doc_id, count(*) AS n_fingerprints, min(gram_hash) AS min_fingerprint
 FROM kept GROUP BY doc_id
 """
@@ -789,6 +787,12 @@ ORDER BY doc_id, sentence_index
 """
 
 
+# Duplicated-span window (tokens) and, for cross-document spans, the
+# distinct-document floor: the q66/q67/q71/q72 oracles' shape
+_SPAN_K = 20
+_SPAN_MIN_DOCS = 3
+
+
 # Fixed random hyperplanes (seed recorded; deterministic constants).
 _PLANES_8 = [
     [((i * 37 + j * 17 + 11) % 23) - 11.0 for j in range(64)] for i in range(8)
@@ -796,7 +800,7 @@ _PLANES_8 = [
 
 
 def _plane_tables(
-    n_tables: int, n_planes: int, dim: int = 64, seed: int = 1234
+    n_tables: int, n_planes: int, seed: int = 1234
 ) -> list[list[list[float]]]:
     """Independent seeded-Gaussian hyperplane tables for OR-construction
     LSH — deterministic constants (fixed seed), spherically symmetric
@@ -807,7 +811,7 @@ def _plane_tables(
 
     rng = random.Random(seed)
     return [
-        [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
+        [[rng.gauss(0.0, 1.0) for _ in range(64)] for _ in range(n_planes)]
         for _ in range(n_tables)
     ]
 
@@ -945,7 +949,6 @@ def q47_ratio_of_avgs(spark: SparkSession, sf_dir: str) -> DataFrame:
         li,
         group_by=["l_returnflag"],
         cols=["l_quantity", "l_extendedprice", "l_discount"],
-        round_to=4,
     ).orderBy("l_returnflag")
 
 
@@ -1089,7 +1092,7 @@ def q40_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windowed import sessionized_event_stats
 
     ev = _t(spark, sf_dir, "events")
-    return sessionized_event_stats(ev, gap="30 minutes")
+    return sessionized_event_stats(ev)
 
 
 # Gap condition is strictly > : Spark merges session windows whose
@@ -1159,7 +1162,7 @@ def q37_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windowed import windowed_event_counts
 
     ev = _t(spark, sf_dir, "events")
-    return windowed_event_counts(ev, window="5 minutes")
+    return windowed_event_counts(ev)
 
 
 _Q37_SQL = """
@@ -1177,7 +1180,6 @@ def q34_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 5)
     return similarity.ivf_topk(
         queries_df, emb, query_id="vec_id", corpus_id="vec_id",
-        k=10, n_clusters=16, nprobe=2,
     )
 
 
@@ -1217,21 +1219,17 @@ def q30_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs(
         docs, text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+        verify_threshold=0.3,
     )
 
 
 def _minhash_lsh_sql(
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.3,
     table: str = "documents",
 ) -> str:
-    rpb = num_hashes // bands
+    rpb = dedup.MINHASH_NUM_HASHES // dedup.MINHASH_BANDS
     mins = ", ".join(
         f"min({hashing.minhash_value_sql('shingle', a, b)}) AS mh_{i}"
-        for i, (a, b) in enumerate(hashing.MINHASH_PARAMS[:num_hashes])
+        for i, (a, b) in enumerate(hashing.MINHASH_PARAMS[:dedup.MINHASH_NUM_HASHES])
     )
     band_selects = " UNION ALL ".join(
         f"SELECT doc_id, {bi} AS band, "
@@ -1239,11 +1237,11 @@ def _minhash_lsh_sql(
             f"CAST(mh_{bi * rpb + r} AS VARCHAR)" for r in range(rpb)
         )
         + " AS bucket FROM sig"
-        for bi in range(bands)
+        for bi in range(dedup.MINHASH_BANDS)
     )
     jac = "round(n_shared / (sa.n + sb.n - n_shared), 4)"
     return f"""
-WITH sh AS ({_shingle_cte(n, table)}),
+WITH sh AS ({_shingle_cte(dedup.MINHASH_N, table)}),
 sig AS (SELECT doc_id, {mins} FROM sh GROUP BY doc_id),
 bands AS ({band_selects}),
 cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -1259,7 +1257,7 @@ SELECT id_a, id_b, n_shared, {jac} AS jaccard
 FROM shared
 JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
-WHERE {jac} >= {threshold}
+WHERE {jac} >= 0.3
 """
 
 
@@ -1272,14 +1270,14 @@ def q48_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+        verify_threshold=0.3,
     )
     comp = dedup.connected_components(pairs)
     return comp.select(F.col("id").alias("doc_id"), "component")
 
 
 def _neardup_cluster_sql() -> str:
-    pairs = _minhash_lsh_sql(n=3, num_hashes=8, bands=4, threshold=0.3)
+    pairs = _minhash_lsh_sql()
     return f"""
 WITH RECURSIVE pairs AS ({pairs}),
 edges AS (SELECT id_a AS a, id_b AS b FROM pairs
@@ -1300,7 +1298,7 @@ def q49_neardup_dedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+        verify_threshold=0.3,
     )
     return dedup.neardup_dedup_keep_first(docs, pairs, id_col="doc_id")
 
@@ -1341,7 +1339,7 @@ def q50_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = injected.filter(F.col("doc_id") % 97 != 0)
     benchmark = injected.filter(F.col("doc_id") % 97 == 0)
     return dedup.cross_corpus_overlap(
-        corpus, benchmark, text_col="text", id_col="doc_id", n=8
+        corpus, benchmark, text_col="text", id_col="doc_id"
     )
 
 
@@ -1391,7 +1389,7 @@ def q69_bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = injected.filter(F.col("doc_id") % 97 != 0)
     benchmark = injected.filter(F.col("doc_id") % 97 == 0)
     return dedup.bloom_cross_corpus_overlap(
-        corpus, benchmark, text_col="text", id_col="doc_id", n=8
+        corpus, benchmark, text_col="text", id_col="doc_id"
     )
 
 
@@ -1448,7 +1446,7 @@ def q70_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id")
 
 
-def _semantic_dedup_sql(threshold: float = 0.95) -> str:
+def _semantic_dedup_sql() -> str:
     def lit_vec(c: list[float]) -> str:
         return "[" + ", ".join(repr(x) for x in c) + "]"
 
@@ -1470,7 +1468,7 @@ assigned AS (SELECT vec_id, e, list_position(ds, list_max(ds)) AS cluster
 pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
           FROM assigned a JOIN assigned b
             ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-          WHERE {cos} >= {threshold}),
+          WHERE {cos} >= 0.95),
 edges AS (SELECT id_a AS a, id_b AS b FROM pairs UNION SELECT id_b, id_a FROM pairs),
 reach(id, r) AS (
   SELECT a, a FROM (SELECT DISTINCT a FROM edges)
@@ -1489,7 +1487,7 @@ def q51_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     rational idf so Spark and DuckDB doubles are bit-identical; see
     textstats.tfidf_top_terms)."""
     docs = _t(spark, sf_dir, "documents")
-    return textstats.tfidf_top_terms(docs, text_col="text", id_col="doc_id", k=5)
+    return textstats.tfidf_top_terms(docs, text_col="text", id_col="doc_id")
 
 
 def q52_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1546,7 +1544,7 @@ def q53_grouped_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
     out = ewma_partitioned(
         ev, value="value", key_cols=["user_id"],
-        order_by=["ts", "event_id"], alpha=0.3,
+        order_by=["ts", "event_id"],
     )
     return out.select(
         "user_id", "event_id", F.round(F.col("ewma"), 4).alias("ewma")
@@ -1589,7 +1587,7 @@ def q55_quantized_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 5)
     return similarity.quantized_topk(
-        queries_df, emb, query_id="vec_id", corpus_id="vec_id", k=10
+        queries_df, emb, query_id="vec_id", corpus_id="vec_id"
     )
 
 
@@ -1631,13 +1629,11 @@ def q56_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ngram_jaccard_capped_sql(
-    n: int = 2, threshold: float = 0.3, max_doc_freq: int = 50
-) -> str:
+def _ngram_jaccard_capped_sql() -> str:
     return f"""
-WITH sh0 AS ({_shingle_cte(n)}),
+WITH sh0 AS ({_shingle_cte(2)}),
 keep AS (SELECT shingle FROM sh0 GROUP BY shingle
-         HAVING count(*) <= {max_doc_freq}),
+         HAVING count(*) <= 50),
 sh AS (SELECT sh0.* FROM sh0 JOIN keep USING (shingle)),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
 shared AS (
@@ -1650,7 +1646,7 @@ SELECT id_a, id_b, n_shared,
 FROM shared
 JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
-WHERE round(n_shared / (sa.n + sb.n - n_shared), 4) >= {threshold}
+WHERE round(n_shared / (sa.n + sb.n - n_shared), 4) >= 0.3
 """
 
 
@@ -1660,7 +1656,7 @@ def q57_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate generation loops score high).  One (doc, gram) shuffle +
     one map-side-combinable doc aggregate."""
     docs = _t(spark, sf_dir, "documents")
-    return textstats.repetition_stats(docs, text_col="text", id_col="doc_id", n=2)
+    return textstats.repetition_stats(docs, text_col="text", id_col="doc_id")
 
 
 def q58_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1832,7 +1828,7 @@ def q65_fingerprint_decontamination(spark: SparkSession, sf_dir: str) -> DataFra
     ).orderBy("doc_id")
 
 
-def _fingerprint_decontam_sql(k: int = 4, window: int = 4) -> str:
+def _fingerprint_decontam_sql() -> str:
     th_cte = (
         f"SELECT doc_id, {hashing.token_hashes_sql('t')} AS th "
         f"FROM ({_TOKS_CTE})"
@@ -1840,12 +1836,12 @@ def _fingerprint_decontam_sql(k: int = 4, window: int = 4) -> str:
     return f"""
 WITH th AS ({th_cte}),
 gr AS (SELECT doc_id, list_transform(
-         range(1, greatest(len(th) - {k} + 2, 1)),
-         i -> {hashing.shingle_hash_sql('th', 'i', k)}) AS g FROM th),
+         range(1, greatest(len(th) - 4 + 2, 1)),
+         i -> {hashing.shingle_hash_sql('th', 'i', 4)}) AS g FROM th),
 fp AS (SELECT doc_id,
-         CASE WHEN len(g) >= {window}
-              THEN list_transform(range(1, len(g) - {window} + 2),
-                                  j -> list_min(g[j:j+{window}-1]))
+         CASE WHEN len(g) >= 4
+              THEN list_transform(range(1, len(g) - 4 + 2),
+                                  j -> list_min(g[j:j+4-1]))
               ELSE [list_min(g)] END AS fps
        FROM gr WHERE len(g) > 0),
 kept AS (SELECT DISTINCT doc_id, unnest(fps) AS fingerprint FROM fp),
@@ -1868,7 +1864,7 @@ def q66_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "span_start")
 
 
-def _duplicated_spans_sql(k: int = 20) -> str:
+def _duplicated_spans_sql() -> str:
     th_cte = (
         f"SELECT doc_id, {hashing.token_hashes_sql('t')} AS th FROM ({_TOKS_CTE})"
     )
@@ -1876,8 +1872,8 @@ def _duplicated_spans_sql(k: int = 20) -> str:
 WITH th AS ({th_cte}),
 p0 AS (
   SELECT doc_id, unnest(list_transform(
-           range(1, greatest(len(th) - {k} + 2, 1)),
-           i -> {{'pos': i - 1, 'h': {hashing.shingle_hash_sql('th', 'i', k)}}}
+           range(1, greatest(len(th) - {_SPAN_K} + 2, 1)),
+           i -> {{'pos': i - 1, 'h': {hashing.shingle_hash_sql('th', 'i', _SPAN_K)}}}
          )) AS g
   FROM th
 ),
@@ -1885,14 +1881,14 @@ p AS (SELECT doc_id, g.pos AS pos, g.h AS h FROM p0),
 dup AS (SELECT h FROM p GROUP BY h HAVING count(*) >= 2),
 d AS (SELECT p.doc_id, p.pos FROM p JOIN dup USING (h)),
 b AS (SELECT doc_id, pos,
-             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= {k}
+             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= {_SPAN_K}
                   THEN 0 ELSE 1 END AS brk
       FROM d),
 g AS (SELECT doc_id, pos,
              sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
       FROM b)
 SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-       CAST(max(pos) + {k} - 1 AS BIGINT) AS span_end,
+       CAST(max(pos) + {_SPAN_K} - 1 AS BIGINT) AS span_end,
        CAST(count(*) AS BIGINT) AS n_windows
 FROM g GROUP BY doc_id, grp ORDER BY doc_id, span_start
 """
@@ -1915,9 +1911,9 @@ def q67_strip_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _strip_spans_sql(k: int = 20) -> str:
+def _strip_spans_sql() -> str:
     return f"""
-WITH spans AS ({_duplicated_spans_sql(k)}),
+WITH spans AS ({_duplicated_spans_sql()}),
 sp AS (SELECT doc_id, list({{'s': span_start, 'e': span_end}}) AS spans
        FROM spans GROUP BY doc_id),
 t AS (
@@ -1977,7 +1973,7 @@ def q68_neardup_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     approx = dedup.minhash_lsh_pairs(
         docs, text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+        verify_threshold=0.3,
         hashes48=th48,
     )
     return dedup.pair_overlap_stats(approx, exact)
@@ -2029,7 +2025,7 @@ def q62_ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = InheritableThread(target=_build_exact)
     t.start()
     try:
-        centroids = similarity.train_ivf_centroids(emb, n_clusters=16, seed=7)
+        centroids = similarity.train_ivf_centroids(emb, n_clusters=16)
     finally:
         t.join()
     if "err" in exact_box:
@@ -2042,10 +2038,10 @@ def q62_ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "ivf": lambda: similarity.ivf_topk(
             queries_df, emb, query_id="vec_id", corpus_id="vec_id",
-            centroids=centroids, k=10, nprobe=2,
+            centroids=centroids,
         ),
         "int8": lambda: similarity.quantized_topk(
-            queries_df, emb, query_id="vec_id", corpus_id="vec_id", k=10
+            queries_df, emb, query_id="vec_id", corpus_id="vec_id"
         ),
     }
     panels = []
@@ -2204,7 +2200,7 @@ def q71_cross_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "span_start")
 
 
-def _common_spans_sql(k: int = 20, min_docs: int = 3) -> str:
+def _common_spans_sql() -> str:
     th_cte = (
         f"SELECT doc_id, {hashing.token_hashes_sql('t')} AS th FROM ({_TOKS_CTE})"
     )
@@ -2212,24 +2208,24 @@ def _common_spans_sql(k: int = 20, min_docs: int = 3) -> str:
 WITH th AS ({th_cte}),
 p0 AS (
   SELECT doc_id, unnest(list_transform(
-           range(1, greatest(len(th) - {k} + 2, 1)),
-           i -> {{'pos': i - 1, 'h': {hashing.shingle_hash_sql('th', 'i', k)}}}
+           range(1, greatest(len(th) - {_SPAN_K} + 2, 1)),
+           i -> {{'pos': i - 1, 'h': {hashing.shingle_hash_sql('th', 'i', _SPAN_K)}}}
          )) AS g
   FROM th
 ),
 p AS (SELECT doc_id, g.pos AS pos, g.h AS h FROM p0),
 bp AS (SELECT h FROM (SELECT DISTINCT h, doc_id FROM p)
-       GROUP BY h HAVING count(*) >= {min_docs}),
+       GROUP BY h HAVING count(*) >= {_SPAN_MIN_DOCS}),
 d AS (SELECT p.doc_id, p.pos FROM p JOIN bp USING (h)),
 b AS (SELECT doc_id, pos,
-             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= {k}
+             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= {_SPAN_K}
                   THEN 0 ELSE 1 END AS brk
       FROM d),
 g AS (SELECT doc_id, pos,
              sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
       FROM b)
 SELECT doc_id, CAST(min(pos) AS BIGINT) AS span_start,
-       CAST(max(pos) + {k} - 1 AS BIGINT) AS span_end,
+       CAST(max(pos) + {_SPAN_K} - 1 AS BIGINT) AS span_end,
        CAST(count(*) AS BIGINT) AS n_windows
 FROM g GROUP BY doc_id, grp ORDER BY doc_id, span_start
 """
@@ -2252,9 +2248,9 @@ def q72_strip_cross_doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _strip_common_spans_sql(k: int = 20, min_docs: int = 3) -> str:
+def _strip_common_spans_sql() -> str:
     return f"""
-WITH spans AS ({_common_spans_sql(k, min_docs)}),
+WITH spans AS ({_common_spans_sql()}),
 sp AS (SELECT doc_id, list({{'s': span_start, 'e': span_end}}) AS spans
        FROM spans GROUP BY doc_id),
 t AS (
@@ -2288,20 +2284,20 @@ def q73_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+        verify_threshold=0.3,
     )
     return dedup.leakage_free_split(docs, pairs, id_col="doc_id")
 
 
-def _leakage_free_split_sql(seed: str = "seed0", eval_hex: str = "1a") -> str:
+def _leakage_free_split_sql() -> str:
     return f"""
 WITH RECURSIVE comp AS ({_neardup_cluster_sql()}),
 r AS (SELECT d.doc_id,
              coalesce(c.component, d.doc_id) AS split_key
       FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id)
 SELECT doc_id, split_key,
-       CASE WHEN substr(md5('{seed}' || ':' || CAST(split_key AS VARCHAR)), 1, 2)
-                 < '{eval_hex}'
+       CASE WHEN substr(md5('seed0' || ':' || CAST(split_key AS VARCHAR)), 1, 2)
+                 < '1a'
             THEN 'eval' ELSE 'train' END AS split
 FROM r
 """
@@ -2328,7 +2324,7 @@ def q74_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sel.select("doc_id", "stopword_ratio", "n_tokens", "cum_tokens")
 
 
-def _token_budget_sql(budget: int = 10_000) -> str:
+def _token_budget_sql() -> str:
     return f"""
 WITH s AS ({_Q16_SQL}),
 c AS (SELECT doc_id, stopword_ratio, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -2336,7 +2332,7 @@ c AS (SELECT doc_id, stopword_ratio, CAST(n_tokens AS BIGINT) AS n_tokens,
                   AS BIGINT) AS cum_tokens
       FROM s)
 SELECT doc_id, stopword_ratio, n_tokens, cum_tokens
-FROM c WHERE cum_tokens <= {budget}
+FROM c WHERE cum_tokens <= 10000
 """
 
 
@@ -2359,7 +2355,7 @@ def q75_source_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _source_quota_sql(n: int = 20) -> str:
+def _source_quota_sql() -> str:
     return f"""
 WITH s AS ({_Q16_SQL}),
 r AS (SELECT d.doc_id, d.source, s.stopword_ratio,
@@ -2368,7 +2364,7 @@ r AS (SELECT d.doc_id, d.source, s.stopword_ratio,
                AS rank_in_group
       FROM documents d JOIN s ON d.doc_id = s.doc_id)
 SELECT doc_id, source, stopword_ratio, rank_in_group
-FROM r WHERE rank_in_group <= {n}
+FROM r WHERE rank_in_group <= 20
 """
 
 
@@ -2383,12 +2379,12 @@ def q76_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % 10 != 7)
     return dedup.incremental_neardup_admission(
         batch, corpus, text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+        verify_threshold=0.3,
     )
 
 
 def _incremental_neardup_sql() -> str:
-    pairs = _minhash_lsh_sql(n=3, num_hashes=8, bands=4, threshold=0.3)
+    pairs = _minhash_lsh_sql()
     return f"""
 WITH pairs AS ({pairs}),
 cross_pairs AS (
@@ -2444,7 +2440,7 @@ def q78_stratified_digest_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stratified_digest_sql(
-    fractions: dict[str, float], seed: str = "seed0"
+    fractions: dict[str, float]
 ) -> str:
     # bounds via selection._digest_bound so the oracle shares the
     # operator's f >= 1.0 full-keep clamp ('g' sorts above all hex)
@@ -2455,7 +2451,7 @@ def _stratified_digest_sql(
     return f"""
 SELECT doc_id, lang, source
 FROM documents
-WHERE substr(md5('{seed}' || ':' || lang || ':' || CAST(doc_id AS VARCHAR)), 1, 6)
+WHERE substr(md5('seed0' || ':' || lang || ':' || CAST(doc_id AS VARCHAR)), 1, 6)
       < CASE {case} ELSE '000000' END
 """
 
@@ -2575,7 +2571,7 @@ def q81_cross_source_neardup_matrix(
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, text_col="text", id_col="doc_id",
-        n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+        verify_threshold=0.3,
     )
     return dedup.cross_source_neardup_matrix(
         pairs, docs, id_col="doc_id", source_col="source"
@@ -2616,11 +2612,11 @@ def q82_ivf_indexed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 5)
     return similarity.ivf_probe_topk(
         queries_df, index, _SEM_CENTROIDS,
-        query_id="vec_id", k=10, nprobe=2,
+        query_id="vec_id",
     ).orderBy("query_id", "rank")
 
 
-def _ivf_indexed_ann_sql(k: int = 10, nprobe: int = 2) -> str:
+def _ivf_indexed_ann_sql() -> str:
     def lit_vec(c: list[float]) -> str:
         return "[" + ", ".join(repr(x) for x in c) + "]"
 
@@ -2644,7 +2640,7 @@ probed AS (SELECT query_id, qv, cell AS cluster
                               unnest([{ds_q}]) AS d,
                               generate_subscripts([{ds_q}], 1) AS cell
                        FROM q))
-           WHERE rn <= {nprobe}),
+           WHERE rn <= {similarity.NPROBE}),
 scored AS (SELECT DISTINCT query_id, neighbor_id,
                   round(list_dot_product(qv, cv) /
                         (sqrt(list_dot_product(qv, qv)) *
@@ -2654,7 +2650,7 @@ scored AS (SELECT DISTINCT query_id, neighbor_id,
 SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank
 FROM (SELECT *, row_number() OVER (PARTITION BY query_id
         ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM scored)
-WHERE rank <= {k}
+WHERE rank <= {similarity.TOP_K}
 ORDER BY query_id, rank
 """
 
@@ -3102,7 +3098,7 @@ def q90_top_share_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _top_share_sql(share: float = 0.5) -> str:
+def _top_share_sql() -> str:
     return f"""
 WITH s AS ({_Q16_SQL}),
 r AS (SELECT d.doc_id, d.source, s.stopword_ratio,
@@ -3115,7 +3111,7 @@ r AS (SELECT d.doc_id, d.source, s.stopword_ratio,
       FROM documents d JOIN s ON d.doc_id = s.doc_id)
 SELECT doc_id, source, stopword_ratio, n_tokens, cum_tokens, source_tokens
 FROM r
-WHERE cum_tokens <= {share} * source_tokens
+WHERE cum_tokens <= 0.5 * source_tokens
 ORDER BY doc_id
 """
 
@@ -3274,7 +3270,7 @@ def q94_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     user for the first-event aggregate, count-distinct per cell."""
     ev = _t(spark, sf_dir, "events")
     return funnels.retention_cohorts(
-        ev, user_col="user_id", ts_col="ts", epoch="2024-01-01"
+        ev, user_col="user_id", ts_col="ts"
     ).orderBy("cohort_week", "week_offset")
 
 
@@ -3412,12 +3408,12 @@ def _ensemble_sources(
     return docs, {
         "minhash": dedup.minhash_lsh_pairs(
             docs, text_col="text", id_col="doc_id",
-            n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+            verify_threshold=0.3,
             hashes48=th48,
         ),
         "simhash": dedup.simhash_neardup_pairs(
             docs, text_col="text", id_col="doc_id",
-            bits=32, band_bits=8, max_hamming=3,
+            max_hamming=3,
             hashes48=th48,
         ),
         "embedding": similarity.embedding_neardup_pairs(
@@ -3434,7 +3430,7 @@ def _ensemble_cte_sql() -> str:
     applied dedup): the three method pair sets, the adjudicated
     provenance table, and the recursive-closure components over the
     union."""
-    mh = _minhash_lsh_sql(n=3, num_hashes=8, bands=4, threshold=0.3)
+    mh = _minhash_lsh_sql()
     sim_fp = _simhash_sql()
     return f"""
 mh_pairs AS ({mh}),
@@ -3550,16 +3546,12 @@ def q99_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_snap,
         text_col="text",
         id_col="doc_id",
-        n=3,
-        num_hashes=8,
-        bands=4,
-        verify_threshold=0.3,
     ).orderBy("doc_id")
 
 
 def _incremental_refresh_sql() -> str:
     pairs = _minhash_lsh_sql(
-        n=3, num_hashes=8, bands=4, threshold=0.3, table="new_snap"
+        table="new_snap"
     )
     return f"""
 WITH new_snap AS (
@@ -3628,8 +3620,6 @@ def q100_target_importance_select(
         text_col="text",
         id_col="doc_id",
         k=100,
-        num_buckets=1024,
-        max_n=2,
         # subset-target fast path: one conditional-count fit pass
         # instead of hashing the corpus once per distribution
         target_predicate=F.col("lang") == "en",
@@ -3702,13 +3692,12 @@ def q101_target_coverage_audit(
         id_col="doc_id",
         k=100,
         num_buckets=1024,
-        max_n=2,
         target_predicate=F.col("lang") == "en",
     )
 
 
 def _target_coverage_sql(
-    k: int = 100, num_buckets: int = 1024, seed: str = "seed0"
+    k: int = 100, num_buckets: int = 1024
 ) -> str:
     """DuckDB twin of q101: q100's fit/score/top-k CTEs verbatim
     (same hashes, same smoothing, same rounded-score ordering), the
@@ -3756,7 +3745,7 @@ sel_aff AS (
 ),
 sel_dig AS (
   SELECT doc_id FROM documents
-  ORDER BY md5('{seed}' || ':' || CAST(doc_id AS VARCHAR)) LIMIT {k}
+  ORDER BY md5('seed0' || ':' || CAST(doc_id AS VARCHAR)) LIMIT {k}
 ),
 cb_aff AS (SELECT DISTINCT b FROM g JOIN sel_aff USING (doc_id)),
 cb_dig AS (SELECT DISTINCT b FROM g JOIN sel_dig USING (doc_id))
@@ -3817,9 +3806,7 @@ def q103_cluster_balanced_sample(
     ).orderBy("cell", "rank_in_cell")
 
 
-def _cluster_sample_sql(
-    n_per_cell: int = 20, seed: str = "seed0"
-) -> str:
+def _cluster_sample_sql() -> str:
     """DuckDB twin of q103: the q70 oracle's assignment expression
     (list_position over list_dot_product against the same centroid
     literals), the q77 digest key, a window quota."""
@@ -3837,11 +3824,11 @@ assigned AS (SELECT vec_id, list_position(ds, list_max(ds)) AS cell
 ranked AS (SELECT vec_id, cell,
                   row_number() OVER (
                     PARTITION BY cell
-                    ORDER BY md5('{seed}' || ':' || CAST(vec_id AS VARCHAR))
+                    ORDER BY md5('seed0' || ':' || CAST(vec_id AS VARCHAR))
                   ) AS rk
            FROM assigned)
 SELECT vec_id, CAST(cell AS INT) AS cell, CAST(rk AS INT) AS rank_in_cell
-FROM ranked WHERE rk <= {n_per_cell}
+FROM ranked WHERE rk <= 20
 ORDER BY cell, rank_in_cell
 """
 
@@ -3891,7 +3878,7 @@ def q104_strip_contamination(
     ).orderBy("doc_id")
 
 
-def _strip_contamination_sql(k: int = 8) -> str:
+def _strip_contamination_sql() -> str:
     """DuckDB twin of q104: q50's injection CTE, q71's positioned
     windows + island merge (windows restricted to those in the
     benchmark's hash set), q72's strip + md5 pin."""
@@ -3910,8 +3897,8 @@ WITH injected AS (
 th AS ({th_cte}),
 p0 AS (
   SELECT doc_id, unnest(list_transform(
-           range(1, greatest(len(th) - {k} + 2, 1)),
-           i -> {{'pos': i - 1, 'h': {hashing.shingle_hash_sql('th', 'i', k)}}}
+           range(1, greatest(len(th) - 8 + 2, 1)),
+           i -> {{'pos': i - 1, 'h': {hashing.shingle_hash_sql('th', 'i', 8)}}}
          )) AS g
   FROM th
 ),
@@ -3920,14 +3907,14 @@ ev AS (SELECT DISTINCT h FROM p WHERE doc_id % 97 = 0),
 d AS (SELECT p.doc_id, p.pos FROM p JOIN ev USING (h)
       WHERE p.doc_id % 97 <> 0),
 b AS (SELECT doc_id, pos,
-             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= {k}
+             CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 8
                   THEN 0 ELSE 1 END AS brk
       FROM d),
 g AS (SELECT doc_id, pos,
              sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
       FROM b),
 spans AS (
-  SELECT doc_id, min(pos) AS span_start, max(pos) + {k} - 1 AS span_end
+  SELECT doc_id, min(pos) AS span_start, max(pos) + 8 - 1 AS span_end
   FROM g GROUP BY doc_id, grp
 ),
 sp AS (SELECT doc_id, list({{'s': span_start, 'e': span_end}}) AS spans
@@ -3969,7 +3956,7 @@ def q105_token_window_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _chunks_sql(window: int = 64, stride: int = 48) -> str:
+def _chunks_sql(window: int, stride: int) -> str:
     return f"""
 WITH t AS ({_TOKS_CTE}),
 d AS (SELECT doc_id, t, len(t) AS n FROM t WHERE len(t) > 0),
@@ -3987,7 +3974,7 @@ FROM c
 """
 
 
-_Q105_SQL = _chunks_sql()
+_Q105_SQL = _chunks_sql(64, 48)
 
 
 def q106_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4121,13 +4108,11 @@ def q110_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _containment_sql(
-    n: int = 3, threshold: float = 0.5, cap: int = 50
-) -> str:
+def _containment_sql() -> str:
     return f"""
-WITH sh0 AS ({_shingle_cte(n)}),
+WITH sh0 AS ({_shingle_cte(3)}),
 keep AS (SELECT shingle FROM sh0 GROUP BY shingle
-         HAVING count(*) <= {cap}),
+         HAVING count(*) <= 50),
 sh AS (SELECT sh0.doc_id, sh0.shingle FROM sh0 JOIN keep USING (shingle)),
 sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
 shared AS (
@@ -4142,7 +4127,7 @@ SELECT id_a, id_b, n_shared,
 FROM shared
 JOIN sizes sa ON sa.doc_id = id_a
 JOIN sizes sb ON sb.doc_id = id_b
-WHERE round(greatest(n_shared / sa.n, n_shared / sb.n), 4) >= {threshold}
+WHERE round(greatest(n_shared / sa.n, n_shared / sb.n), 4) >= 0.5
 """
 
 
@@ -4241,9 +4226,9 @@ def q113_duplicate_chunk_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dup_chunk_sql(window: int = 8) -> str:
+def _dup_chunk_sql() -> str:
     return f"""
-WITH c AS ({_chunks_sql(window, window)}),
+WITH c AS ({_chunks_sql(8, 8)}),
 h AS (SELECT doc_id, md5(chunk_text) AS h FROM c),
 occ AS (SELECT h, count(*) AS occ FROM h GROUP BY 1)
 SELECT doc_id,
@@ -4266,8 +4251,7 @@ def q114_source_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift detector a curation pipeline watches across crawls."""
     docs = _t(spark, sf_dir, "documents")
     return textstats.source_quality_profile(
-        docs, text_col="text", source_col="source",
-        metric="stopword_ratio", k=3.0,
+        docs, text_col="text", source_col="source"
     )
 
 
@@ -4352,7 +4336,7 @@ def q116_encoding_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     return textstats.encoding_anomaly_scores(
-        corrupted, text_col="text", id_col="doc_id", threshold=0.001
+        corrupted, text_col="text", id_col="doc_id"
     )
 
 
@@ -4857,8 +4841,6 @@ def _hybrid_rrf_sql(
     k: int = 10,
     k_inner: int = 20,
     k_rrf: int = 60,
-    k1: float = 1.2,
-    b: float = 0.75,
     n_q_tokens: int = 8,
     query_pred: str = "doc_id < 3",
 ) -> str:
@@ -4867,7 +4849,8 @@ def _hybrid_rrf_sql(
     JOIN fusion whose score is the same fixed-order two-term double
     expression the Spark side folds (absent rank → 0 term)."""
     body = _bm25_ctes(
-        k1=k1, b=b, n_q_tokens=n_q_tokens, query_pred=query_pred,
+        k1=retrieval.BM25_K1, b=retrieval.BM25_B,
+        n_q_tokens=n_q_tokens, query_pred=query_pred,
         source="corpus",
     )
     return f"""
@@ -5009,7 +4992,7 @@ CATALOG: dict[str, QueryDef] = {
     ),
     "q51_tfidf_top_terms": QueryDef(
         q51_tfidf_top_terms,
-        textstats.tfidf_top_terms_sql(k=5),
+        textstats.tfidf_top_terms_sql(),
         "TF-IDF top terms per doc",
     ),
     "q52_stratified_sample": QueryDef(
@@ -5032,7 +5015,7 @@ CATALOG: dict[str, QueryDef] = {
     ),
     "q57_repetition_stats": QueryDef(
         q57_repetition_stats,
-        textstats.repetition_stats_sql(n=2),
+        textstats.repetition_stats_sql(),
         "repeated-n-gram quality metrics",
     ),
     "q58_pii_redaction": QueryDef(
@@ -5046,7 +5029,7 @@ CATALOG: dict[str, QueryDef] = {
     ),
     "q61_sequence_packing": QueryDef(
         q61_sequence_packing,
-        packing.pack_sequences_sql(budget=256),
+        packing.pack_sequences_sql(),
         "concat-and-chunk sequence packing",
     ),
     "q62_ann_recall_panel": QueryDef(

@@ -62,14 +62,12 @@ def fetch_urls(
     df: DataFrame,
     url_col: str,
     transport: Transport | None = None,
-    out_col: str = "body",
-    error_col: str = "fetch_error",
     num_partitions: int | None = None,
     max_attempts: int = 1,
     timeout: float | None = None,
 ) -> DataFrame:
     """Fetch every row's ``url_col`` through ``transport``, appending
-    ``out_col`` (binary payload, NULL on failure) and ``error_col``
+    ``body`` (binary payload, NULL on failure) and ``fetch_error``
     (NULL on success, ``Type: message`` on failure).  All input
     columns pass through unchanged.
 
@@ -96,8 +94,8 @@ def fetch_urls(
     schema = StructType(
         list(df.schema.fields)
         + [
-            StructField(out_col, BinaryType()),
-            StructField(error_col, StringType()),
+            StructField("body", BinaryType()),
+            StructField("fetch_error", StringType()),
         ]
     )
 
@@ -122,8 +120,8 @@ def fetch_urls(
                 bodies.append(body)
                 errors.append(err)
             out = pdf.copy()
-            out[out_col] = pd.Series(bodies, index=pdf.index, dtype=object)
-            out[error_col] = pd.Series(errors, index=pdf.index, dtype=object)
+            out["body"] = pd.Series(bodies, index=pdf.index, dtype=object)
+            out["fetch_error"] = pd.Series(errors, index=pdf.index, dtype=object)
             yield out
 
     src = df.repartition(num_partitions) if num_partitions else df

@@ -16,24 +16,21 @@ from pyspark.sql import functions as F
 
 def windowed_event_counts(
     events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "5 minutes",
     slide: str | None = None,
-    watermark: str | None = "10 minutes",
 ) -> DataFrame:
-    """Tumbling (or sliding) event-time counts + value sums per
-    event_type.
+    """Tumbling (or sliding) 5-minute event-time counts + value sums
+    per event_type over the ``ts`` column.
 
-    Works on both batch and streaming DataFrames: on a stream the
-    watermark bounds state (windows older than max(event time) −
-    watermark are finalized and dropped); in batch Spark ignores the
-    watermark and computes every window.  Window starts align to the
-    epoch, matching SQL ``time_bucket`` semantics.
+    Works on both batch and streaming DataFrames: on a stream a
+    10-minute watermark bounds state (windows older than max(event
+    time) − 10 minutes are finalized and dropped); in batch Spark
+    computes every window.  Window starts align to the epoch, matching
+    SQL ``time_bucket`` semantics.
     """
     df = events
-    if watermark is not None and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    win = F.window(F.col(ts_col), window, slide or window)
+    if df.isStreaming:
+        df = df.withWatermark("ts", "10 minutes")
+    win = F.window(F.col("ts"), "5 minutes", slide or "5 minutes")
     return (
         df.groupBy(win, "event_type")
         .agg(
@@ -49,15 +46,11 @@ def windowed_event_counts(
     )
 
 
-def sessionized_event_stats(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str | None = "1 hour",
-) -> DataFrame:
-    """Session windows: events of one key closer than ``gap`` merge
-    into one session (Spark ``session_window``; batch and streaming).
+def sessionized_event_stats(events: DataFrame) -> DataFrame:
+    """Session windows: events of one ``user_id`` closer than 30
+    minutes (by ``ts``) merge into one session (Spark
+    ``session_window``; batch and streaming, a 1-hour watermark on a
+    stream).
 
     Session start = first event; per-session count and value sum.  The
     batch form is oracle-expressible as the classic gaps-and-islands
@@ -65,17 +58,17 @@ def sessionized_event_stats(
     exactly how q40's DuckDB twin verifies it.
     """
     df = events
-    if watermark is not None and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    win = F.session_window(F.col(ts_col), gap)
+    if df.isStreaming:
+        df = df.withWatermark("ts", "1 hour")
+    win = F.session_window(F.col("ts"), "30 minutes")
     return (
-        df.groupBy(win, key)
+        df.groupBy(win, "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
         )
         .select(
-            F.col(key),
+            F.col("user_id"),
             F.col("session_window.start").alias("session_start"),
             "n_events",
             "total_value",

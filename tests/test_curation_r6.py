@@ -168,12 +168,11 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
 
     queries = emb.filter(F.col("vec_id") < 5)
     mem = ivf_probe_topk(
-        queries, index, _SEM_CENTROIDS, query_id="vec_id", k=10, nprobe=2
+        queries, index, _SEM_CENTROIDS, query_id="vec_id"
     )
     disk_index = spark.read.parquet(path)
     disk = ivf_probe_topk(
-        queries, disk_index, _SEM_CENTROIDS, query_id="vec_id", k=10,
-        nprobe=2,
+        queries, disk_index, _SEM_CENTROIDS, query_id="vec_id",
     )
     assert sorted(map(tuple, mem.collect())) == sorted(
         map(tuple, disk.collect())

@@ -198,7 +198,7 @@ def test_golden_pipeline_from_urls_matches_staged(spark, tmp_path):
     )
 
     wh_fetched = Warehouse(spark, str(tmp_path / "wh_fetched"))
-    rss_fetched = fetch_rss_docs(feeds, url_col="feed")
+    rss_fetched = fetch_rss_docs(feeds)
     audio_fetched = (
         fetch_urls(audio_urls, "url")
         .filter(F.col("fetch_error").isNull())

@@ -30,7 +30,6 @@ def _refresh(spark, old_rows, new_rows, **kw):
         _snap(spark, new_rows),
         text_col="text",
         id_col="doc_id",
-        verify_threshold=0.3,
         **kw,
     ).collect()
     return {r["doc_id"]: (r["status"], r["n_matches"], r["admitted"]) for r in out}

@@ -91,12 +91,12 @@ def test_containment_pairs_parity(corpus):
 def test_admission_parity(corpus):
     new = corpus.filter("doc_id >= 100 or doc_id in (2, 5)")
     old = corpus.filter("doc_id < 100 and doc_id not in (2, 5)")
-    kw = dict(text_col="text", id_col="doc_id", n=2, num_hashes=8,
-              bands=4, verify_threshold=0.2)
     # (doc_id, n_matches, admitted): docs 2 and 5 near-dup doc 1 in
     # the corpus; the boilerplate docs only match each other, and new
     # docs are never compared with each other
-    assert _rows(dedup.incremental_neardup_admission(new, old, **kw)) == [
+    assert _rows(dedup.incremental_neardup_admission(
+        new, old, text_col="text", id_col="doc_id", n=2, verify_threshold=0.2,
+    )) == [
         (2, 1, 0), (5, 1, 0),
     ] + [(d, 0, 1) for d in range(100, 108)]
 
@@ -128,19 +128,18 @@ def test_affinity_scores_parity(corpus):
     # predicate form, both weight forms
     for form, want in expected.items():
         assert _rows(selection.target_affinity_scores(
-            corpus, None, "text", "doc_id", num_buckets=64, max_n=2,
+            corpus, None, "text", "doc_id", num_buckets=64,
             target_predicate=corpus.lang == "en", weight_form=form,
         )) == want
     # separate-target-frame form: the same slice, the same scores
     tgt = corpus.filter("lang = 'en'")
     assert _rows(selection.target_affinity_scores(
-        corpus, tgt, "text", "doc_id", num_buckets=64, max_n=2,
+        corpus, tgt, "text", "doc_id", num_buckets=64,
     )) == _DIFFERENCE_SCORES
 
 
 def test_coverage_audit_parity(corpus):
-    kw = dict(text_col="text", id_col="doc_id", k=3, num_buckets=64,
-              max_n=2)
+    kw = dict(text_col="text", id_col="doc_id", k=3, num_buckets=64)
     assert _rows(selection.target_coverage_audit(
         corpus, target_predicate=corpus.lang == "en", **kw
     )) == [("affinity", 13, 41, 0.317073), ("digest", 14, 41, 0.341463)]
@@ -166,7 +165,7 @@ def test_embedding_neardup_broadcast_vs_shuffle_parity(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     planes = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(4)]
     got = _rows(similarity.embedding_neardup_pairs(
-        df, id_col="vec_id", vec_col="embedding", planes=planes,
+        df, id_col="vec_id", planes=planes,
         threshold=0.98,
     ))
     below_one = {0, 8, 18, 20, 26, 34, 40, 42, 46, 54, 74, 92, 94, 100,

@@ -162,26 +162,24 @@ def test_shared_token_hash_scan_parity(spark, sf_dir):
 
     base_mh = sorted(
         map(tuple, minhash_lsh_pairs(
-            docs, "text", "doc_id", n=3, num_hashes=8, bands=4,
-            verify_threshold=0.3,
+            docs, "text", "doc_id", verify_threshold=0.3,
         ).collect())
     )
     shared_mh = sorted(
         map(tuple, minhash_lsh_pairs(
-            docs, "text", "doc_id", n=3, num_hashes=8, bands=4,
-            verify_threshold=0.3, hashes48=th48,
+            docs, "text", "doc_id", verify_threshold=0.3, hashes48=th48,
         ).collect())
     )
     assert base_mh == shared_mh and base_mh
 
     base_sh = sorted(
         map(tuple, simhash_neardup_pairs(
-            docs, "text", "doc_id", bits=32, band_bits=8, max_hamming=3,
+            docs, "text", "doc_id", max_hamming=3,
         ).collect())
     )
     shared_sh = sorted(
         map(tuple, simhash_neardup_pairs(
-            docs, "text", "doc_id", bits=32, band_bits=8, max_hamming=3,
+            docs, "text", "doc_id", max_hamming=3,
             hashes48=th48,
         ).collect())
     )
@@ -248,16 +246,14 @@ def test_shared_scan_with_prefolded_shingles_parity(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     base = sorted(
         map(tuple, minhash_lsh_pairs(
-            docs, "text", "doc_id", n=3, num_hashes=8, bands=4,
-            verify_threshold=0.3,
+            docs, "text", "doc_id", verify_threshold=0.3,
         ).collect())
     )
     th48_match = shared_token_hash48(docs, "text", "doc_id", shingle_n=3)
     assert "_h32s3" in th48_match.columns
     got = sorted(
         map(tuple, minhash_lsh_pairs(
-            docs, "text", "doc_id", n=3, num_hashes=8, bands=4,
-            verify_threshold=0.3, hashes48=th48_match,
+            docs, "text", "doc_id", verify_threshold=0.3, hashes48=th48_match,
         ).collect())
     )
     assert got == base and base

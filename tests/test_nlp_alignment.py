@@ -194,7 +194,7 @@ def test_prefix_sum_spans_contiguous(spark, lengths):
     rows = [(1, i, n) for i, n in enumerate(lengths)]
     df = spark.createDataFrame(rows, "ep long, idx int, _len int")
     out = (
-        prefix_sum_spans(df, "_len", ["ep"], ["idx"], sep_len=1)
+        prefix_sum_spans(df, "_len", ["ep"], ["idx"])
         .orderBy("idx")
         .collect()
     )

@@ -14,12 +14,21 @@ not.
 them, each with its reason.  Anything else this test reports does no
 work for the system: delete it together with its tests.
 
-The same holds for switches: every package parameter with a ``bool``
-default must get the other value, by keyword or by position, from
-some call outside ``tests/``, or its second branch runs only under
-test.  A bare name bound to the calling function's own switch passes
-that switch through: it counts only if that switch is flipped.
-``KEEP_SWITCHES`` lists the exceptions, each with its reason.
+The same holds for switches, the package parameters with a literal
+default (``bool``, ``int``, ``float`` or ``str``, written in place or
+as a package constant).  A switch must get another value, by keyword
+or by position, from some call:
+
+* a ``bool`` from a call outside ``tests/``, or its second branch runs
+  only under test;
+* any other literal from any call, tests included: a test that sweeps
+  ``k`` or a threshold uses that parameter as a real input.  With one
+  value in use, the value belongs in the code as a constant.
+
+A bare name bound to the calling function's own switch with the same
+default passes that switch through: it counts only if that switch
+gets another value.  ``KEEP_SWITCHES`` lists the exceptions, each with
+its reason.
 
 The how-to docs (``DOCS``) may name only ``tools/`` and ``examples/``
 scripts and package modules that exist.
@@ -57,7 +66,18 @@ KEEP_SWITCHES = {
         "replays the reference's sentence_index-only join (J2)",
     "entity_sentiment_proportions.bug_compatible":
         "replays the reference's sentence_index-only join (J2)",
+    # The benchmark's curation trace names the MinHash shape by keyword
+    # (perfbench/curation.py); the defaults are dedup.MINHASH_*.
+    "minhash_bands.n": "perfbench passes it by name",
+    "minhash_bands.num_hashes": "perfbench passes it by name",
+    "minhash_bands.bands": "perfbench passes it by name",
+    "minhash_lsh_pairs.num_hashes": "perfbench passes it by name",
+    "minhash_lsh_pairs.bands": "perfbench passes it by name",
+    # A deployment setting: fetch_urls binds it through functools.partial.
+    "urllib_transport.timeout": "per-deployment fetch timeout",
 }
+
+LITERALS = (bool, int, float, str)
 
 
 def _py_files(path):
@@ -164,16 +184,50 @@ def test_docs_name_only_existing_tools():
     assert not missing, f"docs name deleted files: {missing}"
 
 
-def _switches(func):
-    """``{param: default}`` for a function's ``bool``-default params,
+def _literal(node, constants):
+    """``(True, value)`` when ``node`` is a literal of ``LITERALS`` or
+    names a package constant bound to one, else ``(False, None)``."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, LITERALS):
+        return True, node.value
+    name = (node.id if isinstance(node, ast.Name) else
+            node.attr if isinstance(node, ast.Attribute) else None)
+    if name in constants:
+        return True, constants[name]
+    return False, None
+
+
+def _same(a, b):
+    return type(a) is type(b) and a == b
+
+
+def _constants(package):
+    """``{name: value}`` for module-level package names bound to a
+    literal once (a name bound in several places is left out)."""
+    found = defaultdict(list)
+    for path in _py_files(package):
+        for stmt in ast.parse(path.read_text(), filename=str(path)).body:
+            target = (stmt.targets[0] if isinstance(stmt, ast.Assign)
+                      and len(stmt.targets) == 1 else
+                      stmt.target if isinstance(stmt, ast.AnnAssign) else None)
+            if (isinstance(target, ast.Name) and isinstance(stmt.value, ast.Constant)
+                    and isinstance(stmt.value.value, LITERALS)):
+                found[target.id].append(stmt.value.value)
+    return {name: values[0] for name, values in found.items() if len(values) == 1}
+
+
+def _switches(func, constants):
+    """``{param: default}`` for a function's literal-default params,
     and its positional parameter names (``self``/``cls`` dropped)."""
     args = func.args
     positional = [a.arg for a in [*args.posonlyargs, *args.args]]
     pairs = [*zip(positional[len(positional) - len(args.defaults):],
                   args.defaults),
              *((a.arg, d) for a, d in zip(args.kwonlyargs, args.kw_defaults))]
-    switches = {name: d.value for name, d in pairs
-                if isinstance(d, ast.Constant) and isinstance(d.value, bool)}
+    switches = {}
+    for name, default in pairs:
+        is_literal, value = _literal(default, constants)
+        if is_literal:
+            switches[name] = value
     if positional[:1] in (["self"], ["cls"]):
         positional = positional[1:]
     return switches, positional
@@ -185,23 +239,26 @@ def _params(func):
 
 
 @lru_cache(maxsize=None)
-def switch_graph():
-    """``(switches, flipped, through)``.  ``switches`` maps
-    ``"function.param"`` to its default; ``flipped`` holds the switches
-    some call outside ``tests/`` passes another value; ``through`` maps
-    an enclosing function's switch to the switches its calls pass it
-    to unchanged."""
+def switch_graph(root=ROOT):
+    """``(switches, flipped, overridden, through)`` for the package
+    under ``root``.  ``switches`` maps ``"function.param"`` to its
+    default; ``flipped`` holds the switches some call outside
+    ``tests/`` passes another value, ``overridden`` those some call
+    anywhere does; ``through`` maps an enclosing function's switch to
+    the switches its calls pass it to unchanged."""
+    package = root / PACKAGE.name
+    constants = _constants(package)
     switches, positional = {}, defaultdict(list)
-    for path in _py_files(PACKAGE):
+    for path in _py_files(package):
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                found, names = _switches(node)
+                found, names = _switches(node, constants)
                 positional[node.name].append(names)
                 switches.update({f"{node.name}.{k}": v
                                  for k, v in found.items()})
-    flipped, through = set(), defaultdict(set)
+    flipped, overridden, through = set(), set(), defaultdict(set)
 
-    def passed(call, enclosing):
+    def passed(call, enclosing, in_tests):
         func = call.func
         callee = getattr(func, "id", None) or getattr(func, "attr", None)
         args = [*((p, a) for names in positional.get(callee, ())
@@ -217,43 +274,66 @@ def switch_graph():
             if outer is not None:
                 source = f"{outer.name}.{value.id}"
                 if source in switches:
-                    through[source].add(key)
-                    continue
-            if not (isinstance(value, ast.Constant)
-                    and value.value == switches[key]):
-                flipped.add(key)
+                    if _same(switches[source], switches[key]):
+                        through[source].add(key)
+                        continue
+                    value = ast.Constant(switches[source])
+            is_literal, literal = _literal(value, constants)
+            if not (is_literal and _same(literal, switches[key])):
+                overridden.add(key)
+                if not in_tests:
+                    flipped.add(key)
 
-    def visit(node, enclosing):
+    def visit(node, enclosing, in_tests):
         if isinstance(node, ast.Call):
-            passed(node, enclosing)
+            passed(node, enclosing, in_tests)
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             enclosing = [*enclosing, node]
         for child in ast.iter_child_nodes(node):
-            visit(child, enclosing)
+            visit(child, enclosing, in_tests)
 
-    for entry in [*ROOTS, PACKAGE.name]:
-        for path in _py_files(ROOT / entry):
-            visit(ast.parse(path.read_text(), filename=str(path)), [])
-    return switches, flipped, through
+    for entry in [*ROOTS, PACKAGE.name, "tests"]:
+        for path in _py_files(root / entry):
+            visit(ast.parse(path.read_text(), filename=str(path)), [],
+                  entry == "tests")
+    return switches, flipped, overridden, through
 
 
-def unflipped(keep=KEEP_SWITCHES):
-    switches, flipped, through = switch_graph()
-    reached, todo = set(), [*flipped, *keep]
-    while todo:
-        key = todo.pop()
-        if key not in reached:
-            reached.add(key)
-            todo.extend(through[key])
-    return sorted(set(switches) - reached)
+def unflipped(keep=KEEP_SWITCHES, graph=None):
+    """The switches no call gives another value under the rules above,
+    ``keep`` aside."""
+    switches, flipped, overridden, through = graph or switch_graph()
+
+    def reach(seeds):
+        reached, todo = set(), [*seeds, *keep]
+        while todo:
+            key = todo.pop()
+            if key not in reached:
+                reached.add(key)
+                todo.extend(through[key])
+        return reached
+
+    by_code, by_any = reach(flipped), reach(overridden)
+    return sorted(key for key, default in switches.items() if key not in (
+        by_code if isinstance(default, bool) else by_any))
 
 
 def test_every_switch_is_flipped_outside_tests():
-    dead = unflipped()
+    switches = switch_graph()[0]
+    dead = [k for k in unflipped() if isinstance(switches[k], bool)]
     assert not dead, (
         "only tests/ pass these switches their other value (keep the "
         "branch the system runs and delete the parameter, or add a "
         "KEEP_SWITCHES entry with its reason):\n  " + "\n  ".join(dead))
+
+
+def test_every_literal_default_is_overridden():
+    switches = switch_graph()[0]
+    dead = [k for k in unflipped() if not isinstance(switches[k], bool)]
+    assert not dead, (
+        "no call passes these parameters another value (use the value in "
+        "place and delete the parameter, or add a KEEP_SWITCHES entry "
+        "with its reason):\n  " + "\n  ".join(dead))
 
 
 def test_keep_switches_are_defined_and_needed():
@@ -264,3 +344,69 @@ def test_keep_switches_are_defined_and_needed():
         {k: v for k, v in KEEP_SWITCHES.items() if k != key})]
     assert not unneeded, (
         f"flipped without KEEP_SWITCHES, drop them: {unneeded}")
+
+
+def test_switch_rules_on_a_synthetic_package(tmp_path):
+    """The widened analysis on a package small enough to read: which
+    defaults it reports, which overrides it accepts, and how it follows
+    positional and pass-through arguments."""
+    files = {
+        "serverless_podcast_etl_spark/mod.py": '''
+WIDTH = 3
+
+
+def never(df, k=5):
+    return k
+
+def test_only_str(df, col="text"):
+    return col
+
+def test_only_flag(df, fast=False):
+    return fast
+
+def named_default(df, n=WIDTH):
+    return n
+
+def inner(df, window=64, stride=48):
+    return window, stride
+
+def outer(df, window=64):
+    return inner(df, window)
+
+def narrower(df, stride=8):
+    return inner(df, 64, stride)
+''',
+        "examples/demo.py": '''
+from serverless_podcast_etl_spark import mod
+
+mod.outer(None, window=32)
+mod.named_default(None, n=3)
+''',
+        "tests/test_mod.py": '''
+from serverless_podcast_etl_spark.mod import test_only_flag, test_only_str
+
+def test_it():
+    test_only_str(None, col="body")
+    test_only_flag(None, fast=True)
+''',
+    }
+    for name, text in files.items():
+        (tmp_path / name).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / name).write_text(text)
+    graph = switch_graph(tmp_path)
+    assert graph[0] == {
+        "never.k": 5, "test_only_str.col": "text", "test_only_flag.fast": False,
+        "named_default.n": 3, "inner.window": 64, "inner.stride": 48,
+        "outer.window": 64, "narrower.stride": 8,
+    }
+    # outer passes its own window on by position, same default
+    assert graph[3]["outer.window"] == {"inner.window"}
+    # reported: an int nobody overrides, a bool only a test flips, a
+    # constant default passed its own value, and narrower's stride that
+    # no call changes.  Accepted: a str only a test overrides,
+    # inner.window through outer's overridden window, and inner.stride,
+    # which narrower's different default overrides
+    assert unflipped({}, graph) == [
+        "named_default.n", "narrower.stride", "never.k", "test_only_flag.fast"]
+    assert unflipped({"narrower.stride": "why"}, graph) == [
+        "named_default.n", "never.k", "test_only_flag.fast"]

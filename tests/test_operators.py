@@ -34,7 +34,7 @@ def test_rolling_mean_matches_pandas(spark):
     )
     df = spark.createDataFrame(pdf)
     out = (
-        rolling_mean(df, "score", ["ep"], ["idx"], window_rows=50)
+        rolling_mean(df, "score", ["ep"], ["idx"])
         .orderBy("ep", "idx")
         .collect()
     )
@@ -117,7 +117,7 @@ def test_ivf_topk_properties_and_recall(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.filter(F.col("vec_id") < 5)
-    ivf = ivf_topk(qs, emb, "vec_id", "vec_id", k=10, n_clusters=16, nprobe=2)
+    ivf = ivf_topk(qs, emb, "vec_id", "vec_id")
     rows = ivf.collect()
     per_query: dict[int, list[int]] = {}
     for r in rows:
@@ -269,8 +269,7 @@ def test_minhash_lsh_finds_known_neardups(spark):
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard"]
         for r in minhash_lsh_pairs(
-            df, "text", "doc_id", n=3, num_hashes=8, bands=4,
-            verify_threshold=0.5,
+            df, "text", "doc_id", verify_threshold=0.5,
         ).collect()
     }
     assert (1, 2) in pairs and pairs[(1, 2)] >= 0.5
@@ -614,7 +613,7 @@ def test_ewma_partitioned_equals_grouped(spark):
         }
         got = {
             (r["u"], r["i"]): r["ewma"]
-            for r in ewma_partitioned(df, "x", ["u"], ["i"], alpha=0.3).collect()
+            for r in ewma_partitioned(df, "x", ["u"], ["i"]).collect()
         }
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
@@ -640,7 +639,7 @@ def test_quantized_topk_recall_vs_float(spark, sf_dir):
     }
     i8 = {
         (r["query_id"], r["neighbor_id"])
-        for r in quantized_topk(qs, emb, "vec_id", "vec_id", k=10).collect()
+        for r in quantized_topk(qs, emb, "vec_id", "vec_id").collect()
     }
     assert len(f32 & i8) / len(f32) >= 0.8
 
@@ -988,15 +987,15 @@ def test_bloom_decontamination_parity_with_broadcast_form(spark):
         "doc_id long, text string",
     )
     a = sorted(
-        map(tuple, cross_corpus_overlap(corpus, benchmark, "text", "doc_id", n=8).collect())
+        map(tuple, cross_corpus_overlap(corpus, benchmark, "text", "doc_id").collect())
     )
     b = sorted(
-        map(tuple, bloom_cross_corpus_overlap(corpus, benchmark, "text", "doc_id", n=8).collect())
+        map(tuple, bloom_cross_corpus_overlap(corpus, benchmark, "text", "doc_id").collect())
     )
     assert a == b and len(a) == 1 and a[0][0] == 1
 
     clean = corpus.filter(F.col("doc_id") > 1)
-    assert bloom_cross_corpus_overlap(clean, benchmark, "text", "doc_id", n=8).count() == 0
+    assert bloom_cross_corpus_overlap(clean, benchmark, "text", "doc_id").count() == 0
 
 
 def test_bloom_decontamination_exact_despite_degraded_filter(spark):
@@ -1020,13 +1019,13 @@ def test_bloom_decontamination_exact_despite_degraded_filter(spark):
         [(100, "benchmark prompt " + leak)], "doc_id long, text string"
     )
     a = sorted(
-        map(tuple, cross_corpus_overlap(corpus, benchmark, "text", "doc_id", n=8).collect())
+        map(tuple, cross_corpus_overlap(corpus, benchmark, "text", "doc_id").collect())
     )
     b = sorted(
         map(
             tuple,
             bloom_cross_corpus_overlap(
-                corpus, benchmark, "text", "doc_id", n=8, bits_per_key=2
+                corpus, benchmark, "text", "doc_id", bits_per_key=2
             ).collect(),
         )
     )
@@ -1340,7 +1339,7 @@ def test_semantic_dedup_planted_clones(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     pairs = semantic_neardup_pairs(
-        df, "vec_id", n_clusters=4, threshold=0.99, seed=7
+        df, "vec_id", n_clusters=4, threshold=0.99
     ).collect()
     planted = {(min(a, b), max(a, b)) for a, b in [(i, 100 + i) for i in range(3)]}
     found = {(r["id_a"], r["id_b"]) for r in pairs}
@@ -1349,7 +1348,7 @@ def test_semantic_dedup_planted_clones(spark):
     kept = {
         r["vec_id"]
         for r in semantic_dedup(
-            df, "vec_id", n_clusters=4, threshold=0.99, seed=7
+            df, "vec_id", n_clusters=4, threshold=0.99
         ).collect()
     }
     # every clone loses to its original (min id); originals survive
@@ -1397,7 +1396,7 @@ def test_semantic_dedup_auto_k_scales_with_corpus(spark):
         kept = {
             r["vec_id"]
             for r in semantic_dedup(
-                df, "vec_id", n_clusters="auto", threshold=0.99, seed=7
+                df, "vec_id", n_clusters="auto", threshold=0.99
             ).collect()
         }
         # every original survives (min-id keep rule; distinct random
@@ -1462,12 +1461,11 @@ def test_recall_panel_clustered_corpus_ordering_stable(spark):
             "ivf": mean_recall(
                 similarity.ivf_topk(
                     queries_df, emb, "vec_id", "vec_id",
-                    n_clusters=16, nprobe=2, seed=7, k=10,
                 )
             ),
             "int8": mean_recall(
                 similarity.quantized_topk(
-                    queries_df, emb, "vec_id", "vec_id", k=10
+                    queries_df, emb, "vec_id", "vec_id"
                 )
             ),
         }
@@ -1872,7 +1870,7 @@ def test_incremental_admission_ignores_intra_batch_dups(spark):
         r["doc_id"]: (r["n_matches"], r["admitted"])
         for r in incremental_neardup_admission(
             batch, corpus, text_col="text", id_col="doc_id",
-            n=3, num_hashes=8, bands=4, verify_threshold=0.3,
+            verify_threshold=0.3,
         ).collect()
     }
     assert out[101] == (0, 1) and out[102] == (0, 1), out

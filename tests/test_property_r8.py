@@ -203,7 +203,7 @@ def test_minhash_signatures_match_duckdb_twin(spark, texts):
     got = {
         r["doc_id"]: tuple(r[f"mh_{i}"] for i in range(8))
         for r in minhash_signatures(
-            docs, text_col="text", id_col="doc_id", n=3, num_hashes=8
+            docs, text_col="text", id_col="doc_id"
         ).collect()
     }
     con = duckdb.connect()
@@ -213,7 +213,7 @@ def test_minhash_signatures_match_duckdb_twin(spark, texts):
     )
     want = {
         r[0]: tuple(r[1:9])
-        for r in con.execute(_minhash_sql(n=3, num_hashes=8)).fetchall()
+        for r in con.execute(_minhash_sql()).fetchall()
     }
     con.close()
     assert got == want
@@ -634,7 +634,7 @@ def test_retention_cohorts_match_duckdb_twin(spark, events):
     got = {
         (r["cohort_week"], r["week_offset"]): r["n_active_users"]
         for r in retention_cohorts(
-            df, "user_id", "ts", epoch="2024-01-01"
+            df, "user_id", "ts"
         ).collect()
     }
     con = duckdb.connect()

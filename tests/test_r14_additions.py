@@ -32,7 +32,7 @@ def _emb(spark):
 def _assign_under(df, codebook, id_col="vec_id"):
     """Expected index rows for ``df`` under a FROZEN codebook — the
     builder/appender assignment pipeline, re-stated independently."""
-    qc = quantize_embeddings_int8(df, id_col, "embedding").select(
+    qc = quantize_embeddings_int8(df, id_col).select(
         F.col(id_col).alias("neighbor_id"), "q"
     )
     return (
@@ -40,7 +40,7 @@ def _assign_under(df, codebook, id_col="vec_id"):
         .select(
             "neighbor_id",
             F.col("q").alias("_cq"),
-            _int_norm("q").alias("_cn"),
+            _int_norm().alias("_cn"),
             F.element_at("_nc", 1).alias("cluster"),
         )
         .filter(F.col("_cn") > 0)

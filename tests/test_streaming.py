@@ -37,7 +37,7 @@ def test_windowed_event_counts_streaming_matches_batch(spark, tmp_path):
             "event_id long, ts timestamp, event_type string, value double"
         ).parquet(src)
     )
-    agg = windowed_event_counts(stream, watermark="10 minutes")
+    agg = windowed_event_counts(stream)
     assert agg.isStreaming
     got_rows: list = []
     q = (
@@ -79,7 +79,7 @@ def test_session_window_boundary_gap_merges(spark):
         (2, t0 + dt.timedelta(minutes=30, seconds=1), 8.0),
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    out = sessionized_event_stats(df, gap="30 minutes")
+    out = sessionized_event_stats(df)
     per_user = {}
     for r in out.collect():
         per_user.setdefault(r["user_id"], []).append(

@@ -741,8 +741,8 @@ def encoding_anomaly_scores(
     ``anomaly_rate`` = (replacement + control + mojibake) / chars,
     NULL for empty text (``try_divide`` — no evidence);
     ``is_suspect`` flags ANY replacement char (unconditional: U+FFFD
-    is never legitimate content) or a rounded rate above 0.001.  Counts are exact integers from three
-    ``regexp_count`` scans; the rate is the single IEEE division,
+    is never legitimate content) or a rounded rate above 0.001.
+    Counts are exact integers from three ``regexp_count`` scans; the rate is the single IEEE division,
     rounded before the threshold compare so the oracle decides
     identically.  Everything is in-row — no shuffle, no state,
     trivially partition-parallel at any corpus size.

@@ -581,7 +581,10 @@ def _simhash_sql() -> str:
         f"sum(CASE WHEN (th >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v_{j}"
         for j in range(dedup.SIMHASH_BITS)
     )
-    fp = " + ".join(f"(CASE WHEN v_{j} > 0 THEN {2**j} ELSE 0 END)" for j in range(dedup.SIMHASH_BITS))
+    fp = " + ".join(
+        f"(CASE WHEN v_{j} > 0 THEN {2**j} ELSE 0 END)"
+        for j in range(dedup.SIMHASH_BITS)
+    )
     return f"""
 WITH tk AS (SELECT doc_id, unnest(list_filter(
         regexp_split_to_array(lower(text), '\\s+'), x -> x <> '')) AS tok

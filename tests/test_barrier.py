@@ -111,7 +111,7 @@ def test_incomplete_episodes_match_what_the_barrier_holds_back(spark):
         ],
         "episode_id long, chunk_num int, payload string",
     )
-    released = {r["episode_id"] for r in reduce_transcripts(arrived, expected).collect()}
-    waiting = {r["episode_id"] for r in incomplete_episodes(arrived, expected).collect()}
-    assert released == {1}
-    assert waiting == {2, 3, 4}
+    released = reduce_transcripts(arrived, expected).collect()
+    waiting = incomplete_episodes(arrived, expected).collect()
+    assert {r["episode_id"] for r in released} == {1}
+    assert {r["episode_id"] for r in waiting} == {2, 3, 4}

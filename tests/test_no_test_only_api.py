@@ -209,10 +209,12 @@ def _constants(package):
             target = (stmt.targets[0] if isinstance(stmt, ast.Assign)
                       and len(stmt.targets) == 1 else
                       stmt.target if isinstance(stmt, ast.AnnAssign) else None)
-            if (isinstance(target, ast.Name) and isinstance(stmt.value, ast.Constant)
-                    and isinstance(stmt.value.value, LITERALS)):
-                found[target.id].append(stmt.value.value)
-    return {name: values[0] for name, values in found.items() if len(values) == 1}
+            value = getattr(stmt, "value", None)
+            if (isinstance(target, ast.Name) and isinstance(value, ast.Constant)
+                    and isinstance(value.value, LITERALS)):
+                found[target.id].append(value.value)
+    return {name: values[0] for name, values in found.items()
+            if len(values) == 1}
 
 
 def _switches(func, constants):

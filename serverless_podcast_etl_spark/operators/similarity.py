@@ -484,12 +484,11 @@ def ivf_topk(
     only those candidates (equi-join on the cluster id).
 
     The scale path when hyperplane LSH recall is too bucket-sensitive:
-    candidate count ≈ |corpus|·NPROBE/16 per query.  Recall < 1 by construction.
+    candidate count ≈ |corpus|·NPROBE/16 per query.  Recall < 1 by
+    construction.
     """
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, n_clusters=16
-        )
+        centroids = train_ivf_centroids(corpus)
     # norms hoisted below the probe join (NOTES fact 16): once per
     # row, before the query side fans out to NPROBE rows
     c = assign_ivf_cluster(corpus, centroids).select(

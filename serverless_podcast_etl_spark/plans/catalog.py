@@ -2028,7 +2028,7 @@ def q62_ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = InheritableThread(target=_build_exact)
     t.start()
     try:
-        centroids = similarity.train_ivf_centroids(emb, n_clusters=16)
+        centroids = similarity.train_ivf_centroids(emb)
     finally:
         t.join()
     if "err" in exact_box:

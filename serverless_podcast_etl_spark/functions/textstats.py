@@ -238,9 +238,9 @@ def tfidf_top_terms(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    stopwords: list[str] | None = None,
 ) -> DataFrame:
-    """Top-``TFIDF_TOP_K`` characteristic terms per document by TF-IDF.
+    """Top-``TFIDF_TOP_K`` characteristic terms per document by TF-IDF,
+    ``STOPWORDS`` removed.
 
     idf is the LOG-FREE rational form ``(N + 1) / (df + 1)`` — same
     ranking monotonicity in 1/df, but built only from IEEE add/div/mul,
@@ -254,13 +254,12 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    sw = stopwords if stopwords is not None else STOPWORDS
     terms = (
         df.select(
             F.col(id_col),
             F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("term"),
         )
-        .filter((F.col("term") != "") & ~F.col("term").isin(sw))
+        .filter((F.col("term") != "") & ~F.col("term").isin(STOPWORDS))
     )
     tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     doc_freq = (
@@ -286,11 +285,10 @@ def tfidf_top_terms(
     )
 
 
-def tfidf_top_terms_sql(stopwords: list[str] | None = None) -> str:
+def tfidf_top_terms_sql() -> str:
     """DuckDB twin of ``tfidf_top_terms`` (same tokenization, same
-    rational idf, same tie-break)."""
-    sw = stopwords if stopwords is not None else STOPWORDS
-    sw_list = ", ".join(f"'{w}'" for w in sw)
+    stopwords, same rational idf, same tie-break)."""
+    sw_list = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
 WITH terms AS (
   SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\\s+')) AS term

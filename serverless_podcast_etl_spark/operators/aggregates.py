@@ -93,7 +93,6 @@ def word_frequencies(
     df: DataFrame,
     text_col: str,
     stopwords: list[str] | None = None,
-    group_by: list[str] | None = None,
 ) -> DataFrame:
     """Whitespace-tokenized word counts with stopword removal.
 
@@ -101,14 +100,12 @@ def word_frequencies(
     (map-side) aggregation makes this a single small shuffle even when
     the exploded token table is 100× the input.
     """
-    keys = group_by or []
     words = df.select(
-        *keys,
         F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("word"),
     ).filter(F.col("word") != "")
     if stopwords:
         words = words.filter(~F.col("word").isin(stopwords))
-    return words.groupBy(*keys, "word").agg(
+    return words.groupBy("word").agg(
         F.count(F.lit(1)).alias("num_occurences")
     )
 

@@ -2,28 +2,36 @@
 
 The training-data-pipeline surface (BASELINE.json north star): exact
 dedup, shingle/Jaccard near-dup, MinHash+LSH, SimHash, and
-embedding-cosine near-dup.  Every operator is pure DataFrame — the
-candidate generation is always a self-equi-join on a derived key
-(shingle / band bucket / simhash band), never an O(n²) cross join, so
-each scales as (corpus size × duplicate density), not corpus².
+embedding-cosine near-dup.  Every candidate generator is pure
+DataFrame — the candidates always come from a self-equi-join on a
+derived key (shingle / band bucket / simhash band), never an O(n²)
+cross join, so each scales as (corpus size × duplicate density), not
+corpus².
 
 Portable hashing (functions/hashing.py) keeps MinHash/SimHash
 signatures bit-identical between Spark and the DuckDB oracle.
 
-The pair operators eagerly ``localCheckpoint`` the expensive hashing
-scan at its fan-out (ADVICE r12).  That (a) runs a Spark job at
-DataFrame-CONSTRUCTION time, (b) truncates lineage — localCheckpoint
-blocks live on executor local storage, NOT a reliable store, so on a
-cluster with executor loss/preemption the blocks are unrecoverable
-and the job fails rather than recomputing (same trade
-``warehouse.py`` makes; use ``df.checkpoint()`` to a reliable dir if
-your cluster preempts), and (c) stops Catalyst pushing downstream
-filters/column pruning past the checkpoint into the source scan —
-irrelevant for these operators' own plans (every consumer below the
-fan-out reads ALL checkpointed columns, and the outputs are computed
-pair/score columns no source-level pushdown could reach), but a
-caller composing extra source-column predicates UNDER one of these
-operators should apply them to ``df`` first.
+Pairs become dedup decisions in ``connected_components``, the one
+operator here that is not distributed: it collects the pair list to
+the driver and labels it by union-find in one Spark job.  Driver
+memory is therefore O(verified pairs), not O(corpus) — 83,107 pairs
+at sf0.1 for the largest caller (q97/q98), and at most 44,850 for the
+``curation`` workload's 300 documents.
+
+The pair operators (and ``neardup_ensemble``) eagerly
+``localCheckpoint`` the expensive hashing scan at its fan-out (ADVICE
+r12).  That (a) runs a Spark job at DataFrame-CONSTRUCTION time, (b)
+truncates lineage — localCheckpoint blocks live on executor local
+storage, NOT a reliable store, so on a cluster with executor
+loss/preemption the blocks are unrecoverable and the job fails rather
+than recomputing (same trade ``warehouse.py`` makes), and (c) stops
+Catalyst pushing downstream filters/column pruning past the
+checkpoint into the source scan — irrelevant for these operators' own
+plans (every consumer below the fan-out reads ALL checkpointed
+columns, and the outputs are computed pair/score columns no
+source-level pushdown could reach), but a caller composing extra
+source-column predicates UNDER one of these operators should apply
+them to ``df`` first.
 """
 
 from __future__ import annotations
@@ -868,162 +876,7 @@ def bloom_cross_corpus_overlap(
     )
 
 
-def _resolve_checkpoint_dir(
-    df: DataFrame, checkpoint_dir: str | None
-) -> str | None:
-    """Set the session checkpoint dir ONCE per iterative-operator
-    invocation and return the RESOLVED per-run directory (Spark
-    appends a fresh UUID subdir on every ``setCheckpointDir`` call,
-    so the resolved path is unique to this invocation).
-
-    Re-pointing the dir on every materialization (pre-r4 behavior)
-    mutates global SparkContext state per call: two concurrent runs
-    with different ``checkpoint_dir``s would each re-point the shared
-    dir and silently write blocks into each other's directories.
-    Resolving once up front and asserting the dir is unchanged at
-    every subsequent materialization (``_materialize``) turns that
-    silent cross-write into a loud error.
-    """
-    if checkpoint_dir is None:
-        return None
-    sc = df.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
-    return sc.getCheckpointDir()
-
-
-def _materialize(df: DataFrame, resolved_dir: str | None) -> DataFrame:
-    """Eagerly materialize an iterative loop's frame, truncating
-    lineage.
-
-    ``resolved_dir=None`` → ``localCheckpoint``: blocks live on
-    executor storage — fastest, but an executor loss makes them
-    unrecoverable (the lineage needed to recompute was truncated).
-    Fine on local[n] and for short interactive loops.
-
-    ``resolved_dir`` set (the per-run directory returned by
-    ``_resolve_checkpoint_dir``) → RELIABLE ``checkpoint()`` into
-    that directory (HDFS/S3/DBFS path at cluster scale): blocks
-    survive executor loss, which is the mode a 100 TB run must use —
-    over a multi-hour iterative job on 1000 executors, losing one
-    executor mid-loop is the expected case, not the exception.
-    Raises if another run re-pointed the session checkpoint dir
-    mid-loop (concurrent iterative runs in one session must use
-    distinct SparkSessions or be serialized).
-    """
-    if resolved_dir is None:
-        return df.localCheckpoint(eager=True)
-    sc = df.sparkSession.sparkContext
-    current = sc.getCheckpointDir()
-    if current != resolved_dir:
-        raise RuntimeError(
-            "reliable-checkpoint dir changed mid-run (expected "
-            f"{resolved_dir!r}, found {current!r}): a concurrent "
-            "iterative run re-pointed the session checkpoint dir. "
-            "Run iterative operators with conflicting checkpoint_dirs "
-            "in separate SparkSessions, or serialize them."
-        )
-    return df.checkpoint(eager=True)
-
-
-def _cc_min_label_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """One min-label-propagation + pointer-jump iteration, returned
-    PRE-checkpoint: (_id, _comp, _new) where ``_new`` is the improved
-    label.  Factored out so the per-iteration join plan can be
-    inspected before the checkpoint truncates it: inside the loop the
-    eager checkpoint cuts the static plan to a bare RDD scan, which
-    hides the iteration's exchanges from ``explain()``."""
-    nbr_min = (
-        edges.join(
-            labels.select(
-                F.col("_id").alias("_b"), F.col("_comp").alias("_nc")
-            ),
-            "_b",
-        )
-        .groupBy("_a")
-        .agg(F.min("_nc").alias("_nbr"))
-    )
-    stepped = labels.join(
-        nbr_min.withColumnRenamed("_a", "_id"), "_id", "left"
-    ).select(
-        "_id",
-        "_comp",
-        F.least(
-            F.col("_comp"), F.coalesce(F.col("_nbr"), F.col("_comp"))
-        ).alias("_new"),
-    )
-    # pointer jump: follow my (new) label to ITS label — label
-    # chains halve every round (O(log n) total for deep chains)
-    jump = labels.select(
-        F.col("_id").alias("_new"), F.col("_comp").alias("_jc")
-    )
-    return stepped.join(jump, "_new", "left").select(
-        "_id",
-        "_comp",
-        F.least(
-            F.col("_new"), F.coalesce(F.col("_jc"), F.col("_new"))
-        ).alias("_new"),
-    )
-
-
-def _cc_driver_union_find(
-    pairs: DataFrame, id_a: str, id_b: str, out_id: str, out_comp: str
-) -> DataFrame:
-    """Small-graph fast path: collect the (bounded) edge list and
-    resolve components with driver-side union-find (path compression +
-    union-by-min-root, so the representative is the component minimum
-    — OUTPUT-IDENTICAL to the distributed min-label loop, pinned by
-    the backend-parity tests).  Two jobs total (count + collect)
-    instead of ~3 jobs per distributed iteration.
-
-    Driver memory is O(nodes + pairs); the caller's pair bound is also
-    a node bound (each pair introduces ≤2 nodes ⇒ nodes ≤ 2×pairs, so
-    the default 500k-pair cap ⇒ ≤1M parent-map entries, tens of MB).
-    Null ids are rejected by ``connected_components`` before either
-    backend runs — this function assumes non-null ids (they are dict
-    keys and compared with ``<``)."""
-    from pyspark.sql.types import StructField, StructType
-
-    rows = pairs.select(id_a, id_b).collect()
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in rows:
-        a, b = r[0], r[1]
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    id_type = pairs.schema[id_a].dataType
-    schema = StructType(
-        [
-            StructField(out_id, id_type, False),
-            StructField(out_comp, id_type, False),
-        ]
-    )
-    labels = [(v, find(v)) for v in parent]
-    # JVM-side local relation (operators/scale.local_frame): the label
-    # table is consumed by a broadcast join, and a Python-local frame
-    # would pay a Python-worker launch per partition to build it
-    # (NOTES fact 23)
-    from .scale import local_frame
-
-    return local_frame(pairs.sparkSession, labels, schema)
-
-
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 50,
-    checkpoint_dir: str | None = None,
-    small_graph_max: int = 500_000,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over a near-dup pair list: (id, component)
     with component = the minimum id reachable from the node.
 
@@ -1032,106 +885,62 @@ def connected_components(
     keeping one representative per component, not per pair, is what a
     corpus dedup actually ships.
 
-    Min-label propagation WITH pointer jumping: each iteration every
-    node takes (a) the min of its own and its neighbors' labels, then
-    (b) its label's label (path compression — label chains halve each
-    round, so deep chains converge in O(log n) rounds, not
-    O(diameter)).  Two equi-joins + one partial-agg shuffle per
-    iteration, lineage truncated by eager per-iteration
-    materialization — ``checkpoint_dir=None`` uses ``localCheckpoint``
-    (local/default), a real path switches to RELIABLE
-    ``df.checkpoint()`` so a 100 TB run survives executor loss
-    mid-loop (see ``_materialize``).  Dup clusters are shallow (stars
-    around a template), so 2-4 rounds is typical.  Raises if
-    ``max_iter`` rounds don't converge — a silently partial labeling
-    must never reach a dedup decision.  Only nodes that appear in
+    One Spark job: the ``id_a``/``id_b`` columns are collected once and
+    resolved on the driver by union-find (path halving, union by min
+    root, so each root is its component's minimum id).  Driver memory
+    is O(pairs): the collected rows plus a parent map of at most
+    2 × pairs entries.  Pair lists are post-verification survivors,
+    orders of magnitude smaller than the corpus — at sf0.1 the catalog
+    entries that call this pass 256 (q48, q49, q73), 3 (q70) and
+    83,107 (q97, q98) pairs, and the ``curation`` workload's 300
+    documents allow at most 44,850.  Only nodes that appear in
     ``pairs`` are returned — isolated docs are their own (implicit)
     singleton component.
 
-    HYBRID (r4): pair sets at or under ``small_graph_max`` rows
-    (default 500k ⇒ ≤1M union-find entries, tens of MB collected) are
-    resolved DRIVER-SIDE by union-find — output-identical, two jobs
-    instead of ~3 per distributed iteration (same-session alternating
-    A/B at sf0.1 on the q48 pipeline: 2.4-3.0 s → 1.65-1.8 s; the
-    residual is the upstream LSH candidate generation itself).  The
-    bound was raised 200k → 500k in r5 after the sf1 rehearsal's
-    250k-pair clone-heavy graph measured union-find at 1.36-1.45 s vs
-    1.92-2.2 s for the distributed loop on identical checkpointed
-    pairs (3 alternating runs each, exact output parity) — the
-    crossover is above this size.  Pair lists are the
-    post-verification near-dup
-    survivors, orders of magnitude smaller than the corpus; when they
-    do exceed the bound (massively duplicated corpora), the
-    distributed loop runs unchanged.  Pass ``small_graph_max=0`` to
-    force the distributed path.
-
-    Null ids are rejected loudly on BOTH backends (one contract):
-    silently dropping a null-endpoint edge (what a bare equi-join
-    would do) could split a component and ship a wrong dedup decision.
+    A null id raises ``ValueError``: silently dropping a null-endpoint
+    edge could split a component and ship a wrong dedup decision.
     """
-    ckpt = _resolve_checkpoint_dir(pairs, checkpoint_dir)
-    # materialize the upstream pair pipeline ONCE (e.g. the whole
-    # MinHash-LSH candidate generation) — both the small-graph fast
-    # path (count + collect) and the iterative loop read these rows
-    sym = _materialize(
-        pairs.select(F.col("id_a").alias("_a"), F.col("id_b").alias("_b")), ckpt
+    from pyspark.sql.types import StructField, StructType
+
+    from .scale import local_frame
+
+    rows = pairs.select("id_a", "id_b").collect()
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        if a is None or b is None:
+            n_null = sum((r[0] is None) + (r[1] is None) for r in rows)
+            raise ValueError(
+                f"connected_components: {n_null} null id(s) in the "
+                f"pair list (id_a/id_b) — a null edge endpoint cannot "
+                f"be labeled; filter or fix upstream candidate generation"
+            )
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    id_type = pairs.schema["id_a"].dataType
+    schema = StructType(
+        [
+            StructField("id", id_type, False),
+            StructField("component", id_type, False),
+        ]
     )
-    # One contract for both backends (r4 ADVICE): a null id is
-    # malformed input — the equi-joins of the distributed loop would
-    # silently DROP the edge while the driver union-find would raise
-    # TypeError mid-merge.  Reject loudly before branching; the null
-    # audit rides the same aggregate job as the size probe.
-    stats = sym.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.coalesce(
-            F.sum(
-                F.col("_a").isNull().cast("long")
-                + F.col("_b").isNull().cast("long")
-            ),
-            F.lit(0),
-        ).alias("_nulls"),
-    ).collect()[0]
-    if stats["_nulls"]:
-        raise ValueError(
-            f"connected_components: {stats['_nulls']} null id(s) in the "
-            f"pair list (id_a/id_b) — a null edge endpoint cannot "
-            f"be labeled; filter or fix upstream candidate generation"
-        )
-    # pair bound ⇒ node bound: nodes ≤ 2×pairs, so 500k pairs caps the
-    # union-find parent map at ≤1M entries (tens of MB driver-side)
-    if small_graph_max and stats["_n"] <= small_graph_max:
-        return _cc_driver_union_find(sym, "_a", "_b", "id", "component")
-    edges = _materialize(
-        sym.union(sym.select(F.col("_b").alias("_a"), F.col("_a").alias("_b")))
-        .distinct(),
-        ckpt,
-    )
-    labels = _materialize(
-        edges.select(F.col("_a").alias("_id"))
-        .distinct()
-        .withColumn("_comp", F.col("_id")),
-        ckpt,
-    )
-    converged = False
-    for _ in range(max_iter):
-        # materialize BEFORE the convergence count so the joins run
-        # once per iteration (the count then reads materialized rows)
-        updated = _materialize(
-            _cc_min_label_step(edges, labels), ckpt
-        )
-        n_changed = updated.filter(F.col("_new") != F.col("_comp")).count()
-        labels = updated.select("_id", F.col("_new").alias("_comp"))
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components: no convergence within {max_iter} "
-            f"iterations — raise max_iter (pointer jumping needs "
-            f"~log2(longest chain) rounds)"
-        )
-    return labels.select(
-        F.col("_id").alias("id"), F.col("_comp").alias("component")
+    # JVM-side local relation (operators/scale.local_frame): the label
+    # table is consumed by a broadcast join, and a Python-local frame
+    # would pay a Python-worker launch per partition to build it
+    # (NOTES fact 23)
+    return local_frame(
+        pairs.sparkSession, [(v, find(v)) for v in parent], schema
     )
 
 
@@ -1562,7 +1371,6 @@ def decontamination_spans(
     text_col: str,
     id_col: str,
     k: int = 8,
-    benchmark_text_col: str | None = None,
 ) -> DataFrame:
     """Eval-set contamination SPANS: maximal ranges of corpus tokens
     covered by a k-token window that appears verbatim anywhere in the
@@ -1583,13 +1391,13 @@ def decontamination_spans(
     Bloom tier (``bloom_cross_corpus_overlap``) and run this only on
     the flagged subset.
 
-    Returns (id, span_start, span_end, n_windows) with INCLUSIVE
-    0-based token offsets — ``strip_spans``' input contract.
+    The benchmark's text is read from ``text_col`` too.  Returns (id,
+    span_start, span_end, n_windows) with INCLUSIVE 0-based token
+    offsets — ``strip_spans``' input contract.
     """
-    bcol = benchmark_text_col or text_col
     ev = (
         _positioned_window_hashes(
-            benchmark.select(F.col(bcol).alias("_bt")).withColumn(
+            benchmark.select(F.col(text_col).alias("_bt")).withColumn(
                 "_bid", F.monotonically_increasing_id()
             ),
             "_bt",
@@ -1610,15 +1418,12 @@ def strip_contamination(
     text_col: str,
     id_col: str,
     k: int = 8,
-    benchmark_text_col: str | None = None,
 ) -> DataFrame:
     """Applied span-level decontamination: ``strip_spans`` over
     ``decontamination_spans`` — every corpus token covered by a
     benchmark k-gram removed, documents otherwise kept intact.
     Returns (id, n_tokens_before, n_tokens_after, text_stripped)."""
-    spans = decontamination_spans(
-        corpus, benchmark, text_col, id_col, k, benchmark_text_col
-    )
+    spans = decontamination_spans(corpus, benchmark, text_col, id_col, k)
     return strip_spans(corpus, spans, text_col, id_col)
 
 
@@ -1831,10 +1636,7 @@ def snapshot_diff(
     )
 
 
-def neardup_ensemble(
-    pair_sources: dict[str, DataFrame],
-    **cc_kwargs,
-) -> DataFrame:
+def neardup_ensemble(pair_sources: dict[str, DataFrame]) -> DataFrame:
     """One adjudicated near-dup decision from MANY candidate methods —
     the composition users actually run (r7 VERDICT "do this" #7):
     MinHash-LSH catches shared shingles, SimHash catches bit-level
@@ -1850,36 +1652,23 @@ def neardup_ensemble(
     one output row per distinct pair with ``methods`` (sorted
     comma-joined provenance — which detectors agree), ``n_methods``,
     and ``component`` — the connected-components label over the WHOLE
-    union (``connected_components``; extra kwargs pass through,
-    except ``out_id``/``out_comp``, which are pinned here — the
-    output join binds them by name), so
-    transitive clusters merge even when each edge came from a
-    different method and a downstream keep-one-per-component dedup
-    has a single table to act on.
+    union (``connected_components``), so transitive clusters merge
+    even when each edge came from a different method and a downstream
+    keep-one-per-component dedup has a single table to act on.
 
     Scale: the union is a few pair lists (post-verification survivors
     — orders of magnitude smaller than the corpus), one (id_a, id_b)
     hash shuffle groups them, and CC runs on exactly that bounded
     edge set; the corpus itself is never touched here.  The
-    adjudicated table is MATERIALIZED once (``_materialize``, the CC
-    loop's own lineage-truncation contract — pass
-    ``checkpoint_dir=...`` through ``cc_kwargs`` for the reliable
-    mode) because two consumers read it: the component computation
-    and the output join.  Without that, every member's full candidate
+    adjudicated table is MATERIALIZED once (an eager
+    ``localCheckpoint``, the module docstring's trade) because two
+    consumers read it: the component computation and the output
+    join.  Without that, every member's full candidate
     pipeline re-executes per consumer — measured 119 s → 64 s on the
     sf1 rehearsal's clone-heavy 8.3M-pair union (NOTES r8).
     """
     if not pair_sources:
         raise ValueError("neardup_ensemble requires at least one method")
-    for k in ("out_id", "out_comp"):
-        if k in cc_kwargs:
-            # the output join below binds the CC columns by their
-            # default names; a renamed passthrough would fail deep in
-            # the join with an opaque AnalysisException (r8 ADVICE)
-            raise ValueError(
-                f"neardup_ensemble pins the CC output columns; {k!r} "
-                "is not forwardable (rename on the returned frame)"
-            )
     tagged = []
     for method, pairs in sorted(pair_sources.items()):
         lo, hi = F.least(F.col("id_a"), F.col("id_b")), F.greatest(
@@ -1899,15 +1688,8 @@ def neardup_ensemble(
     )
     # two consumers (CC + output join) — materialize the member
     # pipelines once; see the docstring's scale note
-    adjudicated = _materialize(
-        adjudicated,
-        _resolve_checkpoint_dir(
-            adjudicated, cc_kwargs.get("checkpoint_dir")
-        ),
-    )
-    comp = connected_components(
-        adjudicated.select("id_a", "id_b"), **cc_kwargs
-    )
+    adjudicated = adjudicated.localCheckpoint(eager=True)
+    comp = connected_components(adjudicated.select("id_a", "id_b"))
     return adjudicated.join(
         comp.withColumnRenamed("id", "id_a"), "id_a"
     ).select("id_a", "id_b", "methods", "n_methods", "component")

@@ -7,7 +7,7 @@ it a clearly-marked deterministic STUB stands in (the codec libraries
 are not in this container).  The Spark-side plumbing — schema,
 partitioning, UDF signature, batch shape — is real and tested on both
 paths.  Perceptual-hash image dedup (``image_dhash``,
-``image_neardup_pairs``) reads pixels through a pluggable grid seam
+``image_neardup_pairs``) reads pixels through a pixel-grid function
 with the same Pillow-or-stub split.
 
 Reference parity: the reference treats mp3 audio as opaque bytes and
@@ -130,16 +130,15 @@ def decode_images(
     df: DataFrame,
     id_col: str,
     binary_col: str,
-    decode: Callable[[bytes], tuple[int, int]] | None = None,
 ) -> DataFrame:
     """Arrow-batched image decode via ``mapInPandas``.
 
-    The codec is pluggable; the default is ``default_image_decoder()``
-    — real Pillow header decode when the library is present, the
-    deterministic stub otherwise.  Batch shape: one pandas DataFrame
-    per Arrow batch, output rows aligned 1:1 with inputs.
+    The codec is ``default_image_decoder()`` — real Pillow header
+    decode when the library is present, the deterministic stub
+    otherwise.  Batch shape: one pandas DataFrame per Arrow batch,
+    output rows aligned 1:1 with inputs.
     """
-    decode_fn = decode or default_image_decoder()
+    decode_fn = default_image_decoder()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -164,8 +163,8 @@ def decode_images(
 
 
 # ---------------------------------------------------------------------------
-# Perceptual-hash image dedup (r7): dHash over a pluggable pixel-grid
-# seam, then Hamming-banded candidate pairs via the shared
+# Perceptual-hash image dedup (r7): dHash over a Pillow-or-stub
+# pixel grid, then Hamming-banded candidate pairs via the shared
 # dedup.hamming_banded_pairs engine (same pigeonhole + verify as text
 # SimHash).  The standard pretraining-pipeline gap the r6 VERDICT
 # named: decode existed (q29) but images could not be deduped.
@@ -269,17 +268,16 @@ def image_dhash(
     df: DataFrame,
     id_col: str,
     binary_col: str,
-    grid: Callable[[bytes], list[list[int]]] | None = None,
 ) -> DataFrame:
     """Arrow-batched perceptual hash: (asset_id, dhash) per image.
 
-    The pixel-grid extractor is pluggable (``default_pixel_grid()`` —
-    real Pillow when present, the deterministic byte-slice stub
-    otherwise); the dHash fold itself is pure Python over 72 ints per
-    row, negligible next to Arrow transfer.  One pass, no shuffle —
-    fingerprinting is in-row at any corpus size.
+    The pixel-grid extractor is ``default_pixel_grid()`` — real Pillow
+    when present, the deterministic byte-slice stub otherwise; the
+    dHash fold itself is pure Python over 72 ints per row, negligible
+    next to Arrow transfer.  One pass, no shuffle — fingerprinting is
+    in-row at any corpus size.
     """
-    grid_fn = grid or default_pixel_grid()
+    grid_fn = default_pixel_grid()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -300,7 +298,6 @@ def image_neardup_pairs(
     df: DataFrame,
     id_col: str,
     binary_col: str,
-    grid: Callable[[bytes], list[list[int]]] | None = None,
 ) -> DataFrame:
     """Near-duplicate image pairs: dHash fingerprints + Hamming-banded
     candidate generation (``dedup.hamming_banded_pairs`` — 64 bits in
@@ -312,7 +309,7 @@ def image_neardup_pairs(
     hamming)."""
     from .dedup import hamming_banded_pairs
 
-    fp = image_dhash(df, id_col, binary_col, grid=grid)
+    fp = image_dhash(df, id_col, binary_col)
     return hamming_banded_pairs(
         fp,
         "asset_id",

@@ -30,7 +30,6 @@ def _global_prefix_sum_with_total(
     cost_col: str,
     order_cols: list[Column],
     out_col: str = "cum_cost",
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Implementation of ``global_prefix_sum`` (public wrapper below,
     which carries no extra behavior) — returns ``(result, grand
@@ -66,21 +65,15 @@ def _global_prefix_sum_with_total(
     both passes read materialized partitions, and lineage truncation
     makes re-sampled range boundaries on a re-execution impossible).
 
-    ``num_partitions`` overrides the range-partition count (default:
-    ``spark.sql.shuffle.partitions``, which AQE may coalesce at small
-    volume — pass it explicitly to pin the fan-out).
+    The range-partition count is ``spark.sql.shuffle.partitions``,
+    which AQE may coalesce at small volume.
 
     Driver-side bounds: the ``totals`` collect and the rebuilt offsets
     relation are one row PER PARTITION, not per data row — at an
     extreme 100k-partition cluster sweep that is a ~100k-row local
-    relation broadcast per call (same order as the union-find node
-    bound in ``operators/dedup.py``); size ``num_partitions`` to the
-    data, not the cluster, if that ever matters.
+    relation broadcast per call.
     """
-    range_keys = (
-        [num_partitions, *order_cols] if num_partitions else order_cols
-    )
-    ranged = df.repartitionByRange(*range_keys).sortWithinPartitions(
+    ranged = df.repartitionByRange(*order_cols).sortWithinPartitions(
         *order_cols
     )
     part = (
@@ -117,15 +110,13 @@ def global_prefix_sum(
     cost_col: str,
     order_cols: list[Column],
     out_col: str = "cum_cost",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Inclusive distributed running sum — the public form.  Full
     contract and scale shape: see ``_global_prefix_sum_with_total``
     directly above (this wrapper only drops the grand-total by-product
     from the return)."""
     df2, _total = _global_prefix_sum_with_total(
-        df, cost_col, order_cols, out_col=out_col,
-        num_partitions=num_partitions,
+        df, cost_col, order_cols, out_col=out_col
     )
     return df2
 
@@ -943,14 +934,14 @@ def target_coverage_audit(
     text_col: str,
     id_col: str,
     k: int,
+    target_predicate: Column,
     num_buckets: int = 1024,
-    target: DataFrame | None = None,
-    target_predicate: Column | None = None,
     selection_ids: DataFrame | None = None,
 ) -> DataFrame:
     """Selection-quality audit for ``select_by_target_affinity``: of
-    the TARGET distribution's distinct hashed n-gram feature buckets,
-    what fraction does a size-``k`` selection cover?  Reported for the
+    the TARGET distribution's (``raw.filter(target_predicate)``)
+    distinct hashed n-gram feature buckets, what fraction does a
+    size-``k`` selection cover?  Reported for the
     affinity top-k AND for a same-size deterministic digest sample
     (``digest_sample`` — the uniform baseline), so the number answers
     the question a curation run actually asks: did targeted selection
@@ -987,8 +978,6 @@ def target_coverage_audit(
     strictly cheaper.  Driver memory is O(k + num_buckets); nothing
     here is quadratic.
     """
-    if target is None and target_predicate is None:
-        raise ValueError("pass a target frame or a target_predicate")
     grams = (
         _materialize_grams(
             raw, text_col, id_col, num_buckets, TARGET_MAX_N, target_predicate
@@ -999,17 +988,14 @@ def target_coverage_audit(
 
     # ≤num_buckets rows; materialized once so the two method branches
     # don't each re-derive the target's bucket set
-    if grams is not None and target_predicate is not None:
+    if grams is not None:
         tb_src = grams.filter("_t").select(
             F.explode("_b").alias("b")
         )
     else:
-        tgt = (
-            raw.filter(target_predicate)
-            if target_predicate is not None
-            else target
-        )
-        tb_src = _token_hash_frame(tgt, text_col).select(
+        tb_src = _token_hash_frame(
+            raw.filter(target_predicate), text_col
+        ).select(
             F.explode(
                 _gram_buckets_from_th(num_buckets, TARGET_MAX_N)
             ).alias("b")
@@ -1021,7 +1007,7 @@ def target_coverage_audit(
     else:
         sel_aff = (
             _affinity_scores_impl(
-                raw, target, text_col, id_col, num_buckets, TARGET_MAX_N,
+                raw, None, text_col, id_col, num_buckets, TARGET_MAX_N,
                 target_predicate, "difference", grams,
             )
             .orderBy(F.col("score").desc(), F.col(id_col))

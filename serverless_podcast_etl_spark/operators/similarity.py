@@ -301,10 +301,9 @@ def lsh_topk(
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
-    planes: list[list[float]] | None = None,
+    plane_tables: list[list[list[float]]],
     k: int = 10,
     probe_hamming: int = 1,
-    plane_tables: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Approximate top-k: score only pairs whose hyperplane buckets
     match under multi-probe.
@@ -316,7 +315,7 @@ def lsh_topk(
 
     ``probe_hamming`` (multi-probe LSH, Lv et al., VLDB'07): the QUERY
     side probes its own bucket plus every bucket within that Hamming
-    distance (1 + len(planes) probes at distance 1) — near neighbors
+    distance (1 + planes-per-table probes at distance 1) — near neighbors
     split across a flipped sign bit are recovered at the cost of more
     candidates.  ``probe_hamming=0`` is the single-bucket form.
 
@@ -327,15 +326,12 @@ def lsh_topk(
     vectors, where near-neighbor angles are barely below 90°).  Costs
     b bucket rows per corpus vector (still one row per probe on the
     tiny query side); the join stays a single-int equi-join on a
-    (table, bucket) composite key.  Mutually exclusive with ``planes``
-    (the single-table form).
+    (table, bucket) composite key.  ``[planes]`` is the single-table
+    form.
     """
     if probe_hamming not in (0, 1):
         raise ValueError("probe_hamming supports 0 (exact bucket) or 1")
-    if (planes is None) == (plane_tables is None):
-        raise ValueError("pass exactly one of `planes` / `plane_tables`")
-    tables = plane_tables if plane_tables is not None else [planes]
-    if len({len(t) for t in tables}) != 1:
+    if len({len(t) for t in plane_tables}) != 1:
         raise ValueError("all hyperplane tables must have the same size")
     # norms hoisted BEFORE the probe explode (NOTES fact 16): one
     # norm per vector, not per (vector, table, query)
@@ -344,7 +340,7 @@ def lsh_topk(
             "_qn", F.expr(_norm_sql("`embedding`"))
         ),
         "embedding",
-        tables,
+        plane_tables,
         probe_hamming,
     ).select(
         F.col(query_id).alias("query_id"),
@@ -357,7 +353,7 @@ def lsh_topk(
             "_cn", F.expr(_norm_sql("`embedding`"))
         ),
         "embedding",
-        tables,
+        plane_tables,
         probe_hamming=0,
     ).select(
         F.col(corpus_id).alias("neighbor_id"),
@@ -385,9 +381,8 @@ def lsh_topk(
 def train_ivf_centroids(
     corpus: DataFrame,
     n_clusters: int = 16,
-    sample_fraction: float | None = None,
 ) -> list[list[float]]:
-    """Coarse quantizer for IVF: k-means over (a sample of) the corpus.
+    """Coarse quantizer for IVF: k-means over the corpus.
 
     Five Lloyd rounds: measured on the synthetic corpora,
     downstream recall@10 is IDENTICAL at 3, 5, and 10 Lloyd rounds
@@ -397,20 +392,17 @@ def train_ivf_centroids(
 
     Returns plain Python lists so the (tiny) centroid table can be
     inlined as literals into the assignment expression — no join, no
-    shuffle for assignment.  At 100 TB: train on ``sample_fraction``
-    (k-means quality needs only a sample), assign everything.
+    shuffle for assignment.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    d = _as_double(corpus, "embedding")
-    if sample_fraction is not None:
-        d = d.sample(fraction=sample_fraction, seed=KMEANS_SEED)
-    train = d.select(array_to_vector(F.col("embedding")).alias("features"))
+    train = _as_double(corpus, "embedding").select(
+        array_to_vector(F.col("embedding")).alias("features")
+    )
     # Lloyd iterations re-reference the training frame once per round:
     # persist it for the duration of the fit so the source is scanned
-    # once, not once per round (at 100 TB with sample_fraction this is
-    # the difference between one sampled scan and ten full ones).
+    # once, not once per round.
     train.persist()
     try:
         model = KMeans(k=n_clusters, seed=KMEANS_SEED, maxIter=5).fit(train)

@@ -87,15 +87,11 @@ def parse_rss_xml(df: DataFrame) -> DataFrame:
     return df.select(rebuilt["rss"].alias("rss"))
 
 
-def fetch_rss_docs(
-    feeds: DataFrame,
-    transport=None,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def fetch_rss_docs(feeds: DataFrame) -> DataFrame:
     """Feed URLs → parsed RSS structs: the fetch front of S5
     (src/lambda_2.py:160-171 — ``requests.get`` per feed, then
-    xmltodict), composed as ``sources.fetch.fetch_urls`` →
-    ``parse_rss_xml``.
+    xmltodict), composed as ``sources.fetch.fetch_urls`` (default
+    transport) → ``parse_rss_xml``.
 
     Unfetchable feeds (transport error, null URL) and malformed XML
     both degrade to null structs that ``parse_rss_docs`` drops —
@@ -105,9 +101,7 @@ def fetch_rss_docs(
     never throwing on a hostile feed."""
     from ..sources.fetch import fetch_urls
 
-    fetched = fetch_urls(
-        feeds, "feed", transport=transport, num_partitions=num_partitions
-    )
+    fetched = fetch_urls(feeds, "feed")
     return parse_rss_xml(
         fetched.withColumn("xml", F.col("body").cast("string"))
     )

@@ -17,7 +17,7 @@ movement, same shape at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize_sentences
@@ -40,18 +40,17 @@ def chunk_audio(
     return chunked.join(counts, "episode_id")
 
 
-def transcribe_chunks(chunks: DataFrame, transcribe: Column | None = None) -> DataFrame:
-    """Map stage (S15/lambda_4): one transcription per chunk row.
-
-    ``transcribe`` is the pluggable UDF column expression; defaults to
-    the deterministic fake.  Parallelism = partition count, the Spark
-    analog of the reference's N concurrent Transcribe jobs.
+def transcribe_chunks(chunks: DataFrame) -> DataFrame:
+    """Map stage (S15/lambda_4): one transcription per chunk row, by
+    the deterministic fake ``transcribe_udf``.  Parallelism = partition
+    count, the Spark analog of the reference's N concurrent Transcribe
+    jobs.
     """
-    if transcribe is None:
-        from .ml_udfs import transcribe_udf
+    from .ml_udfs import transcribe_udf
 
-        transcribe = transcribe_udf(F.col("chunk"))
-    return chunks.withColumn("payload", transcribe).drop("chunk")
+    return chunks.withColumn("payload", transcribe_udf(F.col("chunk"))).drop(
+        "chunk"
+    )
 
 
 def _arrived(chunk_payloads: DataFrame) -> DataFrame:

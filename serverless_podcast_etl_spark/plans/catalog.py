@@ -1265,10 +1265,10 @@ WHERE {jac} >= 0.3
 
 
 def q48_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pair list → duplicate CLUSTERS via distributed
-    connected components (min-label propagation; near-duplication is
-    transitive in practice, so dedup decisions are per component, not
-    per pair).  Deterministic edges (the q30 MinHash-LSH pairs) make
+    """Near-dup pair list → duplicate CLUSTERS via connected
+    components (driver-side union-find over the collected pair list;
+    near-duplication is transitive in practice, so dedup decisions are
+    per component, not per pair).  Deterministic edges (the q30 MinHash-LSH pairs) make
     this fully oracle-checkable against a recursive-CTE closure."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(

@@ -23,12 +23,11 @@ Semantics:
   AND ``file://`` via the stdlib — ``file://`` doubles as the
   deterministic local transport for tests and air-gapped runs, no
   fake needed.
-- **Scale**: fetching is LATENCY-bound, not CPU-bound — pass
-  ``num_partitions`` to spread a URL list across executors (a
-  one-partition list would fetch serially no matter the cluster
-  size).  Each partition holds one Python worker whose loop fetches
-  sequentially; parallelism = partitions.  No driver-side fetching,
-  no collect.
+- **Scale**: fetching is LATENCY-bound, not CPU-bound — repartition
+  a URL list across executors before the call (a one-partition list
+  would fetch serially no matter the cluster size).  Each partition
+  holds one Python worker whose loop fetches sequentially;
+  parallelism = partitions.  No driver-side fetching, no collect.
 
 Composition points: ``pipeline.ingest.fetch_rss_docs`` (URLs → parsed
 RSS structs, S5) and ``operators.multimodal.chunk_binary`` over the
@@ -62,7 +61,6 @@ def fetch_urls(
     df: DataFrame,
     url_col: str,
     transport: Transport | None = None,
-    num_partitions: int | None = None,
     max_attempts: int = 1,
     timeout: float | None = None,
 ) -> DataFrame:
@@ -124,5 +122,4 @@ def fetch_urls(
             out["fetch_error"] = pd.Series(errors, index=pdf.index, dtype=object)
             yield out
 
-    src = df.repartition(num_partitions) if num_partitions else df
-    return src.mapInPandas(fetch_batches, schema)
+    return df.mapInPandas(fetch_batches, schema)

@@ -14,12 +14,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    slide: str | None = None,
-) -> DataFrame:
-    """Tumbling (or sliding) 5-minute event-time counts + value sums
-    per event_type over the ``ts`` column.
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 5-minute event-time counts + value sums per event_type
+    over the ``ts`` column.
 
     Works on both batch and streaming DataFrames: on a stream a
     10-minute watermark bounds state (windows older than max(event
@@ -30,7 +27,7 @@ def windowed_event_counts(
     df = events
     if df.isStreaming:
         df = df.withWatermark("ts", "10 minutes")
-    win = F.window(F.col("ts"), "5 minutes", slide or "5 minutes")
+    win = F.window(F.col("ts"), "5 minutes")
     return (
         df.groupBy(win, "event_type")
         .agg(

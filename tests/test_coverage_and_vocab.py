@@ -82,29 +82,6 @@ def test_affinity_selection_covers_target_fully_on_separated_corpus(
     assert aff["coverage_pct"] >= out["digest"]["coverage_pct"]
 
 
-def test_coverage_audit_target_frame_equals_predicate(spark):
-    raw = _separated_corpus(spark)
-    via_pred = target_coverage_audit(
-        raw, "text", "doc_id", k=3,
-        target_predicate=F.col("doc_id") <= 3,
-    ).collect()
-    via_frame = target_coverage_audit(
-        raw, "text", "doc_id", k=3,
-        target=raw.filter(F.col("doc_id") <= 3),
-    ).collect()
-    # same target rows -> same bucket universe and same digest arm;
-    # the affinity arm differs only through the fit path (joint
-    # conditional fit vs two-frame fit), which is itself pinned equal
-    # in test_target_affinity — here the audit rows must agree
-    assert via_pred == via_frame
-
-
-def test_coverage_audit_requires_a_target(spark):
-    raw = _separated_corpus(spark)
-    with pytest.raises(ValueError, match="target"):
-        target_coverage_audit(raw, "text", "doc_id", k=3)
-
-
 def test_precomputed_selection_ids_skip_the_refit_and_agree(spark):
     from serverless_podcast_etl_spark.operators.selection import (
         select_by_target_affinity,

@@ -132,17 +132,6 @@ def test_applied_ensemble_dedup_all_foreign_component_removes_nothing(spark):
     assert sorted(r["doc_id"] for r in out.collect()) == [10, 11]
 
 
-def test_ensemble_rejects_cc_output_renames(spark):
-    with pytest.raises(ValueError, match="pins the CC output"):
-        neardup_ensemble(
-            {"minhash": _pairs(spark, [(1, 2)])}, out_id="node"
-        )
-    with pytest.raises(ValueError, match="pins the CC output"):
-        neardup_ensemble(
-            {"minhash": _pairs(spark, [(1, 2)])}, out_comp="cluster"
-        )
-
-
 def test_shared_token_hash_scan_parity(spark, sf_dir):
     """opt-r15 (guide §2.1): the MinHash and SimHash detectors fed by
     ONE shared tokenize→md5 scan (``shared_token_hash48``) emit

@@ -15,12 +15,14 @@ them, each with its reason.  Anything else this test reports does no
 work for the system: delete it together with its tests.
 
 The same holds for switches, the package parameters with a literal
-default (``bool``, ``int``, ``float`` or ``str``, written in place or
-as a package constant).  A switch must get another value, by keyword
-or by position, from some call:
+default (``None``, ``bool``, ``int``, ``float`` or ``str``, written in
+place or as a package constant).  A switch must get another value,
+by keyword, by position or through a ``**`` dict display, from some
+call:
 
-* a ``bool`` from a call outside ``tests/``, or its second branch runs
-  only under test;
+* a ``bool`` or ``None`` from a call outside ``tests/``: either
+  selects a branch, and otherwise the other branch runs only under
+  test;
 * any other literal from any call, tests included: a test that sweeps
   ``k`` or a threshold uses that parameter as a real input.  With one
   value in use, the value belongs in the code as a constant.
@@ -75,6 +77,10 @@ KEEP_SWITCHES = {
     "minhash_lsh_pairs.bands": "perfbench passes it by name",
     # A deployment setting: fetch_urls binds it through functools.partial.
     "urllib_transport.timeout": "per-deployment fetch timeout",
+    "fetch_urls.timeout": "per-deployment fetch timeout",
+    "fetch_urls.transport": "the seam through which tests substitute a fake",
+    # perfbench/podcast.py's TracedWarehouse forwards it by position.
+    "update_rows.partition_by": "perfbench passes it on",
 }
 
 LITERALS = (bool, int, float, str)
@@ -185,9 +191,11 @@ def test_docs_name_only_existing_tools():
 
 
 def _literal(node, constants):
-    """``(True, value)`` when ``node`` is a literal of ``LITERALS`` or
-    names a package constant bound to one, else ``(False, None)``."""
-    if isinstance(node, ast.Constant) and isinstance(node.value, LITERALS):
+    """``(True, value)`` when ``node`` is ``None``, a literal of
+    ``LITERALS`` or names a package constant bound to one, else
+    ``(False, None)``."""
+    if isinstance(node, ast.Constant) and (
+            node.value is None or isinstance(node.value, LITERALS)):
         return True, node.value
     name = (node.id if isinstance(node, ast.Name) else
             node.attr if isinstance(node, ast.Attribute) else None)
@@ -235,6 +243,26 @@ def _switches(func, constants):
     return switches, positional
 
 
+def _dict_items(node, scopes):
+    """``(key, value)`` pairs a ``**`` argument passes: a dict display,
+    ``dict(k=v)``, or a name bound to either in the innermost enclosing
+    function (or at module level) that binds it."""
+    if isinstance(node, ast.Name):
+        bound = [stmt.value for scope in reversed(scopes)
+                 for stmt in (scope.body if isinstance(scope, ast.Module)
+                              else ast.walk(scope))
+                 if isinstance(stmt, ast.Assign)
+                 and [getattr(t, "id", None) for t in stmt.targets]
+                 == [node.id]]
+        node = bound[0] if bound else None
+    if isinstance(node, ast.Dict):
+        return [(k.value, v) for k, v in zip(node.keys, node.values)
+                if isinstance(k, ast.Constant) and isinstance(k.value, str)]
+    if isinstance(node, ast.Call) and getattr(node.func, "id", "") == "dict":
+        return [(kw.arg, kw.value) for kw in node.keywords if kw.arg]
+    return []
+
+
 def _params(func):
     args = func.args
     return {a.arg for a in [*args.posonlyargs, *args.args, *args.kwonlyargs]}
@@ -260,12 +288,15 @@ def switch_graph(root=ROOT):
                                  for k, v in found.items()})
     flipped, overridden, through = set(), set(), defaultdict(set)
 
-    def passed(call, enclosing, in_tests):
+    def passed(call, scopes, in_tests):
         func = call.func
         callee = getattr(func, "id", None) or getattr(func, "attr", None)
         args = [*((p, a) for names in positional.get(callee, ())
                   for p, a in zip(names, call.args)),
-                *((kw.arg, kw.value) for kw in call.keywords if kw.arg)]
+                *((kw.arg, kw.value) for kw in call.keywords if kw.arg),
+                *(pair for kw in call.keywords if kw.arg is None
+                  for pair in _dict_items(kw.value, scopes))]
+        enclosing = scopes[1:]
         for param, value in args:
             key = f"{callee}.{param}"
             if key not in switches:
@@ -286,19 +317,25 @@ def switch_graph(root=ROOT):
                 if not in_tests:
                     flipped.add(key)
 
-    def visit(node, enclosing, in_tests):
+    def visit(node, scopes, in_tests):
         if isinstance(node, ast.Call):
-            passed(node, enclosing, in_tests)
+            passed(node, scopes, in_tests)
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            enclosing = [*enclosing, node]
+            scopes = [*scopes, node]
         for child in ast.iter_child_nodes(node):
-            visit(child, enclosing, in_tests)
+            visit(child, scopes, in_tests)
 
     for entry in [*ROOTS, PACKAGE.name, "tests"]:
         for path in _py_files(root / entry):
-            visit(ast.parse(path.read_text(), filename=str(path)), [],
-                  entry == "tests")
+            tree = ast.parse(path.read_text(), filename=str(path))
+            visit(tree, [tree], entry == "tests")
     return switches, flipped, overridden, through
+
+
+def _selects_branch(default):
+    """A ``bool`` or ``None`` default picks a branch; any other
+    literal is a value."""
+    return default is None or isinstance(default, bool)
 
 
 def unflipped(keep=KEEP_SWITCHES, graph=None):
@@ -317,7 +354,7 @@ def unflipped(keep=KEEP_SWITCHES, graph=None):
 
     by_code, by_any = reach(flipped), reach(overridden)
     return sorted(key for key, default in switches.items() if key not in (
-        by_code if isinstance(default, bool) else by_any))
+        by_code if _selects_branch(default) else by_any))
 
 
 def test_every_switch_is_flipped_outside_tests():
@@ -329,9 +366,18 @@ def test_every_switch_is_flipped_outside_tests():
         "KEEP_SWITCHES entry with its reason):\n  " + "\n  ".join(dead))
 
 
+def test_every_none_default_is_set_outside_tests():
+    switches = switch_graph()[0]
+    dead = [k for k in unflipped() if switches[k] is None]
+    assert not dead, (
+        "only tests/ pass these parameters a value (use the default in "
+        "place, delete the parameter and the branch it selects, or add a "
+        "KEEP_SWITCHES entry with its reason):\n  " + "\n  ".join(dead))
+
+
 def test_every_literal_default_is_overridden():
     switches = switch_graph()[0]
-    dead = [k for k in unflipped() if not isinstance(switches[k], bool)]
+    dead = [k for k in unflipped() if not _selects_branch(switches[k])]
     assert not dead, (
         "no call passes these parameters another value (use the value in "
         "place and delete the parameter, or add a KEEP_SWITCHES entry "
@@ -351,7 +397,7 @@ def test_keep_switches_are_defined_and_needed():
 def test_switch_rules_on_a_synthetic_package(tmp_path):
     """The widened analysis on a package small enough to read: which
     defaults it reports, which overrides it accepts, and how it follows
-    positional and pass-through arguments."""
+    positional, pass-through and ``**`` dict arguments."""
     files = {
         "serverless_podcast_etl_spark/mod.py": '''
 WIDTH = 3
@@ -377,19 +423,40 @@ def outer(df, window=64):
 
 def narrower(df, stride=8):
     return inner(df, 64, stride)
+
+def test_only_none(df, seed=None):
+    return seed
+
+def inner_opt(df, limit=None):
+    return limit
+
+def outer_opt(df, limit=None):
+    return inner_opt(df, limit=limit)
+
+def starred(df, width=10, tag=None):
+    return width, tag
 ''',
         "examples/demo.py": '''
 from serverless_podcast_etl_spark import mod
 
 mod.outer(None, window=32)
 mod.named_default(None, n=3)
+mod.outer_opt(None, limit=5)
+
+
+def run():
+    kw = dict(width=20)
+    mod.starred(None, **kw)
+    mod.starred(None, **{"tag": "t"})
 ''',
         "tests/test_mod.py": '''
-from serverless_podcast_etl_spark.mod import test_only_flag, test_only_str
+from serverless_podcast_etl_spark.mod import (
+    test_only_flag, test_only_none, test_only_str)
 
 def test_it():
     test_only_str(None, col="body")
     test_only_flag(None, fast=True)
+    test_only_none(None, seed=7)
 ''',
     }
     for name, text in files.items():
@@ -399,16 +466,26 @@ def test_it():
     assert graph[0] == {
         "never.k": 5, "test_only_str.col": "text", "test_only_flag.fast": False,
         "named_default.n": 3, "inner.window": 64, "inner.stride": 48,
-        "outer.window": 64, "narrower.stride": 8,
+        "outer.window": 64, "narrower.stride": 8, "test_only_none.seed": None,
+        "inner_opt.limit": None, "outer_opt.limit": None,
+        "starred.width": 10, "starred.tag": None,
     }
-    # outer passes its own window on by position, same default
+    # outer passes its own window on by position, same default; outer_opt
+    # passes its own None on by keyword
     assert graph[3]["outer.window"] == {"inner.window"}
+    assert graph[3]["outer_opt.limit"] == {"inner_opt.limit"}
+    # a ** dict display, or a name bound to dict(k=v), reaches the callee
+    assert {"starred.width", "starred.tag"} <= graph[1]
     # reported: an int nobody overrides, a bool only a test flips, a
-    # constant default passed its own value, and narrower's stride that
-    # no call changes.  Accepted: a str only a test overrides,
-    # inner.window through outer's overridden window, and inner.stride,
-    # which narrower's different default overrides
+    # None only a test sets, a constant default passed its own value,
+    # and narrower's stride that no call changes.  Accepted: a str only
+    # a test overrides, inner.window through outer's overridden window,
+    # inner.stride, which narrower's different default overrides,
+    # inner_opt.limit through outer_opt's set limit, and both starred
+    # parameters, set only through ** dicts
     assert unflipped({}, graph) == [
-        "named_default.n", "narrower.stride", "never.k", "test_only_flag.fast"]
+        "named_default.n", "narrower.stride", "never.k", "test_only_flag.fast",
+        "test_only_none.seed"]
     assert unflipped({"narrower.stride": "why"}, graph) == [
-        "named_default.n", "never.k", "test_only_flag.fast"]
+        "named_default.n", "never.k", "test_only_flag.fast",
+        "test_only_none.seed"]

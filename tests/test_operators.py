@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pandas as pd
 
 from pyspark.sql import functions as F
@@ -645,9 +647,8 @@ def test_quantized_topk_recall_vs_float(spark, sf_dir):
 
 
 def test_connected_components_deep_chain_and_random(spark):
-    """Pointer jumping must converge on a 300-node path (O(diameter)
-    propagation alone would need 300 rounds) and agree with a Python
-    union-find on random graphs."""
+    """A 300-node path collapses to one component, and random graphs
+    agree with an independent Python union-find."""
     import random
 
     from serverless_podcast_etl_spark.operators.dedup import connected_components
@@ -656,7 +657,7 @@ def test_connected_components_deep_chain_and_random(spark):
     got = {
         r["id"]: r["component"]
         for r in connected_components(
-            spark.createDataFrame(chain, "id_a long, id_b long"), max_iter=15
+            spark.createDataFrame(chain, "id_a long, id_b long")
         ).collect()
     }
     assert set(got.values()) == {0} and len(got) == 301
@@ -908,7 +909,7 @@ def test_multiprobe_lsh_recall_monotone(spark, sf_dir):
     def mean_recall(probe):
         approx = lsh_topk(
             queries, emb, "vec_id", "vec_id",
-            planes=_PLANES_8, k=10, probe_hamming=probe,
+            plane_tables=[_PLANES_8], k=10, probe_hamming=probe,
         )
         rows = recall_at_k(approx, exact).collect()
         return sum(r["recall"] for r in rows) / len(rows)
@@ -1177,9 +1178,8 @@ def _union_find_components(edges):
 
 
 def test_connected_components_deep_chain(spark):
-    """A 40-node path graph (worst case for naive propagation)
-    converges via pointer jumping and labels every node with the
-    chain's minimum."""
+    """A 40-node path graph (worst case for naive propagation) labels
+    every node with the chain's minimum."""
     from serverless_podcast_etl_spark.operators.dedup import connected_components
 
     edges = [(i, i + 1) for i in range(39)]
@@ -1197,25 +1197,38 @@ def test_connected_components_deep_chain(spark):
     ).filter(lambda es: any(a != b for a, b in es))
 )
 def test_connected_components_matches_union_find(spark, edges):
-    """Random graphs: both labelings — the r4 driver-side
-    union-find fast path (default on small graphs) and the distributed
-    min-label loop (forced via small_graph_max=0) — equal an
-    independent union-find ground truth (same partition, min-id
-    representative)."""
+    """Random graphs: the labeling equals an independent union-find
+    ground truth (same partition, min-id representative)."""
     from serverless_podcast_etl_spark.operators.dedup import (
         connected_components,
     )
 
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    truth = _union_find_components(edges)
-    variants = [
-        ("fast", lambda d: connected_components(d)),
-        ("distributed", lambda d: connected_components(d, small_graph_max=0)),
-    ]
-    for name, impl in variants:
-        out = {r["id"]: r["component"] for r in impl(df).collect()}
-        assert out == truth, name
+    out = {r["id"]: r["component"] for r in connected_components(df).collect()}
+    assert out == _union_find_components(edges)
+
+
+def test_connected_components_is_one_spark_job(spark):
+    """The pair list is read once: one collect, then driver-side
+    union-find into a JVM-local label table.  Self-loops and a chain
+    that joins two stars label to their component minimum."""
+    from serverless_podcast_etl_spark.operators.dedup import (
+        connected_components,
+    )
+
+    df = spark.createDataFrame(
+        [(3, 1), (2, 3), (5, 5), (4, 2)], "id_a long, id_b long"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-one-job", "connected_components")
+    try:
+        labels = connected_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-one-job")) == 1
+    assert dict(map(tuple, labels.collect())) == {
+        1: 1, 2: 1, 3: 1, 4: 1, 5: 5}
 
 
 def test_pair_overlap_stats_counts(spark):
@@ -1479,69 +1492,36 @@ def test_recall_panel_clustered_corpus_ordering_stable(spark):
 
 
 def test_lsh_topk_single_table_still_works(spark, sf_dir):
-    """Back-compat: the single-`planes` form is the plane_tables=[planes]
-    OR-construction degenerate case — identical results."""
+    """``plane_tables=[planes]`` is the OR-construction's one-table
+    case: a second table only adds candidates, so no query's recall
+    against the exact top-k drops when it is added."""
     from serverless_podcast_etl_spark.operators import similarity
     from serverless_podcast_etl_spark.plans.catalog import _PLANES_8
     from serverless_podcast_etl_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 3)
-    a = similarity.lsh_topk(
-        queries_df, emb, "vec_id", "vec_id", planes=_PLANES_8[:4], k=5
-    )
-    b = similarity.lsh_topk(
-        queries_df, emb, "vec_id", "vec_id", plane_tables=[_PLANES_8[:4]], k=5
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_connected_components_reliable_checkpoint_parity(spark, tmp_path):
-    """checkpoint_dir switches the iterative loops to RELIABLE
-    df.checkpoint() (survives executor loss at cluster scale); results
-    must be identical to the localCheckpoint default."""
-    from serverless_podcast_etl_spark.operators.dedup import (
-        connected_components,
+    exact = similarity.brute_force_topk(
+        queries_df, emb, "vec_id", "vec_id", k=5
     )
 
-    edges = [(1, 2), (2, 3), (5, 6), (8, 8), (10, 11), (11, 12), (3, 10)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    ckpt = tmp_path / "cc"
-    local = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    reliable = {
-        r["id"]: r["component"]
-        for r in connected_components(df, checkpoint_dir=str(ckpt)).collect()
-    }
-    assert local == reliable
-    # reliable mode actually wrote checkpoint data
-    assert any(ckpt.iterdir())
+    def recalls(tables):
+        approx = similarity.lsh_topk(
+            queries_df, emb, "vec_id", "vec_id", plane_tables=tables, k=5
+        )
+        return {r["query_id"]: r["recall"] for r in
+                similarity.recall_at_k(approx, exact).collect()}
 
-
-def test_cc_small_graph_fast_path_parity(spark):
-    """r4 hybrid: the driver-side union-find fast path (default for
-    ≤ small_graph_max pairs) is OUTPUT-IDENTICAL to the distributed
-    min-label loop (small_graph_max=0), including self-loops and
-    chains."""
-    from serverless_podcast_etl_spark.operators.dedup import (
-        connected_components,
-    )
-
-    edges = [(1, 2), (2, 3), (5, 6), (8, 8), (10, 11), (11, 12), (3, 10)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    fast = sorted(map(tuple, connected_components(df).collect()))
-    dist = sorted(
-        map(tuple, connected_components(df, small_graph_max=0).collect())
-    )
-    assert fast == dist
-    comp = dict(fast)
-    assert comp[12] == 1 and comp[5] == 5 and comp[8] == 8
+    one = recalls([_PLANES_8[:4]])
+    two = recalls([_PLANES_8[:4], _PLANES_8[4:]])
+    assert set(one) == {0, 1, 2}
+    assert all(two[q] >= one[q] for q in one), (one, two)
 
 
 def test_cc_rejects_null_ids_on_both_backends(spark):
-    """r5 (r4 ADVICE): a null edge endpoint is malformed input — the
-    distributed loop's equi-joins would silently drop the edge while
-    the union-find fast path would TypeError mid-merge.  Both backends
-    share one loud contract: ValueError before any labeling."""
+    """A null edge endpoint is malformed input: dropping the edge
+    could split a component, so it raises ValueError before any
+    labeling rather than a TypeError mid-merge."""
     import pytest
 
     from serverless_podcast_etl_spark.operators.dedup import (
@@ -1551,46 +1531,11 @@ def test_cc_rejects_null_ids_on_both_backends(spark):
     df = spark.createDataFrame(
         [(1, 2), (None, 3), (4, None)], "id_a long, id_b long"
     )
-    for kwargs in ({}, {"small_graph_max": 0}):
-        with pytest.raises(ValueError, match="null id"):
-            connected_components(df, **kwargs)
-    # all-null-free input still works on both paths
+    with pytest.raises(ValueError, match="2 null id"):
+        connected_components(df)
     ok = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    for kwargs in ({}, {"small_graph_max": 0}):
-        out = {
-            r["id"]: r["component"]
-            for r in connected_components(ok, **kwargs).collect()
-        }
-        assert out == {1: 1, 2: 1}
-
-
-def test_checkpoint_dir_scoped_per_invocation(spark, tmp_path):
-    """r4 (VERDICT "what's wrong" #3): the checkpoint dir is resolved
-    ONCE per iterative-operator invocation, so (a) two sequential runs
-    with different dirs each write into their own directory, and (b) a
-    concurrent run re-pointing the session dir mid-loop raises instead
-    of silently cross-writing blocks into the other run's directory."""
-    import pytest
-
-    from serverless_podcast_etl_spark.operators.dedup import (
-        _materialize,
-        _resolve_checkpoint_dir,
-        connected_components,
-    )
-
-    df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    for sub in ("run_a", "run_b"):
-        out = connected_components(df, checkpoint_dir=str(tmp_path / sub))
-        assert {r["component"] for r in out.collect()} == {1}
-        assert any((tmp_path / sub).iterdir()), sub
-
-    frame = df.select("id_a")
-    resolved = _resolve_checkpoint_dir(frame, str(tmp_path / "mine"))
-    assert resolved is not None and "mine" in resolved
-    # simulate a concurrent run re-pointing the shared session dir
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "theirs"))
-    with pytest.raises(RuntimeError, match="changed mid-run"):
-        _materialize(frame, resolved)
+    out = {r["id"]: r["component"] for r in connected_components(ok).collect()}
+    assert out == {1: 1, 2: 1}
 
 
 def test_winnowed_fingerprints_guarantee_and_short_docs(spark):
@@ -1646,6 +1591,29 @@ def test_duplicated_spans_merges_overlapping_coverage(spark):
     assert out == [(1, 0, 14, 10), (2, 0, 9, 6), (3, 0, 7, 4)]
 
 
+@contextmanager
+def _range_partitions(spark, n):
+    """``repartitionByRange`` without a count yields ``n`` partitions
+    inside the block: AQE would coalesce them at test volume, leaving
+    the cross-partition offset path unexercised.  The session settings
+    are restored on exit."""
+    settings = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_global_prefix_sum_spans_partitions_and_matches_reference(spark):
     """The two-pass distributed prefix sum equals the sequential
     running sum in the requested total order, with the data genuinely
@@ -1660,30 +1628,27 @@ def test_global_prefix_sum_spans_partitions_and_matches_reference(spark):
 
     rows = [(i, (i * 37) % 101, (i % 7) + 1) for i in range(1000)]
     df = spark.createDataFrame(rows, "id long, score long, cost long")
-    out = {
-        r["id"]: r["cum"]
-        for r in global_prefix_sum(
-            df,
-            "cost",
-            [F.col("score").desc(), F.col("id")],
-            out_col="cum",
-            num_partitions=8,
-        ).collect()
-    }
+    order = [F.col("score").desc(), F.col("id")]
+    with _range_partitions(spark, 8):
+        out = {
+            r["id"]: r["cum"]
+            for r in global_prefix_sum(
+                df, "cost", order, out_col="cum"
+            ).collect()
+        }
+        # the range partitioning the prefix sum runs under actually
+        # distributes the data
+        n_parts = (
+            df.repartitionByRange(*order)
+            .select(F.spark_partition_id().alias("p"))
+            .distinct()
+            .count()
+        )
     expected, acc = {}, 0
     for i, score, cost in sorted(rows, key=lambda r: (-r[1], r[0])):
         acc += cost
         expected[i] = acc
     assert out == expected
-    # the realized range partitioning actually distributes the data
-    # (explicit numPartitions — AQE coalesces the default at test
-    # volume, which would leave the offset path unexercised)
-    n_parts = (
-        df.repartitionByRange(8, F.col("score").desc(), F.col("id"))
-        .select(F.spark_partition_id().alias("p"))
-        .distinct()
-        .count()
-    )
     assert n_parts > 1, "prefix sum must be exercised across partitions"
 
 
@@ -1970,12 +1935,13 @@ def test_global_prefix_sum_null_and_fractional_costs(spark):
     # first range partition's total is NULL
     rows = [(i, None if i < 30 else i / 3.0) for i in range(100)]
     df = spark.createDataFrame(rows, "id long, cost double")
-    out = {
-        r["id"]: r["cum"]
-        for r in global_prefix_sum(
-            df, "cost", [F.col("id")], out_col="cum", num_partitions=6
-        ).collect()
-    }
+    with _range_partitions(spark, 6):
+        out = {
+            r["id"]: r["cum"]
+            for r in global_prefix_sum(
+                df, "cost", [F.col("id")], out_col="cum"
+            ).collect()
+        }
     expected, acc = {}, 0
     for i, cost in rows:
         if cost is not None:

@@ -65,17 +65,6 @@ def test_no_overlap_produces_no_spans(spark):
     )
 
 
-def test_benchmark_text_col_override(spark):
-    bench = spark.createDataFrame(
-        [(1, "x y z w v")], "eid long, prompt string"
-    )
-    corpus = _docs(spark, [(1, "pad pad x y z w v pad")])
-    out = strip_contamination(
-        corpus, bench, "text", "doc_id", k=5, benchmark_text_col="prompt"
-    ).collect()[0]
-    assert out["text_stripped"] == "pad pad pad"
-
-
 # ------------------------------------------------ Python differential
 # Independent reference implementation over hypothesis-generated
 # corpora: benchmark k-grams located as raw TOKEN TUPLES (no hashing),
